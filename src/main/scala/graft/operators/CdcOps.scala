@@ -71,10 +71,13 @@ object CdcOps {
     * ends up evaluating `c` twice — once below the pushed filter, once
     * in the projection (the guide §4.4 duplication, for built-in
     * expressions instead of UDFs). Guarding the expression behind an
-    * always-true non-deterministic condition (`rand() >= 0`; rand is
-    * uniform on [0,1)) pins it to one projection: non-deterministic
-    * aliases may not be duplicated or substituted into pushed
-    * predicates. Values are unchanged — the branch is never null.
+    * always-true non-deterministic condition
+    * (`monotonically_increasing_id() >= 0`; the ids are never
+    * negative) pins it to one projection: non-deterministic aliases
+    * may not be duplicated or substituted into pushed predicates.
+    * Values are unchanged — the branch is never null. PlanAuditSpec
+    * pins one parse per plan for `cdc_typed_view` and
+    * `cdc_validity_filter`.
     * Use ONLY on expensive parses (JSON decode); it also blocks
     * legitimate pushdown of other predicates past the projection. */
   private def evalOnce(c: Column): Column =

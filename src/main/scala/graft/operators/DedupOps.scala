@@ -1531,7 +1531,8 @@ object DedupOps {
       // following round to reproduce it:
       //   (i)  every edge points downhill (dst < src) — guaranteed by
       //        construction: both small-star output branches emit
-      //        (x, m) with m < x after the src =!= dst filter;
+      //        (x, m) with m < x after the src =!= dst filter, so
+      //        [[isStarForest]] asserts it instead of testing it;
       //   (ii) every src has a single distinct dst;
       //   (iii) no dst appears as a src (depth 1).
       // (i)+(ii)+(iii) ⟺ star forest ⟺ star(star(next)) ≡ next as a
@@ -1544,21 +1545,7 @@ object DedupOps {
       // at, and every downstream consumer (the final group-min
       // labeling) is duplicate-insensitive. One job over `next` alone
       // (the old compare also scanned `e`).
-      converged = timed(s"check $iter") {
-        val dt = next.schema("dst").dataType
-        next.select(col("src").as("n"), col("dst"), lit(1).as("tg"))
-          .union(next.select(col("dst").as("n"),
-            lit(null).cast(dt).as("dst"), lit(2).as("tg")))
-          .groupBy("n")
-          .agg(min(col("tg")).as("lotg"), max(col("tg")).as("hitg"),
-            min(col("dst")).as("lo"), max(col("dst")).as("hi"))
-          // violation: the node emits edges (lotg = 1) AND is either
-          // pointed at itself (hitg = 2, depth > 1) or points at two
-          // distinct targets (lo ≠ hi; min/max ignore the tag-2 nulls)
-          .filter(col("lotg") === 1 &&
-            (col("hitg") === 2 || col("lo") =!= col("hi")))
-          .isEmpty
-      }
+      converged = timed(s"check $iter")(isStarForest(next))
       e = next
       iter += 1
     }
@@ -1570,6 +1557,36 @@ object DedupOps {
         Seq("node"), "left_outer")
       .select(col("node"), coalesce(col("root"), col("node")).as("label"))
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevWidth)
+  }
+
+  /** Whether a (src, dst) edge set that points downhill is a depth-1
+    * star forest — the fixpoint test of [[connectedComponentsStars]]:
+    * every src has one distinct dst, and no dst is itself a src. The
+    * downhill invariant (dst < src on every edge) is checked in the
+    * same aggregation, one job: an uphill edge means the star rounds
+    * are broken, so it throws instead of reporting "not converged". */
+  private[graft] def isStarForest(edges: DataFrame): Boolean = {
+    val dt = edges.schema("dst").dataType
+    val r = edges.select(col("src").as("n"), col("dst"), lit(1).as("tg"))
+      .union(edges.select(col("dst").as("n"),
+        lit(null).cast(dt).as("dst"), lit(2).as("tg")))
+      .groupBy("n")
+      .agg(min(col("tg")).as("lotg"), max(col("tg")).as("hitg"),
+        min(col("dst")).as("lo"), max(col("dst")).as("hi"))
+      .agg(
+        // uphill: a node whose largest target is not below it
+        // (max ignores the tag-2 nulls)
+        count(when(col("lotg") === 1 && col("hi") >= col("n"), 1)).as("uphill"),
+        // open: the node emits edges (lotg = 1) AND is either pointed
+        // at itself (hitg = 2, depth > 1) or points at two distinct
+        // targets (lo ≠ hi)
+        count(when(col("lotg") === 1 &&
+          (col("hitg") === 2 || col("lo") =!= col("hi")), 1)).as("open"))
+      .head()
+    val uphill = r.getLong(0)
+    if (uphill > 0) throw new IllegalStateException(
+      s"star forest invariant broken: $uphill nodes have an edge with dst >= src")
+    r.getLong(1) == 0
   }
 
   /** Dedup clustering over the CAPPED jaccard pair graph (the scale-safe

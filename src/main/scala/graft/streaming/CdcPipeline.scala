@@ -25,12 +25,22 @@ import org.apache.spark.storage.StorageLevel
   * offsets are committed only after the batch's sinks complete, so a crash
   * mid-batch replays it — the same at-least-once contract, for free.
   * `foreachBatch` + persist gives the reference's single-read multi-sink
-  * fan-out; `dropDuplicates` within a watermark upgrades replayed duplicates
+  * fan-out, with the sinks of a batch written concurrently ([[fanOut]]);
+  * `dropDuplicates` within a watermark upgrades replayed duplicates
   * to effectively-once, which the reference cannot do.
   *
   * At scale: every transform here is narrow (no shuffle) except the
   * windowed aggregations, which shuffle once on the window key with
   * map-side partial aggregation — the minimum possible.
+  *
+  * Local files: on `file:` paths a trigger creates and renames many
+  * small files (offset and commit log entries, file-source metadata,
+  * state-store deltas, sink files). The program's `core-site.xml`
+  * serves `file:` with [[graft.fs.NioRawLocalFileSystem]]: Hadoop's
+  * local filesystem with `setPermission` and `getFileLinkStatus`
+  * answered by `java.nio.file` instead of a forked `chmod` and
+  * `readlink`. A deployment's own `core-site.xml` earlier on the
+  * classpath takes precedence; HDFS and object stores are untouched.
   */
 object CdcPipeline {
 
@@ -122,20 +132,14 @@ object CdcPipeline {
     * offsets) advances only when this function returns, i.e. after ALL
     * sinks ACK. A sink failure fails the batch → replay → at-least-once.
     * `sinks` are (name, batchWriter) pairs, the Spark analog of the
-    * reference's sink.Subscribe list (config.go:98-110). */
+    * reference's sink.Subscribe list (config.go:98-110). The sinks of
+    * one batch run concurrently (see [[fanOut]]). */
   def muxFanout(wire: DataFrame, sinks: Seq[(String, DataFrame => Unit)],
                 checkpoint: String,
                 trigger: Trigger = Trigger.ProcessingTime("1 second")): DataStreamWriter[org.apache.spark.sql.Row] =
-    wire.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist(StorageLevel.MEMORY_AND_DISK)
-        try sinks.foreach { case (_, write) => write(batch) }
-        finally batch.unpersist()
-        (): Unit
-      }
+    muxFanoutIdempotent(wire,
+      sinks.map { case (name, write) => name -> ((batch: DataFrame, _: Long) => write(batch)) },
+      checkpoint, trigger)
 
   /** [[muxFanout]] variant whose sinks also receive the epoch id —
     * for idempotent writers ([[Sinks.idempotentParquet]]) that key
@@ -148,12 +152,46 @@ object CdcPipeline {
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist(StorageLevel.MEMORY_AND_DISK)
-        try sinks.foreach { case (_, write) => write(batch, batchId) }
-        finally batch.unpersist()
-        (): Unit
-      }
+      .foreachBatch { (batch: DataFrame, batchId: Long) => fanOut(batch, batchId, sinks) }
+
+  /** Writes one persisted batch to every sink at once, one thread per
+    * sink, so a trigger costs its slowest sink rather than the sum of
+    * all of them. The reference's mux writes its sinks one after
+    * another (mux/mux.go:173-189); its contract, all sinks ACK and
+    * then the position advances, never depended on that order. The
+    * threads are started here, on the stream thread, so they inherit
+    * the query's job group and SQL properties: `StreamingQuery.stop`
+    * cancels their jobs, and its interrupt is passed on to them. Every
+    * sink is waited for, also after one fails; the first failure is
+    * rethrown with the others suppressed on it, which fails the batch
+    * before its offsets commit. Sinks must therefore not share an
+    * output directory. */
+  private def fanOut(batch: DataFrame, batchId: Long,
+      sinks: Seq[(String, (DataFrame, Long) => Unit)]): Unit = {
+    val failed = new Array[Throwable](sinks.size)
+    val threads = sinks.zipWithIndex.map { case ((name, write), i) =>
+      new Thread(() => try write(batch, batchId) catch { case t: Throwable => failed(i) = t },
+        s"$FanOutThreadPrefix$name-$batchId")
+    }
+    batch.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      threads.foreach(_.start())
+      threads.foreach(_.join())
+    } catch {
+      case stop: InterruptedException => threads.foreach(_.interrupt()); throw stop
+    } finally {
+      // no sink may outlive the batch it reads, not even on stop
+      threads.foreach(t => while (t.isAlive) try t.join() catch { case _: InterruptedException => })
+      batch.unpersist()
+    }
+    failed.filter(_ != null) match {
+      case Array(first, rest @ _*) => rest.foreach(first.addSuppressed); throw first
+      case _ =>
+    }
+  }
+
+  /** Name prefix of the [[fanOut]] sink threads. */
+  private[graft] val FanOutThreadPrefix = "graft-fanout-"
 
   /** Per-topic partitioned parquet sink: the file-sink stand-in for the
     * Kafka sink's per-topic batches (sink/kafka/kafka.go:257-287).

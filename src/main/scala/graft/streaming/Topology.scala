@@ -8,9 +8,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * psql-streamer.toml:12-137). The reference wires one mux per source
   * and a subscriber list per sink; here every (source, subscribed
   * sinks) pair becomes ONE streaming query whose `foreachBatch` fans
-  * out to all subscribed sinks — the batch is read once, matching the
-  * reference's single-read fan-out, and the checkpoint per source is
-  * the WAL-position store.
+  * out to all subscribed sinks at once ([[CdcPipeline.muxFanout]]) —
+  * the batch is read once, matching the reference's single-read
+  * fan-out, and the checkpoint per source is the WAL-position store.
+  * Local checkpoints and sinks go through the fork-free `file:`
+  * filesystem described at [[CdcPipeline]].
   *
   * Plain case classes instead of TOML: the topology is data, and a
   * config file format is a deserialization detail, not engine surface.
@@ -59,10 +61,12 @@ object Topology {
   }
 
   /** Build + start every per-source streaming query. Sinks subscribing
-    * to the same source share one query (single read, multi-write);
-    * each source checkpoints independently, so one source stalling
-    * never holds back another — same isolation as the reference's
-    * per-source mux goroutines. */
+    * to the same source share one query (single read, multi-write
+    * through [[CdcPipeline.muxFanout]], which writes them concurrently,
+    * so two sinks must not share an output directory); each source
+    * checkpoints independently, so one source stalling never holds
+    * back another — same isolation as the reference's per-source mux
+    * goroutines. */
   def start(spark: SparkSession, config: Config): Seq[StreamingQuery] = {
     val cfg = config.validated
     cfg.sources.flatMap { src =>
@@ -82,19 +86,10 @@ object Topology {
             sk.writer(wired)
           }
         }
-        val q = env.writeStream
-          .outputMode("append")
+        Seq(CdcPipeline.muxFanout(env, writers, s"${cfg.checkpointRoot}/${src.name}",
+            Trigger.ProcessingTime(src.triggerMs))
           .queryName(s"graft-${src.name}")
-          .option("checkpointLocation", s"${cfg.checkpointRoot}/${src.name}")
-          .trigger(Trigger.ProcessingTime(src.triggerMs))
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            batch.persist()
-            try writers.foreach { case (_, w) => w(batch) }
-            finally batch.unpersist()
-            (): Unit
-          }
-          .start()
-        Seq(q)
+          .start())
       }
     }
   }

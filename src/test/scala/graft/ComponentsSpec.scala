@@ -88,6 +88,21 @@ class ComponentsSpec extends SparkSpec {
     assert(labels.keySet === (1L to 25L).toSet)
   }
 
+  test("stars convergence check: forest, open shapes, and a loud uphill-edge failure") {
+    import spark.implicits._
+    def edges(es: (Long, Long)*): DataFrame = es.toDF("src", "dst")
+    // two stars rooted at their minima; and no edges at all
+    assert(DedupOps.isStarForest(edges((2L, 1L), (3L, 1L), (9L, 7L))))
+    assert(DedupOps.isStarForest(edges()))
+    // depth 2 (3 → 2 → 1), and a node pointing at two roots
+    assert(!DedupOps.isStarForest(edges((3L, 2L), (2L, 1L))))
+    assert(!DedupOps.isStarForest(edges((5L, 1L), (5L, 2L))))
+    // an uphill edge is a broken loop, not an unconverged one
+    val e = intercept[IllegalStateException](
+      DedupOps.isStarForest(edges((2L, 1L), (3L, 4L))))
+    assert(e.getMessage.contains("1 nodes have an edge with dst >= src"))
+  }
+
   test("ANN-mined clusters refine the exact clustering with bounded edge recall") {
     val e = DedupOps.normedVectors(Tables.embeddings(spark, sf))
     val exactPairs = DedupOps.exactCosinePairs(e)

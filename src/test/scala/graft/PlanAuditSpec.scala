@@ -736,25 +736,41 @@ class PlanAuditSpec extends SparkSpec {
     // The stored variants' whole point is amortizing the LSH mining
     // pass: their plans must scan the materialized (a_id,b_id,cosine)
     // parquet and contain NO bucketing explode (the miner's signature
-    // Generate/posexplode node). Embeddings may appear only as the
-    // bare vertex-id list (PageRank/triangles' left joins).
+    // Generate node). Embeddings may appear only as the bare vertex-id
+    // list (PageRank/triangles' left joins). The only Generate allowed
+    // is the symmetrize-once explode over the edge list (a 2-struct
+    // array: (a,b) and (b,a)), in the two queries that symmetrize.
+    // Counted on the ANALYZED plan, where persisted subtrees stay
+    // visible. PageRank's loop joins its one edge relation once per
+    // iteration, each time under fresh attribute ids, so nodes are
+    // compared canonicalized and count once.
+    import org.apache.spark.sql.catalyst.expressions.{CreateArray, CreateNamedStruct, Explode}
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    def isSymmetrize(g: Generate): Boolean = g.generator match {
+      case Explode(CreateArray(Seq(_: CreateNamedStruct, _: CreateNamedStruct), _)) => true
+      case _ => false
+    }
     val stored = Seq(
-      "sim_pagerank_stored" -> SimilarityOps.qSimPagerankStored(spark, sf),
-      "sim_triangles_stored" -> SimilarityOps.qSimTrianglesStored(spark, sf),
-      "sim_knn_graph_stored" -> SimilarityOps.qSimKnnGraphStored(spark, sf))
-    stored.foreach { case (name, df) =>
+      ("sim_pagerank_stored", SimilarityOps.qSimPagerankStored(spark, sf), 1),
+      ("sim_triangles_stored", SimilarityOps.qSimTrianglesStored(spark, sf), 0),
+      ("sim_knn_graph_stored", SimilarityOps.qSimKnnGraphStored(spark, sf), 1))
+    stored.foreach { case (name, df, symmetrizes) =>
       val p = planString(df)
       assert(p.contains("graft_artifacts") && p.contains("ann_edges"),
         s"$name must scan the stored edge artifact")
-      // the miner's signature node is the posexplode over the per-table
-      // bucket keys; the r17 symmetrize-once explode (2-struct array
-      // over the edge list) is NOT a re-bucketing and is allowed
-      assert(!p.contains("posexplode") && !p.contains("bucket"),
-        s"$name re-buckets embeddings (bucketing explode in plan)")
+      val gens = df.queryExecution.analyzed.collect { case g: Generate => g.canonicalized }
+        .distinct.collect { case g: Generate => g }
+      assert(gens.size === symmetrizes && gens.forall(isSymmetrize),
+        s"$name plans a Generate other than the one symmetrize explode:\n${gens.mkString("\n")}")
       assert(!p.contains("CartesianProduct") &&
           !p.contains("BroadcastNestedLoopJoin"),
         s"$name plans a nested-loop join")
     }
+    // negative control: the live miner's bucketing explode fails it
+    val livePagerank = SimilarityOps.qSimPagerank(spark, sf)
+    assert(livePagerank.queryExecution.analyzed
+        .collect { case g: Generate => g }.exists(g => !isSymmetrize(g)),
+      "the live miner no longer buckets through a Generate — update this pin")
     // the components variant localCheckpoints its iterative loop, so
     // its FINAL plan is an ExistingRDD scan — pin its INPUT relation
     // instead (artifact scan, no bucketing explode) plus full result
@@ -771,12 +787,32 @@ class PlanAuditSpec extends SparkSpec {
     assert(matC === liveC, "stored components diverged from self-contained")
     // contract equality: the stored path is the same miner
     // materialized, so results match the self-contained query exactly
-    val live = SimilarityOps.qSimPagerank(spark, sf).collect().toSeq
+    val live = livePagerank.collect().toSeq
       .sortBy(_.getLong(0))
     val mat = SimilarityOps.qSimPagerankStored(spark, sf).collect().toSeq
       .sortBy(_.getLong(0))
     assert(mat === live, "stored PageRank diverged from self-contained")
     spark.catalog.clearCache()
+  }
+
+  test("CDC parses JSON once per row: one from_json / get_json_object per plan") {
+    // CdcOps.evalOnce pins the parse to one projection; without it the
+    // optimizer copies the parse into the pushed-down null filter
+    import org.apache.spark.sql.catalyst.expressions.{GetJsonObject, JsonToStructs}
+    import org.apache.spark.sql.functions.{col, from_json}
+    def parses(df: DataFrame): Int = df.queryExecution.sparkPlan.collect { case node =>
+      node.expressions.map(_.collect { case e @ (_: JsonToStructs | _: GetJsonObject) => e }.size).sum
+    }.sum
+    for (q <- Seq("cdc_typed_view", "cdc_validity_filter"))
+      assert(parses(SparkEntry.queries(q)(spark, sf)) === 1, s"$q parses JSON more than once")
+    // negative control: the typed view without the guard parses more
+    // than once
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("k INT, tag STRING")
+    val unguarded = Tables.events(spark, sf)
+      .withColumn("p", from_json(col("props"), schema))
+      .select(col("event_id"), col("p.k").as("k"))
+      .filter(col("k").isNotNull)
+    assert(parses(unguarded) > 1, "the unguarded parse is no longer duplicated — update this pin")
   }
 
   test("LSH audit stratum: shingling confined to the stratum, estimate agrees with the full audit") {

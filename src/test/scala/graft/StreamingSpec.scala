@@ -3,7 +3,9 @@ package graft
 import graft.model.ChangeEvent
 import graft.streaming.CdcPipeline
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import java.sql.Timestamp
 import java.nio.file.Files
 
@@ -430,5 +432,72 @@ class StreamingSpec extends SparkSpec {
         org.apache.spark.sql.functions.col("value"), "$.uuid"))
       .dropDuplicates("uuid")
     assert(deduped.count() === 2) // idempotent downstream repair
+  }
+
+  test("fan-out: a failing sink fails its batch uncommitted; restart replays it to every sink") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    implicit val sc = spark.sqlContext
+    val tmp = Files.createTempDirectory("graft-fanout-fail").toString
+    val in = MemoryStream[ChangeEvent]
+    in.addData(ev(40), ev(41))
+    val (boomB, boomC) = (new IllegalStateException("b is down"), new IllegalStateException("c is down"))
+    val down = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val done = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Long)]()
+    def sink(name: String, fail: Option[Throwable]) = name -> { (b: DataFrame, id: Long) =>
+      if (name == "c") Thread.sleep(300) // the slowest sink, still waited for
+      done.add((name, id, b.count()))
+      if (down.get) fail.foreach(e => throw e)
+    }
+    def start() = CdcPipeline.muxFanoutIdempotent(
+        CdcPipeline.toWire(in.toDF(), Map("events" -> "t.e"), Some("t.d")),
+        Seq(sink("a", None), sink("b", Some(boomB)), sink("c", Some(boomC))),
+        checkpoint = s"$tmp/ckpt", trigger = Trigger.AvailableNow()).start()
+    val q1 = start()
+    val err = intercept[StreamingQueryException](q1.awaitTermination(60000))
+    q1.stop()
+    // the first failing sink's own exception fails the batch; the
+    // other failure rides along as suppressed
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).contains(boomB))
+    assert(boomB.getSuppressed.toSeq === Seq(boomC))
+    assert(done.asScala.map(_._1).toSet === Set("a", "b", "c"))
+    assert(new java.io.File(s"$tmp/ckpt/offsets/0").exists)
+    assert(!new java.io.File(s"$tmp/ckpt/commits/0").exists, "a failed batch must not commit")
+    done.clear()
+    down.set(false)
+    val q2 = start()
+    assert(q2.awaitTermination(60000), "restart did not finish"); q2.stop()
+    assert(done.asScala.toSet === Set(("a", 0L, 2L), ("b", 0L, 2L), ("c", 0L, 2L)))
+    assert(new java.io.File(s"$tmp/ckpt/commits/0").exists)
+  }
+
+  test("fan-out: stop() while a sink blocks leaves no sink thread and no persisted batch") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    implicit val sc = spark.sqlContext
+    val tmp = Files.createTempDirectory("graft-fanout-stop").toString
+    val in = MemoryStream[ChangeEvent]
+    in.addData(ev(50), ev(51))
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
+    def added = persisted -- before
+    val (wrote, blocked, never) = (new CountDownLatch(1), new CountDownLatch(1), new CountDownLatch(1))
+    val q = CdcPipeline.muxFanoutIdempotent(
+        CdcPipeline.toWire(in.toDF(), Map("events" -> "t.e"), Some("t.d")),
+        Seq(
+          "quick" -> { (b: DataFrame, _: Long) =>
+            b.write.mode("append").parquet(s"$tmp/quick"); wrote.countDown() },
+          "stuck" -> { (_: DataFrame, _: Long) => blocked.countDown(); never.await() }),
+        checkpoint = s"$tmp/ckpt", trigger = Trigger.ProcessingTime(0L)).start()
+    try {
+      assert(wrote.await(60, TimeUnit.SECONDS) && blocked.await(60, TimeUnit.SECONDS))
+      assert(added.nonEmpty, "the batch is persisted while its sinks run")
+    } finally q.stop()
+    val alive = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName.startsWith(CdcPipeline.FanOutThreadPrefix))
+    assert(alive.isEmpty, s"fan-out threads outlived stop(): $alive")
+    assert(added.isEmpty, s"persisted RDDs outlived stop(): $added")
+    assert(!new java.io.File(s"$tmp/ckpt/commits/0").exists)
   }
 }
