@@ -197,7 +197,9 @@ object Bench {
     * compute ceiling, query-shaped = the end-to-end floor. Recorded as
     * `canary_q_secs` (observational this round — skip2 scaling stays
     * on the CPU canary for cross-round continuity; no reference value
-    * exists yet, this round establishes it). */
+    * exists yet, this round establishes it). It reads with
+    * `spark.read.parquet`, not `Tables`, so its price stays comparable
+    * across rounds whatever the resolver does. */
   private def canaryQueryOnce(spark: SparkSession): Double = {
     val t0 = System.nanoTime()
     spark.read.parquet(s"$sfDir/lineitem.parquet")
@@ -653,6 +655,16 @@ object Bench {
     s"""{"metric":"total","value":$total,"unit":"sec","measured":${times.size},"registered":${allNames.size},"prebuild":"$prebuildStatus","sf":"$sfDir"$p}"""
   }
 
+  /** Per-query prices in integer ms, one line, printed just before the
+    * LAST totals line only: the totals line stays last, and a reader of
+    * the last lines of stdout still gets every query's price (the full
+    * artifact map is too long for that). */
+  private def perQueryLine(): String = {
+    val qs = allNames.flatMap(n => Option(partial.get(n))
+      .map(t => s"\"$n\":${math.round(t.doubleValue * 1000)}"))
+    s"""{"metric":"per_query","unit":"ms","queries":${qs.mkString("{", ",", "}")}}"""
+  }
+
   private def emit(complete: Boolean): Unit = {
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_latest.json"),
@@ -681,7 +693,9 @@ object Bench {
     // driver's SIGTERM — leaves a parseable artifact: the hook re-emits
     // the current partial state (file + compact stdout line) without
     // touching Spark.
-    val hook = new Thread(() => { shuttingDown = true; emit(complete = false) })
+    val hook = new Thread(() => {
+      shuttingDown = true; println(perQueryLine()); emit(complete = false)
+    })
     Runtime.getRuntime.addShutdownHook(hook)
     // dev-only: SPARK_GRAFT_ONLY=q1,q2 restricts the run for fast
     // iteration; the driver never sets it, so its totals are unaffected
@@ -868,6 +882,7 @@ object Bench {
     SparkSession.getActiveSession.foreach(_.stop())
     // re-print after session teardown so no shutdown logging can
     // follow the last line the driver tail-parses
+    println(perQueryLine())
     println(compactLine(complete))
   }
 }

@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev tool: print the formatted physical plan (and codegen-span count)
-  * for the named queries — `tools/run.sh graft.PlanDump <sfDir> q1,q2`.
-  * Audit aid for the "widen WholeStageCodegen spans" pass; not part of
-  * the driver contract. */
+/** Dev tool: print the final (post-AQE) formatted physical plan and its
+  * codegen-span count for the named queries, or for all of them —
+  * `tools/run.sh graft.PlanDump <sfDir> [q1,q2]`. The plan audit loop:
+  * PushedFilters reaching the scan, broadcast vs shuffle joins,
+  * WholeStageCodegen spans. A dev tool; nothing reads its output. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")

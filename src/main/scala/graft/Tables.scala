@@ -3,15 +3,59 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Loaders for the driver-provided TPC-H-ish parquet tables
-  * (see /root/repo/TESTDATA.md). All of `SparkEntry.queries` resolves
-  * inputs through here so the scan path is uniform: plain
-  * `spark.read.parquet`, letting Catalyst push filters/projections
-  * into the parquet scan. At cluster scale these would be partitioned
-  * tables behind a catalog; the API surface stays the same.
+  * (see TESTDATA.md). All of `SparkEntry.queries` resolves inputs
+  * through here, and the stored artifacts of `operators` are read
+  * through [[parquet]] too, so every batch read shares one resolution
+  * path: each parquet input resolves once per session, and every read
+  * after that gets a fresh relation over the resolved one. Catalyst
+  * still pushes filters and projections into the parquet scan. At
+  * cluster scale these would be partitioned tables behind a catalog;
+  * the API surface stays the same.
   */
 object Tables {
+
+  /** A parquet file or directory as a DataFrame, resolved once per
+    * session. `spark.read.parquet` infers the schema on every call, and
+    * that inference runs a one-task Spark job; a sub-second query pays
+    * it once per table it reads. Here the resolved `LogicalRelation` is
+    * kept in the session catalog's relation cache, so it lives and dies
+    * with the session and is bounded by
+    * `spark.sql.filesourceTableRelationCacheSize`. Every call returns
+    * `baseRelationToDataFrame` over it: new expression IDs each time,
+    * so self-joins of two reads resolve as with two `spark.read`s.
+    *
+    * The cache key is the path's [[Artifacts.datasetKey]] (absolute
+    * path plus relative path, mtime in ns and size of every file under
+    * it) and the session's set SQL confs that shape what a read
+    * resolves to: every key containing `parquet` (binaryAsString,
+    * int96AsTimestamp, mergeSchema, nanosAsLong, ...) and
+    * `spark.sql.caseSensitive`. A rewritten file or a changed read
+    * setting therefore resolves again; a stale entry just ages out.
+    *
+    * Resolution runs outside the cache, so a failure is not cached and
+    * surfaces exactly as `spark.read.parquet` throws it (a missing path
+    * is the same `AnalysisException`, `PATH_NOT_FOUND`). Two threads
+    * reading a new input at once may both resolve it; the last one
+    * wins, which is harmless. Local paths only: the key walks the local
+    * filesystem. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    import org.apache.spark.sql.catalyst.QualifiedTableName
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    val settings = spark.conf.getAll.filter(_._1.contains("parquet")).toSeq.sorted ++
+      Seq("spark.sql.caseSensitive" -> spark.sessionState.conf.caseSensitiveAnalysis.toString)
+    val key = QualifiedTableName("graft", "parquet",
+      (Artifacts.datasetKey(path) +: settings.map { case (k, v) => s"$k=$v" }).mkString(";"))
+    val catalog = spark.sessionState.catalog
+    val relation = Option(catalog.getCachedTable(key)).getOrElse {
+      val resolved = spark.read.parquet(path).queryExecution.analyzed
+      catalog.cacheTable(key, resolved)
+      resolved
+    }
+    relation match { case r: LogicalRelation => spark.baseRelationToDataFrame(r.relation) }
+  }
+
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "orders")

@@ -1,8 +1,9 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The END-TO-END corpus build (the Lee et al. 2022 shape a
   * training-data team actually ships): quality + language gate →
@@ -52,40 +53,38 @@ object CorpusPipeline {
   private[graft] def bucketedShingles(docs: DataFrame): DataFrame =
     DedupOps.shingles(docs).withColumn("bucket", SamplingOps.bucket100("doc_id"))
 
-  /** The five composed stages over an already-scanned corpus and an
-    * already-exploded (doc_id, shingle, bucket) relation. Split out so
-    * the WARM-COMPOSITION cost — what the pipeline adds on top of
-    * relations a platform team would have materialized anyway — is
-    * measurable separately from the cold scan+explode
-    * (CorpusPipelineSpec times both; NOTES_r6 records the split).
-    * Returns (result, internal persists the caller must release). */
   /** Stage 1+2 (quality/language gate + exact-dedup canonical filter)
     * — shared verbatim by the live pipeline and the stored variant so
-    * their admission semantics cannot drift. */
-  private def cleanDocs(docs: DataFrame): DataFrame = {
+    * their admission semantics cannot drift. Returns (clean, gate): the
+    * gate relation is materialized here and the caller releases it with
+    * the query's other persists. */
+  private def cleanDocs(docs: DataFrame): (DataFrame, DataFrame) = {
     // r17: the gate projection feeds TWO consumers — the canonical
     // fingerprint aggregate and the admission filter — and each used
     // to re-run the whole tokenize-and-score subtree (two full corpus
-    // gate passes per run). localCheckpoint (eager) materializes the
-    // thin gate relation once; both consumers read the materialized
-    // rows. Checkpoint, not persist: an r16 experiment measured the
-    // columnar cache WORSE here (8.9 -> 14.8 s — InMemoryRelation
-    // serialization + degraded downstream join planning), the same
-    // cache-vs-checkpoint trade the components loop hit. Only the
-    // columns the two consumers need travel into the checkpoint.
-    val gated = TextOps.gatedDocs(docs, col("source"),
-      SamplingOps.bucket100("doc_id").as("bucket"))
-      .select(col("doc_id"), col("source"), col("bucket"),
-        col("fp_content"), col("quality_score"), col("n_tokens"),
-        col("predicted_lang"), col("lang"))
-      .localCheckpoint(true)
+    // gate passes per run). The thin gate relation is materialized once
+    // (eagerly, as rows in a persisted RDD) and both consumers read it.
+    // Not the columnar cache: an r16 experiment measured it WORSE here
+    // (8.9 -> 14.8 s — InMemoryRelation serialization + degraded
+    // downstream join planning), the same cache-vs-checkpoint trade the
+    // components loop hit. Not a local checkpoint either: its blocks
+    // cannot be recomputed once released, so a second action over the
+    // result would fail. Only the columns the two consumers need are
+    // kept.
+    val gated = GraftBridge.materialize(
+      TextOps.gatedDocs(docs, col("source"), SamplingOps.bucket100("doc_id").as("bucket"))
+        .select(col("doc_id"), col("source"), col("bucket"),
+          col("fp_content"), col("quality_score"), col("n_tokens"),
+          col("predicted_lang"), col("lang")),
+      StorageLevel.MEMORY_AND_DISK)
     val canonical = gated.groupBy(col("fp_content"))
       .agg(min(col("doc_id")).as("keep_id"))
-    gated
+    val clean = gated
       .filter(col("quality_score") >= 0.2 && col("n_tokens") >= 10 &&
         col("predicted_lang") === col("lang"))
       .join(canonical, col("doc_id") === col("keep_id"))
       .select(col("doc_id"), col("source"), col("bucket"))
+    (clean, gated)
   }
 
   /** Stage 5 (deterministic mixture sampling over the survivor set) —
@@ -108,10 +107,17 @@ object CorpusPipeline {
       .select("doc_id", "source", "rn", "quota")
   }
 
+  /** The five composed stages over an already-scanned corpus and an
+    * already-exploded (doc_id, shingle, bucket) relation. Split out so
+    * the WARM-COMPOSITION cost — what the pipeline adds on top of
+    * relations a platform team would have materialized anyway — is
+    * measurable separately from the cold scan+explode
+    * (CorpusPipelineSpec times both; NOTES_r6 records the split).
+    * Returns (result, internal persists the caller must release). */
   private[graft] def stages(docs: DataFrame, sh: DataFrame): (DataFrame, Seq[DataFrame]) = {
     // stage 1+2: quality/language gate + exact dedup (min doc_id per
     // content fingerprint, computed over ALL docs as in qQualityPipeline)
-    val clean = cleanDocs(docs)
+    val (clean, gate) = cleanDocs(docs)
 
     // stage 3: near-dup removal among the clean TRAIN docs — df-capped
     // jaccard (same cap and threshold as dedup_jaccard_capped), drop
@@ -150,7 +156,7 @@ object CorpusPipeline {
 
     // stage 5: mixture sampling over the survivors (same weights and
     // hash-order pick as sample_mixture, budget scaled to the pipeline)
-    (mixtureSample(survivors), Seq(cleanTrain))
+    (mixtureSample(survivors), Seq(cleanTrain, gate))
   }
 
   /** Stored DECONTAMINATION artifact: for every train-bucket document
@@ -171,7 +177,7 @@ object CorpusPipeline {
         .write.parquet(d)
       finally sh.unpersist()
     }
-    spark.read.parquet(dir)
+    Tables.parquet(spark, dir)
   }
 
   /** [[qPipelineCorpus]] SERVED FROM STORED ARTIFACTS — the production
@@ -198,7 +204,8 @@ object CorpusPipeline {
     * exactly, so the hash gate still proves end-to-end equivalence. */
   def qPipelineCorpusStored(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
-    val cleanTrain = cleanDocs(docs).filter(col("bucket") < 80)
+    val (clean, gate) = cleanDocs(docs)
+    val cleanTrain = clean.filter(col("bucket") < 80)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ids = cleanTrain.select("doc_id")
     val nearDups = DedupOps.textEdgesStored(spark, sfDir)
@@ -212,7 +219,7 @@ object CorpusPipeline {
     val survivors = cleanTrain.select("doc_id", "source")
       .join(nearDups, Seq("doc_id"), "left_anti")
       .join(contaminated, Seq("doc_id"), "left_anti")
-    DedupOps.unpersistAfterFirstAction(mixtureSample(survivors), cleanTrain)
+    DedupOps.unpersistAfterFirstAction(mixtureSample(survivors), cleanTrain, gate)
   }
 
   val qPipelineCorpusOracle: String =

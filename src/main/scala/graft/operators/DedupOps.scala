@@ -37,7 +37,8 @@ object DedupOps {
   private val pendingCacheScopes =
     new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
 
-  /** Unpersists `cached` once the first action OVER THE RETURNED
+  /** Unpersists `cached` (persisted DataFrames, and relations built by
+    * `GraftBridge.materialize`) once the first action OVER THE RETURNED
     * DataFrame completes — the "onComplete" discipline for caches that
     * a lazily-returned DataFrame still references. The query functions
     * here persist a shingle relation that feeds several consumers of
@@ -83,7 +84,15 @@ object DedupOps {
       // stopped): unpersist/unregister against a stopped context
       // throws — skip them, a stopped session's storage is gone anyway
       if (!spark.sparkContext.isStopped) {
-        cached.foreach(_.unpersist(false))
+        cached.foreach { df =>
+          df.unpersist(false)
+          // a relation built by GraftBridge.materialize keeps its rows
+          // in an RDD the cache manager does not know about
+          df.queryExecution.logical match {
+            case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(false)
+            case _ =>
+          }
+        }
         spark.listenerManager.unregister(listener)
       }
       pendingCacheScopes.remove(release)
@@ -1625,7 +1634,7 @@ object DedupOps {
         .select(col("a_id"), col("b_id"), col("jaccard"))
         .write.parquet(d)
     }
-    spark.read.parquet(dir)
+    Tables.parquet(spark, dir)
   }
 
   /** [[qDedupClusters]] served from the STORED edge artifact —
@@ -2445,7 +2454,7 @@ object DedupOps {
     val incoming = Tables.documents(spark, sfDir)
       .withColumn("bucket", SamplingOps.bucket100("doc_id"))
       .filter(col("bucket") >= 90)
-    classifyAgainstIndex(incoming, spark.read.parquet(baseDir))
+    classifyAgainstIndex(incoming, Tables.parquet(spark, baseDir))
   }
 
   /** Classify an arbitrary INCOMING doc slice (doc_id, text) against a
@@ -2549,7 +2558,7 @@ object DedupOps {
       .select(col("doc_id"), col("source"), col("delta_status"), col("text"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cls = classifyAgainstIndex(
-      delta.select(col("doc_id"), col("text")), spark.read.parquet(dir))
+      delta.select(col("doc_id"), col("text")), Tables.parquet(spark, dir))
     unpersistAfterFirstAction(
       delta.select(col("doc_id"), col("source"), col("delta_status"))
         .join(cls, "doc_id")
@@ -2573,7 +2582,7 @@ object DedupOps {
     val dir = Artifacts.getOrBuild(spark, sfDir, "prev_sig") { d =>
       baseSignatures(prevSnapshotDocs(spark, sfDir)).write.parquet(d)
     }
-    val prevIdx = spark.read.parquet(dir)
+    val prevIdx = Tables.parquet(spark, dir)
     val prevFp = crawlPrev(spark, sfDir)
       .select(col("doc_id"), col("fp").as("p_fp"))
     val cur = Tables.documents(spark, sfDir)

@@ -979,7 +979,7 @@ object SimilarityOps {
     val incoming = DedupOps.normedVectors(Tables.embeddings(spark, sfDir))
       .withColumn("hb", SamplingOps.bucket100("vec_id"))
       .filter(col("hb") >= 90).drop("hb", "label")
-    val index = spark.read.parquet(indexDir)
+    val index = Tables.parquet(spark, indexDir)
     val idxb = index
       .select(col("vec_id").as("base_id"), explode(col("buckets")).as("bb"))
       .select(col("base_id"), col("bb.tbl").as("b_tbl"), col("bb.bucket").as("b_bucket"))
@@ -1681,7 +1681,7 @@ object SimilarityOps {
       val n = DedupOps.annSizingCount(sfDir, e.count())
       DedupOps.annScoredPairs(e, knownN = n).write.parquet(d)
     }
-    spark.read.parquet(dir)
+    Tables.parquet(spark, dir)
   }
 
   /** [[qSimPagerank]] served from the STORED edge artifact — identical
@@ -1884,7 +1884,7 @@ object SimilarityOps {
     * of rows. Same oracle verbatim: the artifact is the same encoder
     * materialized. */
   def qSimIvfPqTopkStored(spark: SparkSession, sfDir: String): DataFrame =
-    ivfPqTopkOn(spark, sfDir, spark.read.parquet(pqIndexDir(spark, sfDir)))
+    ivfPqTopkOn(spark, sfDir, Tables.parquet(spark, pqIndexDir(spark, sfDir)))
 
   /** IVFPQ MULTIPROBE (r16): queries probe their top-2 coarse cells —
     * the FAISS nprobe knob, the standard recall/latency trade at fixed
@@ -1896,7 +1896,7 @@ object SimilarityOps {
     * equi-join, and the per-candidate cost stays M integer lookups. */
   private[graft] val IvfPqProbes = 2
   def qSimIvfPqMultiprobe(spark: SparkSession, sfDir: String): DataFrame =
-    ivfPqTopkOn(spark, sfDir, spark.read.parquet(pqIndexDir(spark, sfDir)),
+    ivfPqTopkOn(spark, sfDir, Tables.parquet(spark, pqIndexDir(spark, sfDir)),
       qprobe = IvfPqProbes)
 
   /** IVFPQ + EXACT RE-RANK (r16): the two-stage serving ladder FAISS
@@ -1918,7 +1918,7 @@ object SimilarityOps {
     import org.apache.spark.sql.expressions.Window
     val cb = typedlit(pqCodebook(spark, sfDir))
     val e = DedupOps.normedVectors(Tables.embeddings(spark, sfDir))
-    val cand = spark.read.parquet(pqIndexDir(spark, sfDir))
+    val cand = Tables.parquet(spark, pqIndexDir(spark, sfDir))
     val q = broadcast(
       cellAssignments(e.filter(col("vec_id") < NumQueries), centroids(e), nprobe = 1)
         .withColumn("qv", pqQuant(col("v")))

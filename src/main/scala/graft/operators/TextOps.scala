@@ -646,7 +646,7 @@ object TextOps {
         .write.parquet(d)
       n.toString
     }
-    (spark.read.parquet(dir), meta.trim.toLong)
+    (Tables.parquet(spark, dir), meta.trim.toLong)
   }
 
   /** [[qTfidf]] SERVED from the stored IDF artifact — identical
@@ -811,7 +811,7 @@ object TextOps {
       s"${s.getLong(0)},${s.getLong(1)}"
     }
     val Array(n, sumdl) = meta.trim.split(",").map(_.toLong)
-    (spark.read.parquet(dir), n, sumdl)
+    (Tables.parquet(spark, dir), n, sumdl)
   }
 
   /** [[qBm25]] SERVED from the stored model — identical contract and
@@ -1883,7 +1883,7 @@ object TextOps {
         tf.agg(sum(col("c"))).head.getLong(0).toString
       } finally tf.unpersist()
     }
-    (spark.read.parquet(dir), meta.trim.toLong)
+    (Tables.parquet(spark, dir), meta.trim.toLong)
   }
 
   /** [[qLmScore]] SERVED from the stored unigram model — identical
@@ -1984,7 +1984,7 @@ object TextOps {
         .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
         .write.parquet(d)
     }
-    spark.read.parquet(dir)
+    Tables.parquet(spark, dir)
   }
 
   /** [[qLmBigram]] SERVED from the stored model (oracle shared
@@ -2034,7 +2034,7 @@ object TextOps {
         .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
         .write.parquet(d)
     }
-    spark.read.parquet(dir)
+    Tables.parquet(spark, dir)
   }
 
   private[graft] def lmBackoffStored(spark: SparkSession, sfDir: String)
@@ -2051,7 +2051,7 @@ object TextOps {
         tf.agg(sum(col("cu"))).head.getLong(0).toString
       } finally tf.unpersist()
     }
-    (c2, spark.read.parquet(uniDir), meta.trim.toLong)
+    (c2, Tables.parquet(spark, uniDir), meta.trim.toLong)
   }
 
   def qLmBackoff(spark: SparkSession, sfDir: String): DataFrame = {
@@ -2213,7 +2213,7 @@ object TextOps {
     val contDir = graft.Artifacts.getOrBuild(spark, sfDir, "kn_cont_ref") { d =>
       c2.groupBy(col("w2")).agg(count(lit(1)).as("cont")).write.parquet(d)
     }
-    (c2, spark.read.parquet(ctxDir), spark.read.parquet(contDir),
+    (c2, Tables.parquet(spark, ctxDir), Tables.parquet(spark, contDir),
       meta.trim.toLong)
   }
 
@@ -2889,7 +2889,7 @@ object TextOps {
           dcr.getLong(0), dcr.getLong(1)).mkString(",")
       } finally model.unpersist()
     }
-    (spark.read.parquet(dir), meta.trim.split(",").map(_.toLong))
+    (Tables.parquet(spark, dir), meta.trim.split(",").map(_.toLong))
   }
 
   /** [[qNbQuality]] SERVED from the stored model: the per-doc token
@@ -3078,7 +3078,7 @@ FROM r ORDER BY doc_id""")
           dcr.getLong(0), dcr.getLong(1)).mkString(",")
       } finally model.unpersist()
     }
-    (spark.read.parquet(dir), meta.trim.split(",").map(_.toLong))
+    (Tables.parquet(spark, dir), meta.trim.split(",").map(_.toLong))
   }
 
   /** Every document scored against the fold-excluded model — the
@@ -3303,7 +3303,7 @@ FROM r ORDER BY doc_id""")
           sum(when(curatedPred, 0L).otherwise(1L)).as("cq"))
         .write.parquet(d)
     }
-    spark.read.parquet(dir)
+    Tables.parquet(spark, dir)
   }
 
   /** NB MODEL REFRESH from a crawl delta — the stored-MODEL
@@ -3408,7 +3408,7 @@ FROM r ORDER BY doc_id""")
       } finally tf.unpersist()
     }
     val Array(n, v) = meta.trim.split(",").map(_.toLong)
-    (spark.read.parquet(dir), n, v)
+    (Tables.parquet(spark, dir), n, v)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

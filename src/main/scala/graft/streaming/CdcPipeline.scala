@@ -221,7 +221,10 @@ object CdcPipeline {
     * (empty before the first batch), falling back to the `.prev`
     * generation if a crash landed between the two renames of
     * [[swapGenerations]] — ONE implementation for every maintained
-    * state (snapshot, SCD2) so the recovery contract cannot diverge. */
+    * state (snapshot, SCD2) so the recovery contract cannot diverge.
+    * Not `Tables.parquet`: the schema is passed in, so the read infers
+    * nothing, and the state is rewritten every trigger, so a resolved
+    * relation would never be reused. */
   private def stateRelation(spark: SparkSession, stateDir: String,
       schema: org.apache.spark.sql.types.StructType): DataFrame = {
     val cur = new java.io.File(stateDir)

@@ -910,6 +910,21 @@ class PipelineOpsSpec extends SparkSpec {
       f"warm composition $warm%.2f s should not grossly exceed the cold pipeline $cold%.2f s")
   }
 
+  test("pipeline_corpus survives a second action after the first released its gate") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Seconds, Span}
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val df = CorpusPipeline.qPipelineCorpus(spark, sf)
+    val first = df.collect().toSeq
+    eventually(timeout(Span(30, Seconds))) {
+      assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- before).isEmpty)
+    }
+    // the gate's blocks are gone; a second action with its own plan (a
+    // re-run of the same plan would reuse the first run's shuffle files
+    // and never read the gate) recomputes them
+    assert(df.count() === first.size)
+  }
+
   test("band tuning: candidates shrink as bands tighten; r=3 row matches the production path") {
     val rows = DedupOps.qDedupLshBandTuning(spark, sf).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3),
