@@ -28,9 +28,9 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // drop per-query persist()s (dedup shingle relations) so cached
-      // blocks don't accumulate across the 60+ queries in this JVM —
-      // same caller-clears-cache contract as Bench
+      // each query's QueryScope has already released its intermediates
+      // once this write ended; clearing the session cache as well keeps
+      // any block from outliving its query across the 241 in this JVM
       finally spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryScope, Tables}
 import graft.model.ChangeEvent
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -603,14 +603,14 @@ object CdcOps {
     * shard offsets. Answer-identical (the oracle keeps the naive
     * global walk); every remaining unpartitioned window reads a
     * ≤shard-count relation. */
-  def qWalGaps(spark: SparkSession, sfDir: String): DataFrame = {
+  def qWalGaps(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     import org.apache.spark.sql.expressions.Window
     val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val local = filterActions(toEnvelope(Tables.events(spark, sfDir)))
       .select(col("wal_position"))
       .repartitionByRange(parts, col("wal_position"))
       .withColumn("__shard", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val wS = Window.partitionBy(col("__shard")).orderBy(col("wal_position"))
     val intra = local
       .withColumn("prev_wal", lag(col("wal_position"), 1).over(wS))
@@ -633,20 +633,19 @@ object CdcOps {
       .select(col("__shard"), (col("prev_wal") + 1).as("gap_from"),
         (col("wal_position") - 1).as("gap_to"),
         (col("wal_position") - col("prev_wal") - 1).as("missing"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val offsets = gaps.groupBy(col("__shard")).agg(sum(col("missing")).as("__m"))
       .withColumn("__off", coalesce(sum(col("__m")).over(
         Window.orderBy(col("__shard"))
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .select(col("__shard"), col("__off"))
-    val result = gaps
+    gaps
       .withColumn("__run", sum(col("missing")).over(
         Window.partitionBy(col("__shard")).orderBy(col("gap_from"))
           .rowsBetween(Window.unboundedPreceding, 0)))
       .join(broadcast(offsets), Seq("__shard"))
       .select(col("gap_from"), col("gap_to"), col("missing"),
         (col("__off") + col("__run")).as("cum_missing"))
-    DedupOps.unpersistAfterFirstAction(result, local, gaps)
   }
 
   val qWalGapsOracle: String =

@@ -1,9 +1,8 @@
 package graft.operators
 
-import graft.Tables
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import graft.{QueryScope, Tables}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** The END-TO-END corpus build (the Lee et al. 2022 shape a
   * training-data team actually ships): quality + language gate →
@@ -37,14 +36,12 @@ object CorpusPipeline {
   private val Budget = 120
   private val MinShingleHits = 5
 
-  def qPipelineCorpus(spark: SparkSession, sfDir: String): DataFrame = {
+  def qPipelineCorpus(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     val docs = Tables.documents(spark, sfDir)
     // the one shingle explode, shared by near-dup mining and
     // decontamination (released after the query's first action)
-    val sh = bucketedShingles(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (result, caches) = stages(docs, sh)
-    DedupOps.unpersistAfterFirstAction(result, (sh +: caches): _*)
+    val sh = s.persist(bucketedShingles(docs))
+    stages(s, docs, sh)
   }
 
   /** The bucketed (doc_id, shingle, bucket) relation the pipeline
@@ -55,10 +52,9 @@ object CorpusPipeline {
 
   /** Stage 1+2 (quality/language gate + exact-dedup canonical filter)
     * — shared verbatim by the live pipeline and the stored variant so
-    * their admission semantics cannot drift. Returns (clean, gate): the
-    * gate relation is materialized here and the caller releases it with
-    * the query's other persists. */
-  private def cleanDocs(docs: DataFrame): (DataFrame, DataFrame) = {
+    * their admission semantics cannot drift. The gate relation is
+    * materialized here, in the caller's scope. */
+  private def cleanDocs(s: QueryScope, docs: DataFrame): DataFrame = {
     // r17: the gate projection feeds TWO consumers — the canonical
     // fingerprint aggregate and the admission filter — and each used
     // to re-run the whole tokenize-and-score subtree (two full corpus
@@ -67,24 +63,20 @@ object CorpusPipeline {
     // Not the columnar cache: an r16 experiment measured it WORSE here
     // (8.9 -> 14.8 s — InMemoryRelation serialization + degraded
     // downstream join planning), the same cache-vs-checkpoint trade the
-    // components loop hit. Not a local checkpoint either: its blocks
-    // cannot be recomputed once released, so a second action over the
-    // result would fail. Only the columns the two consumers need are
+    // components loop hit. Only the columns the two consumers need are
     // kept.
-    val gated = GraftBridge.materialize(
+    val gated = s.materialize(
       TextOps.gatedDocs(docs, col("source"), SamplingOps.bucket100("doc_id").as("bucket"))
         .select(col("doc_id"), col("source"), col("bucket"),
           col("fp_content"), col("quality_score"), col("n_tokens"),
-          col("predicted_lang"), col("lang")),
-      StorageLevel.MEMORY_AND_DISK)
+          col("predicted_lang"), col("lang")))
     val canonical = gated.groupBy(col("fp_content"))
       .agg(min(col("doc_id")).as("keep_id"))
-    val clean = gated
+    gated
       .filter(col("quality_score") >= 0.2 && col("n_tokens") >= 10 &&
         col("predicted_lang") === col("lang"))
       .join(canonical, col("doc_id") === col("keep_id"))
       .select(col("doc_id"), col("source"), col("bucket"))
-    (clean, gated)
   }
 
   /** Stage 5 (deterministic mixture sampling over the survivor set) —
@@ -113,11 +105,11 @@ object CorpusPipeline {
     * relations a platform team would have materialized anyway — is
     * measurable separately from the cold scan+explode
     * (CorpusPipelineSpec times both; NOTES_r6 records the split).
-    * Returns (result, internal persists the caller must release). */
-  private[graft] def stages(docs: DataFrame, sh: DataFrame): (DataFrame, Seq[DataFrame]) = {
+    * Its intermediates are kept in the caller's scope `s`. */
+  private[graft] def stages(s: QueryScope, docs: DataFrame, sh: DataFrame): DataFrame = {
     // stage 1+2: quality/language gate + exact dedup (min doc_id per
     // content fingerprint, computed over ALL docs as in qQualityPipeline)
-    val (clean, gate) = cleanDocs(docs)
+    val clean = cleanDocs(s, docs)
 
     // stage 3: near-dup removal among the clean TRAIN docs — df-capped
     // jaccard (same cap and threshold as dedup_jaccard_capped), drop
@@ -128,8 +120,7 @@ object CorpusPipeline {
     // measured 17 corpus scans without the persist, 3 with. It is a
     // thin 3-column relation (ids + source + bucket), far smaller than
     // the corpus it filters.
-    val cleanTrain = clean.filter(col("bucket") < 80)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cleanTrain = s.persist(clean.filter(col("bucket") < 80))
     val shClean = sh.filter(col("bucket") < 80)
       .join(cleanTrain.select("doc_id"), "doc_id")
       .select("doc_id", "shingle")
@@ -156,7 +147,7 @@ object CorpusPipeline {
 
     // stage 5: mixture sampling over the survivors (same weights and
     // hash-order pick as sample_mixture, budget scaled to the pipeline)
-    (mixtureSample(survivors), Seq(cleanTrain, gate))
+    mixtureSample(survivors)
   }
 
   /** Stored DECONTAMINATION artifact: for every train-bucket document
@@ -169,13 +160,13 @@ object CorpusPipeline {
     * into this one-time build; serving is a filter + anti-join. */
   private[graft] def benchHitsStored(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = graft.Artifacts.getOrBuild(spark, sfDir, "bench_hits") { d =>
-      val sh = bucketedShingles(Tables.documents(spark, sfDir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try sh.filter(col("bucket") < 80).select("doc_id", "shingle")
-        .join(sh.filter(col("bucket") >= 90).select("shingle").distinct(), "shingle")
-        .groupBy(col("doc_id")).agg(count_distinct(col("shingle")).as("hits"))
-        .write.parquet(d)
-      finally sh.unpersist()
+      QueryScope.eager(spark) { s =>
+        val sh = s.persist(bucketedShingles(Tables.documents(spark, sfDir)))
+        sh.filter(col("bucket") < 80).select("doc_id", "shingle")
+          .join(sh.filter(col("bucket") >= 90).select("shingle").distinct(), "shingle")
+          .groupBy(col("doc_id")).agg(count_distinct(col("shingle")).as("hits"))
+          .write.parquet(d)
+      }
     }
     Tables.parquet(spark, dir)
   }
@@ -202,11 +193,9 @@ object CorpusPipeline {
     * the mine-once discipline fixes the edge definition at mining
     * time. The oracle below reproduces the artifact definitions
     * exactly, so the hash gate still proves end-to-end equivalence. */
-  def qPipelineCorpusStored(spark: SparkSession, sfDir: String): DataFrame = {
+  def qPipelineCorpusStored(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     val docs = Tables.documents(spark, sfDir)
-    val (clean, gate) = cleanDocs(docs)
-    val cleanTrain = clean.filter(col("bucket") < 80)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cleanTrain = s.persist(cleanDocs(s, docs).filter(col("bucket") < 80))
     val ids = cleanTrain.select("doc_id")
     val nearDups = DedupOps.textEdgesStored(spark, sfDir)
       .select("a_id", "b_id")
@@ -219,7 +208,7 @@ object CorpusPipeline {
     val survivors = cleanTrain.select("doc_id", "source")
       .join(nearDups, Seq("doc_id"), "left_anti")
       .join(contaminated, Seq("doc_id"), "left_anti")
-    DedupOps.unpersistAfterFirstAction(mixtureSample(survivors), cleanTrain, gate)
+    mixtureSample(survivors)
   }
 
   val qPipelineCorpusOracle: String =
@@ -393,13 +382,13 @@ object CorpusPipeline {
     * only corpus-sized shuffles, both with map-side combine. The
     * grand-total row share is a 1-row literal folded in driver-side
     * (no 1-row join; ANN-sizing-count discipline). */
-  def qDatasetCard(spark: SparkSession, sfDir: String): DataFrame = {
+  def qDatasetCard(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     val perDoc = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"), col("lang"),
         col("n_chars"),
         size(split(col("text"), " ")).as("n_tokens"),
         md5(col("text").cast("binary")).as("fp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val totalDocs = perDoc.count()
     val dupMass = perDoc
       .withColumn("grp", count(lit(1)).over(
@@ -409,7 +398,7 @@ object CorpusPipeline {
           .orderBy(col("doc_id"))) === 1)
       .filter(col("grp") > 1 && !col("keeper"))
       .groupBy(col("source")).agg(count(lit(1)).as("n_dup_docs"))
-    val result = perDoc.groupBy(col("source"))
+    perDoc.groupBy(col("source"))
       .agg(
         count(lit(1)).as("n_docs"),
         sum(col("n_tokens")).as("n_tokens"),
@@ -425,7 +414,6 @@ object CorpusPipeline {
         round(coalesce(col("n_dup_docs"), lit(0L)) / col("n_docs")
           .cast("double"), 6).as("dup_rate_r"),
         round(col("n_docs") / lit(totalDocs.toDouble), 6).as("corpus_share_r"))
-    DedupOps.unpersistAfterFirstAction(result, perDoc)
   }
 
   val qDatasetCardOracle: String =

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Artifacts, Tables}
+import graft.{Artifacts, QueryScope, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
@@ -26,88 +26,6 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   *     reproduce them bit-for-bit (no engine-private hash).
   */
 object DedupOps {
-
-  private val cacheScopeIds = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Queries built but never executed would otherwise pin their cache
-    * and listener forever — a bounded registry force-releases the
-    * OLDEST pending scope once more than this many are outstanding
-    * (the same recompute-not-correctness trade as an early release). */
-  private val MaxPendingCacheScopes = 64
-  private val pendingCacheScopes =
-    new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
-
-  /** Unpersists `cached` (persisted DataFrames, and relations built by
-    * `GraftBridge.materialize`) once the first action OVER THE RETURNED
-    * DataFrame completes — the "onComplete" discipline for caches that
-    * a lazily-returned DataFrame still references. The query functions
-    * here persist a shingle relation that feeds several consumers of
-    * ONE downstream result; the first action over that result is by
-    * construction the moment the cache has served its purpose. The
-    * result is tagged with a unique SubqueryAlias and the listener
-    * fires only for a QueryExecution whose analyzed plan contains that
-    * alias (writes and counts wrap the plan, so this is a subtree
-    * check, not plan equality) — an UNRELATED action in an interactive
-    * session neither drops the cache early nor fires the listener.
-    * Listener lifetime is bounded two ways: firing unregisters it, and
-    * scopes whose query is never executed (plan-only inspection) are
-    * force-released once [[MaxPendingCacheScopes]] newer scopes exist.
-    * Listener delivery is async (Spark's listener bus), so release is
-    * near-immediate, not synchronous. This replaces the previous
-    * "caller must clearCache" contract, which leaked storage in
-    * long-lived sessions. */
-  private[graft] def unpersistAfterFirstAction(result: DataFrame, cached: DataFrame*): DataFrame = {
-    val spark = result.sparkSession
-    val tag = s"graft_cache_scope_${cacheScopeIds.incrementAndGet()}"
-    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
-    var release: () => Unit = null
-    lazy val listener: org.apache.spark.sql.util.QueryExecutionListener =
-      new org.apache.spark.sql.util.QueryExecutionListener {
-        private def fire(qe: org.apache.spark.sql.execution.QueryExecution): Unit = {
-          val relevant = qe.analyzed.exists {
-            case s: org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias =>
-              s.identifier.name == tag
-            case _ => false
-          }
-          if (relevant) release()
-        }
-        override def onSuccess(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            durationNs: Long): Unit = fire(qe)
-        override def onFailure(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            exception: Exception): Unit = fire(qe)
-      }
-    release = () => if (done.compareAndSet(false, true)) {
-      // a scope can outlive its session (force-release below runs on
-      // an UNRELATED caller's thread, possibly after that session was
-      // stopped): unpersist/unregister against a stopped context
-      // throws — skip them, a stopped session's storage is gone anyway
-      if (!spark.sparkContext.isStopped) {
-        cached.foreach { df =>
-          df.unpersist(false)
-          // a relation built by GraftBridge.materialize keeps its rows
-          // in an RDD the cache manager does not know about
-          df.queryExecution.logical match {
-            case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(false)
-            case _ =>
-          }
-        }
-        spark.listenerManager.unregister(listener)
-      }
-      pendingCacheScopes.remove(release)
-    }
-    spark.listenerManager.register(listener)
-    pendingCacheScopes.add(release)
-    while (pendingCacheScopes.size() > MaxPendingCacheScopes) {
-      val oldest = pendingCacheScopes.poll()
-      // best-effort by design: an older scope's failing release must
-      // never propagate to this unrelated caller
-      if (oldest != null)
-        try oldest() catch { case scala.util.control.NonFatal(_) => () }
-    }
-    result.as(tag)
-  }
 
   /** Distinct word-3-gram shingles of a pre-split token array column —
     * THE shingle definition, shared by the batch dedup family and the
@@ -149,47 +67,28 @@ object DedupOps {
       |  FROM (SELECT doc_id, string_split(text, ' ') AS ts FROM documents) t,
       |       unnest(generate_series(1, len(ts)-2)) AS u(g))""".stripMargin
 
-  /** Session conf gating 64-bit hashed shuffle keys in [[jaccardPairs]].
-    * Measured at sf0.1 local[32] (NOTES_r5): string keys 2.60 s vs
-    * hashed 2.40 s (~8%) — the md5/xxhash cost mostly offsets the
-    * narrower shuffle when the "network" is memory. On a real cluster
-    * the shuffle crosses a network and the trade likely flips, so the
-    * knob ships OFF by default with both paths oracle-equal
-    * (DedupSpec asserts flag-on == flag-off on the fixture; a 64-bit
-    * collision is the only possible divergence, ~n²/2⁶⁴). */
-  val ShingleHashKeysConf = "spark.graft.shingleHashJoinKeys"
-
   /** Exact-Jaccard pairs from a (doc_id, shingle) relation: inverted-
     * index join + per-pair intersection count. Returns
     * (a_id, b_id, inter, jaccard).
     *
     * CACHE LIFECYCLE: the persisted shingle relation is released by
-    * [[unpersistAfterFirstAction]] as soon as the first action over the
-    * returned pairs completes — no caller-side clearCache contract. */
-  def jaccardPairs(sh0: DataFrame): DataFrame = {
-    // optional narrow shuffle keys for cluster deployments (see
-    // ShingleHashKeysConf): per-doc distinct counts and pair
-    // intersection counts are invariant under any injective key
-    // mapping, so hashing before the joins changes bytes, not results
-    val hashed =
-      if (sh0.sparkSession.conf.getOption(ShingleHashKeysConf).contains("true"))
-        sh0.withColumn("shingle", xxhash64(col("shingle")))
-      else sh0
+    * this helper's own [[QueryScope]] as soon as the first action over
+    * the returned pairs completes — no caller-side clearCache contract. */
+  def jaccardPairs(sh0: DataFrame): DataFrame = QueryScope(sh0.sparkSession) { s =>
     // sh feeds the per-doc counts and BOTH sides of the inverted-index
     // self-join — persist so the (exploded) relation is computed once
-    val sh = hashed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = s.persist(sh0)
     val counts = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val pairs = sh.as("a")
       .join(sh.as("b"),
         col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
       .agg(count(lit(1)).as("inter"))
-    val scored = pairs
+    pairs
       .join(counts.withColumnRenamed("doc_id", "a_id").withColumnRenamed("n", "na"), "a_id")
       .join(counts.withColumnRenamed("doc_id", "b_id").withColumnRenamed("n", "nb"), "b_id")
       .withColumn("jaccard",
         col("inter").cast(DoubleType) / (col("na") + col("nb") - col("inter")))
-    unpersistAfterFirstAction(scored, sh)
   }
 
   // ---- 1. exact dedup ----
@@ -248,7 +147,7 @@ object DedupOps {
     * own kept paragraphs (per-doc state bounded by doc length, never
     * corpus-sized). The paragraph relation persists across its two
     * consumers ([[qDedupJaccard]]'s cache discipline). */
-  def qDedupParagraphs(spark: SparkSession, sfDir: String): DataFrame = {
+  def qDedupParagraphs(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     val P = 20
     val paras = Tables.documents(spark, sfDir)
       .select(col("doc_id"), split(col("text"), " ").as("ts"))
@@ -258,9 +157,9 @@ object DedupOps {
       .select(col("doc_id"), col("pid"),
         array_join(slice(col("ts"), col("pid") * P + 1, lit(P)), " ").as("ptext"))
       .withColumn("h", md5(col("ptext").cast("binary")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val freq = paras.groupBy(col("h")).agg(count(lit(1)).as("cnt"))
-    val out = paras.join(freq, "h")
+    paras.join(freq, "h")
       .groupBy(col("doc_id"))
       .agg(
         count(lit(1)).as("n_paras"),
@@ -272,7 +171,6 @@ object DedupOps {
       .withColumn("dup_rate_r",
         round(col("n_dup_paras") / col("n_paras").cast(DoubleType), 6))
       .select("doc_id", "n_paras", "n_dup_paras", "dup_rate_r", "kept_md5")
-    unpersistAfterFirstAction(out, paras)
   }
 
   val qDedupParagraphsOracle: String =
@@ -530,19 +428,18 @@ object DedupOps {
     * shared by the query above and the clustering edge miner, where a
     * global sort feeding a groupBy would be dead weight in the
     * materialized edge relation. */
-  def cappedJaccardPairs(spark: SparkSession, sfDir: String): DataFrame = {
+  def cappedJaccardPairs(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     val maxDf = 20
     // persisted: sh feeds the document-frequency agg AND the join that
     // filters to rare shingles — one explode instead of two
     val sh = shingles(Tables.documents(spark, sfDir))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val rare = sh.groupBy(col("shingle"))
       .agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf)
       .select("shingle")
     val kept = sh.join(rare, "shingle")
-    unpersistAfterFirstAction(
-      jaccardPairs(kept).filter(col("jaccard") >= 0.1), sh)
+    jaccardPairs(kept).filter(col("jaccard") >= 0.1)
   }
 
   /** ASYMMETRIC CONTAINMENT near-dup (Broder 1997's containment
@@ -561,16 +458,16 @@ object DedupOps {
     * second join). The 0.6 gate is the integer compare 5·inter ≥
     * 3·n_src; the emitted ratio is one IEEE division of two small
     * ints — deterministic in both engines. */
-  def qDedupContainment(spark: SparkSession, sfDir: String): DataFrame = {
+  def qDedupContainment(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     val maxDf = 20
     val sh = shingles(Tables.documents(spark, sfDir))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val rare = sh.groupBy(col("shingle"))
       .agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf)
       .select("shingle")
     val kept = sh.join(rare, "shingle")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val counts = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val pairs = kept.as("a")
       .join(kept.as("b"),
@@ -579,7 +476,7 @@ object DedupOps {
       .agg(count(lit(1)).as("inter"))
       .join(counts.withColumnRenamed("doc_id", "a_id").withColumnRenamed("n", "na"), "a_id")
       .join(counts.withColumnRenamed("doc_id", "b_id").withColumnRenamed("n", "nb"), "b_id")
-    val directed = pairs.select(explode(array(
+    pairs.select(explode(array(
         struct(col("a_id").as("src_id"), col("b_id").as("dst_id"),
           col("na").as("n_src"), col("nb").as("n_dst"), col("inter")),
         struct(col("b_id").as("src_id"), col("a_id").as("dst_id"),
@@ -590,7 +487,6 @@ object DedupOps {
       .withColumn("containment", col("inter").cast(DoubleType) / col("n_src"))
       .withColumn("is_mutual",
         col("n_dst") >= 5 && lit(5L) * col("inter") >= lit(3L) * col("n_dst"))
-    unpersistAfterFirstAction(directed, sh, kept)
   }
 
   val qDedupContainmentOracle: String =
@@ -697,18 +593,17 @@ object DedupOps {
     * 12 minima are computed once and persisted); each config adds a
     * band equi-join and a verification join BOUNDED BY ITS OWN
     * candidate count — the sweep never joins corpus × corpus. */
-  def qDedupLshBandTuning(spark: SparkSession, sfDir: String): DataFrame = {
+  def qDedupLshBandTuning(spark: SparkSession, sfDir: String): DataFrame = QueryScope.eager(spark) { s =>
     import spark.implicits._
-    val sh = shingles(Tables.documents(spark, sfDir))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = s.persist(shingles(Tables.documents(spark, sfDir)))
     val mins = (0 until NumHashes).map { j =>
       min(md5(concat(lit(j.toString), lit(":"), col("shingle")).cast("binary"))).as(s"m$j")
     }
     val sig = sh.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val sets = sh.groupBy(col("doc_id"))
       .agg(collect_list(col("shingle")).as("ss"), count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     // r16 optimization round: ONE job for the whole sweep. The old
     // shape ran 2 count() actions per config (8 jobs, plus a persist
     // per candidate set); but (a) the verification join is TOTAL on
@@ -742,7 +637,6 @@ object DedupOps {
       (r, NumHashes / r, nCand, nVer,
         if (nCand == 0) 0L else nVer * 1000000L / nCand)
     }
-    sh.unpersist(); sig.unpersist(); sets.unpersist()
     rows.toDF("rows_per_band", "n_bands", "n_candidates", "n_verified",
         "precision_ppm")
   }
@@ -797,14 +691,14 @@ object DedupOps {
     * intersection size comes from `array_intersect` — work proportional
     * to |candidates|, never to the full pair matrix. That asymmetry is
     * the whole point of LSH at 100 TB. */
-  def qDedupMinhashLsh(spark: SparkSession, sfDir: String): DataFrame = {
+  def qDedupMinhashLsh(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     // The shingle relation feeds three consumers (band signatures, the
     // collected sets, and both sides of the bucket self-join); without
     // a persist each consumer re-explodes ~40× rows from parquet.
     // Materializing it once cuts two full scans — released by the
-    // unpersistAfterFirstAction wrapper on the returned result.
+    // query's scope after the first action over the returned result.
     val sh = shingles(Tables.documents(spark, sfDir))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val bands = minhashBands(sh)
     val candidates = bands.as("a")
       .join(bands.as("b"),
@@ -824,16 +718,14 @@ object DedupOps {
           lit(s"minhash verification: doc "), col("doc_id"),
           lit(s" has > $MaxShinglesPerDoc shingles; pre-truncate or split the document"))))
           .otherwise(col("ss")))
-    unpersistAfterFirstAction(
-      candidates
-        .join(sets.select(col("doc_id").as("a_id"), col("ss").as("sa"), col("n").as("na")), "a_id")
-        .join(sets.select(col("doc_id").as("b_id"), col("ss").as("sb"), col("n").as("nb")), "b_id")
-        .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
-        .withColumn("jaccard",
-          col("inter").cast(DoubleType) / (col("na") + col("nb") - col("inter")))
-        .filter(col("jaccard") >= 0.1)
-        .select("a_id", "b_id", "jaccard"),
-      sh)
+    candidates
+      .join(sets.select(col("doc_id").as("a_id"), col("ss").as("sa"), col("n").as("na")), "a_id")
+      .join(sets.select(col("doc_id").as("b_id"), col("ss").as("sb"), col("n").as("nb")), "b_id")
+      .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
+      .withColumn("jaccard",
+        col("inter").cast(DoubleType) / (col("na") + col("nb") - col("inter")))
+      .filter(col("jaccard") >= 0.1)
+      .select("a_id", "b_id", "jaccard")
   }
 
   val qDedupMinhashLshOracle: String =
@@ -890,10 +782,10 @@ object DedupOps {
     * FIXTURE-SCALE oracle query; the production citizen is
     * [[qDedupLshAuditStratum]], whose truth relation is bounded by a
     * deterministic document stratum IN CODE. */
-  def qDedupLshAudit(spark: SparkSession, sfDir: String): DataFrame = {
+  def qDedupLshAudit(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     val sh = shingles(Tables.documents(spark, sfDir))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    unpersistAfterFirstAction(lshAuditOn(sh), sh)
+      .transform(s.persist)
+    lshAuditOn(sh)
   }
 
   /** Audit body over a (doc_id, shingle) relation — shared by the
@@ -933,9 +825,9 @@ object DedupOps {
     * inverted-index jaccard (a band collision implies a shared
     * min-shingle, so the inner truth join loses nothing); the output
     * is 13 rows. */
-  def qDedupLshCalibration(spark: SparkSession, sfDir: String): DataFrame = {
+  def qDedupLshCalibration(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     val sh = shingles(Tables.documents(spark, sfDir))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val mins = (0 until NumHashes).map { j =>
       min(md5(concat(lit(j.toString), lit(":"), col("shingle"))
         .cast("binary"))).as(s"m$j")
@@ -946,7 +838,7 @@ object DedupOps {
     // docs-sized persist replaces two full re-aggregations (the same
     // reasoning that already persists sig in the band-tuning sweep).
     val sig = sh.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     // candidates from SINGLE-row bands (r = 1 over the same signature):
     // collisions fire at jaccard ≳ 1/12 instead of production banding's
     // ≳ 0.5, so the calibration sweeps the estimator's WHOLE range —
@@ -967,17 +859,15 @@ object DedupOps {
       .map(j => (col(s"am$j") === col(s"bm$j")).cast("long"))
       .reduce(_ + _)
     val truth = jaccardPairs(sh).select(col("a_id"), col("b_id"), col("jaccard"))
-    unpersistAfterFirstAction(
-      cand.join(sigA, "a_id").join(sigB, "b_id")
-        .select(col("a_id"), col("b_id"), agree.as("n_agree"))
-        .join(truth, Seq("a_id", "b_id"))
-        .groupBy(col("n_agree"))
-        .agg(count(lit(1)).as("n_pairs"),
-          round(avg(col("jaccard")), 6).as("avg_true_jaccard_r"))
-        .select(col("n_agree"),
-          round(col("n_agree") / lit(NumHashes.toDouble), 6).as("est_jaccard_r"),
-          col("n_pairs"), col("avg_true_jaccard_r")),
-      sh, sig)
+    cand.join(sigA, "a_id").join(sigB, "b_id")
+      .select(col("a_id"), col("b_id"), agree.as("n_agree"))
+      .join(truth, Seq("a_id", "b_id"))
+      .groupBy(col("n_agree"))
+      .agg(count(lit(1)).as("n_pairs"),
+        round(avg(col("jaccard")), 6).as("avg_true_jaccard_r"))
+      .select(col("n_agree"),
+        round(col("n_agree") / lit(NumHashes.toDouble), 6).as("est_jaccard_r"),
+        col("n_pairs"), col("avg_true_jaccard_r"))
   }
 
   val qDedupLshCalibrationOracle: String =
@@ -1042,13 +932,13 @@ object DedupOps {
   def qDedupLshAuditStratum(spark: SparkSession, sfDir: String): DataFrame =
     lshAuditStratum(spark, sfDir, LshAuditStratumPct)
 
-  def lshAuditStratum(spark: SparkSession, sfDir: String, pctDocs: Int): DataFrame = {
+  def lshAuditStratum(spark: SparkSession, sfDir: String, pctDocs: Int): DataFrame = QueryScope(spark) { s =>
     require(pctDocs >= 1 && pctDocs <= 100, s"stratum pct $pctDocs not in [1,100]")
     val docs = Tables.documents(spark, sfDir)
       .filter(SamplingOps.bucket100("doc_id") < pctDocs)
     val sh = shingles(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    unpersistAfterFirstAction(lshAuditOn(sh), sh)
+      .transform(s.persist)
+    lshAuditOn(sh)
   }
 
   val qDedupLshAuditOracle: String =
@@ -1320,16 +1210,14 @@ object DedupOps {
     * Input: undirected edges as (a_id, b_id). Output: (node, label)
     * with label = min node id reachable, the component's canonical id.
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame = QueryScope(pairs.sparkSession) { s =>
     // undirect the pair graph with ONE scan: explode each pair into its
     // two directions. A union of two selects over `pairs` would execute
     // the (expensive) mining plan twice inside this materialization.
-    val edgesRaw = pairs.select(explode(array(
+    val edgesRaw = s.persist(pairs.select(explode(array(
         struct(col("a_id").as("src"), col("b_id").as("dst")),
         struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .persist(lvl)
+      .select(col("e.src").as("src"), col("e.dst").as("dst")))
     // Right-size the loop's shuffle width from the measured edge count:
     // the near-dup pair graph is orders of magnitude smaller than the
     // corpus it was mined from, and a label relation of a few thousand
@@ -1340,108 +1228,93 @@ object DedupOps {
     // here (≥2 so the plan shape stays distributed; scales back up
     // linearly with real edge volume). Restored on exit; queries in
     // this session run sequentially (Bench/Verify contract).
-    // dev-only phase timing: SPARK_GRAFT_CC_TRACE=1 prints per-round cost
-    val trace = sys.env.contains("SPARK_GRAFT_CC_TRACE")
-    def timed[A](tag: String)(f: => A): A =
-      if (!trace) f else {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(f"[cc] $tag%-12s ${(System.nanoTime() - t0) / 1e9}%.2fs"); r
-      }
     val spark = pairs.sparkSession
     val prevWidth = spark.conf.get("spark.sql.shuffle.partitions")
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val nEdges = timed("edges")(edgesRaw.count())
-    val width = math.max(2L, math.min(prevWidth.toLong, nEdges / 500000L + 1L)).toInt
-    spark.conf.set("spark.sql.shuffle.partitions", width.toString)
-    // Re-lay the cached edges at the loop width, hash-partitioned on the
-    // join key: the mining plan's output partitioning (often the
-    // session's full width) would otherwise bill every round a full
-    // task-per-partition scan, and the cached hash partitioning on
-    // `dst` is reused by each round's join (InMemoryTableScan preserves
-    // outputPartitioning), so only the tiny label side shuffles.
-    // SELF-LOOPS (r16 optimization round): append (node, node) for every
-    // node once, at build time. Each round's min-label propagation then
-    // reads the node's OWN label through the same equi-join as its
-    // neighbors' — the per-round `union(labels)` branch (and with it the
-    // union-over-checkpoint constraint-rewrite hazard the old comment
-    // documents) disappears from the loop entirely. +n rows on a 2m-row
-    // relation, paid once, saves a union+wider shuffle every round.
-    val edges = timed("relayout") {
-      val withSelf = edgesRaw.union(
-        edgesRaw.select(col("src")).distinct()
-          .select(col("src"), col("src").as("dst")))
-      val e = withSelf.repartition(width, col("dst")).persist(lvl)
-      e.count(); edgesRaw.unpersist(); e
-    }
     try {
-    // localCheckpoint (eager) on every round's labels TRUNCATES LINEAGE —
-    // without it each round's plan nests the previous round's whole tree
-    // and Catalyst re-analysis grows without bound (measured: round 2
-    // alone 50+ s on a 485-node graph; with checkpointing the full loop
-    // is sub-second per round). Spark's own iterative algorithms
-    // checkpoint for exactly this reason. On a multi-executor cluster
-    // prefer a reliable `checkpoint()` dir — localCheckpoint pins blocks
-    // to executors and does not survive executor loss.
-    var labels = timed("init")(edges.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node")).localCheckpoint(true))
-    // CONVERGENCE BY MONOTONE SIGNATURE (r16 optimization round): each
-    // node's label is non-increasing round over round (prop takes a min
-    // that includes the node's own label; path doubling substitutes a
-    // label ≤ the current one), so Σ label over the constant node set is
-    // strictly decreasing until the fixpoint and UNCHANGED exactly when
-    // every label is unchanged — the same pointwise criterion the
-    // previous `next ⋈ labels | label ≠ old | count == 0` check tested,
-    // for the price of a 1-row aggregate over already-checkpointed
-    // blocks instead of a per-round join job that re-derived `next`
-    // from scratch. decimal(38,0): exact for any realistic id×n mass.
-    // ADVICE r16: a null sum is Spark's non-ANSI decimal-overflow
-    // result as well as the empty-relation one; mapping both to ZERO
-    // could declare two consecutive overflowed rounds "converged" with
-    // wrong labels. Count rows in the same 1-row aggregate and fail
-    // loudly on null-sum-with-rows (unreachable until Σ label exceeds
-    // 10^38, but the guard makes the convergence proof unconditional).
-    def labelSig(d: org.apache.spark.sql.DataFrame): java.math.BigDecimal = {
-      val r = d.agg(sum(col("label").cast("decimal(38,0)")), count(lit(1))).head
-      val v = r.getDecimal(0)
-      if (v == null) {
-        require(r.getLong(1) == 0L,
-          "connectedComponents: label-sum signature overflowed decimal(38,0)")
-        java.math.BigDecimal.ZERO
-      } else v
-    }
-    var prevSig = timed("sig0")(labelSig(labels))
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      timed(s"round $iter") {
-      // hash-min: pull the smallest label across every edge of the
-      // closed neighborhood (self-loops carry the node's own label, so
-      // no union branch is needed). Checkpointed BEFORE the self-join
-      // below to avoid computing it twice.
-      val prop = edges.join(labels, col("dst") === col("node"))
-        .select(col("src").as("node"), col("label"))
-        .groupBy("node").agg(min("label").as("label"))
-        .localCheckpoint(true)
-      // path doubling: label ← label(label), the map composed with
-      // ITSELF (composing with a fixed pre-round map would only advance
-      // a constant hop count per round). Every label is itself a node
-      // (a min of reachable node ids), so the self-join is total.
-      // Checkpointed eagerly: the next round's prop (and the final
-      // consumer) read the materialized rows instead of re-running the
-      // self-join — the old shape recomputed it up to twice per round.
-      val next = prop.as("a")
-        .join(prop.as("b"), col("a.label") === col("b.node"))
-        .select(col("a.node").as("node"), col("b.label").as("label"))
-        .localCheckpoint(true)
-      val s = labelSig(next)
-      converged = s.compareTo(prevSig) == 0
-      prevSig = s
-      labels = next
-      iter += 1
+      val nEdges = edgesRaw.count()
+      val width = math.max(2L, math.min(prevWidth.toLong, nEdges / 500000L + 1L)).toInt
+      spark.conf.set("spark.sql.shuffle.partitions", width.toString)
+      // Re-lay the cached edges at the loop width, hash-partitioned on the
+      // join key: the mining plan's output partitioning (often the
+      // session's full width) would otherwise bill every round a full
+      // task-per-partition scan, and the cached hash partitioning on
+      // `dst` is reused by each round's join (InMemoryTableScan preserves
+      // outputPartitioning), so only the tiny label side shuffles.
+      // SELF-LOOPS (r16 optimization round): append (node, node) for every
+      // node once, at build time. Each round's min-label propagation then
+      // reads the node's OWN label through the same equi-join as its
+      // neighbors' — the per-round `union(labels)` branch disappears from
+      // the loop entirely. +n rows on a 2m-row relation, paid once, saves
+      // a union+wider shuffle every round.
+      val edges = s.persist(edgesRaw.union(
+          edgesRaw.select(col("src")).distinct()
+            .select(col("src"), col("src").as("dst")))
+        .repartition(width, col("dst")))
+      edges.count()
+      s.unpersist(edgesRaw)
+      // Every round's labels are MATERIALIZED eagerly: each round reads
+      // the previous round's rows instead of nesting its whole plan tree
+      // (without it Catalyst re-analysis grows without bound — measured:
+      // round 2 alone 50+ s on a 485-node graph; materialized, the full
+      // loop is sub-second per round). The rows keep their lineage, so
+      // the previous round is released as soon as the next exists.
+      var labels = s.materialize(edges.select(col("src").as("node")).distinct()
+        .withColumn("label", col("node")))
+      // CONVERGENCE BY MONOTONE SIGNATURE (r16 optimization round): each
+      // node's label is non-increasing round over round (prop takes a min
+      // that includes the node's own label; path doubling substitutes a
+      // label ≤ the current one), so Σ label over the constant node set is
+      // strictly decreasing until the fixpoint and UNCHANGED exactly when
+      // every label is unchanged — the same pointwise criterion the
+      // previous `next ⋈ labels | label ≠ old | count == 0` check tested,
+      // for the price of a 1-row aggregate over already-materialized
+      // rows instead of a per-round join job that re-derived `next`
+      // from scratch. decimal(38,0): exact for any realistic id×n mass.
+      // ADVICE r16: a null sum is Spark's non-ANSI decimal-overflow
+      // result as well as the empty-relation one; mapping both to ZERO
+      // could declare two consecutive overflowed rounds "converged" with
+      // wrong labels. Count rows in the same 1-row aggregate and fail
+      // loudly on null-sum-with-rows (unreachable until Σ label exceeds
+      // 10^38, but the guard makes the convergence proof unconditional).
+      def labelSig(d: DataFrame): java.math.BigDecimal = {
+        val r = d.agg(sum(col("label").cast("decimal(38,0)")), count(lit(1))).head
+        val v = r.getDecimal(0)
+        if (v == null) {
+          require(r.getLong(1) == 0L,
+            "connectedComponents: label-sum signature overflowed decimal(38,0)")
+          java.math.BigDecimal.ZERO
+        } else v
       }
-    }
-      edges.unpersist()
+      var prevSig = labelSig(labels)
+      var converged = false
+      var iter = 0
+      while (!converged && iter < maxIter) {
+        // hash-min: pull the smallest label across every edge of the
+        // closed neighborhood (self-loops carry the node's own label, so
+        // no union branch is needed). Materialized BEFORE the self-join
+        // below to avoid computing it twice.
+        val prop = s.materialize(edges.join(labels, col("dst") === col("node"))
+          .select(col("src").as("node"), col("label"))
+          .groupBy("node").agg(min("label").as("label")))
+        // path doubling: label ← label(label), the map composed with
+        // ITSELF (composing with a fixed pre-round map would only advance
+        // a constant hop count per round). Every label is itself a node
+        // (a min of reachable node ids), so the self-join is total.
+        // Materialized eagerly: the next round's prop (and the final
+        // consumer) read the rows instead of re-running the self-join.
+        val next = s.materialize(prop.as("a")
+          .join(prop.as("b"), col("a.label") === col("b.node"))
+          .select(col("a.node").as("node"), col("b.label").as("label")))
+        s.unpersist(prop)
+        s.unpersist(labels)
+        val sig = labelSig(next)
+        converged = sig.compareTo(prevSig) == 0
+        prevSig = sig
+        labels = next
+        iter += 1
+      }
       require(converged, s"connectedComponents did not converge in $maxIter rounds")
       labels
     } finally {
@@ -1466,20 +1339,21 @@ object DedupOps {
     * equal neighbors (and itself) to that min. Edges only ever move
     * "downhill", and the fixpoint is a depth-1 star forest rooted at
     * each component's minimum. */
-  def connectedComponentsStars(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
+  def connectedComponentsStars(pairs: DataFrame, maxIter: Int = 30): DataFrame = QueryScope(pairs.sparkSession) { s =>
     // ONE pass over `pairs` (often an expensive mining plan whose
-    // caches are released after the first action): checkpoint the edge
-    // set eagerly, then derive the node set from the checkpointed
+    // caches are released after the first action): materialize the edge
+    // set eagerly, then derive the node set from the materialized
     // edges — a_id < b_id in every miner, so no node exists only as a
     // self-loop and the edge list covers the node universe.
-    var e = pairs
+    val edges0 = s.materialize(pairs
       .select(col("a_id").as("src"), col("b_id").as("dst"))
       .filter(col("src") =!= col("dst"))
-      .distinct().localCheckpoint(true)
-    // lazy on purpose: nodes reads the CHECKPOINTED edge set, so there
+      .distinct())
+    // lazy on purpose: nodes reads the MATERIALIZED edge set, so there
     // is no lineage hazard and no reason to pay a materialization job —
-    // it is consumed exactly once, by the final labeling join
-    val nodes = e
+    // it is consumed exactly once, by the final labeling join (which is
+    // why edges0 stays materialized through the loop)
+    val nodes = edges0
       .select(explode(array(col("src"), col("dst"))).as("node"))
       .distinct()
     // same width discipline as the hash-min loop: per-round shuffles
@@ -1488,7 +1362,7 @@ object DedupOps {
     val spark = pairs.sparkSession
     val prevWidth = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions",
-      math.max(2L, math.min(prevWidth.toLong, e.count() / 500000L + 1L)).toString)
+      math.max(2L, math.min(prevWidth.toLong, edges0.count() / 500000L + 1L)).toString)
     try {
     // Each star op keeps ONE compaction point: sym()'s distinct. The
     // star OUTPUTS deliberately carry duplicates — every downstream
@@ -1505,10 +1379,10 @@ object DedupOps {
         .select(col("e.src").as("src"), col("e.dst").as("dst"))
         .distinct()
     def star(d: DataFrame, large: Boolean): DataFrame = {
-      val s = sym(d)
-      val m = s.groupBy("src").agg(min(col("dst")).as("mn"))
+      val sd = sym(d)
+      val m = sd.groupBy("src").agg(min(col("dst")).as("mn"))
         .select(col("src"), least(col("mn"), col("src")).as("m"))
-      val j = s.join(m, "src")
+      val j = sd.join(m, "src")
       val out =
         if (large) j.filter(col("dst") > col("src"))
           .select(col("dst").as("src"), col("m").as("dst"))
@@ -1517,20 +1391,13 @@ object DedupOps {
           .union(m.select(col("src"), col("m").as("dst")))
       out.filter(col("src") =!= col("dst"))
     }
-    val trace = sys.env.contains("SPARK_GRAFT_CC_TRACE")
-    def timed[A](tag: String)(f: => A): A =
-      if (!trace) f else {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(f"[stars] $tag%-12s ${(System.nanoTime() - t0) / 1e9}%.2fs"); r
-      }
+    var e = edges0
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
-      // localCheckpoint: same lineage-truncation reasoning as the
-      // hash-min loop — each round must not nest the previous round's
-      // whole plan tree
-      val next = timed(s"round $iter")(
-        star(star(e, large = true), large = false).localCheckpoint(true))
+      // materialized: same reasoning as the hash-min loop — each round
+      // must not nest the previous round's whole plan tree
+      val next = s.materialize(star(star(e, large = true), large = false))
       // STRUCTURAL convergence (r17, replacing r16's set-equality
       // compare of consecutive rounds): the fixpoint of alternating
       // large-star/small-star is exactly a depth-1 star forest rooted
@@ -1554,7 +1421,8 @@ object DedupOps {
       // at, and every downstream consumer (the final group-min
       // labeling) is duplicate-insensitive. One job over `next` alone
       // (the old compare also scanned `e`).
-      converged = timed(s"check $iter")(isStarForest(next))
+      converged = isStarForest(next)
+      if (e ne edges0) s.unpersist(e)
       e = next
       iter += 1
     }
@@ -1771,13 +1639,13 @@ object DedupOps {
     * truncation is a TakeOrdered over candidate negatives. The oracle
     * keeps the naive global row_number, proving the decomposition
     * exact. */
-  def qContrastivePairs(spark: SparkSession, sfDir: String): DataFrame = {
+  def qContrastivePairs(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     val edges = textEdgesStored(spark, sfDir).select("a_id", "b_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val nPos = edges.count()
     val n = Tables.documents(spark, sfDir).count()
     val half = n / 2
-    val (ranked0, rankCache) = SamplingOps.withGlobalRank(
+    val ranked0 = SamplingOps.withGlobalRank(s,
       Tables.documents(spark, sfDir).select(col("doc_id"))
         .withColumn("rk", md5(col("doc_id").cast("string").cast("binary"))),
       "r", col("rk"), col("doc_id"))
@@ -1789,9 +1657,8 @@ object DedupOps {
       .join(edges, Seq("a_id", "b_id"), "left_anti")
       .orderBy(col("a_id"), col("b_id")).limit(nPos.toInt)
       .withColumn("label", lit("neg"))
-    unpersistAfterFirstAction(
-      edges.withColumn("label", lit("pos"))
-        .unionByName(negs), edges, rankCache)
+    edges.withColumn("label", lit("pos"))
+      .unionByName(negs)
   }
 
   /** The capped-jaccard edge CTEs + the same rank pairing/guard. */
@@ -2218,7 +2085,7 @@ object DedupOps {
   private val SubstrK = 8
   private val SubstrMaxDf = 20
 
-  def qDedupSubstring(spark: SparkSession, sfDir: String): DataFrame = {
+  def qDedupSubstring(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     val ts = split(col("text"), " ")
     val wins = Tables.spread(Tables.documents(spark, sfDir))
       .select(col("doc_id"), ts.as("ts"))
@@ -2229,19 +2096,17 @@ object DedupOps {
           i => concat_ws(" ",
             (0 until SubstrK).map(o => element_at(col("ts"), i + o + 1)): _*))))
           .as("win"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val rare = wins.groupBy(col("win"))
       .agg(count(lit(1)).as("df"))
       .filter(col("df") <= SubstrMaxDf)
       .select("win")
     val kept = wins.join(rare, "win")
-    unpersistAfterFirstAction(
-      kept.as("a")
-        .join(kept.as("b"),
-          col("a.win") === col("b.win") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-        .agg(count(lit(1)).as("shared_windows")),
-      wins)
+    kept.as("a")
+      .join(kept.as("b"),
+        col("a.win") === col("b.win") && col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
+      .agg(count(lit(1)).as("shared_windows"))
   }
 
   val qDedupSubstringOracle: String =
@@ -2280,7 +2145,7 @@ object DedupOps {
     * equi-join; a boilerplate window with huge df costs ONE row in the
     * dup relation (the join-back fan-out is the window's own
     * occurrence count, which is the work any removal must do). */
-  def qDedupSpanRemoval(spark: SparkSession, sfDir: String): DataFrame = {
+  def qDedupSpanRemoval(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     val ts = split(col("text"), " ")
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"), ts.as("ts"))
     val wins = docs
@@ -2292,7 +2157,7 @@ object DedupOps {
         concat_ws(" ",
           (0 until SubstrK).map(o => element_at(col("ts"), col("i") + o + 1)): _*)
           .as("win"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val dup = wins.groupBy(col("win"))
       .agg(countDistinct(col("doc_id")).as("df"))
       .filter(col("df") >= 2)
@@ -2308,7 +2173,7 @@ object DedupOps {
         md5(array_join(transform(
           sort_array(collect_list(struct(col("pos"), col("tk")))),
           s => s.getField("tk")), " ").cast("binary")).as("clean_md5"))
-    val out = docs
+    docs
       .select(col("doc_id"), size(col("ts")).cast("long").as("n_tokens"))
       .join(kept, Seq("doc_id"), "left_outer")
       .select(col("doc_id"), col("n_tokens"),
@@ -2317,7 +2182,6 @@ object DedupOps {
           col("n_tokens").cast(DoubleType), 6).as("removal_rate_r"),
         coalesce(col("clean_md5"),
           lit("d41d8cd98f00b204e9800998ecf8427e")).as("clean_md5"))
-    unpersistAfterFirstAction(out, wins)
   }
 
   val qDedupSpanRemovalOracle: String =
@@ -2368,7 +2232,7 @@ object DedupOps {
     * collisions — never a rescan of the base corpus text. Both match
     * arms left-join onto the incoming slice, so every incoming doc is
     * classified exactly once. */
-  def qDedupIncremental(spark: SparkSession, sfDir: String): DataFrame = {
+  def qDedupIncremental(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     val docs = Tables.documents(spark, sfDir)
       .withColumn("bucket", SamplingOps.bucket100("doc_id"))
     val fp = docs.select(col("doc_id"), col("bucket"),
@@ -2379,7 +2243,7 @@ object DedupOps {
       .groupBy(col("doc_id")).agg(min(col("base_id")).as("exact_match_id"))
     // one shingle explode serves signatures AND verification sets
     val sh = shingles(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val bands = minhashBands(sh)
       .withColumn("bucket", SamplingOps.bucket100("doc_id"))
     val cand = bands.filter(col("bucket") >= 90).as("a")
@@ -2401,16 +2265,14 @@ object DedupOps {
       .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
       .filter(col("inter").cast(DoubleType) / (col("na") + col("nb") - col("inter")) >= 0.1)
       .groupBy(col("doc_id")).agg(min(col("base_id")).as("near_match_id"))
-    unpersistAfterFirstAction(
-      docs.filter(col("bucket") >= 90).select("doc_id")
-        .join(exact, Seq("doc_id"), "left_outer")
-        .join(near, Seq("doc_id"), "left_outer")
-        .select(col("doc_id"),
-          when(col("exact_match_id").isNotNull, "exact")
-            .when(col("near_match_id").isNotNull, "near")
-            .otherwise("new").as("status"),
-          coalesce(col("exact_match_id"), col("near_match_id")).as("match_id")),
-      sh)
+    docs.filter(col("bucket") >= 90).select("doc_id")
+      .join(exact, Seq("doc_id"), "left_outer")
+      .join(near, Seq("doc_id"), "left_outer")
+      .select(col("doc_id"),
+        when(col("exact_match_id").isNotNull, "exact")
+          .when(col("near_match_id").isNotNull, "near")
+          .otherwise("new").as("status"),
+        coalesce(col("exact_match_id"), col("near_match_id")).as("match_id"))
   }
 
   /** The BASE-side dedup index a production deployment materializes
@@ -2423,20 +2285,18 @@ object DedupOps {
     * recompute-everything twin. Docs too short to shingle (< 3 tokens)
     * keep their fingerprint with null bands/shingles — they can still
     * match exactly, never nearly. */
-  def baseSignatures(docs: DataFrame): DataFrame = {
+  def baseSignatures(docs: DataFrame): DataFrame = QueryScope(docs.sparkSession) { s =>
     val fp = Tables.spread(docs).select(col("doc_id"),
       md5(col("text").cast("binary")).as("fp"))
     val sh = shingles(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val bands = minhashBands(sh)
       .groupBy(col("doc_id"))
       .agg(collect_list(struct(col("band"), col("bkey"))).as("bands"))
     val sets = sh.groupBy(col("doc_id"))
       .agg(collect_list(col("shingle")).as("ss"), count(lit(1)).as("n_shingles"))
-    unpersistAfterFirstAction(
-      fp.join(bands, Seq("doc_id"), "left_outer")
-        .join(sets, Seq("doc_id"), "left_outer"),
-      sh)
+    fp.join(bands, Seq("doc_id"), "left_outer")
+      .join(sets, Seq("doc_id"), "left_outer")
   }
 
   /** [[qDedupIncremental]] reading the MATERIALIZED base index instead
@@ -2466,14 +2326,14 @@ object DedupOps {
     * incoming slice; every base-side touch is an equi-join against
     * the stored index. */
   private[graft] def classifyAgainstIndex(incoming: DataFrame,
-      base: DataFrame): DataFrame = {
+      base: DataFrame): DataFrame = QueryScope(incoming.sparkSession) { s =>
     val exact = incoming
       .select(col("doc_id"), md5(col("text").cast("binary")).as("fp"))
       .join(base.select(col("doc_id").as("base_id"), col("fp")), "fp")
       .groupBy(col("doc_id")).agg(min(col("base_id")).as("exact_match_id"))
     // the one shingle explode of the day: the incoming slice only
     val sh = shingles(incoming)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val baseBands = base
       .select(col("doc_id").as("base_id"), explode(col("bands")).as("bb"))
       .select(col("base_id"), col("bb.band").as("b_band"), col("bb.bkey").as("b_bkey"))
@@ -2489,16 +2349,14 @@ object DedupOps {
       .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
       .filter(col("inter").cast(DoubleType) / (col("na") + col("nb") - col("inter")) >= 0.1)
       .groupBy(col("doc_id")).agg(min(col("base_id")).as("near_match_id"))
-    unpersistAfterFirstAction(
-      incoming.select("doc_id")
-        .join(exact, Seq("doc_id"), "left_outer")
-        .join(near, Seq("doc_id"), "left_outer")
-        .select(col("doc_id"),
-          when(col("exact_match_id").isNotNull, "exact")
-            .when(col("near_match_id").isNotNull, "near")
-            .otherwise("new").as("status"),
-          coalesce(col("exact_match_id"), col("near_match_id")).as("match_id")),
-      sh)
+    incoming.select("doc_id")
+      .join(exact, Seq("doc_id"), "left_outer")
+      .join(near, Seq("doc_id"), "left_outer")
+      .select(col("doc_id"),
+        when(col("exact_match_id").isNotNull, "exact")
+          .when(col("near_match_id").isNotNull, "near")
+          .otherwise("new").as("status"),
+        coalesce(col("exact_match_id"), col("near_match_id")).as("match_id"))
   }
 
   /** [[qDedupIncrementalStored]] as a registered query: materializes
@@ -2537,7 +2395,7 @@ object DedupOps {
     * whole point of incremental reprocessing); the only shingle
     * explode is over that slice; the prev corpus appears ONLY through
     * the stored index's equi-joins. */
-  def qDedupDeltaClassify(spark: SparkSession, sfDir: String): DataFrame = {
+  def qDedupDeltaClassify(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     val dir = Artifacts.getOrBuild(spark, sfDir, "prev_sig") { d =>
       baseSignatures(prevSnapshotDocs(spark, sfDir)).write.parquet(d)
     }
@@ -2556,15 +2414,13 @@ object DedupOps {
           .when(col("p_fp") =!= md5(col("text").cast("binary")), "changed"))
       .filter(col("delta_status").isNotNull)
       .select(col("doc_id"), col("source"), col("delta_status"), col("text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val cls = classifyAgainstIndex(
       delta.select(col("doc_id"), col("text")), Tables.parquet(spark, dir))
-    unpersistAfterFirstAction(
-      delta.select(col("doc_id"), col("source"), col("delta_status"))
-        .join(cls, "doc_id")
-        .select(col("doc_id"), col("source"), col("delta_status"),
-          col("status").as("dup_status"), col("match_id")),
-      delta)
+    delta.select(col("doc_id"), col("source"), col("delta_status"))
+      .join(cls, "doc_id")
+      .select(col("doc_id"), col("source"), col("delta_status"),
+        col("status").as("dup_status"), col("match_id"))
   }
 
   /** The PATCHED next-snapshot signature index — the artifact
@@ -2800,7 +2656,7 @@ object DedupOps {
     * the corpus' duplicate mass, not its size. Everything is
     * equi-join + aggregate; the final left join restores docs with no
     * shared spans (and sub-8-token docs) at coverage 0. */
-  def qDedupSpanCoverage(spark: SparkSession, sfDir: String): DataFrame = {
+  def qDedupSpanCoverage(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     val ts = split(col("text"), " ")
     val docs = Tables.documents(spark, sfDir)
     val wins = Tables.spread(docs)
@@ -2812,7 +2668,7 @@ object DedupOps {
           i => concat_ws(" ",
             (0 until SubstrK).map(o => element_at(col("ts"), i + o + 1)): _*)))
           .as(Seq("g", "win")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val shared = wins.select(col("doc_id"), col("win")).distinct()
       .groupBy(col("win")).agg(count(lit(1)).as("d"))
       .filter(col("d") >= 2)
@@ -2822,15 +2678,13 @@ object DedupOps {
         explode(sequence(col("g"), col("g") + SubstrK - 1)).as("p"))
       .distinct()
       .groupBy(col("doc_id")).agg(count(lit(1)).as("covered_tokens"))
-    unpersistAfterFirstAction(
-      docs.select(col("doc_id"), size(ts).cast("long").as("n_tokens"))
-        .join(covered, Seq("doc_id"), "left_outer")
-        .withColumn("covered_tokens", coalesce(col("covered_tokens"), lit(0L)))
-        .select(col("doc_id"), col("n_tokens"), col("covered_tokens"),
-          (col("n_tokens") - col("covered_tokens")).as("retained_tokens"),
-          round(col("covered_tokens").cast(DoubleType) / col("n_tokens"), 6)
-            .as("dup_fraction_r")),
-      wins)
+    docs.select(col("doc_id"), size(ts).cast("long").as("n_tokens"))
+      .join(covered, Seq("doc_id"), "left_outer")
+      .withColumn("covered_tokens", coalesce(col("covered_tokens"), lit(0L)))
+      .select(col("doc_id"), col("n_tokens"), col("covered_tokens"),
+        (col("n_tokens") - col("covered_tokens")).as("retained_tokens"),
+        round(col("covered_tokens").cast(DoubleType) / col("n_tokens"), 6)
+          .as("dup_fraction_r"))
   }
 
   val qDedupSpanCoverageOracle: String =
@@ -2946,7 +2800,7 @@ object DedupOps {
     * graph-sized edge relation — an id→dimension enrichment where
     * AQE broadcasts whichever side is small (typically the edges).
     * Output is source²-bounded — metadata-sized forever. */
-  def qDedupSourceOverlap(spark: SparkSession, sfDir: String): DataFrame = {
+  def qDedupSourceOverlap(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     val src = Tables.documents(spark, sfDir).select(col("doc_id"), col("source"))
     val lab = textEdgesStored(spark, sfDir).select("a_id", "b_id")
       .join(src.withColumnRenamed("doc_id", "a_id")
@@ -2956,16 +2810,15 @@ object DedupOps {
       .select(col("a_id"), col("b_id"),
         least(col("sa"), col("sb")).as("src_x"),
         greatest(col("sa"), col("sb")).as("src_y"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val edges = lab.groupBy(col("src_x"), col("src_y"))
       .agg(count(lit(1)).as("n_edges"))
     val docs = lab.select(col("src_x"), col("src_y"), col("a_id").as("doc_id"))
       .unionByName(lab.select(col("src_x"), col("src_y"), col("b_id").as("doc_id")))
       .groupBy(col("src_x"), col("src_y"))
       .agg(countDistinct(col("doc_id")).as("n_docs"))
-    val result = edges.join(docs, Seq("src_x", "src_y"))
+    edges.join(docs, Seq("src_x", "src_y"))
       .withColumn("cross_source", col("src_x") =!= col("src_y"))
-    unpersistAfterFirstAction(result, lab)
   }
 
   /** The cluster oracle's matched-edge CTEs + the source enrichment. */

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryScope, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -806,7 +806,7 @@ object EventOps {
     * discipline). Scale: one user rollup, one histogram aggregate, the
     * sharded prefix sum, two 1-row broadcasts (n, cap) — the
     * documented 1-row-broadcast category. */
-  def qAbWinsorized(spark: SparkSession, sfDir: String): DataFrame = {
+  def qAbWinsorized(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     val big = org.apache.spark.sql.types.DecimalType(38, 0)
     val cents = (col("value") * 100)
       .cast(org.apache.spark.sql.types.DecimalType(18, 0))
@@ -817,7 +817,7 @@ object EventOps {
       .agg(sum(col("c").cast(big)).as("m"))
       .withColumn("arm", SamplingOps.bucket100("user_id") % 2)
     val hist = users.groupBy(col("m")).agg(count(lit(1)).as("cnt"))
-    val (cum, sharded) = SamplingOps.withGlobalCumSum(
+    val cum = SamplingOps.withGlobalCumSum(s,
       hist, "cnt", "cum_excl", col("m"))
     val n1 = users.agg(count(lit(1)).as("n"))
     val cap = cum.crossJoin(broadcast(n1))
@@ -841,7 +841,7 @@ object EventOps {
     def vr(n: org.apache.spark.sql.Column, s: org.apache.spark.sql.Column,
         ss: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       (n * ss - s * s) / (n * (n - 1))
-    val out = agg
+    agg
       .withColumn("va", vr(col("n_a"), col("sa"), col("ssa")))
       .withColumn("vb", vr(col("n_b"), col("sb"), col("ssb")))
       .withColumn("vwa", vr(col("n_a"), col("swa"), col("sswa")))
@@ -856,7 +856,6 @@ object EventOps {
         round(col("t_raw"), 6).as("t_raw_r"),
         round(col("t_wins"), 6).as("t_wins_r"),
         (abs(round(col("t_wins"), 6)) > 1.96).as("significant_wins"))
-    DedupOps.unpersistAfterFirstAction(out, sharded)
   }
 
   val qAbWinsorizedOracle: String =
@@ -1077,7 +1076,7 @@ object EventOps {
     * partial TakeOrdered shapes; everything downstream operates on
     * ≤ 3k rows. The exact side is one distinct aggregation, present
     * only as the oracle anchor. */
-  def qKmvOverlap(spark: SparkSession, sfDir: String): DataFrame = {
+  def qKmvOverlap(spark: SparkSession, sfDir: String): DataFrame = QueryScope.eager(spark) { s =>
     val k = 64
     val ev0 = Tables.events(spark, sfDir)
       .filter(col("event_type").isin("view", "purchase"))
@@ -1085,7 +1084,7 @@ object EventOps {
       .withColumn("h", conv(substring(
         md5(col("user_id").cast("string").cast("binary")), 1, 12), 16, 10)
         .cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val wSeg = Window.partitionBy(col("event_type")).orderBy(col("h"))
     val sketches = ev0.withColumn("rn", row_number().over(wSeg))
       .filter(col("rn") <= k)
@@ -1107,12 +1106,11 @@ object EventOps {
     val estUnion = (k - 1).toLong * (1L << 48) / vk
     val estInter = c * estUnion / k
     import spark.implicits._
-    val result = Seq((k.toLong, vk, c, estUnion, estInter, nUnion, nInter,
+    Seq((k.toLong, vk, c, estUnion, estInter, nUnion, nInter,
       // k=64 ⇒ ~12.6% rse; 3σ ≈ 38% — a loose, replay-stable gate
       estUnion * 10 >= nUnion * 6 && estUnion * 10 <= nUnion * 16))
       .toDF("k", "v_k", "co_members", "est_union", "est_inter",
         "n_union", "n_inter", "union_within_3rse")
-    DedupOps.unpersistAfterFirstAction(result, ev0)
   }
 
   /** The same minima, estimator arithmetic, and exact anchors. */
@@ -1320,17 +1318,16 @@ object EventOps {
     * — the sharded prefix sum costs one extra tiny exchange and never
     * funnels it through one reducer (inclusive total = exclusive
     * prefix + the row's own new_users). */
-  def qCumulativeUsers(spark: SparkSession, sfDir: String): DataFrame = {
+  def qCumulativeUsers(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     val first = ev(spark, sfDir)
       .groupBy(col("user_id"))
       .agg(min(expr("tus DIV 3600000000")).as("hr"))
-    val (cum, sharded) = SamplingOps.withGlobalCumSum(
+    val cum = SamplingOps.withGlobalCumSum(s,
       first.groupBy(col("hr")).agg(count(lit(1)).as("new_users")),
       "new_users", "__before", col("hr"))
-    val result = cum
+    cum
       .withColumn("total_users", col("__before") + col("new_users"))
       .select(col("hr"), col("new_users"), col("total_users"))
-    DedupOps.unpersistAfterFirstAction(result, sharded)
   }
 
   val qCumulativeUsersOracle: String =
@@ -1375,24 +1372,24 @@ object EventOps {
     * [[SamplingOps.withGlobalCumSum]] (range-sharded parallel prefix
     * sum; only a shard-count relation crosses a global window),
     * exact because ltv is unique within its own histogram. */
-  def qLtvDeciles(spark: SparkSession, sfDir: String): DataFrame = {
+  def qLtvDeciles(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     val cents = (col("value") * 100)
       .cast(org.apache.spark.sql.types.DecimalType(18, 0)).cast("long")
     val ltv = Tables.events(spark, sfDir)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), cents.as("cents"))
       .groupBy(col("user_id")).agg(sum(col("cents")).as("ltv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val totals = ltv.agg(sum(col("ltv")), count(lit(1))).head
     val total = totals.getLong(0)
     val n = totals.getLong(1)
     val q = n / 10  // base bucket size; first `rem` buckets get q+1
     val rem = n % 10
     def decOf(r: String): String = SamplingOps.ntileExpr(n, 10, r)
-    val (hist, histSharded) = SamplingOps.withGlobalCumSum(
+    val hist = SamplingOps.withGlobalCumSum(s,
       ltv.groupBy(col("ltv")).agg(count(lit(1)).as("c")),
       "c", "before", col("ltv").desc)
-    val result = hist
+    hist
       .withColumn("d", explode(sequence(
         expr(decOf("(before + 1)")).cast("int"),
         expr(decOf("(before + c)")).cast("int"))))
@@ -1411,7 +1408,6 @@ object EventOps {
       .select(col("d").cast("int").as("decile"), col("n_users"),
         col("decile_cents"), col("min_ltv"), col("max_ltv"))
       .withColumn("revenue_ppm", expr(s"decile_cents * 1000000 DIV $total"))
-    DedupOps.unpersistAfterFirstAction(result, ltv, histSharded)
   }
 
   val qLtvDecilesOracle: String =
@@ -1510,18 +1506,17 @@ object EventOps {
         concat_ws(">", col("event_type"), col("e2"), col("e3")).as("path"))
   }
 
-  def qEventPaths(spark: SparkSession, sfDir: String): DataFrame = {
+  def qEventPaths(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     val tri = sessionTrigrams(spark, sfDir)
       .select(col("path"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val total = tri.count()
-    val result = tri.groupBy(col("path")).agg(count(lit(1)).as("n"))
+    tri.groupBy(col("path")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("path")).limit(20)
       .withColumn("rank",
         row_number().over(Window.orderBy(col("n").desc, col("path"))))
       .select(col("rank"), col("path"), col("n"),
         expr(s"n * 1000000 DIV ${total}L").as("share_ppm"))
-    DedupOps.unpersistAfterFirstAction(result, tri)
   }
 
   /** Same sessionization, windowed trigrams, and integer shares. */

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryScope, Tables}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -965,10 +965,10 @@ ORDER BY a_id, a_frame, b_id, b_frame""")
       .filter(col("inter") * 10 >= col("nt") + col("ni") - col("inter"))
   }
 
-  def qCrossmodalPairs(spark: SparkSession, sfDir: String): DataFrame = {
+  def qCrossmodalPairs(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     val maxDf = 20
     val sh = DedupOps.shingles(graft.Tables.documents(spark, sfDir))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val rare = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf).select("shingle")
     // one kept relation serves both sides: with the stub codec the
@@ -977,13 +977,12 @@ ORDER BY a_id, a_frame, b_id, b_frame""")
     // produce identical rows (mediaTable pins media_type = image ⇔
     // doc_id % 3 = 0)
     val kept = sh.join(rare, "shingle")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val scored = crossmodalGated(kept)
+      .transform(s.persist)
+    crossmodalGated(kept)
       .select(col("text_id"), col("img_id"), col("inter"),
         col("nt"), col("ni"),
         round(col("inter").cast("double") /
           (col("nt") + col("ni") - col("inter")), 6).as("jaccard_r"))
-    DedupOps.unpersistAfterFirstAction(scored, sh, kept)
   }
 
   /** Bounded image sample for the recall eval's brute-force truth —
@@ -1008,11 +1007,11 @@ ORDER BY a_id, a_frame, b_id, b_frame""")
     * production miner's own plan. Ranking divides exact integers in
     * IEEE doubles (correctly-rounded in both engines, text_id
     * tiebreak). */
-  def qCrossmodalRecall(spark: SparkSession, sfDir: String): DataFrame = {
+  def qCrossmodalRecall(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     import org.apache.spark.sql.expressions.Window
     val k = 3
     val sh = DedupOps.shingles(graft.Tables.documents(spark, sfDir))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val counts = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val truth = sh.filter(col("doc_id") % 3 =!= 0).as("t")
       .join(sh.filter(col("doc_id") % 3 === 0 &&
@@ -1036,20 +1035,19 @@ ORDER BY a_id, a_frame, b_id, b_frame""")
       // query's dominant cost. The relation itself is bounded
       // (≤ RecallImgCap × k rows), so caching it is free and the
       // expensive exact side computes once per run (guide §5).
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val rare = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= 20).select("shingle")
     val mined = crossmodalGated(sh.join(rare, "shingle"))
       .select("text_id", "img_id")
     val overlap = truth.join(mined, Seq("text_id", "img_id"), "left_semi")
       .groupBy(col("img_id")).agg(count(lit(1)).as("overlap"))
-    val result = truth.groupBy(col("img_id")).agg(count(lit(1)).as("n_true"))
+    truth.groupBy(col("img_id")).agg(count(lit(1)).as("n_true"))
       .join(overlap, Seq("img_id"), "left")
       .select(col("img_id"), col("n_true"),
         coalesce(col("overlap"), lit(0L)).as("overlap"),
         round(coalesce(col("overlap"), lit(0L)) /
           col("n_true").cast("double"), 6).as("recall_r"))
-    DedupOps.unpersistAfterFirstAction(result, sh, truth)
   }
 
   val qCrossmodalRecallOracle: String =

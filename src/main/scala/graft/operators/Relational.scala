@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryScope, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
@@ -304,7 +304,7 @@ object Relational {
     * Money in exact cents via DECIMAL(18,0) rounding on both engines
     * (the decimal→long parity rule: a raw long cast truncates in
     * Spark but rounds in DuckDB). */
-  def qSkyline(spark: SparkSession, sfDir: String): DataFrame = {
+  def qSkyline(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     import org.apache.spark.sql.expressions.Window
     val pts = Tables.lineitem(spark, sfDir)
       .select((col("l_extendedprice") * 100)
@@ -317,13 +317,13 @@ object Relational {
       .withColumn("__cum", min(col("qty")).over(
         Window.partitionBy(col("__shard")).orderBy(col("price_c"))
           .rowsBetween(Window.unboundedPreceding, -1)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val prefix = local.groupBy(col("__shard")).agg(min(col("qty")).as("__m"))
       .withColumn("__pmin", min(col("__m")).over(
         Window.orderBy(col("__shard"))
           .rowsBetween(Window.unboundedPreceding, -1)))
       .select(col("__shard"), col("__pmin"))
-    val result = local.join(broadcast(prefix), Seq("__shard"))
+    local.join(broadcast(prefix), Seq("__shard"))
       // least() skips nulls: first row of first shard stays null
       .withColumn("min_qty_cheaper", least(col("__cum"), col("__pmin")))
       .filter(col("min_qty_cheaper").isNull ||
@@ -331,7 +331,6 @@ object Relational {
       .withColumn("frontier_rank", row_number().over(
         Window.orderBy(col("price_c"))))
       .select(col("frontier_rank"), col("price_c"), col("qty"))
-    DedupOps.unpersistAfterFirstAction(result, local)
   }
 
   val qSkylineOracle: String =
@@ -364,16 +363,16 @@ object Relational {
     * Scale shape: one map-side-combining count per key (the only
     * corpus-sized step), then TakeOrdered for the top-10 and two
     * scalar literals — the report is 10 rows forever. */
-  def qSkewReport(spark: SparkSession, sfDir: String): DataFrame = {
+  def qSkewReport(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     val counts = Tables.lineitem(spark, sfDir)
       .groupBy(col("l_orderkey")).agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val g = counts.agg(sum(col("n")).as("t"), count(lit(1)).as("k"),
       max(col("n")).as("mx")).head()
     val (total, nKeys, maxN) = (g.getLong(0), g.getLong(1), g.getLong(2))
     // ceil(max / (total/keys)) computed exactly in integers
     val salt = (maxN * nKeys + total - 1) / total
-    val result = counts.orderBy(col("n").desc, col("l_orderkey")).limit(10)
+    counts.orderBy(col("n").desc, col("l_orderkey")).limit(10)
       .withColumn("rank", row_number().over(
         org.apache.spark.sql.expressions.Window
           .orderBy(col("n").desc, col("l_orderkey"))))
@@ -381,7 +380,6 @@ object Relational {
         expr(s"n * 1000000 DIV $total").as("share_ppm"),
         lit(nKeys).as("n_keys"), lit(maxN).as("max_n"),
         lit(salt).as("salt_factor"))
-    DedupOps.unpersistAfterFirstAction(result, counts)
   }
 
   val qSkewReportOracle: String =

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryScope, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -34,11 +34,9 @@ object SamplingOps {
     * append a unique tiebreak column), so the sampled range boundaries
     * never affect the answer.
     *
-    * The sharded relation is PERSISTED — shard ids must be identical
-    * between the offset aggregate and the ranked output (range
-    * boundaries are sampled per execution). Returns (ranked, cached);
-    * the caller must release via `DedupOps.unpersistAfterFirstAction`
-    * on its final result.
+    * The sharded relation is PERSISTED in the caller's scope `s` —
+    * shard ids must be identical between the offset aggregate and the
+    * ranked output (range boundaries are sampled per execution).
     *
     * Recomputation-safety note (cluster semantics, not just
     * local[32]): the range boundaries live in the exchange's
@@ -50,10 +48,10 @@ object SamplingOps {
     * survive. The failure mode that CAN resample is losing the
     * shuffle files themselves (executor death with no external
     * shuffle service / migration), which re-runs the whole stage —
-    * on such clusters, `df.checkpoint()` the sharded relation
+    * on such clusters, write the sharded relation to reliable storage
     * instead of relying on this persist. */
-  private[operators] def withGlobalRank(df: DataFrame, rankCol: String,
-      order: Column*): (DataFrame, DataFrame) = {
+  private[operators] def withGlobalRank(s: QueryScope, df: DataFrame, rankCol: String,
+      order: Column*): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val parts = df.sparkSession.conf
       .get("spark.sql.shuffle.partitions", "32").toInt
@@ -61,16 +59,15 @@ object SamplingOps {
       .withColumn("__shard", spark_partition_id())
       .withColumn("__lr", row_number().over(
         Window.partitionBy(col("__shard")).orderBy(order: _*)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val offsets = local.groupBy(col("__shard")).agg(count(lit(1)).as("__c"))
       .withColumn("__off", coalesce(sum(col("__c")).over(
         Window.orderBy(col("__shard"))
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .select(col("__shard"), col("__off"))
-    val ranked = local.join(broadcast(offsets), Seq("__shard"))
+    local.join(broadcast(offsets), Seq("__shard"))
       .withColumn(rankCol, col("__off") + col("__lr"))
       .drop("__shard", "__lr", "__off")
-    (ranked, local)
   }
 
   /** Exact EXCLUSIVE global prefix sum of `valCol` under `order`
@@ -87,10 +84,9 @@ object SamplingOps {
     * "current" would be boundary-dependent, exactly as a naive
     * `ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING` window is
     * tie-order-dependent. Same persist + recomputation-safety
-    * contract as [[withGlobalRank]]; returns (result, cached) for
-    * `DedupOps.unpersistAfterFirstAction`. */
-  private[operators] def withGlobalCumSum(df: DataFrame, valCol: String,
-      outCol: String, order: Column*): (DataFrame, DataFrame) = {
+    * contract as [[withGlobalRank]]. */
+  private[operators] def withGlobalCumSum(s: QueryScope, df: DataFrame, valCol: String,
+      outCol: String, order: Column*): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val parts = df.sparkSession.conf
       .get("spark.sql.shuffle.partitions", "32").toInt
@@ -99,17 +95,16 @@ object SamplingOps {
       .withColumn("__lc", coalesce(sum(col(valCol)).over(
         Window.partitionBy(col("__shard")).orderBy(order: _*)
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val offsets = local.groupBy(col("__shard"))
       .agg(sum(col(valCol)).as("__t"))
       .withColumn("__off", coalesce(sum(col("__t")).over(
         Window.orderBy(col("__shard"))
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .select(col("__shard"), col("__off"))
-    val out = local.join(broadcast(offsets), Seq("__shard"))
+    local.join(broadcast(offsets), Seq("__shard"))
       .withColumn(outCol, col("__off") + col("__lc"))
       .drop("__shard", "__lc", "__off")
-    (out, local)
   }
 
   /** Closed-form `ntile(buckets)` bucket of 1-based rank `r` over `n`
@@ -220,20 +215,20 @@ object SamplingOps {
     * equality contract, so the threshold must never drift. */
   private[graft] val DeconMinHits = 5
 
-  /** The shared decontamination scaffolding: bucketed shingle relation
-    * (persisted — both join sides slice it; without it the ~40×
-    * explode runs twice), the train slice, and the bench slice. Bucket
-    * is a pure function of doc_id, re-derived after the explode
+  /** The shared decontamination scaffolding: the train slice and the
+    * bench slice of one bucketed shingle relation (persisted in `s` —
+    * both join sides slice it; without it the ~40× explode runs twice).
+    * Bucket is a pure function of doc_id, re-derived after the explode
     * instead of threaded through it. */
-  private def deconRelations(spark: SparkSession, sfDir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
+  private def deconRelations(s: QueryScope, spark: SparkSession, sfDir: String)
+      : (DataFrame, DataFrame) = {
     val sh = DedupOps.shingles(Tables.documents(spark, sfDir))
       .withColumn("bucket", bucket100("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val train = sh.filter(col("bucket") < 80).select("doc_id", "shingle")
     val bench = sh.filter(col("bucket") >= 90)
       .select(col("doc_id").as("bench_id"), col("shingle"))
-    (sh, train, bench)
+    (train, bench)
   }
 
   /** The shared confirm join + report: distinct shingle/bench-doc hit
@@ -247,9 +242,9 @@ object SamplingOps {
         countDistinct(col("bench_id")).as("n_bench_docs"))
       .withColumn("contaminated", col("n_shingle_hits") >= DeconMinHits)
 
-  def qDecontaminate(spark: SparkSession, sfDir: String): DataFrame = {
-    val (sh, train, bench) = deconRelations(spark, sfDir)
-    DedupOps.unpersistAfterFirstAction(contaminationReport(train, bench), sh)
+  def qDecontaminate(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+    val (train, bench) = deconRelations(s, spark, sfDir)
+    contaminationReport(train, bench)
   }
 
   val qDecontaminateOracle: String =
@@ -504,16 +499,16 @@ object SamplingOps {
     * shuffling the corpus and shuffling a rounding error. xxhash64 on
     * BOTH the insert and probe sides — the sketch stores hashes, so
     * the two sides must agree. */
-  def qDecontaminateBloom(spark: SparkSession, sfDir: String): DataFrame = {
+  def qDecontaminateBloom(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     import graft.functions.VectorFunctions.{bloomFilterAgg, bloomMightContain}
-    val (sh, train, bench) = deconRelations(spark, sfDir)
+    val (train, bench) = deconRelations(s, spark, sfDir)
     // one-row binary sketch of the bench shingle set, sized for ~1M
     // distinct shingles (the fixture holds far fewer; at production
     // scale size from table stats — oversizing only costs bits)
     val sketch = bench.agg(bloomFilterAgg(xxhash64(col("shingle")), 1000000L).as("bf"))
     val candidates = train.filter(
       bloomMightContain(sketch.scalar(), xxhash64(col("shingle"))))
-    DedupOps.unpersistAfterFirstAction(contaminationReport(candidates, bench), sh)
+    contaminationReport(candidates, bench)
   }
 
   /** Deterministic TRAINING-ORDER layout: a global pseudo-random
@@ -790,7 +785,7 @@ object SamplingOps {
     * flag is a fingerprint-keyed window (same shuffle as exact
     * dedup); the ntile runs over the doc relation and the report
     * aggregates to 10 rows. */
-  def qQualityDupProfile(spark: SparkSession, sfDir: String): DataFrame = {
+  def qQualityDupProfile(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     import org.apache.spark.sql.expressions.Window
     val toks = split(col("text"), " ")
     val nTok = size(toks)
@@ -809,15 +804,14 @@ object SamplingOps {
     // after one parallel range exchange. The oracle stays the naive
     // global ntile, so the hash match proves the decomposition exact.
     val n = Tables.documents(spark, sfDir).count()
-    val (ranked, cached) = withGlobalRank(scored, "r",
+    val ranked = withGlobalRank(s, scored, "r",
       col("quality").desc, col("doc_id"))
-    val result = ranked
+    ranked
       .withColumn("decile", expr(ntileExpr(n, 10, "r")).cast("int"))
       .groupBy(col("decile"))
       .agg(count(lit(1)).as("n_docs"),
         sum((col("grp") > 1).cast("long")).as("n_dup_members"))
       .withColumn("dup_ppm", expr("n_dup_members * 1000000 DIV n_docs"))
-    DedupOps.unpersistAfterFirstAction(result, cached)
   }
 
   val qQualityDupProfileOracle: String =
@@ -881,9 +875,9 @@ object SamplingOps {
           .cast("binary")), 1, 6), 16, 10).cast("long") % 1000000L).as("h"))
   }
 
-  def qDomainFilter(spark: SparkSession, sfDir: String): DataFrame = {
+  def qDomainFilter(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     val docs = domainDocs(spark, sfDir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val hostStats = docs.groupBy(col("host"))
       .agg(count(lit(1)).as("host_docs"), sum(col("q_level")).as("host_q_sum"))
     val g = docs.agg(count(lit(1)), sum(col("q_level")),
@@ -897,10 +891,9 @@ object SamplingOps {
         .when(col("h") * col("host_docs") >= lit(cap * 1000000L),
           "drop_domain_quota")
         .otherwise("keep")
-    val result = docs.join(hostStats, "host")
+    docs.join(hostStats, "host")
       .select(col("doc_id"), col("host"), col("host_docs"),
         col("host_q_sum"), verdict.as("verdict"))
-    DedupOps.unpersistAfterFirstAction(result, docs)
   }
 
   /** Same quality level, host stats, and integer verdict algebra. */
@@ -996,13 +989,13 @@ object SamplingOps {
     * The oracle stays the naive partitioned ntile, so the hash match
     * proves the decomposition exact. Ties break on doc_id so bucket
     * boundaries are replay-stable. */
-  def qPerplexityBuckets(spark: SparkSession, sfDir: String): DataFrame = {
-    val (ranked, cached) = withGlobalRank(
+  def qPerplexityBuckets(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+    val ranked = withGlobalRank(s,
       TextOps.lmScoredDocs(spark, sfDir), "grk",
       col("lang"), col("avg_logp_r").desc, col("doc_id"))
     val langSizes = ranked.groupBy(col("lang"))
       .agg(min(col("grk")).as("__loff"), count(lit(1)).as("__nl"))
-    val result = ranked
+    ranked
       .join(broadcast(langSizes), Seq("lang"))
       .withColumn("r", col("grk") - col("__loff") + 1)
       .withColumn("bucket",
@@ -1012,7 +1005,6 @@ object SamplingOps {
         sum(col("n_tokens")).as("n_tokens"),
         round(avg(col("avg_logp_r")), 6).as("avg_logp"))
       .withColumn("kept", col("bucket") <= 2)
-    graft.operators.DedupOps.unpersistAfterFirstAction(result, cached)
   }
 
   val qPerplexityBucketsOracle: String =
@@ -1054,20 +1046,19 @@ object SamplingOps {
     * buckets by doc_id; a threshold necessarily maps a boundary-tied
     * score to the better bucket, so agreement off the two boundary
     * values is exact and ON them is by convention. */
-  private[graft] def perplexityCutoffs(spark: SparkSession, sfDir: String): DataFrame = {
-    val (ranked, cached) = withGlobalRank(
+  private[graft] def perplexityCutoffs(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+    val ranked = withGlobalRank(s,
       TextOps.lmScoredDocs(spark, sfDir), "grk",
       col("lang"), col("avg_logp_r").desc, col("doc_id"))
     val langSizes = ranked.groupBy(col("lang"))
       .agg(min(col("grk")).as("__loff"), count(lit(1)).as("__nl"))
-    val cut = ranked
+    ranked
       .join(broadcast(langSizes), Seq("lang"))
       .withColumn("r", col("grk") - col("__loff") + 1)
       .withColumn("bucket", expr(ntileColExpr("__nl", 3, "r")).cast("int"))
       .groupBy(col("lang"))
       .agg(min(when(col("bucket") === 1, col("avg_logp_r"))).as("b1_min"),
         min(when(col("bucket") === 2, col("avg_logp_r"))).as("b2_min"))
-    graft.operators.DedupOps.unpersistAfterFirstAction(cut, cached)
   }
 
   /** DSIR — Data Selection via Importance Resampling (Xie et al.

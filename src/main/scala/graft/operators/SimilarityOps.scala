@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Artifacts, Tables}
+import graft.{Artifacts, QueryScope, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -327,10 +327,9 @@ object SimilarityOps {
     * shuffles beyond the top-1 reduction; the driver holds only k
     * small vectors. The maximin radius is also the live convergence
     * telemetry (it only shrinks). */
-  def qSimKcenterCoreset(spark: SparkSession, sfDir: String): DataFrame = {
+  def qSimKcenterCoreset(spark: SparkSession, sfDir: String): DataFrame = QueryScope.eager(spark) { s =>
     import spark.implicits._
-    val q = quantized(spark, sfDir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val q = s.persist(quantized(spark, sfDir))
     def vecOf(id: Long): Seq[Long] =
       q.filter(col("vec_id") === id).head.getSeq[Long](1)
     def d2(cv: Seq[Long]): Column =
@@ -345,7 +344,6 @@ object SimilarityOps {
       centers = centers :+ ((next.getLong(0), vecOf(next.getLong(0)),
         next.getLong(1)))
     }
-    q.unpersist()
     centers.zipWithIndex
       .map { case ((id, _, r), i) => (i, id, r) }
       .toDF("round", "center_id", "maximin_d2")
@@ -472,14 +470,14 @@ object SimilarityOps {
     * Scale shape: the assignment is the usual broadcast-centroid
     * argmax (corpus never shuffles); the report aggregates to K rows
     * — index-metadata-sized, free at any corpus size. */
-  def qSimIvfCellStats(spark: SparkSession, sfDir: String): DataFrame = {
+  def qSimIvfCellStats(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     import org.apache.spark.sql.expressions.Window
     val e = DedupOps.normedVectors(Tables.embeddings(spark, sfDir))
     val cells = cellAssignments(e, centroids(e), nprobe = 1)
       .groupBy(col("cid")).agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val total = cells.agg(sum(col("n"))).head.getLong(0)
-    val result = cells
+    cells
       .withColumn("share_ppm", expr(s"n * 1000000 DIV $total"))
       .withColumn("hot_rank", row_number().over(
         Window.orderBy(col("n").desc, col("cid"))))
@@ -489,7 +487,6 @@ object SimilarityOps {
         col("n") * NumCentroids > lit(2L) * total)
       .select(col("cid"), col("n"), col("share_ppm"),
         col("hot_rank"), col("cum_ppm"), col("oversized"))
-    DedupOps.unpersistAfterFirstAction(result, cells)
   }
 
   /** The IVF oracle's assignment CTE + the same integer arithmetic. */
@@ -1459,7 +1456,7 @@ object SimilarityOps {
     * shared verbatim by the self-contained miner ([[qSimPagerank]])
     * and the stored-edges variant ([[qSimPagerankStored]]). */
   private def pagerankOn(spark: SparkSession, sfDir: String,
-      scored: DataFrame): DataFrame = {
+      scored: DataFrame): DataFrame = QueryScope(spark) { s =>
     val S0 = 1000000000000L
     val iters = 3
     val e = DedupOps.normedVectors(Tables.embeddings(spark, sfDir))
@@ -1478,7 +1475,7 @@ object SimilarityOps {
         struct(col("a_id").as("src"), col("b_id").as("dst")),
         struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val verts = e.select(col("vec_id"))
     def idiv(a: Column, b: Column): Column = (a / b).cast("long")
@@ -1495,7 +1492,7 @@ object SimilarityOps {
           (lit(tele) + idiv(lit(85L) * coalesce(col("inflow"), lit(0L)),
             lit(100L))).as("rank"))
     }
-    DedupOps.unpersistAfterFirstAction(ranks, edges)
+    ranks
   }
 
   /** DuckDB CTE chain reproducing the ANN-mined semantic graph
@@ -1591,12 +1588,12 @@ object SimilarityOps {
     * ([[qSimTriangles]]) and the stored-edges variant
     * ([[qSimTrianglesStored]]). */
   private def trianglesOn(spark: SparkSession, sfDir: String,
-      scored: DataFrame): DataFrame = {
+      scored: DataFrame): DataFrame = QueryScope(spark) { s =>
     val e = DedupOps.normedVectors(Tables.embeddings(spark, sfDir))
     val m = scored
       .filter(col("cosine") >= 0.4)
       .select(col("a_id"), col("b_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val deg = m.select(col("a_id").as("id")).union(m.select(col("b_id").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("deg"))
     val lowFirst = col("da") < col("db") ||
@@ -1607,7 +1604,7 @@ object SimilarityOps {
       .select(
         when(lowFirst, col("a_id")).otherwise(col("b_id")).as("src"),
         when(lowFirst, col("b_id")).otherwise(col("a_id")).as("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val wedges = oriented.as("x").join(oriented.as("y"),
         col("x.src") === col("y.src") && col("x.dst") < col("y.dst"))
       .select(col("x.src").as("p"), col("x.dst").as("q"), col("y.dst").as("r"))
@@ -1618,7 +1615,7 @@ object SimilarityOps {
       .union(tris.select(col("q").as("id")))
       .union(tris.select(col("r").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("tri"))
-    val out = e.select(col("vec_id"))
+    e.select(col("vec_id"))
       .join(deg.withColumnRenamed("id", "vec_id"), Seq("vec_id"), "left_outer")
       .join(perNode.withColumnRenamed("id", "vec_id"), Seq("vec_id"), "left_outer")
       .select(col("vec_id"),
@@ -1627,7 +1624,6 @@ object SimilarityOps {
         when(coalesce(col("deg"), lit(0L)) >= 2,
           expr("2 * coalesce(tri, 0) * 1000000 DIV (deg * (deg - 1))"))
           .otherwise(lit(0L)).as("lcc_micro"))
-    DedupOps.unpersistAfterFirstAction(out, m, oriented)
   }
 
   val qSimTrianglesOracle: String =
@@ -2463,7 +2459,7 @@ object SimilarityOps {
     * converged model that is a vanishing slice of the corpus — and
     * the per-dim aggregation shuffles 64 keys with map-side combine.
     * One corpus scan, one tiny shuffle, no joins. */
-  def qSimSvmStep(spark: SparkSession, sfDir: String): DataFrame = {
+  def qSimSvmStep(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     val nd = 64
     val wLit = typedlit((0 until nd).map(d => (d * 2654435761L) % 2001L - 1000L))
     val margins = Tables.embeddings(spark, sfDir)
@@ -2475,11 +2471,11 @@ object SimilarityOps {
         zip_with(col("q"), wLit, (a, b) => a * b), lit(0L), (acc, x) => acc + x))
       .withColumn("viol", col("y") * col("z") < lit(1000000000L))
     val viol = margins.filter(col("viol"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val nViol = viol.count()
     val lossSum = viol.agg(sum(lit(1000000000L) - col("y") * col("z")))
       .head.getLong(0)
-    val result = viol
+    viol
       .select(col("y"), posexplode(col("q")).as(Seq("dim", "qd")))
       .groupBy(col("dim"))
       .agg(sum(-col("y") * col("qd")).as("grad_d"))
@@ -2488,7 +2484,6 @@ object SimilarityOps {
         col("grad_d"),
         lit(nViol).as("n_violators"),
         lit(lossSum).as("hinge_loss_sum"))
-    DedupOps.unpersistAfterFirstAction(result, viol)
   }
 
   /** Same weight derivation, quantization, margin compare, and Long
@@ -2536,14 +2531,14 @@ object SimilarityOps {
     * (groupBy + a window partitioned by the high-cardinality vertex
     * id) — the textbook per-iteration shape shared with PageRank;
     * no broadcast of anything corpus-sized, no all-pairs. */
-  def qSimLabelPropagation(spark: SparkSession, sfDir: String): DataFrame = {
+  def qSimLabelPropagation(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     import org.apache.spark.sql.expressions.Window
     val e = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("label"))
     val matched = annEdgesStored(spark, sfDir)
       .filter(col("cosine") >= 0.4).select("a_id", "b_id")
     val edges = matched.select(col("a_id").as("src"), col("b_id").as("dst"))
       .union(matched.select(col("b_id").as("src"), col("a_id").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val seeds = e.filter(col("vec_id") % 5 === 0)
     var labels = seeds
     (1 to 2).foreach { _ =>
@@ -2557,13 +2552,12 @@ object SimilarityOps {
         .join(seeds.select("vec_id"), Seq("vec_id"), "left_anti")
       labels = seeds.unionByName(adopted)
     }
-    val result = e
+    e
       .join(labels.withColumnRenamed("label", "prop0"), Seq("vec_id"), "left_outer")
       .select(col("vec_id"), (col("vec_id") % 5 === 0).as("is_seed"),
         coalesce(col("prop0"), lit(-1)).as("prop_label"),
         col("label").as("true_label"),
         (coalesce(col("prop0"), lit(-1)) === col("label")).as("correct"))
-    DedupOps.unpersistAfterFirstAction(result, edges)
   }
 
   /** The shared mined-edge CTEs + the same 2 unrolled majority rounds. */
@@ -2610,7 +2604,7 @@ object SimilarityOps {
     * is the ordinary broadcast-queries pass, fixture-affordable and
     * at scale replaced by a sampled audit (the LSH-audit stratum
     * discipline). */
-  def qSimIvfRecallCurve(spark: SparkSession, sfDir: String): DataFrame = {
+  def qSimIvfRecallCurve(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     import org.apache.spark.sql.expressions.Window
     val e = DedupOps.normedVectors(Tables.embeddings(spark, sfDir))
     val cent = centroids(e)
@@ -2632,7 +2626,7 @@ object SimilarityOps {
       .withColumn("cosine",
         DedupOps.dot(col("qv"), col("nv")) / (col("qn") * col("nn")))
       .select(col("p"), col("q_id"), col("n_id"), col("cosine"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val wr = Window.partitionBy(col("p"), col("q_id"))
       .orderBy(col("cosine").desc, col("n_id"))
     val ivf = scored.withColumn("rank", row_number().over(wr))
@@ -2641,14 +2635,13 @@ object SimilarityOps {
     val cands = scored.groupBy(col("p")).agg(count(lit(1)).as("n_candidates"))
     val hits = ivf.join(bf, Seq("q_id", "n_id"))
       .groupBy(col("p")).agg(count(lit(1)).as("n_hits"))
-    val result = cands.join(hits, Seq("p"), "left_outer")
+    cands.join(hits, Seq("p"), "left_outer")
       .select(col("p").cast("int").as("nprobe"),
         lit(NumQueries.toLong).as("n_queries"),
         coalesce(col("n_hits"), lit(0L)).as("n_hits"),
         expr(s"coalesce(n_hits, 0L) * 1000000 DIV ${NumQueries * 3}L")
           .as("recall_ppm"),
         col("n_candidates"))
-    DedupOps.unpersistAfterFirstAction(result, scored)
   }
 
   /** The IVF assignment CTEs with the probe count as data + the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{QueryScope, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -606,27 +606,25 @@ object TextOps {
     * Monotonicity in tf and 1/df is all a ranker needs. Shape: one
     * gram shuffle for tf (map-side combine), a vocabulary-keyed join
     * for df, a broadcast scalar for N, one window top-k per doc. */
-  def qTfidf(spark: SparkSession, sfDir: String): DataFrame = {
+  def qTfidf(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, sfDir)
     // persisted: tf feeds both the scored join and the df aggregation —
     // without it the token explode + count runs twice; released by the
-    // unpersistAfterFirstAction wrapper like the dedup shingle caches
+    // query's scope like the dedup shingle caches
     val tf = docs.select(col("doc_id"), explode(toks).as("term"))
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n"))
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("score_1000").desc, col("term"))
-    DedupOps.unpersistAfterFirstAction(
-      tf.join(df, "term")
-        .crossJoin(broadcast(n))
-        .withColumn("score_1000", expr("tf * n * 1000 DIV df"))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 5)
-        .select(col("doc_id"), col("term"), col("tf"), col("df"), col("score_1000")),
-      tf)
+    tf.join(df, "term")
+      .crossJoin(broadcast(n))
+      .withColumn("score_1000", expr("tf * n * 1000 DIV df"))
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= 5)
+      .select(col("doc_id"), col("term"), col("tf"), col("df"), col("score_1000"))
   }
 
   /** Stored (term, df) IDF table + corpus doc count (as `_graft_meta`)
@@ -726,13 +724,13 @@ object TextOps {
     * carries (nb scoring, entropy): with O(1) addends of O(1)
     * magnitude the order error is ~1e-16 against a 1e-6 rounding
     * grid, and the hash gate re-verifies the bet every round. */
-  def qBm25(spark: SparkSession, sfDir: String): DataFrame = {
+  def qBm25(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     val docs = Tables.documents(spark, sfDir)
     // persisted: the ~8-byte-per-doc length relation feeds both the
     // (N, avgdl) stats aggregate and the scored join — without it the
     // corpus is re-tokenized for each (r12 review)
     val dl = docs.select(col("doc_id"), size(toks).as("dl"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val stats = broadcast(dl.agg(
       count(lit(1)).cast(DoubleType).as("n"),
       (sum(col("dl")).cast(DoubleType) / count(lit(1))).as("avgdl")))
@@ -742,12 +740,10 @@ object TextOps {
     val tf = docs.select(col("doc_id"), explode(toks).as("tk"))
       .filter(col("tk").isin(Bm25Terms: _*))
       .groupBy(col("doc_id"), col("tk")).agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val df = broadcast(tf.groupBy(col("tk"))
       .agg(count(lit(1)).cast(DoubleType).as("df")))
-    DedupOps.unpersistAfterFirstAction(
-      bm25Ranked(tf.join(df, "tk").join(dl, "doc_id").crossJoin(stats)),
-      tf, dl)
+    bm25Ranked(tf.join(df, "tk").join(dl, "doc_id").crossJoin(stats))
   }
 
   /** Per-doc BM25 rollup over a (doc_id, tk, tf, df, dl, n, avgdl)
@@ -1063,7 +1059,7 @@ object TextOps {
     * as literals (the stored-model discipline — no 1-row cross).
     * Float parity: addends and K are shared strings; the ln-sum
     * and round-6 conventions as every scorer here. */
-  def qQlDirichlet(spark: SparkSession, sfDir: String): DataFrame = {
+  def qQlDirichlet(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     import org.apache.spark.sql.expressions.Window
     val (_, _, sumdl) = bm25Stored(spark, sfDir)
     val docs = Tables.documents(spark, sfDir)
@@ -1073,7 +1069,7 @@ object TextOps {
     val tf = docs.select(col("doc_id"), explode(toks).as("tk"))
       .filter(col("tk").isin(Bm25Terms: _*))
       .groupBy(col("doc_id"), col("tk")).agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val ctf: Map[String, Long] = tf.groupBy(col("tk"))
       .agg(sum(col("tf")).as("ctf"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -1091,14 +1087,13 @@ object TextOps {
       .agg(count(lit(1)).as("n_hit"), sum(col("a")).as("ms"))
     val k = Bm25Terms.sorted
       .map(t => s"ln($QlMu * ${ctf(t)} / $sumdl)").mkString(" + ")
-    val ranked = dl.join(ms, Seq("doc_id"), "left")
+    dl.join(ms, Seq("doc_id"), "left")
       .withColumn("n_hit", coalesce(col("n_hit"), lit(0L)))
       .withColumn("score_r", round(expr(qlScoreExpr(k)), 6))
       .orderBy(col("score_r").desc, col("doc_id")).limit(20)
       .withColumn("rank", row_number().over(
         Window.orderBy(col("score_r").desc, col("doc_id"))))
       .select(col("rank"), col("doc_id"), col("n_hit"), col("score_r"))
-    DedupOps.unpersistAfterFirstAction(ranked, tf)
   }
 
   /** The frozen QL collection statistics — per-term collection
@@ -1277,16 +1272,9 @@ object TextOps {
 
   private def rankEvalOn(spark: SparkSession, docs: DataFrame,
       modelOpt: Option[DataFrame], statsOpt: Option[(Long, Long)],
-      fullPanel: Boolean): DataFrame = {
+      fullPanel: Boolean): DataFrame = QueryScope(spark) { s =>
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
-    // dev-only phase timing (the CC_TRACE convention): per-fold cost
-    val reTrace = sys.env.contains("SPARK_GRAFT_RE_TRACE")
-    def timed[A](tag: String)(f: => A): A =
-      if (!reTrace) f else {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(f"[rankeval] $tag%-10s ${(System.nanoTime() - t0) / 1e9}%.2fs"); r
-      }
     // THE one corpus explode: per-(doc, term) counts, aggregated
     // BEFORE any query join (a query join on raw occurrences would
     // fan every occurrence by the number of fingerprints sharing its
@@ -1298,7 +1286,7 @@ object TextOps {
         explode(toks).as("tk"))
       .groupBy(col("doc_id"), col("tk"))
       .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     // model (tk, df): the full query serves it from the bm25_model
     // artifact; the stratum twin derives WITHIN-STRATUM df as a
     // vocabulary-sized rollup of the SAME cached explode (dtf is one
@@ -1311,8 +1299,7 @@ object TextOps {
     // vocabulary-sized result instead. The full eval's stored model is
     // a plain parquet artifact scan and needs no cache.
     val model = modelOpt.getOrElse(
-      dtf.groupBy(col("tk")).agg(count(lit(1)).as("df"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      s.persist(dtf.groupBy(col("tk")).agg(count(lit(1)).as("df"))))
     // Every model-sized relation below is a BOUNDED DRIVER FOLD (the
     // qBm25Rm3 expansion-fold precedent, ≤130 rows each): folded as
     // literal relations, the serving plan carries ZERO broadcast
@@ -1342,12 +1329,12 @@ object TextOps {
     val post = dtf.join(broadcast(qrelRel), "tk")
       .select(col("q_id"), col("doc_id"), col("tk"), col("df"),
         col("tf"), col("dl"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     // fold job 1 (materializes dtf + post) — r16 optimization round:
     // the three MUTUALLY INDEPENDENT bounded folds travel in ONE
     // tagged-union collect instead of three jobs (each extra job cost
-    // 0.5-0.8 s of pure scheduling + warm-cache re-scan, measured with
-    // SPARK_GRAFT_RE_TRACE):
+    // 0.5-0.8 s of pure scheduling + warm-cache re-scan, measured per
+    // fold with wall-clock timers):
     //   tag 0 — collection stats (n, Σdl): the full query reads them
     //     from the bm25_model artifact's meta (statsOpt — no tag-0
     //     branch at all); the stratum derives them from the SAME
@@ -1375,9 +1362,8 @@ object TextOps {
       .select(lit(0).as("tag"), col("nn").as("l1"),
         lit(null).cast("string").as("s1"),
         lit(null).cast(DoubleType).as("d1"), col("sdl").as("l2"))
-    val folded = timed("fold1")(
-      (if (statsOpt.isEmpty) qstatsDf.unionByName(statsDf) else qstatsDf)
-        .unionByName(shortDf).collect())
+    val folded = (if (statsOpt.isEmpty) qstatsDf.unionByName(statsDf) else qstatsDf)
+      .unionByName(shortDf).collect()
     val (n, sumdl) = statsOpt.getOrElse {
       val r = folded.find(_.getInt(0) == 0).get
       (r.getLong(1), r.getLong(4))
@@ -1447,7 +1433,7 @@ object TextOps {
         count(lit(1)).as("sc"), sum(col("tf")).as("tfsum"))
       .withColumn("score_r", round(col("score"), 6))
       .withColumn("rk", row_number().over(wS))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     // graded truth + its ideal DCG — gain = #shared fingerprint terms,
     // ties broken by TOTAL shared term frequency before doc_id: on a
     // template-vocabulary corpus (this fixture: 31 terms) hundreds of
@@ -1469,10 +1455,10 @@ object TextOps {
     // RM3: feedback fold (≤100 rows, kd in micro-units — the qBm25Rm3
     // shape per query), integer RM1 weights from the cached counts,
     // per-query top-10 expansion, mixture weights in the fold
-    val fb = timed("fb")(s1.filter(col("rk") <= Rm3FbDocs)
+    val fb = s1.filter(col("rk") <= Rm3FbDocs)
       .select(col("q_id"), col("doc_id"),
         round(col("score_r") * lit(1000000)).cast("long").as("kd"))
-      .collect()).map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val fbLit = broadcast(fb.sorted.toDF("q_id", "doc_id", "kd"))
     val wE = Window.partitionBy(col("q_id")).orderBy(col("w").desc, col("tk"))
     // fold job 3: RM1 weights + the expansion terms' model dfs in the
@@ -1486,7 +1472,7 @@ object TextOps {
       .filter(col("er") <= Rm3FbTerms)
       .select(col("q_id"), col("tk"), col("w"))
       .join(model.withColumnRenamed("df", "mdf"), "tk")
-    val ex = timed("ex")(exDf.collect())
+    val ex = exDf.collect()
       .map(r => (r.getLong(1), r.getString(0), r.getLong(2), r.getLong(3)))
       .toSeq
     val wsum: Map[Long, Long] = ex.groupBy(_._1)
@@ -1540,7 +1526,7 @@ object TextOps {
     // risk. The tiny (<=30x10-row) union persists for its two
     // consumers (fusion grouping, metric join).
     val base = servedBm25.unionByName(servedQl).unionByName(servedRm3)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val wF = Window.partitionBy(col("q_id"))
       .orderBy(col("rrf").desc, col("doc_id"))
     val servedRrf = base.groupBy(col("q_id"), col("doc_id"))
@@ -1569,15 +1555,11 @@ object TextOps {
           .as("rr_ppm"),
         coalesce(round(lit(1000000) * col("dcg") / col("idcg")).cast("long"),
           lit(0L)).as("ndcg_ppm"))
-    val out = perQ.groupBy(col("scorer"))
+    perQ.groupBy(col("scorer"))
       .agg(count(lit(1)).as("n_queries"),
         sum(col("n_hits")).as("hits"),
         expr(s"CAST(sum(rr_ppm) div $nQEff AS BIGINT)").as("mrr_ppm"),
         expr(s"CAST(sum(ndcg_ppm) div $nQEff AS BIGINT)").as("ndcg_ppm"))
-    // model is persisted only on the derived (stratum) path; unpersist
-    // of a never-persisted frame is a no-op, so the list is unconditional
-    graft.operators.DedupOps.unpersistAfterFirstAction(
-      out, dtf, post, s1, base, model)
   }
   lazy val qTextRankEvalOracle: String =
     s"""WITH dl AS (
@@ -1874,14 +1856,14 @@ object TextOps {
     * stored-model family ([[idfStored]]). */
   private[graft] def lmStored(spark: SparkSession, sfDir: String): (DataFrame, Long) = {
     val (dir, meta) = graft.Artifacts.getOrBuildMeta(spark, sfDir, "unigram_lm") { d =>
-      val tf = Tables.documents(spark, sfDir)
-        .select(explode(split(col("text"), " ")).as("tk"))
-        .groupBy(col("tk")).agg(count(lit(1)).as("c"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      QueryScope.eager(spark) { s =>
+        val tf = Tables.documents(spark, sfDir)
+          .select(explode(split(col("text"), " ")).as("tk"))
+          .groupBy(col("tk")).agg(count(lit(1)).as("c"))
+          .transform(s.persist)
         tf.write.parquet(d)
         tf.agg(sum(col("c"))).head.getLong(0).toString
-      } finally tf.unpersist()
+      }
     }
     (Tables.parquet(spark, dir), meta.trim.toLong)
   }
@@ -2042,14 +2024,14 @@ object TextOps {
     val c2 = lmRefBigrams(spark, sfDir)
     val (uniDir, meta) = graft.Artifacts.getOrBuildMeta(
         spark, sfDir, "unigram_lm_ref") { d =>
-      val tf = refDocs(spark, sfDir)
-        .select(explode(split(col("text"), " ")).as("tk"))
-        .groupBy(col("tk")).agg(count(lit(1)).as("cu"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      QueryScope.eager(spark) { s =>
+        val tf = refDocs(spark, sfDir)
+          .select(explode(split(col("text"), " ")).as("tk"))
+          .groupBy(col("tk")).agg(count(lit(1)).as("cu"))
+          .transform(s.persist)
         tf.write.parquet(d)
         tf.agg(sum(col("cu"))).head.getLong(0).toString
-      } finally tf.unpersist()
+      }
     }
     (c2, Tables.parquet(spark, uniDir), meta.trim.toLong)
   }
@@ -2560,9 +2542,8 @@ object TextOps {
     * folds in as a plan literal (no 1-row join, same discipline as
     * the ANN sizing count). Support floor c_xy ≥ 3 keeps the output
     * noise-free and the result set tiny. The pair-count cache is
-    * self-releasing (unpersistAfterFirstAction) — no caller
-    * clearCache contract. */
-  def qCollocations(spark: SparkSession, sfDir: String): DataFrame = {
+    * released by the query's scope — no caller clearCache contract. */
+  def qCollocations(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     val pairs = Tables.documents(spark, sfDir)
       .select(toks.as("ts"))
       .filter(size(col("ts")) >= 2)
@@ -2571,16 +2552,15 @@ object TextOps {
           element_at(col("ts"), i + 1).as("y")))).as("p"))
       .select(col("p.x"), col("p.y"))
     val pc = pairs.groupBy(col("x"), col("y")).agg(count(lit(1)).as("c_xy"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val nPairs = pc.agg(sum(col("c_xy"))).head.getLong(0)
     val left = pc.groupBy(col("x")).agg(sum(col("c_xy")).as("cl_x"))
     val right = pc.groupBy(col("y")).agg(sum(col("c_xy")).as("cr_y"))
-    val result = pc.join(left, "x").join(right, "y")
+    pc.join(left, "x").join(right, "y")
       .filter(col("c_xy") >= 3 &&
         col("c_xy") * lit(nPairs) > lit(3L) * col("cl_x") * col("cr_y"))
       .select(col("x"), col("y"), col("c_xy"), col("cl_x"), col("cr_y"),
         lit(nPairs).as("n_pairs"))
-    DedupOps.unpersistAfterFirstAction(result, pc)
   }
 
   /** Same pair relation, marginals, and integer cross-multiplied gate. */
@@ -2767,12 +2747,12 @@ object TextOps {
     * TakeOrdered over the word re-aggregation, explicitly broadcast
     * back (K rows); the per-lang rollup then runs entirely on
     * vocab-sized inputs. No corpus-sized join anywhere. */
-  def qOovRate(spark: SparkSession, sfDir: String): DataFrame = {
+  def qOovRate(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     val k = 100
     val lw = Tables.documents(spark, sfDir)
       .select(col("lang"), explode(split(col("text"), " ")).as("word"))
       .groupBy(col("lang"), col("word")).agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val vocab = lw.groupBy(col("word")).agg(sum(col("c")).as("wf"))
       .orderBy(col("wf").desc, col("word")).limit(k)
       .select(col("word"), lit(1).as("in_v"))
@@ -2782,10 +2762,9 @@ object TextOps {
         sum(when(col("in_v").isNull, col("c")).otherwise(lit(0L))).as("n_oov"))
     val nDocs = Tables.documents(spark, sfDir)
       .groupBy(col("lang")).agg(count(lit(1)).as("n_docs"))
-    val result = perLang.join(nDocs, "lang")
+    perLang.join(nDocs, "lang")
       .select(col("lang"), col("n_docs"), col("n_tokens"), col("n_oov"),
         expr("n_oov * 1000000 DIV n_tokens").as("oov_ppm"))
-    DedupOps.unpersistAfterFirstAction(result, lw)
   }
 
   /** Same top-K vocabulary (tie-broken), masses, and integer ppm. */
@@ -2875,19 +2854,19 @@ object TextOps {
       : (DataFrame, Array[Long]) = {
     val (dir, meta) = graft.Artifacts.getOrBuildMeta(
         spark, sfDir, "nb_quality_model") { d =>
-      val model = docSourceTf(spark, sfDir).groupBy(col("tk")).agg(
-        sum(when(curatedPred, col("cnt")).otherwise(lit(0L))).as("cp"),
-        sum(when(curatedPred, lit(0L)).otherwise(col("cnt"))).as("cq"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      QueryScope.eager(spark) { s =>
+        val model = docSourceTf(spark, sfDir).groupBy(col("tk")).agg(
+          sum(when(curatedPred, col("cnt")).otherwise(lit(0L))).as("cp"),
+          sum(when(curatedPred, lit(0L)).otherwise(col("cnt"))).as("cq"))
+          .transform(s.persist)
         model.write.parquet(d)
-        val s = model.agg(sum(col("cp")), sum(col("cq")), count(lit(1))).head
+        val sums = model.agg(sum(col("cp")), sum(col("cq")), count(lit(1))).head
         val dcr = Tables.documents(spark, sfDir).agg(
           sum(when(curatedPred, 1L).otherwise(0L)),
           sum(when(curatedPred, 0L).otherwise(1L))).head
-        Seq(s.getLong(0), s.getLong(1), s.getLong(2),
+        Seq(sums.getLong(0), sums.getLong(1), sums.getLong(2),
           dcr.getLong(0), dcr.getLong(1)).mkString(",")
-      } finally model.unpersist()
+      }
     }
     (Tables.parquet(spark, dir), meta.trim.split(",").map(_.toLong))
   }
@@ -2932,21 +2911,20 @@ object TextOps {
     * the class that primitive exists for). All integer arithmetic —
     * avg rank enters doubled (2·before + cnt + 1), so the single
     * division at the end is the only float op. */
-  def qNbAuc(spark: SparkSession, sfDir: String): DataFrame = {
+  def qNbAuc(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     val scored = nbScoredDocs(spark, sfDir)
       .select(col("nb_score_r"), curatedPred.cast("long").as("pos"))
     val h = scored.groupBy(col("nb_score_r"))
       .agg(count(lit(1)).as("cnt"), sum(col("pos")).as("npos"))
-    val (cum, sharded) = SamplingOps.withGlobalCumSum(
+    val cum = SamplingOps.withGlobalCumSum(s,
       h, "cnt", "__before", col("nb_score_r"))
-    val res = cum.agg(
+    cum.agg(
         sum(col("npos")).as("np"),
         sum(col("cnt") - col("npos")).as("nq"),
         sum(col("npos") * (lit(2) * col("__before") + col("cnt") + 1)).as("s2"))
       .select(col("np"), col("nq"),
         round((col("s2") - col("np") * (col("np") + 1)).cast(DoubleType) /
           (lit(2.0) * col("np") * col("nq")), 6).as("auc_r"))
-    DedupOps.unpersistAfterFirstAction(res, sharded)
   }
 
   lazy val qNbAucOracle: String = {
@@ -3063,20 +3041,20 @@ FROM r ORDER BY doc_id""")
     val trainPred = !(curatedPred && calFold)
     val (dir, meta) = graft.Artifacts.getOrBuildMeta(
         spark, sfDir, "nb_model_cal") { d =>
-      val model = docSourceTf(spark, sfDir).filter(trainPred)
-        .groupBy(col("tk")).agg(
-          sum(when(curatedPred, col("cnt")).otherwise(lit(0L))).as("cp"),
-          sum(when(curatedPred, lit(0L)).otherwise(col("cnt"))).as("cq"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      QueryScope.eager(spark) { s =>
+        val model = docSourceTf(spark, sfDir).filter(trainPred)
+          .groupBy(col("tk")).agg(
+            sum(when(curatedPred, col("cnt")).otherwise(lit(0L))).as("cp"),
+            sum(when(curatedPred, lit(0L)).otherwise(col("cnt"))).as("cq"))
+          .transform(s.persist)
         model.write.parquet(d)
-        val s = model.agg(sum(col("cp")), sum(col("cq")), count(lit(1))).head
+        val sums = model.agg(sum(col("cp")), sum(col("cq")), count(lit(1))).head
         val dcr = Tables.documents(spark, sfDir).filter(trainPred).agg(
           sum(when(curatedPred, 1L).otherwise(0L)),
           sum(when(curatedPred, 0L).otherwise(1L))).head
-        Seq(s.getLong(0), s.getLong(1), s.getLong(2),
+        Seq(sums.getLong(0), sums.getLong(1), sums.getLong(2),
           dcr.getLong(0), dcr.getLong(1)).mkString(",")
-      } finally model.unpersist()
+      }
     }
     (Tables.parquet(spark, dir), meta.trim.split(",").map(_.toLong))
   }
@@ -3149,19 +3127,19 @@ FROM r ORDER BY doc_id""")
     * rides the STORED fold-excluded model (artifact scan + meta
     * literals); the 1-row (n_cal, thr) broadcasts are the documented
     * `allowNested` category. */
-  def qNbConformal(spark: SparkSession, sfDir: String): DataFrame = {
+  def qNbConformal(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
     val scored = nbCalScoredDocs(spark, sfDir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(s.persist)
     val cal = scored.filter(curatedPred && calFold).select(col("nb_score_r"))
     val nc = cal.agg(count(lit(1)).as("n_cal"))
     val hist = cal.groupBy(col("nb_score_r")).agg(count(lit(1)).as("cnt"))
-    val (cum, sharded) = SamplingOps.withGlobalCumSum(
+    val cum = SamplingOps.withGlobalCumSum(s,
       hist, "cnt", "cum_excl", col("nb_score_r"))
     val thr = cum.crossJoin(broadcast(nc))
       .filter(col("cum_excl") + col("cnt") >= expr("(n_cal + 1) DIV 5"))
       .agg(min(col("nb_score_r")).as("thr"))
     val evalPos = curatedPred && !calFold
-    val out = scored.crossJoin(broadcast(thr)).crossJoin(broadcast(nc))
+    scored.crossJoin(broadcast(thr)).crossJoin(broadcast(nc))
       .agg(first(col("n_cal")).as("n_cal"),
         first(expr("(n_cal + 1) DIV 5")).as("k_rank"),
         first(col("thr")).as("thr_r"),
@@ -3177,7 +3155,6 @@ FROM r ORDER BY doc_id""")
         col("n_neg"), col("neg_kept"),
         expr("neg_kept * 1000000 DIV n_neg").as("neg_keep_ppm"))
       .withColumn("coverage_ok", col("pos_keep_ppm") >= 800000L)
-    DedupOps.unpersistAfterFirstAction(out, scored, sharded)
   }
 
   /** The curated-class and calibration-fold predicates as SQL, built
@@ -3395,17 +3372,17 @@ FROM r ORDER BY doc_id""")
       : (DataFrame, Long, Long) = {
     val (dir, meta) = graft.Artifacts.getOrBuildMeta(
         spark, sfDir, "unigram_lm_curated") { d =>
-      val tf = Tables.documents(spark, sfDir)
-        .filter(curatedPred)
-        .select(explode(split(col("text"), " ")).as("tk"))
-        .groupBy(col("tk")).agg(count(lit(1)).as("ct"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      QueryScope.eager(spark) { s =>
+        val tf = Tables.documents(spark, sfDir)
+          .filter(curatedPred)
+          .select(explode(split(col("text"), " ")).as("tk"))
+          .groupBy(col("tk")).agg(count(lit(1)).as("ct"))
+          .transform(s.persist)
         tf.write.parquet(d)
         val n = tf.agg(sum(col("ct"))).head.getLong(0)
         val v = lmStored(spark, sfDir)._1.count()
         s"$n,$v"
-      } finally tf.unpersist()
+      }
     }
     val Array(n, v) = meta.trim.split(",").map(_.toLong)
     (Tables.parquet(spark, dir), n, v)

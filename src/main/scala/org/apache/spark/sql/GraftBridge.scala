@@ -1,7 +1,8 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.storage.StorageLevel
 
 /** Minimal bridge into `private[sql]` API: the Column↔Expression
@@ -15,13 +16,19 @@ object GraftBridge {
 
   /** `df`'s rows computed now and kept in a persisted RDD, as a relation
     * over that RDD: what `localCheckpoint(eager = true)` builds, except
-    * that the RDD keeps its lineage. Once its blocks are released
-    * (`unpersist` on the relation's RDD), a later action recomputes
-    * them instead of failing on a missing checkpoint block. */
-  def materialize(df: DataFrame, level: StorageLevel): DataFrame = {
+    * that the RDD keeps its lineage. Runs as one SQL execution of `df`,
+    * as the checkpoint does, so query listeners see it as an action over
+    * `df`. Returns the relation and the RDD; once the RDD is
+    * unpersisted, a later action recomputes its blocks instead of
+    * failing on a missing checkpoint block. */
+  def materialize(df: DataFrame, level: StorageLevel): (DataFrame, RDD[_]) = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
-    val rows = ds.queryExecution.toRdd.map(_.copy()).persist(level)
-    rows.count()
-    classic.Dataset.ofRows(ds.sparkSession, LogicalRDD.fromDataset(rows, ds, isStreaming = false))
+    val qe = ds.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("materialize")) {
+      val rows = qe.executedPlan.execute().map(_.copy()).persist(level)
+      rows.count()
+      (classic.Dataset.ofRows(ds.sparkSession,
+        LogicalRDD.fromDataset(rows, ds, isStreaming = false)), rows)
+    }
   }
 }

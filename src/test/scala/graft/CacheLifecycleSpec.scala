@@ -1,66 +1,35 @@
 package graft
 
-import graft.operators.DedupOps
 import org.scalatest.concurrent.Eventually
 import org.scalatest.time.{Seconds, Span}
 
-/** The dedup family persists shingle relations internally; the
-  * unpersistAfterFirstAction wrapper must release them once the first
-  * action over the built query completes — no caller-side clearCache
-  * contract. Asserted on the actual registered queries: after one
-  * action, no persisted RDD created by the query remains. (Release
-  * rides Spark's async listener bus, hence `eventually`.) */
+/** Every query builder keeps its intermediates in a [[QueryScope]],
+  * which must release them once the first action over the built query
+  * completes — no caller-side clearCache contract, no GC. Asserted on
+  * every registered query: after one action, no persisted RDD created
+  * by the query remains and none of its scopes is still pending.
+  * (Release rides Spark's async listener bus, hence `eventually`.) */
 class CacheLifecycleSpec extends SparkSpec with Eventually {
 
-  private def newPersistsAfterRunning(name: String): Set[Int] = {
-    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    SparkEntry.queries(name)(spark, sf)
-      .write.format("noop").mode("overwrite").save()
-    eventually(timeout(Span(30, Seconds))) {
-      val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
-      assert(leaked.isEmpty, s"$name left persisted RDDs $leaked after its action")
-      leaked
+  test("every registered query leaves no persist or scope behind") {
+    val leaks = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val firstScope = QueryScope.nextId
+      SparkEntry.queries(name)(spark, sf)
+        .write.format("noop").mode("overwrite").save()
+      def left = (spark.sparkContext.getPersistentRDDs.keySet.toSet -- before,
+        QueryScope.pendingIds.filter(_ >= firstScope))
+      try {
+        eventually(timeout(Span(30, Seconds))) {
+          assert(left == ((Set.empty[Int], Seq.empty[Long])))
+        }
+        None
+      } catch {
+        case _: org.scalatest.exceptions.TestFailedDueToTimeoutException =>
+          val (rdds, scopes) = left
+          Some(s"$name: persisted RDDs $rdds, pending scopes $scopes")
+      }
     }
-  }
-
-  test("capped jaccard releases both its shingle persists after the action") {
-    assert(newPersistsAfterRunning("dedup_jaccard_capped").isEmpty)
-  }
-
-  test("minhash LSH releases its shingle persist after the action") {
-    assert(newPersistsAfterRunning("dedup_minhash_lsh").isEmpty)
-  }
-
-  test("substring overlap releases its window persist after the action") {
-    assert(newPersistsAfterRunning("dedup_substring").isEmpty)
-  }
-
-  test("pipeline_corpus releases its shingle and clean-train persists after the action") {
-    assert(newPersistsAfterRunning("pipeline_corpus").isEmpty)
-  }
-
-  test("incremental dedup, span coverage, decontamination, and tfidf release their persists") {
-    assert(newPersistsAfterRunning("dedup_incremental").isEmpty)
-    assert(newPersistsAfterRunning("dedup_span_coverage").isEmpty)
-    assert(newPersistsAfterRunning("sample_decontaminate").isEmpty)
-    assert(newPersistsAfterRunning("sample_decontaminate_bloom").isEmpty)
-    assert(newPersistsAfterRunning("text_tfidf").isEmpty)
-  }
-
-  test("cluster queries leave no persisted RDDs behind once the cleaner runs") {
-    // connectedComponents explicitly unpersists its edge caches; the
-    // per-round label localCheckpoints are pinned only by reachability
-    // and drain via the ContextCleaner after GC — so this asserts the
-    // full no-accumulation story: query persists released by the
-    // listener, checkpoint blocks released once unreachable.
-    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    SparkEntry.queries("dedup_clusters")(spark, sf)
-      .write.format("noop").mode("overwrite").save()
-    eventually(timeout(Span(60, Seconds))) {
-      System.gc()
-      val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
-      assert(leaked.isEmpty,
-        s"dedup_clusters left persisted RDDs $leaked after action + GC")
-    }
+    assert(leaks.isEmpty, leaks.mkString("\n", "\n", ""))
   }
 }

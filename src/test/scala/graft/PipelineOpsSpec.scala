@@ -728,20 +728,6 @@ class PipelineOpsSpec extends SparkSpec {
     assert(full.count() >= 0 && capped.count() >= 0)
   }
 
-  test("hashed shingle join keys produce byte-identical jaccard results") {
-    // the cluster knob (DedupOps.ShingleHashKeysConf): 64-bit hashed
-    // shuffle keys must be a pure transport optimization — same pairs,
-    // same scores, both for the plain and the df-capped variant
-    def rows(q: String) = SparkEntry.queries(q)(spark, sf).collect().toSeq
-    val offPlain = rows("dedup_ngram_jaccard")
-    val offCapped = rows("dedup_jaccard_capped")
-    spark.conf.set(DedupOps.ShingleHashKeysConf, "true")
-    try {
-      assert(rows("dedup_ngram_jaccard") === offPlain)
-      assert(rows("dedup_jaccard_capped") === offCapped)
-    } finally spark.conf.unset(DedupOps.ShingleHashKeysConf)
-  }
-
   test("bloom decontamination equals the exact twin; map-side probe pinned in plan") {
     // no false negatives: the sketch pre-filter + exact confirm join
     // must return byte-identical rows to the full-shuffle variant
@@ -882,24 +868,23 @@ class PipelineOpsSpec extends SparkSpec {
     // warm: the corpus scan and the shingle explode arrive materialized
     // — the platform-team steady state; what remains is the marginal
     // cost of COMPOSING the five stages
-    val docs = Tables.documents(spark, sf)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sh = CorpusPipeline.bucketedShingles(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    docs.count(); sh.count()
-    val (result, caches) = CorpusPipeline.stages(docs, sh)
-    val (warmRows, warm0) = timed(result.collect().toSeq)
-    // under end-of-suite heap pressure the persisted blocks can be
-    // EVICTED mid-measurement (observed once: 64 s "warm" vs 24 s cold
-    // in a 22-suite run — the recompute-under-eviction path, not the
-    // cached composition this test measures). The first collect just
-    // repopulated the cache, so one re-measure reads it warm for real;
-    // correctness (row equality) is asserted on the FIRST pass either
-    // way.
-    val warm =
-      if (warm0 < cold * 2) warm0
-      else { val (_, w2) = timed(result.collect().toSeq); w2 }
-    (docs +: sh +: caches).foreach(_.unpersist())
+    val (warmRows, warm) = QueryScope.eager(spark) { s =>
+      val docs = s.persist(Tables.documents(spark, sf))
+      val sh = s.persist(CorpusPipeline.bucketedShingles(docs))
+      docs.count(); sh.count()
+      val result = CorpusPipeline.stages(s, docs, sh)
+      val (rows, warm0) = timed(result.collect().toSeq)
+      // under end-of-suite heap pressure the persisted blocks can be
+      // EVICTED mid-measurement (observed once: 64 s "warm" vs 24 s cold
+      // in a 22-suite run — the recompute-under-eviction path, not the
+      // cached composition this test measures). The first collect just
+      // repopulated the cache, so one re-measure reads it warm for real;
+      // correctness (row equality) is asserted on the FIRST pass either
+      // way.
+      (rows,
+        if (warm0 < cold * 2) warm0
+        else { val (_, w2) = timed(result.collect().toSeq); w2 })
+    }
     info(f"pipeline_corpus cold $cold%.2f s; warm composition $warm%.2f s")
     assert(warmRows === coldRows)
     // correctness gate is the row equality above; the timing claim gets

@@ -771,7 +771,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(livePagerank.queryExecution.analyzed
         .collect { case g: Generate => g }.exists(g => !isSymmetrize(g)),
       "the live miner no longer buckets through a Generate — update this pin")
-    // the components variant localCheckpoints its iterative loop, so
+    // the components variant materializes every round of its loop, so
     // its FINAL plan is an ExistingRDD scan — pin its INPUT relation
     // instead (artifact scan, no bucketing explode) plus full result
     // equality against the live miner below
@@ -916,10 +916,10 @@ class PlanAuditSpec extends SparkSpec {
     // representatives served from the materialized capped-Jaccard
     // edges must not tokenize a single document (documents may be
     // read for doc_id/n_chars only — never split). The components
-    // loop localCheckpoints its lineage, so the pin is on the
+    // loop materializes every round, so the pin is on the
     // ANALYZED plan of each stored query plus the input relation,
     // with full row equality against the live miners.
-    // NOTE: the components loop runs (and localCheckpoints) at
+    // NOTE: the components loop runs (and materializes its rounds) at
     // CONSTRUCTION time for live and stored alike, so the RESULT
     // plans cannot distinguish them — the pin lives on the two INPUT
     // relations: the stored input is the artifact scan with no
@@ -936,11 +936,12 @@ class PlanAuditSpec extends SparkSpec {
       "live miner input no longer shingles — update this pin")
     val storedC = graft.operators.DedupOps.qDedupClustersStored(spark, sf)
     val storedR = graft.operators.DedupOps.qDedupRepresentativesStored(spark, sf)
-    assert(storedC.collect().toSeq ===
-      graft.operators.DedupOps.qDedupClusters(spark, sf).collect().toSeq,
+    // row order is unspecified (members of one cluster arrive in any
+    // order), so compare the rows as sorted sequences
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.sortBy(_.toString)
+    assert(rows(storedC) === rows(graft.operators.DedupOps.qDedupClusters(spark, sf)),
       "stored clusters diverged from self-contained")
-    assert(storedR.collect().toSeq ===
-      graft.operators.DedupOps.qDedupRepresentatives(spark, sf).collect().toSeq,
+    assert(rows(storedR) === rows(graft.operators.DedupOps.qDedupRepresentatives(spark, sf)),
       "stored representatives diverged from self-contained")
     assert(graft.operators.DedupOps.qDedupClustersStarsStored(spark, sf).collect().toSeq ===
       graft.operators.DedupOps.qDedupClustersStars(spark, sf).collect().toSeq,
