@@ -16,8 +16,8 @@ import scala.util.control.NonFatal
   * the scope releases all of them at one point.
   *
   * {{{
-  *   def q(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
-  *     val sh = s.persist(shingles(docs))   // two consumers below
+  *   def q(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
+  *     val sh = scope.persist(shingles(docs))   // two consumers below
   *     sh.join(sh.groupBy(...), ...)       // the lazy result
   *   }
   * }}}
@@ -38,29 +38,39 @@ final class QueryScope private (spark: SparkSession) {
   private val done = new AtomicBoolean(false)
 
   /** Persists `df` at `MEMORY_AND_DISK` — the storage level every
-    * builder intermediate uses — and records it for release. */
+    * builder intermediate uses — and records it for release. Equal
+    * plans share one cache entry, so a `df` that is already cached
+    * (a caller's persist, or an enclosing scope's) stays with whoever
+    * cached it: this scope never releases an entry it did not make. */
   def persist(df: DataFrame): DataFrame =
-    hold(df.persist(StorageLevel.MEMORY_AND_DISK), df.unpersist(false))
+    if (df.storageLevel != StorageLevel.NONE) df
+    else hold(df.persist(StorageLevel.MEMORY_AND_DISK), df.unpersist(false))
 
   /** Computes `df` now and records the rows for release: the relation
     * returned reads them without re-running `df`'s plan. Unlike a local
     * checkpoint the rows keep their lineage, so an action after the
-    * release recomputes them instead of failing on a missing block. */
-  def materialize(df: DataFrame): DataFrame = {
-    val (rel, rows) = GraftBridge.materialize(df, StorageLevel.MEMORY_AND_DISK)
+    * release recomputes them instead of failing on a missing block.
+    * With `eager = false` the first action over the returned relation
+    * computes and keeps the rows instead — for a loop whose next step
+    * is an action over them anyway, which saves one job per step. That
+    * action does not run `df`'s plan, so it releases no scope nested in
+    * `df`: materialize eagerly where `df` holds one. */
+  def materialize(df: DataFrame, eager: Boolean = true): DataFrame = {
+    val (rel, rows) = GraftBridge.materialize(df, StorageLevel.MEMORY_AND_DISK, eager)
     hold(rel, rows.unpersist(false))
   }
 
   /** Releases one recorded relation before the scope ends — for a
     * builder loop that has fully used it (the previous round once the
-    * next is materialized), so peak storage holds one round, not all. */
+    * next is materialized), so peak storage holds one round, not all.
+    * A relation this scope did not record (one [[persist]] found
+    * already cached) is not its to release and is left alone. */
   def unpersist(df: DataFrame): Unit = {
     val release = synchronized {
       val i = held.indexWhere(_._1 eq df)
-      require(i >= 0, "unpersist of a relation this scope did not record")
-      held.remove(i)._2
+      if (i >= 0) Some(held.remove(i)._2) else None
     }
-    release()
+    release.foreach(_())
   }
 
   private def hold(df: DataFrame, release: => Unit): DataFrame = {

@@ -43,8 +43,8 @@ object SkewBench {
     // Materialize the shingle relation ONCE before timing: both
     // variants share it, and the claim under test is the PAIR-JOIN
     // cost (the Σ_s |docs(s)|² term), not the explode.
-    QueryScope.eager(spark) { s =>
-      val sh = s.persist(DedupOps.shingles(viral))
+    QueryScope.eager(spark) { scope =>
+      val sh = scope.persist(DedupOps.shingles(viral))
       sh.count()
       val uncapped = time("uncapped jaccard") {
         DedupOps.jaccardPairs(sh).filter(col("jaccard") >= 0.1)

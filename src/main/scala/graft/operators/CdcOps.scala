@@ -603,14 +603,14 @@ object CdcOps {
     * shard offsets. Answer-identical (the oracle keeps the naive
     * global walk); every remaining unpartitioned window reads a
     * ≤shard-count relation. */
-  def qWalGaps(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qWalGaps(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     import org.apache.spark.sql.expressions.Window
     val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val local = filterActions(toEnvelope(Tables.events(spark, sfDir)))
       .select(col("wal_position"))
       .repartitionByRange(parts, col("wal_position"))
       .withColumn("__shard", spark_partition_id())
-      .transform(s.persist)
+      .transform(scope.persist)
     val wS = Window.partitionBy(col("__shard")).orderBy(col("wal_position"))
     val intra = local
       .withColumn("prev_wal", lag(col("wal_position"), 1).over(wS))
@@ -633,7 +633,7 @@ object CdcOps {
       .select(col("__shard"), (col("prev_wal") + 1).as("gap_from"),
         (col("wal_position") - 1).as("gap_to"),
         (col("wal_position") - col("prev_wal") - 1).as("missing"))
-      .transform(s.persist)
+      .transform(scope.persist)
     val offsets = gaps.groupBy(col("__shard")).agg(sum(col("missing")).as("__m"))
       .withColumn("__off", coalesce(sum(col("__m")).over(
         Window.orderBy(col("__shard"))

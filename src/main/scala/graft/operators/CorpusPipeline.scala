@@ -36,12 +36,12 @@ object CorpusPipeline {
   private val Budget = 120
   private val MinShingleHits = 5
 
-  def qPipelineCorpus(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qPipelineCorpus(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val docs = Tables.documents(spark, sfDir)
     // the one shingle explode, shared by near-dup mining and
     // decontamination (released after the query's first action)
-    val sh = s.persist(bucketedShingles(docs))
-    stages(s, docs, sh)
+    val sh = scope.persist(bucketedShingles(docs))
+    stages(scope, docs, sh)
   }
 
   /** The bucketed (doc_id, shingle, bucket) relation the pipeline
@@ -54,7 +54,7 @@ object CorpusPipeline {
     * — shared verbatim by the live pipeline and the stored variant so
     * their admission semantics cannot drift. The gate relation is
     * materialized here, in the caller's scope. */
-  private def cleanDocs(s: QueryScope, docs: DataFrame): DataFrame = {
+  private def cleanDocs(scope: QueryScope, docs: DataFrame): DataFrame = {
     // r17: the gate projection feeds TWO consumers — the canonical
     // fingerprint aggregate and the admission filter — and each used
     // to re-run the whole tokenize-and-score subtree (two full corpus
@@ -65,7 +65,7 @@ object CorpusPipeline {
     // downstream join planning), the same cache-vs-checkpoint trade the
     // components loop hit. Only the columns the two consumers need are
     // kept.
-    val gated = s.materialize(
+    val gated = scope.materialize(
       TextOps.gatedDocs(docs, col("source"), SamplingOps.bucket100("doc_id").as("bucket"))
         .select(col("doc_id"), col("source"), col("bucket"),
           col("fp_content"), col("quality_score"), col("n_tokens"),
@@ -106,10 +106,10 @@ object CorpusPipeline {
     * measurable separately from the cold scan+explode
     * (CorpusPipelineSpec times both; NOTES_r6 records the split).
     * Its intermediates are kept in the caller's scope `s`. */
-  private[graft] def stages(s: QueryScope, docs: DataFrame, sh: DataFrame): DataFrame = {
+  private[graft] def stages(scope: QueryScope, docs: DataFrame, sh: DataFrame): DataFrame = {
     // stage 1+2: quality/language gate + exact dedup (min doc_id per
     // content fingerprint, computed over ALL docs as in qQualityPipeline)
-    val clean = cleanDocs(s, docs)
+    val clean = cleanDocs(scope, docs)
 
     // stage 3: near-dup removal among the clean TRAIN docs — df-capped
     // jaccard (same cap and threshold as dedup_jaccard_capped), drop
@@ -120,7 +120,7 @@ object CorpusPipeline {
     // measured 17 corpus scans without the persist, 3 with. It is a
     // thin 3-column relation (ids + source + bucket), far smaller than
     // the corpus it filters.
-    val cleanTrain = s.persist(clean.filter(col("bucket") < 80))
+    val cleanTrain = scope.persist(clean.filter(col("bucket") < 80))
     val shClean = sh.filter(col("bucket") < 80)
       .join(cleanTrain.select("doc_id"), "doc_id")
       .select("doc_id", "shingle")
@@ -160,8 +160,8 @@ object CorpusPipeline {
     * into this one-time build; serving is a filter + anti-join. */
   private[graft] def benchHitsStored(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = graft.Artifacts.getOrBuild(spark, sfDir, "bench_hits") { d =>
-      QueryScope.eager(spark) { s =>
-        val sh = s.persist(bucketedShingles(Tables.documents(spark, sfDir)))
+      QueryScope.eager(spark) { scope =>
+        val sh = scope.persist(bucketedShingles(Tables.documents(spark, sfDir)))
         sh.filter(col("bucket") < 80).select("doc_id", "shingle")
           .join(sh.filter(col("bucket") >= 90).select("shingle").distinct(), "shingle")
           .groupBy(col("doc_id")).agg(count_distinct(col("shingle")).as("hits"))
@@ -193,9 +193,9 @@ object CorpusPipeline {
     * the mine-once discipline fixes the edge definition at mining
     * time. The oracle below reproduces the artifact definitions
     * exactly, so the hash gate still proves end-to-end equivalence. */
-  def qPipelineCorpusStored(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qPipelineCorpusStored(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val docs = Tables.documents(spark, sfDir)
-    val cleanTrain = s.persist(cleanDocs(s, docs).filter(col("bucket") < 80))
+    val cleanTrain = scope.persist(cleanDocs(scope, docs).filter(col("bucket") < 80))
     val ids = cleanTrain.select("doc_id")
     val nearDups = DedupOps.textEdgesStored(spark, sfDir)
       .select("a_id", "b_id")
@@ -382,13 +382,13 @@ object CorpusPipeline {
     * only corpus-sized shuffles, both with map-side combine. The
     * grand-total row share is a 1-row literal folded in driver-side
     * (no 1-row join; ANN-sizing-count discipline). */
-  def qDatasetCard(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qDatasetCard(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val perDoc = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"), col("lang"),
         col("n_chars"),
         size(split(col("text"), " ")).as("n_tokens"),
         md5(col("text").cast("binary")).as("fp"))
-      .transform(s.persist)
+      .transform(scope.persist)
     val totalDocs = perDoc.count()
     val dupMass = perDoc
       .withColumn("grp", count(lit(1)).over(

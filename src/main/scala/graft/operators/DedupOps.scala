@@ -73,11 +73,12 @@ object DedupOps {
     *
     * CACHE LIFECYCLE: the persisted shingle relation is released by
     * this helper's own [[QueryScope]] as soon as the first action over
-    * the returned pairs completes — no caller-side clearCache contract. */
-  def jaccardPairs(sh0: DataFrame): DataFrame = QueryScope(sh0.sparkSession) { s =>
+    * the returned pairs completes — no caller-side clearCache contract.
+    * A caller that persisted `sh0` itself keeps owning that entry. */
+  def jaccardPairs(sh0: DataFrame): DataFrame = QueryScope(sh0.sparkSession) { scope =>
     // sh feeds the per-doc counts and BOTH sides of the inverted-index
     // self-join — persist so the (exploded) relation is computed once
-    val sh = s.persist(sh0)
+    val sh = scope.persist(sh0)
     val counts = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val pairs = sh.as("a")
       .join(sh.as("b"),
@@ -147,7 +148,7 @@ object DedupOps {
     * own kept paragraphs (per-doc state bounded by doc length, never
     * corpus-sized). The paragraph relation persists across its two
     * consumers ([[qDedupJaccard]]'s cache discipline). */
-  def qDedupParagraphs(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qDedupParagraphs(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val P = 20
     val paras = Tables.documents(spark, sfDir)
       .select(col("doc_id"), split(col("text"), " ").as("ts"))
@@ -157,7 +158,7 @@ object DedupOps {
       .select(col("doc_id"), col("pid"),
         array_join(slice(col("ts"), col("pid") * P + 1, lit(P)), " ").as("ptext"))
       .withColumn("h", md5(col("ptext").cast("binary")))
-      .transform(s.persist)
+      .transform(scope.persist)
     val freq = paras.groupBy(col("h")).agg(count(lit(1)).as("cnt"))
     paras.join(freq, "h")
       .groupBy(col("doc_id"))
@@ -428,12 +429,12 @@ object DedupOps {
     * shared by the query above and the clustering edge miner, where a
     * global sort feeding a groupBy would be dead weight in the
     * materialized edge relation. */
-  def cappedJaccardPairs(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def cappedJaccardPairs(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val maxDf = 20
     // persisted: sh feeds the document-frequency agg AND the join that
     // filters to rare shingles — one explode instead of two
     val sh = shingles(Tables.documents(spark, sfDir))
-      .transform(s.persist)
+      .transform(scope.persist)
     val rare = sh.groupBy(col("shingle"))
       .agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf)
@@ -458,16 +459,16 @@ object DedupOps {
     * second join). The 0.6 gate is the integer compare 5·inter ≥
     * 3·n_src; the emitted ratio is one IEEE division of two small
     * ints — deterministic in both engines. */
-  def qDedupContainment(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qDedupContainment(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val maxDf = 20
     val sh = shingles(Tables.documents(spark, sfDir))
-      .transform(s.persist)
+      .transform(scope.persist)
     val rare = sh.groupBy(col("shingle"))
       .agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf)
       .select("shingle")
     val kept = sh.join(rare, "shingle")
-      .transform(s.persist)
+      .transform(scope.persist)
     val counts = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val pairs = kept.as("a")
       .join(kept.as("b"),
@@ -593,17 +594,17 @@ object DedupOps {
     * 12 minima are computed once and persisted); each config adds a
     * band equi-join and a verification join BOUNDED BY ITS OWN
     * candidate count — the sweep never joins corpus × corpus. */
-  def qDedupLshBandTuning(spark: SparkSession, sfDir: String): DataFrame = QueryScope.eager(spark) { s =>
+  def qDedupLshBandTuning(spark: SparkSession, sfDir: String): DataFrame = QueryScope.eager(spark) { scope =>
     import spark.implicits._
-    val sh = s.persist(shingles(Tables.documents(spark, sfDir)))
+    val sh = scope.persist(shingles(Tables.documents(spark, sfDir)))
     val mins = (0 until NumHashes).map { j =>
       min(md5(concat(lit(j.toString), lit(":"), col("shingle")).cast("binary"))).as(s"m$j")
     }
     val sig = sh.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
-      .transform(s.persist)
+      .transform(scope.persist)
     val sets = sh.groupBy(col("doc_id"))
       .agg(collect_list(col("shingle")).as("ss"), count(lit(1)).as("n"))
-      .transform(s.persist)
+      .transform(scope.persist)
     // r16 optimization round: ONE job for the whole sweep. The old
     // shape ran 2 count() actions per config (8 jobs, plus a persist
     // per candidate set); but (a) the verification join is TOTAL on
@@ -691,14 +692,14 @@ object DedupOps {
     * intersection size comes from `array_intersect` — work proportional
     * to |candidates|, never to the full pair matrix. That asymmetry is
     * the whole point of LSH at 100 TB. */
-  def qDedupMinhashLsh(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qDedupMinhashLsh(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     // The shingle relation feeds three consumers (band signatures, the
     // collected sets, and both sides of the bucket self-join); without
     // a persist each consumer re-explodes ~40× rows from parquet.
     // Materializing it once cuts two full scans — released by the
     // query's scope after the first action over the returned result.
     val sh = shingles(Tables.documents(spark, sfDir))
-      .transform(s.persist)
+      .transform(scope.persist)
     val bands = minhashBands(sh)
     val candidates = bands.as("a")
       .join(bands.as("b"),
@@ -782,9 +783,9 @@ object DedupOps {
     * FIXTURE-SCALE oracle query; the production citizen is
     * [[qDedupLshAuditStratum]], whose truth relation is bounded by a
     * deterministic document stratum IN CODE. */
-  def qDedupLshAudit(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qDedupLshAudit(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val sh = shingles(Tables.documents(spark, sfDir))
-      .transform(s.persist)
+      .transform(scope.persist)
     lshAuditOn(sh)
   }
 
@@ -825,9 +826,9 @@ object DedupOps {
     * inverted-index jaccard (a band collision implies a shared
     * min-shingle, so the inner truth join loses nothing); the output
     * is 13 rows. */
-  def qDedupLshCalibration(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qDedupLshCalibration(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val sh = shingles(Tables.documents(spark, sfDir))
-      .transform(s.persist)
+      .transform(scope.persist)
     val mins = (0 until NumHashes).map { j =>
       min(md5(concat(lit(j.toString), lit(":"), col("shingle"))
         .cast("binary"))).as(s"m$j")
@@ -838,7 +839,7 @@ object DedupOps {
     // docs-sized persist replaces two full re-aggregations (the same
     // reasoning that already persists sig in the band-tuning sweep).
     val sig = sh.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
-      .transform(s.persist)
+      .transform(scope.persist)
     // candidates from SINGLE-row bands (r = 1 over the same signature):
     // collisions fire at jaccard ≳ 1/12 instead of production banding's
     // ≳ 0.5, so the calibration sweeps the estimator's WHOLE range —
@@ -932,12 +933,12 @@ object DedupOps {
   def qDedupLshAuditStratum(spark: SparkSession, sfDir: String): DataFrame =
     lshAuditStratum(spark, sfDir, LshAuditStratumPct)
 
-  def lshAuditStratum(spark: SparkSession, sfDir: String, pctDocs: Int): DataFrame = QueryScope(spark) { s =>
+  def lshAuditStratum(spark: SparkSession, sfDir: String, pctDocs: Int): DataFrame = QueryScope(spark) { scope =>
     require(pctDocs >= 1 && pctDocs <= 100, s"stratum pct $pctDocs not in [1,100]")
     val docs = Tables.documents(spark, sfDir)
       .filter(SamplingOps.bucket100("doc_id") < pctDocs)
     val sh = shingles(docs)
-      .transform(s.persist)
+      .transform(scope.persist)
     lshAuditOn(sh)
   }
 
@@ -1210,11 +1211,11 @@ object DedupOps {
     * Input: undirected edges as (a_id, b_id). Output: (node, label)
     * with label = min node id reachable, the component's canonical id.
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame = QueryScope(pairs.sparkSession) { s =>
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame = QueryScope(pairs.sparkSession) { scope =>
     // undirect the pair graph with ONE scan: explode each pair into its
     // two directions. A union of two selects over `pairs` would execute
     // the (expensive) mining plan twice inside this materialization.
-    val edgesRaw = s.persist(pairs.select(explode(array(
+    val edgesRaw = scope.persist(pairs.select(explode(array(
         struct(col("a_id").as("src"), col("b_id").as("dst")),
         struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst")))
@@ -1248,20 +1249,24 @@ object DedupOps {
       // neighbors' — the per-round `union(labels)` branch disappears from
       // the loop entirely. +n rows on a 2m-row relation, paid once, saves
       // a union+wider shuffle every round.
-      val edges = s.persist(edgesRaw.union(
+      val edges = scope.persist(edgesRaw.union(
           edgesRaw.select(col("src")).distinct()
             .select(col("src"), col("src").as("dst")))
         .repartition(width, col("dst")))
       edges.count()
-      s.unpersist(edgesRaw)
-      // Every round's labels are MATERIALIZED eagerly: each round reads
-      // the previous round's rows instead of nesting its whole plan tree
+      scope.unpersist(edgesRaw)
+      // Every round's labels are MATERIALIZED: each round reads the
+      // previous round's rows instead of nesting its whole plan tree
       // (without it Catalyst re-analysis grows without bound — measured:
       // round 2 alone 50+ s on a 485-node graph; materialized, the full
       // loop is sub-second per round). The rows keep their lineage, so
-      // the previous round is released as soon as the next exists.
-      var labels = s.materialize(edges.select(col("src").as("node")).distinct()
-        .withColumn("label", col("node")))
+      // the previous round is released as soon as the next exists. That
+      // lineage also means each kept round adds stages that every later
+      // job's scheduling walks, so a round runs ONE job: the signature
+      // below is the action that computes and keeps the round's rows
+      // (materializations are lazy, `eager = false`).
+      var labels = scope.materialize(edges.select(col("src").as("node")).distinct()
+        .withColumn("label", col("node")), eager = false)
       // CONVERGENCE BY MONOTONE SIGNATURE (r16 optimization round): each
       // node's label is non-increasing round over round (prop takes a min
       // that includes the node's own label; path doubling substitutes a
@@ -1269,8 +1274,8 @@ object DedupOps {
       // strictly decreasing until the fixpoint and UNCHANGED exactly when
       // every label is unchanged — the same pointwise criterion the
       // previous `next ⋈ labels | label ≠ old | count == 0` check tested,
-      // for the price of a 1-row aggregate over already-materialized
-      // rows instead of a per-round join job that re-derived `next`
+      // for the price of a 1-row aggregate in the job that materializes
+      // the round instead of a per-round join job that re-derived `next`
       // from scratch. decimal(38,0): exact for any realistic id×n mass.
       // ADVICE r16: a null sum is Spark's non-ANSI decimal-overflow
       // result as well as the empty-relation one; mapping both to ZERO
@@ -1293,23 +1298,26 @@ object DedupOps {
       while (!converged && iter < maxIter) {
         // hash-min: pull the smallest label across every edge of the
         // closed neighborhood (self-loops carry the node's own label, so
-        // no union branch is needed). Materialized BEFORE the self-join
-        // below to avoid computing it twice.
-        val prop = s.materialize(edges.join(labels, col("dst") === col("node"))
+        // no union branch is needed). Both joins of the round are
+        // shuffle-hash joins: no broadcast, which would run a job of its
+        // own while the round is planned, and no sort — the cached edges
+        // keep their `dst` partitioning and only the label side shuffles.
+        // Kept before the self-join below so it is computed once.
+        val prop = scope.materialize(edges.join(labels.hint("shuffle_hash"), col("dst") === col("node"))
           .select(col("src").as("node"), col("label"))
-          .groupBy("node").agg(min("label").as("label")))
+          .groupBy("node").agg(min("label").as("label")), eager = false)
         // path doubling: label ← label(label), the map composed with
         // ITSELF (composing with a fixed pre-round map would only advance
         // a constant hop count per round). Every label is itself a node
         // (a min of reachable node ids), so the self-join is total.
-        // Materialized eagerly: the next round's prop (and the final
-        // consumer) read the rows instead of re-running the self-join.
-        val next = s.materialize(prop.as("a")
-          .join(prop.as("b"), col("a.label") === col("b.node"))
-          .select(col("a.node").as("node"), col("b.label").as("label")))
-        s.unpersist(prop)
-        s.unpersist(labels)
+        // The next round's prop (and the final consumer) read `next`'s
+        // kept rows instead of re-running the self-join.
+        val next = scope.materialize(prop.as("a")
+          .join(prop.as("b").hint("shuffle_hash"), col("a.label") === col("b.node"))
+          .select(col("a.node").as("node"), col("b.label").as("label")), eager = false)
         val sig = labelSig(next)
+        scope.unpersist(prop)
+        scope.unpersist(labels)
         converged = sig.compareTo(prevSig) == 0
         prevSig = sig
         labels = next
@@ -1339,13 +1347,15 @@ object DedupOps {
     * equal neighbors (and itself) to that min. Edges only ever move
     * "downhill", and the fixpoint is a depth-1 star forest rooted at
     * each component's minimum. */
-  def connectedComponentsStars(pairs: DataFrame, maxIter: Int = 30): DataFrame = QueryScope(pairs.sparkSession) { s =>
+  def connectedComponentsStars(pairs: DataFrame, maxIter: Int = 30): DataFrame = QueryScope(pairs.sparkSession) { scope =>
     // ONE pass over `pairs` (often an expensive mining plan whose
     // caches are released after the first action): materialize the edge
     // set eagerly, then derive the node set from the materialized
     // edges — a_id < b_id in every miner, so no node exists only as a
-    // self-loop and the edge list covers the node universe.
-    val edges0 = s.materialize(pairs
+    // self-loop and the edge list covers the node universe. Eager on
+    // purpose: the materialization is the one action over `pairs`'
+    // plan, so it is what releases the scopes nested in it.
+    val edges0 = scope.materialize(pairs
       .select(col("a_id").as("src"), col("b_id").as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct())
@@ -1396,8 +1406,9 @@ object DedupOps {
     var iter = 0
     while (!converged && iter < maxIter) {
       // materialized: same reasoning as the hash-min loop — each round
-      // must not nest the previous round's whole plan tree
-      val next = s.materialize(star(star(e, large = true), large = false))
+      // must not nest the previous round's whole plan tree, and runs one
+      // job (the forest test below computes and keeps the rows)
+      val next = scope.materialize(star(star(e, large = true), large = false), eager = false)
       // STRUCTURAL convergence (r17, replacing r16's set-equality
       // compare of consecutive rounds): the fixpoint of alternating
       // large-star/small-star is exactly a depth-1 star forest rooted
@@ -1422,7 +1433,7 @@ object DedupOps {
       // labeling) is duplicate-insensitive. One job over `next` alone
       // (the old compare also scanned `e`).
       converged = isStarForest(next)
-      if (e ne edges0) s.unpersist(e)
+      if (e ne edges0) scope.unpersist(e)
       e = next
       iter += 1
     }
@@ -1639,13 +1650,13 @@ object DedupOps {
     * truncation is a TakeOrdered over candidate negatives. The oracle
     * keeps the naive global row_number, proving the decomposition
     * exact. */
-  def qContrastivePairs(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qContrastivePairs(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val edges = textEdgesStored(spark, sfDir).select("a_id", "b_id")
-      .transform(s.persist)
+      .transform(scope.persist)
     val nPos = edges.count()
     val n = Tables.documents(spark, sfDir).count()
     val half = n / 2
-    val ranked0 = SamplingOps.withGlobalRank(s,
+    val ranked0 = SamplingOps.withGlobalRank(scope,
       Tables.documents(spark, sfDir).select(col("doc_id"))
         .withColumn("rk", md5(col("doc_id").cast("string").cast("binary"))),
       "r", col("rk"), col("doc_id"))
@@ -2085,7 +2096,7 @@ object DedupOps {
   private val SubstrK = 8
   private val SubstrMaxDf = 20
 
-  def qDedupSubstring(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qDedupSubstring(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val ts = split(col("text"), " ")
     val wins = Tables.spread(Tables.documents(spark, sfDir))
       .select(col("doc_id"), ts.as("ts"))
@@ -2096,7 +2107,7 @@ object DedupOps {
           i => concat_ws(" ",
             (0 until SubstrK).map(o => element_at(col("ts"), i + o + 1)): _*))))
           .as("win"))
-      .transform(s.persist)
+      .transform(scope.persist)
     val rare = wins.groupBy(col("win"))
       .agg(count(lit(1)).as("df"))
       .filter(col("df") <= SubstrMaxDf)
@@ -2145,7 +2156,7 @@ object DedupOps {
     * equi-join; a boilerplate window with huge df costs ONE row in the
     * dup relation (the join-back fan-out is the window's own
     * occurrence count, which is the work any removal must do). */
-  def qDedupSpanRemoval(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qDedupSpanRemoval(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val ts = split(col("text"), " ")
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"), ts.as("ts"))
     val wins = docs
@@ -2157,7 +2168,7 @@ object DedupOps {
         concat_ws(" ",
           (0 until SubstrK).map(o => element_at(col("ts"), col("i") + o + 1)): _*)
           .as("win"))
-      .transform(s.persist)
+      .transform(scope.persist)
     val dup = wins.groupBy(col("win"))
       .agg(countDistinct(col("doc_id")).as("df"))
       .filter(col("df") >= 2)
@@ -2232,7 +2243,7 @@ object DedupOps {
     * collisions — never a rescan of the base corpus text. Both match
     * arms left-join onto the incoming slice, so every incoming doc is
     * classified exactly once. */
-  def qDedupIncremental(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qDedupIncremental(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val docs = Tables.documents(spark, sfDir)
       .withColumn("bucket", SamplingOps.bucket100("doc_id"))
     val fp = docs.select(col("doc_id"), col("bucket"),
@@ -2243,7 +2254,7 @@ object DedupOps {
       .groupBy(col("doc_id")).agg(min(col("base_id")).as("exact_match_id"))
     // one shingle explode serves signatures AND verification sets
     val sh = shingles(docs)
-      .transform(s.persist)
+      .transform(scope.persist)
     val bands = minhashBands(sh)
       .withColumn("bucket", SamplingOps.bucket100("doc_id"))
     val cand = bands.filter(col("bucket") >= 90).as("a")
@@ -2285,11 +2296,11 @@ object DedupOps {
     * recompute-everything twin. Docs too short to shingle (< 3 tokens)
     * keep their fingerprint with null bands/shingles — they can still
     * match exactly, never nearly. */
-  def baseSignatures(docs: DataFrame): DataFrame = QueryScope(docs.sparkSession) { s =>
+  def baseSignatures(docs: DataFrame): DataFrame = QueryScope(docs.sparkSession) { scope =>
     val fp = Tables.spread(docs).select(col("doc_id"),
       md5(col("text").cast("binary")).as("fp"))
     val sh = shingles(docs)
-      .transform(s.persist)
+      .transform(scope.persist)
     val bands = minhashBands(sh)
       .groupBy(col("doc_id"))
       .agg(collect_list(struct(col("band"), col("bkey"))).as("bands"))
@@ -2326,14 +2337,14 @@ object DedupOps {
     * incoming slice; every base-side touch is an equi-join against
     * the stored index. */
   private[graft] def classifyAgainstIndex(incoming: DataFrame,
-      base: DataFrame): DataFrame = QueryScope(incoming.sparkSession) { s =>
+      base: DataFrame): DataFrame = QueryScope(incoming.sparkSession) { scope =>
     val exact = incoming
       .select(col("doc_id"), md5(col("text").cast("binary")).as("fp"))
       .join(base.select(col("doc_id").as("base_id"), col("fp")), "fp")
       .groupBy(col("doc_id")).agg(min(col("base_id")).as("exact_match_id"))
     // the one shingle explode of the day: the incoming slice only
     val sh = shingles(incoming)
-      .transform(s.persist)
+      .transform(scope.persist)
     val baseBands = base
       .select(col("doc_id").as("base_id"), explode(col("bands")).as("bb"))
       .select(col("base_id"), col("bb.band").as("b_band"), col("bb.bkey").as("b_bkey"))
@@ -2395,7 +2406,7 @@ object DedupOps {
     * whole point of incremental reprocessing); the only shingle
     * explode is over that slice; the prev corpus appears ONLY through
     * the stored index's equi-joins. */
-  def qDedupDeltaClassify(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qDedupDeltaClassify(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val dir = Artifacts.getOrBuild(spark, sfDir, "prev_sig") { d =>
       baseSignatures(prevSnapshotDocs(spark, sfDir)).write.parquet(d)
     }
@@ -2414,7 +2425,7 @@ object DedupOps {
           .when(col("p_fp") =!= md5(col("text").cast("binary")), "changed"))
       .filter(col("delta_status").isNotNull)
       .select(col("doc_id"), col("source"), col("delta_status"), col("text"))
-      .transform(s.persist)
+      .transform(scope.persist)
     val cls = classifyAgainstIndex(
       delta.select(col("doc_id"), col("text")), Tables.parquet(spark, dir))
     delta.select(col("doc_id"), col("source"), col("delta_status"))
@@ -2656,7 +2667,7 @@ object DedupOps {
     * the corpus' duplicate mass, not its size. Everything is
     * equi-join + aggregate; the final left join restores docs with no
     * shared spans (and sub-8-token docs) at coverage 0. */
-  def qDedupSpanCoverage(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qDedupSpanCoverage(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val ts = split(col("text"), " ")
     val docs = Tables.documents(spark, sfDir)
     val wins = Tables.spread(docs)
@@ -2668,7 +2679,7 @@ object DedupOps {
           i => concat_ws(" ",
             (0 until SubstrK).map(o => element_at(col("ts"), i + o + 1)): _*)))
           .as(Seq("g", "win")))
-      .transform(s.persist)
+      .transform(scope.persist)
     val shared = wins.select(col("doc_id"), col("win")).distinct()
       .groupBy(col("win")).agg(count(lit(1)).as("d"))
       .filter(col("d") >= 2)
@@ -2800,7 +2811,7 @@ object DedupOps {
     * graph-sized edge relation — an id→dimension enrichment where
     * AQE broadcasts whichever side is small (typically the edges).
     * Output is source²-bounded — metadata-sized forever. */
-  def qDedupSourceOverlap(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qDedupSourceOverlap(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val src = Tables.documents(spark, sfDir).select(col("doc_id"), col("source"))
     val lab = textEdgesStored(spark, sfDir).select("a_id", "b_id")
       .join(src.withColumnRenamed("doc_id", "a_id")
@@ -2810,7 +2821,7 @@ object DedupOps {
       .select(col("a_id"), col("b_id"),
         least(col("sa"), col("sb")).as("src_x"),
         greatest(col("sa"), col("sb")).as("src_y"))
-      .transform(s.persist)
+      .transform(scope.persist)
     val edges = lab.groupBy(col("src_x"), col("src_y"))
       .agg(count(lit(1)).as("n_edges"))
     val docs = lab.select(col("src_x"), col("src_y"), col("a_id").as("doc_id"))

@@ -806,7 +806,7 @@ object EventOps {
     * discipline). Scale: one user rollup, one histogram aggregate, the
     * sharded prefix sum, two 1-row broadcasts (n, cap) — the
     * documented 1-row-broadcast category. */
-  def qAbWinsorized(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qAbWinsorized(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val big = org.apache.spark.sql.types.DecimalType(38, 0)
     val cents = (col("value") * 100)
       .cast(org.apache.spark.sql.types.DecimalType(18, 0))
@@ -817,7 +817,7 @@ object EventOps {
       .agg(sum(col("c").cast(big)).as("m"))
       .withColumn("arm", SamplingOps.bucket100("user_id") % 2)
     val hist = users.groupBy(col("m")).agg(count(lit(1)).as("cnt"))
-    val cum = SamplingOps.withGlobalCumSum(s,
+    val cum = SamplingOps.withGlobalCumSum(scope,
       hist, "cnt", "cum_excl", col("m"))
     val n1 = users.agg(count(lit(1)).as("n"))
     val cap = cum.crossJoin(broadcast(n1))
@@ -1076,7 +1076,7 @@ object EventOps {
     * partial TakeOrdered shapes; everything downstream operates on
     * ≤ 3k rows. The exact side is one distinct aggregation, present
     * only as the oracle anchor. */
-  def qKmvOverlap(spark: SparkSession, sfDir: String): DataFrame = QueryScope.eager(spark) { s =>
+  def qKmvOverlap(spark: SparkSession, sfDir: String): DataFrame = QueryScope.eager(spark) { scope =>
     val k = 64
     val ev0 = Tables.events(spark, sfDir)
       .filter(col("event_type").isin("view", "purchase"))
@@ -1084,7 +1084,7 @@ object EventOps {
       .withColumn("h", conv(substring(
         md5(col("user_id").cast("string").cast("binary")), 1, 12), 16, 10)
         .cast("long"))
-      .transform(s.persist)
+      .transform(scope.persist)
     val wSeg = Window.partitionBy(col("event_type")).orderBy(col("h"))
     val sketches = ev0.withColumn("rn", row_number().over(wSeg))
       .filter(col("rn") <= k)
@@ -1318,11 +1318,11 @@ object EventOps {
     * — the sharded prefix sum costs one extra tiny exchange and never
     * funnels it through one reducer (inclusive total = exclusive
     * prefix + the row's own new_users). */
-  def qCumulativeUsers(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qCumulativeUsers(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val first = ev(spark, sfDir)
       .groupBy(col("user_id"))
       .agg(min(expr("tus DIV 3600000000")).as("hr"))
-    val cum = SamplingOps.withGlobalCumSum(s,
+    val cum = SamplingOps.withGlobalCumSum(scope,
       first.groupBy(col("hr")).agg(count(lit(1)).as("new_users")),
       "new_users", "__before", col("hr"))
     cum
@@ -1372,21 +1372,21 @@ object EventOps {
     * [[SamplingOps.withGlobalCumSum]] (range-sharded parallel prefix
     * sum; only a shard-count relation crosses a global window),
     * exact because ltv is unique within its own histogram. */
-  def qLtvDeciles(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qLtvDeciles(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val cents = (col("value") * 100)
       .cast(org.apache.spark.sql.types.DecimalType(18, 0)).cast("long")
     val ltv = Tables.events(spark, sfDir)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), cents.as("cents"))
       .groupBy(col("user_id")).agg(sum(col("cents")).as("ltv"))
-      .transform(s.persist)
+      .transform(scope.persist)
     val totals = ltv.agg(sum(col("ltv")), count(lit(1))).head
     val total = totals.getLong(0)
     val n = totals.getLong(1)
     val q = n / 10  // base bucket size; first `rem` buckets get q+1
     val rem = n % 10
     def decOf(r: String): String = SamplingOps.ntileExpr(n, 10, r)
-    val hist = SamplingOps.withGlobalCumSum(s,
+    val hist = SamplingOps.withGlobalCumSum(scope,
       ltv.groupBy(col("ltv")).agg(count(lit(1)).as("c")),
       "c", "before", col("ltv").desc)
     hist
@@ -1506,10 +1506,10 @@ object EventOps {
         concat_ws(">", col("event_type"), col("e2"), col("e3")).as("path"))
   }
 
-  def qEventPaths(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qEventPaths(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val tri = sessionTrigrams(spark, sfDir)
       .select(col("path"))
-      .transform(s.persist)
+      .transform(scope.persist)
     val total = tri.count()
     tri.groupBy(col("path")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("path")).limit(20)

@@ -965,10 +965,10 @@ ORDER BY a_id, a_frame, b_id, b_frame""")
       .filter(col("inter") * 10 >= col("nt") + col("ni") - col("inter"))
   }
 
-  def qCrossmodalPairs(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qCrossmodalPairs(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val maxDf = 20
     val sh = DedupOps.shingles(graft.Tables.documents(spark, sfDir))
-      .transform(s.persist)
+      .transform(scope.persist)
     val rare = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf).select("shingle")
     // one kept relation serves both sides: with the stub codec the
@@ -977,7 +977,7 @@ ORDER BY a_id, a_frame, b_id, b_frame""")
     // produce identical rows (mediaTable pins media_type = image ⇔
     // doc_id % 3 = 0)
     val kept = sh.join(rare, "shingle")
-      .transform(s.persist)
+      .transform(scope.persist)
     crossmodalGated(kept)
       .select(col("text_id"), col("img_id"), col("inter"),
         col("nt"), col("ni"),
@@ -1007,11 +1007,11 @@ ORDER BY a_id, a_frame, b_id, b_frame""")
     * production miner's own plan. Ranking divides exact integers in
     * IEEE doubles (correctly-rounded in both engines, text_id
     * tiebreak). */
-  def qCrossmodalRecall(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qCrossmodalRecall(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     import org.apache.spark.sql.expressions.Window
     val k = 3
     val sh = DedupOps.shingles(graft.Tables.documents(spark, sfDir))
-      .transform(s.persist)
+      .transform(scope.persist)
     val counts = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val truth = sh.filter(col("doc_id") % 3 =!= 0).as("t")
       .join(sh.filter(col("doc_id") % 3 === 0 &&
@@ -1035,7 +1035,7 @@ ORDER BY a_id, a_frame, b_id, b_frame""")
       // query's dominant cost. The relation itself is bounded
       // (≤ RecallImgCap × k rows), so caching it is free and the
       // expensive exact side computes once per run (guide §5).
-      .transform(s.persist)
+      .transform(scope.persist)
     val rare = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= 20).select("shingle")
     val mined = crossmodalGated(sh.join(rare, "shingle"))

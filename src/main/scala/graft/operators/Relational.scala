@@ -304,7 +304,7 @@ object Relational {
     * Money in exact cents via DECIMAL(18,0) rounding on both engines
     * (the decimal→long parity rule: a raw long cast truncates in
     * Spark but rounds in DuckDB). */
-  def qSkyline(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qSkyline(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     import org.apache.spark.sql.expressions.Window
     val pts = Tables.lineitem(spark, sfDir)
       .select((col("l_extendedprice") * 100)
@@ -317,7 +317,7 @@ object Relational {
       .withColumn("__cum", min(col("qty")).over(
         Window.partitionBy(col("__shard")).orderBy(col("price_c"))
           .rowsBetween(Window.unboundedPreceding, -1)))
-      .transform(s.persist)
+      .transform(scope.persist)
     val prefix = local.groupBy(col("__shard")).agg(min(col("qty")).as("__m"))
       .withColumn("__pmin", min(col("__m")).over(
         Window.orderBy(col("__shard"))
@@ -363,10 +363,10 @@ object Relational {
     * Scale shape: one map-side-combining count per key (the only
     * corpus-sized step), then TakeOrdered for the top-10 and two
     * scalar literals — the report is 10 rows forever. */
-  def qSkewReport(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qSkewReport(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val counts = Tables.lineitem(spark, sfDir)
       .groupBy(col("l_orderkey")).agg(count(lit(1)).as("n"))
-      .transform(s.persist)
+      .transform(scope.persist)
     val g = counts.agg(sum(col("n")).as("t"), count(lit(1)).as("k"),
       max(col("n")).as("mx")).head()
     val (total, nKeys, maxN) = (g.getLong(0), g.getLong(1), g.getLong(2))

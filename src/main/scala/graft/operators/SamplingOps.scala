@@ -50,7 +50,7 @@ object SamplingOps {
     * shuffle service / migration), which re-runs the whole stage —
     * on such clusters, write the sharded relation to reliable storage
     * instead of relying on this persist. */
-  private[operators] def withGlobalRank(s: QueryScope, df: DataFrame, rankCol: String,
+  private[operators] def withGlobalRank(scope: QueryScope, df: DataFrame, rankCol: String,
       order: Column*): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val parts = df.sparkSession.conf
@@ -59,7 +59,7 @@ object SamplingOps {
       .withColumn("__shard", spark_partition_id())
       .withColumn("__lr", row_number().over(
         Window.partitionBy(col("__shard")).orderBy(order: _*)))
-      .transform(s.persist)
+      .transform(scope.persist)
     val offsets = local.groupBy(col("__shard")).agg(count(lit(1)).as("__c"))
       .withColumn("__off", coalesce(sum(col("__c")).over(
         Window.orderBy(col("__shard"))
@@ -85,7 +85,7 @@ object SamplingOps {
     * `ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING` window is
     * tie-order-dependent. Same persist + recomputation-safety
     * contract as [[withGlobalRank]]. */
-  private[operators] def withGlobalCumSum(s: QueryScope, df: DataFrame, valCol: String,
+  private[operators] def withGlobalCumSum(scope: QueryScope, df: DataFrame, valCol: String,
       outCol: String, order: Column*): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val parts = df.sparkSession.conf
@@ -95,7 +95,7 @@ object SamplingOps {
       .withColumn("__lc", coalesce(sum(col(valCol)).over(
         Window.partitionBy(col("__shard")).orderBy(order: _*)
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .transform(s.persist)
+      .transform(scope.persist)
     val offsets = local.groupBy(col("__shard"))
       .agg(sum(col(valCol)).as("__t"))
       .withColumn("__off", coalesce(sum(col("__t")).over(
@@ -220,11 +220,11 @@ object SamplingOps {
     * both join sides slice it; without it the ~40× explode runs twice).
     * Bucket is a pure function of doc_id, re-derived after the explode
     * instead of threaded through it. */
-  private def deconRelations(s: QueryScope, spark: SparkSession, sfDir: String)
+  private def deconRelations(scope: QueryScope, spark: SparkSession, sfDir: String)
       : (DataFrame, DataFrame) = {
     val sh = DedupOps.shingles(Tables.documents(spark, sfDir))
       .withColumn("bucket", bucket100("doc_id"))
-      .transform(s.persist)
+      .transform(scope.persist)
     val train = sh.filter(col("bucket") < 80).select("doc_id", "shingle")
     val bench = sh.filter(col("bucket") >= 90)
       .select(col("doc_id").as("bench_id"), col("shingle"))
@@ -242,8 +242,8 @@ object SamplingOps {
         countDistinct(col("bench_id")).as("n_bench_docs"))
       .withColumn("contaminated", col("n_shingle_hits") >= DeconMinHits)
 
-  def qDecontaminate(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
-    val (train, bench) = deconRelations(s, spark, sfDir)
+  def qDecontaminate(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
+    val (train, bench) = deconRelations(scope, spark, sfDir)
     contaminationReport(train, bench)
   }
 
@@ -499,9 +499,9 @@ object SamplingOps {
     * shuffling the corpus and shuffling a rounding error. xxhash64 on
     * BOTH the insert and probe sides — the sketch stores hashes, so
     * the two sides must agree. */
-  def qDecontaminateBloom(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qDecontaminateBloom(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     import graft.functions.VectorFunctions.{bloomFilterAgg, bloomMightContain}
-    val (train, bench) = deconRelations(s, spark, sfDir)
+    val (train, bench) = deconRelations(scope, spark, sfDir)
     // one-row binary sketch of the bench shingle set, sized for ~1M
     // distinct shingles (the fixture holds far fewer; at production
     // scale size from table stats — oversizing only costs bits)
@@ -785,7 +785,7 @@ object SamplingOps {
     * flag is a fingerprint-keyed window (same shuffle as exact
     * dedup); the ntile runs over the doc relation and the report
     * aggregates to 10 rows. */
-  def qQualityDupProfile(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qQualityDupProfile(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     import org.apache.spark.sql.expressions.Window
     val toks = split(col("text"), " ")
     val nTok = size(toks)
@@ -804,7 +804,7 @@ object SamplingOps {
     // after one parallel range exchange. The oracle stays the naive
     // global ntile, so the hash match proves the decomposition exact.
     val n = Tables.documents(spark, sfDir).count()
-    val ranked = withGlobalRank(s, scored, "r",
+    val ranked = withGlobalRank(scope, scored, "r",
       col("quality").desc, col("doc_id"))
     ranked
       .withColumn("decile", expr(ntileExpr(n, 10, "r")).cast("int"))
@@ -875,9 +875,9 @@ object SamplingOps {
           .cast("binary")), 1, 6), 16, 10).cast("long") % 1000000L).as("h"))
   }
 
-  def qDomainFilter(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qDomainFilter(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val docs = domainDocs(spark, sfDir)
-      .transform(s.persist)
+      .transform(scope.persist)
     val hostStats = docs.groupBy(col("host"))
       .agg(count(lit(1)).as("host_docs"), sum(col("q_level")).as("host_q_sum"))
     val g = docs.agg(count(lit(1)), sum(col("q_level")),
@@ -989,8 +989,8 @@ object SamplingOps {
     * The oracle stays the naive partitioned ntile, so the hash match
     * proves the decomposition exact. Ties break on doc_id so bucket
     * boundaries are replay-stable. */
-  def qPerplexityBuckets(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
-    val ranked = withGlobalRank(s,
+  def qPerplexityBuckets(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
+    val ranked = withGlobalRank(scope,
       TextOps.lmScoredDocs(spark, sfDir), "grk",
       col("lang"), col("avg_logp_r").desc, col("doc_id"))
     val langSizes = ranked.groupBy(col("lang"))
@@ -1046,8 +1046,8 @@ object SamplingOps {
     * buckets by doc_id; a threshold necessarily maps a boundary-tied
     * score to the better bucket, so agreement off the two boundary
     * values is exact and ON them is by convention. */
-  private[graft] def perplexityCutoffs(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
-    val ranked = withGlobalRank(s,
+  private[graft] def perplexityCutoffs(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
+    val ranked = withGlobalRank(scope,
       TextOps.lmScoredDocs(spark, sfDir), "grk",
       col("lang"), col("avg_logp_r").desc, col("doc_id"))
     val langSizes = ranked.groupBy(col("lang"))

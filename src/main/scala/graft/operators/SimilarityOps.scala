@@ -327,9 +327,9 @@ object SimilarityOps {
     * shuffles beyond the top-1 reduction; the driver holds only k
     * small vectors. The maximin radius is also the live convergence
     * telemetry (it only shrinks). */
-  def qSimKcenterCoreset(spark: SparkSession, sfDir: String): DataFrame = QueryScope.eager(spark) { s =>
+  def qSimKcenterCoreset(spark: SparkSession, sfDir: String): DataFrame = QueryScope.eager(spark) { scope =>
     import spark.implicits._
-    val q = s.persist(quantized(spark, sfDir))
+    val q = scope.persist(quantized(spark, sfDir))
     def vecOf(id: Long): Seq[Long] =
       q.filter(col("vec_id") === id).head.getSeq[Long](1)
     def d2(cv: Seq[Long]): Column =
@@ -470,12 +470,12 @@ object SimilarityOps {
     * Scale shape: the assignment is the usual broadcast-centroid
     * argmax (corpus never shuffles); the report aggregates to K rows
     * — index-metadata-sized, free at any corpus size. */
-  def qSimIvfCellStats(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qSimIvfCellStats(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     import org.apache.spark.sql.expressions.Window
     val e = DedupOps.normedVectors(Tables.embeddings(spark, sfDir))
     val cells = cellAssignments(e, centroids(e), nprobe = 1)
       .groupBy(col("cid")).agg(count(lit(1)).as("n"))
-      .transform(s.persist)
+      .transform(scope.persist)
     val total = cells.agg(sum(col("n"))).head.getLong(0)
     cells
       .withColumn("share_ppm", expr(s"n * 1000000 DIV $total"))
@@ -1456,7 +1456,7 @@ object SimilarityOps {
     * shared verbatim by the self-contained miner ([[qSimPagerank]])
     * and the stored-edges variant ([[qSimPagerankStored]]). */
   private def pagerankOn(spark: SparkSession, sfDir: String,
-      scored: DataFrame): DataFrame = QueryScope(spark) { s =>
+      scored: DataFrame): DataFrame = QueryScope(spark) { scope =>
     val S0 = 1000000000000L
     val iters = 3
     val e = DedupOps.normedVectors(Tables.embeddings(spark, sfDir))
@@ -1475,7 +1475,7 @@ object SimilarityOps {
         struct(col("a_id").as("src"), col("b_id").as("dst")),
         struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .transform(s.persist)
+      .transform(scope.persist)
     val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val verts = e.select(col("vec_id"))
     def idiv(a: Column, b: Column): Column = (a / b).cast("long")
@@ -1588,12 +1588,12 @@ object SimilarityOps {
     * ([[qSimTriangles]]) and the stored-edges variant
     * ([[qSimTrianglesStored]]). */
   private def trianglesOn(spark: SparkSession, sfDir: String,
-      scored: DataFrame): DataFrame = QueryScope(spark) { s =>
+      scored: DataFrame): DataFrame = QueryScope(spark) { scope =>
     val e = DedupOps.normedVectors(Tables.embeddings(spark, sfDir))
     val m = scored
       .filter(col("cosine") >= 0.4)
       .select(col("a_id"), col("b_id"))
-      .transform(s.persist)
+      .transform(scope.persist)
     val deg = m.select(col("a_id").as("id")).union(m.select(col("b_id").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("deg"))
     val lowFirst = col("da") < col("db") ||
@@ -1604,7 +1604,7 @@ object SimilarityOps {
       .select(
         when(lowFirst, col("a_id")).otherwise(col("b_id")).as("src"),
         when(lowFirst, col("b_id")).otherwise(col("a_id")).as("dst"))
-      .transform(s.persist)
+      .transform(scope.persist)
     val wedges = oriented.as("x").join(oriented.as("y"),
         col("x.src") === col("y.src") && col("x.dst") < col("y.dst"))
       .select(col("x.src").as("p"), col("x.dst").as("q"), col("y.dst").as("r"))
@@ -2459,7 +2459,7 @@ object SimilarityOps {
     * converged model that is a vanishing slice of the corpus — and
     * the per-dim aggregation shuffles 64 keys with map-side combine.
     * One corpus scan, one tiny shuffle, no joins. */
-  def qSimSvmStep(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qSimSvmStep(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val nd = 64
     val wLit = typedlit((0 until nd).map(d => (d * 2654435761L) % 2001L - 1000L))
     val margins = Tables.embeddings(spark, sfDir)
@@ -2471,7 +2471,7 @@ object SimilarityOps {
         zip_with(col("q"), wLit, (a, b) => a * b), lit(0L), (acc, x) => acc + x))
       .withColumn("viol", col("y") * col("z") < lit(1000000000L))
     val viol = margins.filter(col("viol"))
-      .transform(s.persist)
+      .transform(scope.persist)
     val nViol = viol.count()
     val lossSum = viol.agg(sum(lit(1000000000L) - col("y") * col("z")))
       .head.getLong(0)
@@ -2531,14 +2531,14 @@ object SimilarityOps {
     * (groupBy + a window partitioned by the high-cardinality vertex
     * id) — the textbook per-iteration shape shared with PageRank;
     * no broadcast of anything corpus-sized, no all-pairs. */
-  def qSimLabelPropagation(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qSimLabelPropagation(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     import org.apache.spark.sql.expressions.Window
     val e = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("label"))
     val matched = annEdgesStored(spark, sfDir)
       .filter(col("cosine") >= 0.4).select("a_id", "b_id")
     val edges = matched.select(col("a_id").as("src"), col("b_id").as("dst"))
       .union(matched.select(col("b_id").as("src"), col("a_id").as("dst")))
-      .transform(s.persist)
+      .transform(scope.persist)
     val seeds = e.filter(col("vec_id") % 5 === 0)
     var labels = seeds
     (1 to 2).foreach { _ =>
@@ -2604,7 +2604,7 @@ object SimilarityOps {
     * is the ordinary broadcast-queries pass, fixture-affordable and
     * at scale replaced by a sampled audit (the LSH-audit stratum
     * discipline). */
-  def qSimIvfRecallCurve(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qSimIvfRecallCurve(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     import org.apache.spark.sql.expressions.Window
     val e = DedupOps.normedVectors(Tables.embeddings(spark, sfDir))
     val cent = centroids(e)
@@ -2626,7 +2626,7 @@ object SimilarityOps {
       .withColumn("cosine",
         DedupOps.dot(col("qv"), col("nv")) / (col("qn") * col("nn")))
       .select(col("p"), col("q_id"), col("n_id"), col("cosine"))
-      .transform(s.persist)
+      .transform(scope.persist)
     val wr = Window.partitionBy(col("p"), col("q_id"))
       .orderBy(col("cosine").desc, col("n_id"))
     val ivf = scored.withColumn("rank", row_number().over(wr))

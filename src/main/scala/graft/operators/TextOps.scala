@@ -606,7 +606,7 @@ object TextOps {
     * Monotonicity in tf and 1/df is all a ranker needs. Shape: one
     * gram shuffle for tf (map-side combine), a vocabulary-keyed join
     * for df, a broadcast scalar for N, one window top-k per doc. */
-  def qTfidf(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qTfidf(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, sfDir)
     // persisted: tf feeds both the scored join and the df aggregation —
@@ -614,7 +614,7 @@ object TextOps {
     // query's scope like the dedup shingle caches
     val tf = docs.select(col("doc_id"), explode(toks).as("term"))
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-      .transform(s.persist)
+      .transform(scope.persist)
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n"))
     val w = Window.partitionBy(col("doc_id"))
@@ -724,13 +724,13 @@ object TextOps {
     * carries (nb scoring, entropy): with O(1) addends of O(1)
     * magnitude the order error is ~1e-16 against a 1e-6 rounding
     * grid, and the hash gate re-verifies the bet every round. */
-  def qBm25(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qBm25(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val docs = Tables.documents(spark, sfDir)
     // persisted: the ~8-byte-per-doc length relation feeds both the
     // (N, avgdl) stats aggregate and the scored join — without it the
     // corpus is re-tokenized for each (r12 review)
     val dl = docs.select(col("doc_id"), size(toks).as("dl"))
-      .transform(s.persist)
+      .transform(scope.persist)
     val stats = broadcast(dl.agg(
       count(lit(1)).cast(DoubleType).as("n"),
       (sum(col("dl")).cast(DoubleType) / count(lit(1))).as("avgdl")))
@@ -740,7 +740,7 @@ object TextOps {
     val tf = docs.select(col("doc_id"), explode(toks).as("tk"))
       .filter(col("tk").isin(Bm25Terms: _*))
       .groupBy(col("doc_id"), col("tk")).agg(count(lit(1)).as("tf"))
-      .transform(s.persist)
+      .transform(scope.persist)
     val df = broadcast(tf.groupBy(col("tk"))
       .agg(count(lit(1)).cast(DoubleType).as("df")))
     bm25Ranked(tf.join(df, "tk").join(dl, "doc_id").crossJoin(stats))
@@ -1059,7 +1059,7 @@ object TextOps {
     * as literals (the stored-model discipline — no 1-row cross).
     * Float parity: addends and K are shared strings; the ln-sum
     * and round-6 conventions as every scorer here. */
-  def qQlDirichlet(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qQlDirichlet(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     import org.apache.spark.sql.expressions.Window
     val (_, _, sumdl) = bm25Stored(spark, sfDir)
     val docs = Tables.documents(spark, sfDir)
@@ -1069,7 +1069,7 @@ object TextOps {
     val tf = docs.select(col("doc_id"), explode(toks).as("tk"))
       .filter(col("tk").isin(Bm25Terms: _*))
       .groupBy(col("doc_id"), col("tk")).agg(count(lit(1)).as("tf"))
-      .transform(s.persist)
+      .transform(scope.persist)
     val ctf: Map[String, Long] = tf.groupBy(col("tk"))
       .agg(sum(col("tf")).as("ctf"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -1272,7 +1272,7 @@ object TextOps {
 
   private def rankEvalOn(spark: SparkSession, docs: DataFrame,
       modelOpt: Option[DataFrame], statsOpt: Option[(Long, Long)],
-      fullPanel: Boolean): DataFrame = QueryScope(spark) { s =>
+      fullPanel: Boolean): DataFrame = QueryScope(spark) { scope =>
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     // THE one corpus explode: per-(doc, term) counts, aggregated
@@ -1286,7 +1286,7 @@ object TextOps {
         explode(toks).as("tk"))
       .groupBy(col("doc_id"), col("tk"))
       .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-      .transform(s.persist)
+      .transform(scope.persist)
     // model (tk, df): the full query serves it from the bm25_model
     // artifact; the stratum twin derives WITHIN-STRATUM df as a
     // vocabulary-sized rollup of the SAME cached explode (dtf is one
@@ -1299,7 +1299,7 @@ object TextOps {
     // vocabulary-sized result instead. The full eval's stored model is
     // a plain parquet artifact scan and needs no cache.
     val model = modelOpt.getOrElse(
-      s.persist(dtf.groupBy(col("tk")).agg(count(lit(1)).as("df"))))
+      scope.persist(dtf.groupBy(col("tk")).agg(count(lit(1)).as("df"))))
     // Every model-sized relation below is a BOUNDED DRIVER FOLD (the
     // qBm25Rm3 expansion-fold precedent, ≤130 rows each): folded as
     // literal relations, the serving plan carries ZERO broadcast
@@ -1329,7 +1329,7 @@ object TextOps {
     val post = dtf.join(broadcast(qrelRel), "tk")
       .select(col("q_id"), col("doc_id"), col("tk"), col("df"),
         col("tf"), col("dl"))
-      .transform(s.persist)
+      .transform(scope.persist)
     // fold job 1 (materializes dtf + post) — r16 optimization round:
     // the three MUTUALLY INDEPENDENT bounded folds travel in ONE
     // tagged-union collect instead of three jobs (each extra job cost
@@ -1433,7 +1433,7 @@ object TextOps {
         count(lit(1)).as("sc"), sum(col("tf")).as("tfsum"))
       .withColumn("score_r", round(col("score"), 6))
       .withColumn("rk", row_number().over(wS))
-      .transform(s.persist)
+      .transform(scope.persist)
     // graded truth + its ideal DCG — gain = #shared fingerprint terms,
     // ties broken by TOTAL shared term frequency before doc_id: on a
     // template-vocabulary corpus (this fixture: 31 terms) hundreds of
@@ -1526,7 +1526,7 @@ object TextOps {
     // risk. The tiny (<=30x10-row) union persists for its two
     // consumers (fusion grouping, metric join).
     val base = servedBm25.unionByName(servedQl).unionByName(servedRm3)
-      .transform(s.persist)
+      .transform(scope.persist)
     val wF = Window.partitionBy(col("q_id"))
       .orderBy(col("rrf").desc, col("doc_id"))
     val servedRrf = base.groupBy(col("q_id"), col("doc_id"))
@@ -1856,11 +1856,11 @@ object TextOps {
     * stored-model family ([[idfStored]]). */
   private[graft] def lmStored(spark: SparkSession, sfDir: String): (DataFrame, Long) = {
     val (dir, meta) = graft.Artifacts.getOrBuildMeta(spark, sfDir, "unigram_lm") { d =>
-      QueryScope.eager(spark) { s =>
+      QueryScope.eager(spark) { scope =>
         val tf = Tables.documents(spark, sfDir)
           .select(explode(split(col("text"), " ")).as("tk"))
           .groupBy(col("tk")).agg(count(lit(1)).as("c"))
-          .transform(s.persist)
+          .transform(scope.persist)
         tf.write.parquet(d)
         tf.agg(sum(col("c"))).head.getLong(0).toString
       }
@@ -2024,11 +2024,11 @@ object TextOps {
     val c2 = lmRefBigrams(spark, sfDir)
     val (uniDir, meta) = graft.Artifacts.getOrBuildMeta(
         spark, sfDir, "unigram_lm_ref") { d =>
-      QueryScope.eager(spark) { s =>
+      QueryScope.eager(spark) { scope =>
         val tf = refDocs(spark, sfDir)
           .select(explode(split(col("text"), " ")).as("tk"))
           .groupBy(col("tk")).agg(count(lit(1)).as("cu"))
-          .transform(s.persist)
+          .transform(scope.persist)
         tf.write.parquet(d)
         tf.agg(sum(col("cu"))).head.getLong(0).toString
       }
@@ -2543,7 +2543,7 @@ object TextOps {
     * the ANN sizing count). Support floor c_xy ≥ 3 keeps the output
     * noise-free and the result set tiny. The pair-count cache is
     * released by the query's scope — no caller clearCache contract. */
-  def qCollocations(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qCollocations(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val pairs = Tables.documents(spark, sfDir)
       .select(toks.as("ts"))
       .filter(size(col("ts")) >= 2)
@@ -2552,7 +2552,7 @@ object TextOps {
           element_at(col("ts"), i + 1).as("y")))).as("p"))
       .select(col("p.x"), col("p.y"))
     val pc = pairs.groupBy(col("x"), col("y")).agg(count(lit(1)).as("c_xy"))
-      .transform(s.persist)
+      .transform(scope.persist)
     val nPairs = pc.agg(sum(col("c_xy"))).head.getLong(0)
     val left = pc.groupBy(col("x")).agg(sum(col("c_xy")).as("cl_x"))
     val right = pc.groupBy(col("y")).agg(sum(col("c_xy")).as("cr_y"))
@@ -2747,12 +2747,12 @@ object TextOps {
     * TakeOrdered over the word re-aggregation, explicitly broadcast
     * back (K rows); the per-lang rollup then runs entirely on
     * vocab-sized inputs. No corpus-sized join anywhere. */
-  def qOovRate(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qOovRate(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val k = 100
     val lw = Tables.documents(spark, sfDir)
       .select(col("lang"), explode(split(col("text"), " ")).as("word"))
       .groupBy(col("lang"), col("word")).agg(count(lit(1)).as("c"))
-      .transform(s.persist)
+      .transform(scope.persist)
     val vocab = lw.groupBy(col("word")).agg(sum(col("c")).as("wf"))
       .orderBy(col("wf").desc, col("word")).limit(k)
       .select(col("word"), lit(1).as("in_v"))
@@ -2854,11 +2854,11 @@ object TextOps {
       : (DataFrame, Array[Long]) = {
     val (dir, meta) = graft.Artifacts.getOrBuildMeta(
         spark, sfDir, "nb_quality_model") { d =>
-      QueryScope.eager(spark) { s =>
+      QueryScope.eager(spark) { scope =>
         val model = docSourceTf(spark, sfDir).groupBy(col("tk")).agg(
           sum(when(curatedPred, col("cnt")).otherwise(lit(0L))).as("cp"),
           sum(when(curatedPred, lit(0L)).otherwise(col("cnt"))).as("cq"))
-          .transform(s.persist)
+          .transform(scope.persist)
         model.write.parquet(d)
         val sums = model.agg(sum(col("cp")), sum(col("cq")), count(lit(1))).head
         val dcr = Tables.documents(spark, sfDir).agg(
@@ -2911,12 +2911,12 @@ object TextOps {
     * the class that primitive exists for). All integer arithmetic —
     * avg rank enters doubled (2·before + cnt + 1), so the single
     * division at the end is the only float op. */
-  def qNbAuc(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qNbAuc(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val scored = nbScoredDocs(spark, sfDir)
       .select(col("nb_score_r"), curatedPred.cast("long").as("pos"))
     val h = scored.groupBy(col("nb_score_r"))
       .agg(count(lit(1)).as("cnt"), sum(col("pos")).as("npos"))
-    val cum = SamplingOps.withGlobalCumSum(s,
+    val cum = SamplingOps.withGlobalCumSum(scope,
       h, "cnt", "__before", col("nb_score_r"))
     cum.agg(
         sum(col("npos")).as("np"),
@@ -3041,12 +3041,12 @@ FROM r ORDER BY doc_id""")
     val trainPred = !(curatedPred && calFold)
     val (dir, meta) = graft.Artifacts.getOrBuildMeta(
         spark, sfDir, "nb_model_cal") { d =>
-      QueryScope.eager(spark) { s =>
+      QueryScope.eager(spark) { scope =>
         val model = docSourceTf(spark, sfDir).filter(trainPred)
           .groupBy(col("tk")).agg(
             sum(when(curatedPred, col("cnt")).otherwise(lit(0L))).as("cp"),
             sum(when(curatedPred, lit(0L)).otherwise(col("cnt"))).as("cq"))
-          .transform(s.persist)
+          .transform(scope.persist)
         model.write.parquet(d)
         val sums = model.agg(sum(col("cp")), sum(col("cq")), count(lit(1))).head
         val dcr = Tables.documents(spark, sfDir).filter(trainPred).agg(
@@ -3127,13 +3127,13 @@ FROM r ORDER BY doc_id""")
     * rides the STORED fold-excluded model (artifact scan + meta
     * literals); the 1-row (n_cal, thr) broadcasts are the documented
     * `allowNested` category. */
-  def qNbConformal(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { s =>
+  def qNbConformal(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val scored = nbCalScoredDocs(spark, sfDir)
-      .transform(s.persist)
+      .transform(scope.persist)
     val cal = scored.filter(curatedPred && calFold).select(col("nb_score_r"))
     val nc = cal.agg(count(lit(1)).as("n_cal"))
     val hist = cal.groupBy(col("nb_score_r")).agg(count(lit(1)).as("cnt"))
-    val cum = SamplingOps.withGlobalCumSum(s,
+    val cum = SamplingOps.withGlobalCumSum(scope,
       hist, "cnt", "cum_excl", col("nb_score_r"))
     val thr = cum.crossJoin(broadcast(nc))
       .filter(col("cum_excl") + col("cnt") >= expr("(n_cal + 1) DIV 5"))
@@ -3372,12 +3372,12 @@ FROM r ORDER BY doc_id""")
       : (DataFrame, Long, Long) = {
     val (dir, meta) = graft.Artifacts.getOrBuildMeta(
         spark, sfDir, "unigram_lm_curated") { d =>
-      QueryScope.eager(spark) { s =>
+      QueryScope.eager(spark) { scope =>
         val tf = Tables.documents(spark, sfDir)
           .filter(curatedPred)
           .select(explode(split(col("text"), " ")).as("tk"))
           .groupBy(col("tk")).agg(count(lit(1)).as("ct"))
-          .transform(s.persist)
+          .transform(scope.persist)
         tf.write.parquet(d)
         val n = tf.agg(sum(col("ct"))).head.getLong(0)
         val v = lmStored(spark, sfDir)._1.count()

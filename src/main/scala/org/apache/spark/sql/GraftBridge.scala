@@ -14,21 +14,27 @@ object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** `df`'s rows computed now and kept in a persisted RDD, as a relation
-    * over that RDD: what `localCheckpoint(eager = true)` builds, except
-    * that the RDD keeps its lineage. Runs as one SQL execution of `df`,
-    * as the checkpoint does, so query listeners see it as an action over
-    * `df`. Returns the relation and the RDD; once the RDD is
-    * unpersisted, a later action recomputes its blocks instead of
-    * failing on a missing checkpoint block. */
-  def materialize(df: DataFrame, level: StorageLevel): (DataFrame, RDD[_]) = {
+  /** `df`'s rows kept in a persisted RDD, as a relation over that RDD:
+    * what `localCheckpoint` builds, except that the RDD keeps its
+    * lineage. With `eager` the rows are computed now, as one SQL
+    * execution of `df` (as the checkpoint does, so query listeners see
+    * it as an action over `df`); otherwise the first action over the
+    * relation computes and keeps them. Returns the relation and the
+    * RDD; once the RDD is unpersisted, a later action recomputes its
+    * blocks instead of failing on a missing checkpoint block. */
+  def materialize(df: DataFrame, level: StorageLevel,
+      eager: Boolean): (DataFrame, RDD[_]) = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     val qe = ds.queryExecution
-    SQLExecution.withNewExecutionId(qe, Some("materialize")) {
-      val rows = qe.executedPlan.execute().map(_.copy()).persist(level)
-      rows.count()
-      (classic.Dataset.ofRows(ds.sparkSession,
-        LogicalRDD.fromDataset(rows, ds, isStreaming = false)), rows)
-    }
+    def rows = qe.executedPlan.execute().map(_.copy()).persist(level)
+    val kept =
+      if (!eager) rows
+      else SQLExecution.withNewExecutionId(qe, Some("materialize")) {
+        val r = rows
+        r.count()
+        r
+      }
+    (classic.Dataset.ofRows(ds.sparkSession,
+      LogicalRDD.fromDataset(kept, ds, isStreaming = false)), kept)
   }
 }

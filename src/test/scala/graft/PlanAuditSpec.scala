@@ -936,15 +936,19 @@ class PlanAuditSpec extends SparkSpec {
       "live miner input no longer shingles — update this pin")
     val storedC = graft.operators.DedupOps.qDedupClustersStored(spark, sf)
     val storedR = graft.operators.DedupOps.qDedupRepresentativesStored(spark, sf)
-    // row order is unspecified (members of one cluster arrive in any
-    // order), so compare the rows as sorted sequences
+    // None of these queries has an ORDER BY, so row order is
+    // unspecified (members of one cluster arrive in any order) and the
+    // rows compare as sorted sequences. The ordered comparison this
+    // replaced failed on row order alone — same rows, two members of
+    // one cluster swapped — already before QueryScope existed, when
+    // this suite ran by itself.
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.sortBy(_.toString)
     assert(rows(storedC) === rows(graft.operators.DedupOps.qDedupClusters(spark, sf)),
       "stored clusters diverged from self-contained")
     assert(rows(storedR) === rows(graft.operators.DedupOps.qDedupRepresentatives(spark, sf)),
       "stored representatives diverged from self-contained")
-    assert(graft.operators.DedupOps.qDedupClustersStarsStored(spark, sf).collect().toSeq ===
-      graft.operators.DedupOps.qDedupClustersStars(spark, sf).collect().toSeq,
+    assert(rows(graft.operators.DedupOps.qDedupClustersStarsStored(spark, sf)) ===
+      rows(graft.operators.DedupOps.qDedupClustersStars(spark, sf)),
       "stored star-clusters diverged from self-contained")
     spark.catalog.clearCache()
   }

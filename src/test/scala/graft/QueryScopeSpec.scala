@@ -32,6 +32,41 @@ class QueryScopeSpec extends SparkSpec with Eventually {
     assert(persistentRdds -- before === Set.empty[Int])
   }
 
+  test("component labels survive a second action after their scope released") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (6L, 5L)).toDF("a_id", "b_id")
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 5L, 6L -> 5L)
+    def labels(df: DataFrame) = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    for (cc <- Seq[DataFrame => DataFrame](DedupOps.connectedComponents(_),
+        DedupOps.connectedComponentsStars(_))) {
+      val before = persistentRdds
+      val result = cc(pairs)
+      assert(labels(result) === want)
+      eventually(timeout(Span(30, Seconds)))(assert(persistentRdds -- before === Set.empty[Int]))
+      // the rounds' rows are gone; their lineage recomputes them
+      assert(labels(result) === want)
+    }
+  }
+
+  test("a lazy materialization is computed and kept by its first action") {
+    val before = persistentRdds
+    var rel: DataFrame = null
+    val result = QueryScope(spark) { s =>
+      rel = s.materialize(fresh().filter(col("id") < 10), eager = false)
+      rel.select((col("id") * 2).as("x"))
+    }
+    def cachedPartitions = spark.sparkContext.getRDDStorageInfo
+      .filterNot(i => before(i.id)).map(_.numCachedPartitions).sum
+    assert((persistentRdds -- before).size === 1)
+    assert(cachedPartitions === 0)
+    // an action over the relation itself computes and keeps its rows
+    // but is no action over the result, so the scope stays pending
+    assert(rel.count() === 10)
+    assert(cachedPartitions === rel.rdd.getNumPartitions)
+    assert(result.collect().map(_.getLong(0)).sorted.toSeq === (0L until 20L by 2L))
+    eventually(timeout(Span(30, Seconds)))(assert(persistentRdds -- before === Set.empty[Int]))
+    assert(result.count() === 10)
+  }
+
   test("only an action over the result releases a scope") {
     var kept: DataFrame = null
     val scopeId = QueryScope.nextId
@@ -61,6 +96,21 @@ class QueryScopeSpec extends SparkSpec with Eventually {
     }
     // released, not broken: a second action recomputes
     assert(result.count() === 50)
+  }
+
+  test("a scope leaves alone a cache entry it did not make") {
+    val mine = fresh().persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val scopeId = QueryScope.nextId
+      val result = QueryScope(spark) { s =>
+        val kept = s.persist(mine)   // as a caller hands its cached relation to a helper
+        s.unpersist(kept)
+        kept.filter(col("id") < 5)
+      }
+      assert(result.count() === 5)
+      eventually(timeout(Span(30, Seconds)))(assert(!QueryScope.pendingIds.contains(scopeId)))
+      assert(mine.storageLevel === StorageLevel.MEMORY_AND_DISK)
+    } finally mine.unpersist()
   }
 
   test("eager releases when its block returns and when it throws") {
