@@ -39,12 +39,13 @@ final class QueryScope private (spark: SparkSession) {
 
   /** Persists `df` at `MEMORY_AND_DISK` — the storage level every
     * builder intermediate uses — and records it for release. Equal
-    * plans share one cache entry, so a `df` that is already cached
-    * (a caller's persist, or an enclosing scope's) stays with whoever
-    * cached it: this scope never releases an entry it did not make. */
+    * plans share one cache entry. An entry that scopes made counts its
+    * holding scopes and is unpersisted when the last of them releases
+    * it, so a scope released early (past [[QueryScope.MaxPending]])
+    * leaves the entry to the others. An entry cached outside any scope
+    * (a caller's persist) stays with whoever cached it. */
   def persist(df: DataFrame): DataFrame =
-    if (df.storageLevel != StorageLevel.NONE) df
-    else hold(df.persist(StorageLevel.MEMORY_AND_DISK), df.unpersist(false))
+    QueryScope.acquire(df).fold(df)(entry => hold(df, QueryScope.letGo(entry, df)))
 
   /** Computes `df` now and records the rows for release: the relation
     * returned reads them without re-running `df`'s plan. Unlike a local
@@ -63,8 +64,8 @@ final class QueryScope private (spark: SparkSession) {
   /** Releases one recorded relation before the scope ends — for a
     * builder loop that has fully used it (the previous round once the
     * next is materialized), so peak storage holds one round, not all.
-    * A relation this scope did not record (one [[persist]] found
-    * already cached) is not its to release and is left alone. */
+    * A relation this scope did not record (one [[persist]] found cached
+    * outside any scope) is not its to release and is left alone. */
   def unpersist(df: DataFrame): Unit = {
     val release = synchronized {
       val i = held.indexWhere(_._1 eq df)
@@ -98,6 +99,34 @@ object QueryScope {
     * (the same recompute-not-correctness trade as an early release). */
   private[graft] val MaxPending = 64
   private val pending = new ConcurrentLinkedQueue[(Long, () => Unit)]()
+
+  /** Holding scopes per cache entry that a scope made, keyed by the
+    * entry's cached relation (see `GraftBridge.cacheEntry`). */
+  private val holders = new java.util.IdentityHashMap[AnyRef, Integer]()
+
+  /** Adds a holder to the entry of `df`'s plan, caching the plan if no
+    * entry serves it; None if the entry was cached outside any scope. */
+  private def acquire(df: DataFrame): Option[AnyRef] = holders.synchronized {
+    GraftBridge.cacheEntry(df) match {
+      case Some(entry) if holders.containsKey(entry) =>
+        holders.put(entry, holders.get(entry) + 1); Some(entry)
+      case Some(_) => None
+      case None =>
+        val entry = GraftBridge.cacheEntry(df.persist(StorageLevel.MEMORY_AND_DISK)).get
+        holders.put(entry, 1); Some(entry)
+    }
+  }
+
+  /** Drops one holder of `entry`; the last one unpersists it through
+    * `df`, whose plan the entry serves, unless the entry was replaced. */
+  private def letGo(entry: AnyRef, df: DataFrame): Unit = holders.synchronized {
+    val left = holders.get(entry) - 1
+    if (left > 0) holders.put(entry, left)
+    else {
+      holders.remove(entry)
+      if (GraftBridge.cacheEntry(df).exists(_ eq entry)) df.unpersist(false)
+    }
+  }
 
   /** Ids of scopes whose result has not run an action yet. */
   private[graft] def pendingIds: Seq[Long] = {

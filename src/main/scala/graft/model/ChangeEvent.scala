@@ -33,15 +33,18 @@ object ChangeEvent {
   val Delete = "delete"
   val ValidActions: Seq[String] = Seq(Insert, Update, Delete)
 
-  /** Envelope schema for from_json / streaming sources (README.md:12-25
-    * wire shape, lower_snake field names on the Spark side). */
+  /** Envelope schema of the change-event source (README.md:12-25 wire
+    * shape, lower_snake field names on the Spark side). Every field is
+    * nullable: the source reads a missing or unparseable value as null
+    * (`sources.CdcFileSource`), and a non-nullable field would let the
+    * optimizer fold `CdcPipeline.observed`'s null checks to false. */
   val schema: StructType = StructType(Seq(
-    StructField("host", StringType, nullable = false),
-    StructField("database", StringType, nullable = false),
-    StructField("table", StringType, nullable = false),
-    StructField("action", StringType, nullable = false),
-    StructField("walPosition", LongType, nullable = false),
-    StructField("timestamp", TimestampType, nullable = false),
-    StructField("uuid", StringType, nullable = false),
-    StructField("columns", MapType(StringType, StringType), nullable = true)))
+    StructField("host", StringType),
+    StructField("database", StringType),
+    StructField("table", StringType),
+    StructField("action", StringType),
+    StructField("walPosition", LongType),
+    StructField("timestamp", TimestampType),
+    StructField("uuid", StringType),
+    StructField("columns", MapType(StringType, StringType))))
 }

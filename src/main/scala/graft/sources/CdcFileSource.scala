@@ -1,12 +1,16 @@
 package graft.sources
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.model.ChangeEvent
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, DateTimeUtils}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles,
+  ReportsSourceMetrics, SupportsAdmissionControl}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -14,34 +18,52 @@ import org.apache.spark.unsafe.types.UTF8String
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
+import scala.collection.immutable.SortedMap
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
-/** S1/S2 as a NATIVE DataSource-V2 micro-batch source — the "go
-  * further" path SURVEY §2.1 row S1 reserves for a custom
-  * `MicroBatchStream`. The reference's PG replication loop
-  * (source/postgres/postgres.go:242-296) is: track a durable WAL
-  * position, fetch everything past it, hand batches downstream, and
-  * persist the position only after sinks ACK (mux/mux.go:193-198,
-  * persistWAL postgres.go:358-377). This source maps that protocol
-  * onto DSv2 directly, with a directory of immutable, monotonically
-  * named JSON segment files standing in for the WAL (no PG wire exists
-  * in this sandbox):
+/** The change-event source: a directory of numbered JSON segment files
+  * read in segment-number order, as a DataSource-V2 micro-batch
+  * stream. It maps the reference's PG replication loop
+  * (source/postgres/postgres.go:242-296) onto DSv2: track a durable WAL
+  * position, fetch the WAL past it, hand batches downstream, and persist
+  * the position only after the sinks ACK (mux/mux.go:193-198,
+  * persistWAL postgres.go:358-377). The segment files stand in for the
+  * WAL (no PG wire exists in this sandbox).
   *
-  *   - offset       = count of segment files consumed, ≡ WAL position,
-  *                    plus the boundary segment NAME so replays detect a
-  *                    mutated listing instead of silently remapping
-  *   - latestOffset = directory listing past the last offset, capped by
-  *                    `maxFilesPerTrigger` via [[SupportsAdmissionControl]]
-  *                    — the mux batchSize count-trigger (mux/mux.go:57)
-  *   - commit(end)  = the post-ACK WAL persist hook: Spark calls it
-  *                    only after the epoch's sinks committed; we mirror
-  *                    the reference by recording it (observable in
-  *                    tests; the checkpoint is the real durable store)
+  *   - segment      = a `.json` file whose name ends in its number, the
+  *                    run of decimal digits before `.json`
+  *                    (`seg-000042.json` is 42). Names starting with `.`
+  *                    or `_` are skipped, so a writer lands a segment
+  *                    atomically by renaming a hidden file into place.
+  *   - offset       = the number of the last segment consumed ≡ the WAL
+  *                    position; none before the first trigger, which
+  *                    starts at the lowest number listed
+  *   - latestOffset = the gap-free run of numbers past the offset,
+  *                    capped by `maxFilesPerTrigger` via admission
+  *                    control — the mux batchSize count-trigger
+  *                    (mux/mux.go:57). A missing number holds back every
+  *                    later segment until it lands; the hold is never
+  *                    silent, see the source metrics below.
+  *   - commit(end)  = the post-ACK WAL persist hook: Spark calls it only
+  *                    after the epoch's sinks committed; it is recorded
+  *                    (observable in tests; the checkpoint is the
+  *                    durable store)
+  *
+  * A file numbered at or below the offset is never read again, so a
+  * re-shipped segment is not read twice. The query fails, naming the
+  * files, when an unread `.json` file has no number or two unread files
+  * share one, and when a replayed batch needs a segment that is gone.
+  *
+  * Source metrics (`StreamingQueryProgress.sources(i).metrics`):
+  * `committedSegment`, `highestLandedSegment`, `unreadSegments`, and
+  * `waitingForSegment` — the first missing number, present only while it
+  * holds back later segments. -1 stands for "none".
   *
   * Scale shape: one [[InputPartition]] per segment file, so a
   * 1000-executor cluster fans one micro-batch out to 1000 parallel
   * readers; the driver only lists names. Rows are parsed straight to
-  * [[InternalRow]] (no Row→InternalRow re-encode on the hot path).
+  * [[InternalRow]] under the parse rule of [[SegmentReader]].
   *
   * Usage: `spark.readStream.format(CdcFileSource.Name).option("path", dir)`.
   */
@@ -58,10 +80,12 @@ object CdcFileSource {
     * DataSourceRegister service file needed). */
   val Name: String = classOf[CdcFileSource].getName
 
-  /** Last offset Spark committed per source directory — the test's
+  /** Last segment Spark committed per source directory — the test's
     * window into the commit-after-sink ordering (≡ walPositionPersisted,
     * postgres.go:372-376). */
   val committed = new ConcurrentHashMap[String, Long]()
+
+  private[sources] val SegmentNumber = """(\d+)\.json$""".r
 }
 
 private[sources] final class CdcFileTable(options: CaseInsensitiveStringMap)
@@ -77,69 +101,57 @@ private[sources] final class CdcFileTable(options: CaseInsensitiveStringMap)
       override def build(): Scan = this
       override def readSchema(): StructType = ChangeEvent.schema
       override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-        new CdcFileMicroBatchStream(dir,
-          Option(opts.get("maxFilesPerTrigger")).map(_.toInt))
+        new CdcFileMicroBatchStream(dir, Option(opts.get("maxFilesPerTrigger")).map(_.toInt),
+          SQLConf.get.sessionLocalTimeZone)
     }
 }
 
-/** Offset = number of segment files consumed (sorted by name), PLUS the
-  * name of the last consumed segment. The count alone is positional: if
-  * retention deletes a segment, or a late writer drops a name that sorts
-  * before already-consumed ones, a checkpoint replay would silently remap
-  * offset ranges onto the wrong files (rows skipped or duplicated).
-  * Recording the boundary name makes that corruption DETECTABLE — every
-  * planning call re-checks that the sorted listing still has `lastName`
-  * at position `segments - 1` and fails fast otherwise, the same reason
-  * Spark's own FileStreamSource logs actual file names. */
-private[sources] final case class SegmentOffset(segments: Long, lastName: String)
-    extends Offset {
-  override def json(): String =
-    if (lastName == null) s"""{"segments":$segments}"""
-    else s"""{"segments":$segments,"last":"${lastName.replace("\\", "\\\\").replace("\"", "\\\"")}"}"""
+/** Offset = number of the last segment consumed, -1 before the first. */
+private[sources] final case class SegmentOffset(segment: Long) extends Offset {
+  override def json(): String = s"""{"segment":$segment}"""
 }
 
 private[sources] final class CdcFileMicroBatchStream(dir: String,
-    maxFilesPerTrigger: Option[Int])
-    extends MicroBatchStream with SupportsAdmissionControl {
+    maxFilesPerTrigger: Option[Int], timeZone: String)
+    extends MicroBatchStream with SupportsAdmissionControl with ReportsSourceMetrics {
 
-  /** Stable WAL ordering: segment files sorted by name. Writers must
-    * name segments monotonically (like WAL segment numbers) and write
-    * them atomically (tmp+rename) — same contract as Spark's own file
-    * source. */
-  private def segmentNames(): Array[String] = {
+  @volatile private var lastCommitted = -1L
+  @volatile private var backlog = Map.empty[String, Long]
+
+  private def fail(what: String): Nothing =
+    throw new IllegalStateException(s"CdcFileSource[$dir]: $what")
+
+  /** (number, name) of every segment file listed. */
+  private def listing(): List[(Long, String)] = {
     val p = Paths.get(dir)
-    if (!Files.isDirectory(p)) Array.empty
-    else Files.list(p).iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(n => n.endsWith(".json") && !n.startsWith("."))
-      .toArray.sorted
-  }
-
-  /** The listing prefix up to `off` must still end at the recorded
-    * boundary name; otherwise the positional mapping is corrupt (a
-    * consumed segment vanished or a new name sorted into the consumed
-    * range) and continuing would read the wrong files. */
-  private def verifyPrefix(names: Array[String], off: SegmentOffset): Unit = {
-    if (off.segments > 0 && off.lastName != null) {
-      val i = off.segments.toInt - 1
-      if (names.length <= i || names(i) != off.lastName)
-        throw new IllegalStateException(
-          s"CdcFileSource[$dir]: checkpoint says segment #${off.segments} is " +
-          s"'${off.lastName}' but the directory now lists " +
-          s"${if (names.length <= i) "fewer segments" else s"'${names(i)}'"} there. " +
-          "A consumed segment was deleted or a name sorted into the consumed " +
-          "range — refusing to remap offsets onto different files.")
+    val names = if (!Files.isDirectory(p)) Nil else {
+      val s = Files.list(p)
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.endsWith(".json") && !n.startsWith(".") && !n.startsWith("_")).toList
+      finally s.close()
     }
+    val (bare, numbered) = names.partitionMap(n => CdcFileSource.SegmentNumber.findFirstMatchIn(n)
+      .flatMap(_.group(1).toLongOption).map(k => (k, n)).toRight[String](n))
+    if (bare.nonEmpty) fail(s"segment files without a number: ${bare.sorted.mkString(", ")}")
+    numbered
   }
 
-  override def initialOffset(): Offset = SegmentOffset(0L, null)
+  /** Name by number of every segment numbered above `after`. */
+  private def unread(listed: List[(Long, String)], after: Long): SortedMap[Long, String] = {
+    val byNumber = listed.filter(_._1 > after).groupMap(_._1)(_._2)
+    byNumber.collectFirst { case (k, names) if names.size > 1 =>
+      fail(s"segment $k is landed twice: ${names.sorted.mkString(", ")}") }
+    SortedMap.from(byNumber.view.mapValues(_.head))
+  }
+
+  private def number(o: Offset): Long = o.asInstanceOf[SegmentOffset].segment
+
+  override def initialOffset(): Offset = SegmentOffset(-1L)
   override def deserializeOffset(json: String): Offset = {
-    val t = json.trim
-    if (t.startsWith("{")) {
-      val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(t)
-      SegmentOffset(n.get("segments").asLong(),
-        if (n.has("last")) n.get("last").asText() else null)
-    } else SegmentOffset(t.toLong, null) // pre-name checkpoint format
+    val n = new ObjectMapper().readTree(json).path("segment")
+    if (!n.isIntegralNumber)
+      fail(s"offset $json is no segment number; a checkpoint of another source cannot be resumed")
+    SegmentOffset(n.asLong())
   }
 
   override def getDefaultReadLimit: ReadLimit =
@@ -151,52 +163,64 @@ private[sources] final class CdcFileMicroBatchStream(dir: String,
       "latestOffset(Offset, ReadLimit) is used (SupportsAdmissionControl)")
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val so = start.asInstanceOf[SegmentOffset]
-    val names = segmentNames()
-    verifyPrefix(names, so)
-    val from = so.segments
-    val total = names.length.toLong
-    val capped = limit match {
-      case rl: org.apache.spark.sql.connector.read.streaming.ReadMaxFiles =>
-        math.min(total, from + rl.maxFiles())
-      case _ => total
-    }
-    val to = math.max(from, capped)
-    SegmentOffset(to, if (to > 0 && to <= names.length) names(to.toInt - 1) else so.lastName)
+    val from = number(start)
+    val listed = listing()
+    val segs = unread(listed, from)
+    val cap = limit match { case m: ReadMaxFiles => m.maxFiles().toLong; case _ => Long.MaxValue }
+    val first = if (from >= 0) from + 1 else segs.headOption.fold(0L)(_._1)
+    val run = Iterator.iterate(first)(_ + 1)
+      .takeWhile(k => segs.contains(k) && k - first < cap).size
+    val end = if (run == 0) from else first + run - 1
+    backlog = Map(
+      "highestLandedSegment" -> listed.map(_._1).maxOption.getOrElse(-1L),
+      "unreadSegments" -> segs.keysIterator.count(_ > end).toLong) ++
+      Option.when(!segs.contains(end + 1) && segs.keysIterator.exists(_ > end + 1))(
+        "waitingForSegment" -> (end + 1))
+    SegmentOffset(end)
   }
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val so = start.asInstanceOf[SegmentOffset]
-    val eo = end.asInstanceOf[SegmentOffset]
-    val names = segmentNames()
-    verifyPrefix(names, so)
-    verifyPrefix(names, eo)
-    names.slice(so.segments.toInt, eo.segments.toInt)
-      .map(n => SegmentPartition(s"$dir/$n"): InputPartition)
+    val (from, to) = (number(start), number(end))
+    val segs = unread(listing(), from).rangeTo(to)
+    val first = if (from >= 0) from + 1 else segs.headOption.fold(to)(_._1)
+    (first to to).find(k => !segs.contains(k)).foreach(k =>
+      fail(s"segment $k, admitted by an earlier trigger, is no longer listed"))
+    segs.valuesIterator.map(n => SegmentPartition(s"$dir/$n", timeZone): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    (partition: InputPartition) =>
-      new SegmentReader(partition.asInstanceOf[SegmentPartition].path)
+    (partition: InputPartition) => new SegmentReader(partition.asInstanceOf[SegmentPartition])
 
   /** Called only after the epoch's sinks committed — the DSv2 analog of
     * persistWAL-after-ACK. */
-  override def commit(end: Offset): Unit =
-    CdcFileSource.committed.put(dir, end.asInstanceOf[SegmentOffset].segments)
+  override def commit(end: Offset): Unit = {
+    lastCommitted = number(end)
+    CdcFileSource.committed.put(dir, lastCommitted)
+  }
+
+  /** The backlog as of the latest listing. */
+  override def metrics(latestConsumedOffset: java.util.Optional[Offset]): java.util.Map[String, String] =
+    (backlog + ("committedSegment" -> lastCommitted)).map { case (k, v) => k -> v.toString }.asJava
 
   override def stop(): Unit = ()
 }
 
-private[sources] final case class SegmentPartition(path: String) extends InputPartition
+private[sources] final case class SegmentPartition(path: String, timeZone: String)
+    extends InputPartition
 
 /** Parses one WAL segment (JSON lines in the envelope wire shape,
-  * README.md:12-25) directly into [[InternalRow]]s. Jackson ships with
-  * Spark; per-partition reader init amortizes the mapper — the same
-  * shape a real pgoutput decoder would take. */
-private[sources] final class SegmentReader(path: String)
+  * README.md:12-25) directly into [[InternalRow]]s. The parse rule
+  * follows the reference, which drops an unsupported value and logs it
+  * without stopping the stream (postgres.go:421-423): a field that is
+  * missing, null or not of its type is null, and a line that is not a
+  * JSON object is a row of nulls. Each dropped value is logged. The
+  * nulls reach `CdcPipeline.observed`, which counts them, and
+  * `validated`, which drops the rows. */
+private[sources] final class SegmentReader(part: SegmentPartition)
     extends PartitionReader[InternalRow] {
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-  private val lines = Files.readAllLines(Paths.get(path), StandardCharsets.UTF_8)
+  private val mapper = new ObjectMapper()
+  private val zone = java.time.ZoneId.of(part.timeZone)
+  private val lines = Files.readAllLines(Paths.get(part.path), StandardCharsets.UTF_8)
     .asScala.iterator.filter(_.nonEmpty)
   private var current: InternalRow = _
 
@@ -207,32 +231,35 @@ private[sources] final class SegmentReader(path: String)
   override def get(): InternalRow = current
   override def close(): Unit = ()
 
-  private def parse(line: String): InternalRow = {
-    val n = mapper.readTree(line)
-    def s(f: String): UTF8String = {
-      val v = n.get(f)
-      if (v == null || v.isNull) null else UTF8String.fromString(v.asText())
-    }
-    val tsMicros = {
-      val v = n.get("timestamp")
-      if (v == null || v.isNull) 0L
-      else {
-        val t = java.time.OffsetDateTime.parse(v.asText()).toInstant
-        t.getEpochSecond * 1000000L + t.getNano / 1000L
-      }
-    }
-    val cols = n.get("columns")
-    val map = if (cols == null || cols.isNull) null else {
-      val keys = new scala.collection.mutable.ArrayBuffer[UTF8String]
-      val vals = new scala.collection.mutable.ArrayBuffer[UTF8String]
-      cols.properties().asScala.foreach { e =>
-        keys += UTF8String.fromString(e.getKey)
-        vals += (if (e.getValue.isNull) null else UTF8String.fromString(e.getValue.asText()))
-      }
-      ArrayBasedMapData(keys.toArray, vals.toArray)
-    }
-    InternalRow(s("host"), s("database"), s("table"), s("action"),
-      if (n.get("walPosition") == null) 0L else n.get("walPosition").asLong(),
-      tsMicros, s("uuid"), map)
+  private def dropped(what: String): Null = {
+    SegmentReader.log.warn(s"${part.path}: dropped $what")
+    null
   }
+
+  private def parse(line: String): InternalRow = {
+    val n = try mapper.readTree(line) catch { case NonFatal(_) => null }
+    if (n == null || !n.isObject) {
+      dropped(s"a line that is not a JSON object: $line")
+      return new GenericInternalRow(ChangeEvent.schema.length)
+    }
+    def text(v: JsonNode) = UTF8String.fromString(if (v.isValueNode) v.asText() else v.toString)
+    def field(f: String)(read: JsonNode => Option[Any]): Any =
+      Option(n.get(f)).filterNot(_.isNull)
+        .map(v => read(v).getOrElse(dropped(s"$f value $v"))).orNull
+    def s(f: String) = field(f)(v => Some(text(v)))
+    InternalRow(s("host"), s("database"), s("table"), s("action"),
+      field("walPosition")(v => Option.when(v.isIntegralNumber && v.canConvertToLong)(v.asLong())),
+      field("timestamp")(v => Option.when(v.isTextual)(v.asText()).flatMap(t =>
+        DateTimeUtils.stringToTimestamp(UTF8String.fromString(t), zone))),
+      s("uuid"),
+      field("columns")(v => Option.when(v.isObject) {
+        val es = v.properties().asScala.toArray
+        ArrayBasedMapData(es.map(e => UTF8String.fromString(e.getKey)),
+          es.map(e => if (e.getValue.isNull) null else text(e.getValue)))
+      }))
+  }
+}
+
+private object SegmentReader {
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[SegmentReader])
 }

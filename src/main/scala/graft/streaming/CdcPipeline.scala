@@ -2,9 +2,11 @@ package graft.streaming
 
 import graft.model.ChangeEvent
 import graft.operators.CdcOps
+import graft.sources.CdcFileSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{LongType, MapType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** The reference's streaming topology on Structured Streaming.
@@ -34,9 +36,9 @@ import org.apache.spark.storage.StorageLevel
   * map-side partial aggregation — the minimum possible.
   *
   * Local files: on `file:` paths a trigger creates and renames many
-  * small files (offset and commit log entries, file-source metadata,
-  * state-store deltas, sink files). The program's `core-site.xml`
-  * serves `file:` with [[graft.fs.NioRawLocalFileSystem]]: Hadoop's
+  * small files (offset and commit log entries, state-store deltas,
+  * sink files). The program's `core-site.xml` serves `file:` with
+  * [[graft.fs.NioRawLocalFileSystem]]: Hadoop's
   * local filesystem with `setPermission` and `getFileLinkStatus`
   * answered by `java.nio.file` instead of a forked `chmod` and
   * `readlink`. A deployment's own `core-site.xml` earlier on the
@@ -44,15 +46,14 @@ import org.apache.spark.storage.StorageLevel
   */
 object CdcPipeline {
 
-  /** File-based change-event source: the sandbox stand-in for the PG
-    * replication / Kafka source (S1/S2). Each dropped file is a WAL
-    * segment; `maxFilesPerTrigger` is the count-trigger analog of the
-    * mux batchSize (mux/mux.go:57). */
+  /** The change-event source: the sandbox stand-in for the PG
+    * replication / Kafka source (S1/S2). Each numbered file in `dir` is
+    * a WAL segment, read in number order ([[CdcFileSource]]);
+    * `maxFilesPerTrigger` is the count-trigger analog of the mux
+    * batchSize (mux/mux.go:57). The one `readStream` of the program. */
   def fileSource(spark: SparkSession, dir: String, maxFilesPerTrigger: Int = 1): DataFrame =
-    spark.readStream
-      .schema(ChangeEvent.schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(dir)
+    spark.readStream.format(CdcFileSource.Name).option("path", dir)
+      .option("maxFilesPerTrigger", maxFilesPerTrigger).load()
 
   /** Envelope validation (F1+F2) on a streaming frame — same column
     * algebra as batch; Catalyst doesn't care that the source streams. */
@@ -204,18 +205,9 @@ object CdcPipeline {
 
   /** Schema of the maintained snapshot state: latest envelope per key,
     * INCLUDING delete tombstones (see [[mergeSnapshot]]). */
-  val snapshotSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("key",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("walPosition",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("action",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("columns",
-        org.apache.spark.sql.types.MapType(
-          org.apache.spark.sql.types.StringType,
-          org.apache.spark.sql.types.StringType))))
+  val snapshotSchema: StructType = StructType(Seq(
+    StructField("key", StringType), StructField("walPosition", LongType),
+    StructField("action", StringType), StructField("columns", MapType(StringType, StringType))))
 
   /** Shared cur/.prev generation read: the current state relation
     * (empty before the first batch), falling back to the `.prev`
@@ -226,7 +218,7 @@ object CdcPipeline {
     * nothing, and the state is rewritten every trigger, so a resolved
     * relation would never be reused. */
   private def stateRelation(spark: SparkSession, stateDir: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+      schema: StructType): DataFrame = {
     val cur = new java.io.File(stateDir)
     val prev = new java.io.File(stateDir + ".prev")
     val dir = if (cur.exists) cur else prev
@@ -310,25 +302,13 @@ object CdcPipeline {
   // ---- streaming SCD2 maintenance (append-version history) ----
 
   /** Schema of the maintained SCD2 state: the ACCEPTED CHANGE SET —
-    * one row per (key, walPosition), never collapsed to current-only.
+    * one row per (key, walPosition), never collapsed to current-only;
+    * the snapshot's columns plus the change's timestamp in µs (`tus`).
     * Version numbers and validity windows are DERIVED in
     * [[scd2History]], not stored: the history is a deterministic pure
     * function of this set, which is what makes replays free (merging
     * a batch twice adds no rows → derived history unchanged). */
-  val scd2StateSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("key",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("walPosition",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("action",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("columns",
-        org.apache.spark.sql.types.MapType(
-          org.apache.spark.sql.types.StringType,
-          org.apache.spark.sql.types.StringType)),
-      org.apache.spark.sql.types.StructField("tus",
-        org.apache.spark.sql.types.LongType)))
+  val scd2StateSchema: StructType = StructType(snapshotSchema.fields :+ StructField("tus", LongType))
 
   /** Current SCD2 change set — see [[stateRelation]]. */
   def scd2State(spark: SparkSession, stateDir: String): DataFrame =

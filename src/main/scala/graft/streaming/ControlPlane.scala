@@ -17,7 +17,8 @@ import java.util.concurrent.atomic.AtomicBoolean
   *   - `/debug/on|off` — toggles a debug flag via callback, 400 on any
   *                  other form (http.go:50-75 SetDebug fan-out)
   *   - `/metrics` — Prometheus text exposition of the per-query
-  *                  counters (http.go:77 promhttp; metric shape follows
+  *                  counters, observed metrics and source metrics
+  *                  (http.go:77 promhttp; metric shape follows
   *                  sink/prom/prometheus.go:10-43's labeled counters,
   *                  with the query name as the label)
   *
@@ -63,21 +64,29 @@ final class ControlPlane(monitoring: Monitoring,
       monitoring.rowsProcessed)
     family("graft_query_batches_total", "Micro-batches completed per query", "counter")(
       monitoring.batchesProcessed)
+    def gauges(name: String, help: String, lines: Seq[String]): Unit =
+      if (lines.nonEmpty) {
+        sb.append(s"# HELP $name $help\n# TYPE $name gauge\n")
+        lines.foreach(l => sb.append(l).append('\n'))
+      }
+    val queries = monitoring.stats.keys.toSeq.sorted
     // Dataset.observe snapshots (per query × observation × metric),
     // numeric values only — the in-plan quality counters
-    val observed = monitoring.stats.keys.toSeq.sorted.flatMap { q =>
+    gauges("graft_observed", "Latest Dataset.observe metrics per query", queries.flatMap { q =>
       monitoring.observedMetrics(q).toSeq.sortBy(_._1).flatMap { case (obs, ms) =>
         ms.toSeq.sortBy(_._1).flatMap { case (metric, v) =>
           v.toDoubleOption.map(d =>
             s"""graft_observed{query="${esc(q)}",observation="${esc(obs)}",metric="${esc(metric)}"} $d""")
         }
       }
-    }
-    if (observed.nonEmpty) {
-      sb.append("# HELP graft_observed Latest Dataset.observe metrics per query\n")
-      sb.append("# TYPE graft_observed gauge\n")
-      observed.foreach(l => sb.append(l).append('\n'))
-    }
+    })
+    // source metrics, e.g. the CDC source's backlog (unread segments,
+    // the segment a gap holds the source at)
+    gauges("graft_source", "Latest source metrics per query", queries.flatMap { q =>
+      monitoring.sourceMetrics(q).toSeq.sortBy(_._1).map { case (metric, d) =>
+        s"""graft_source{query="${esc(q)}",metric="${esc(metric)}"} $d"""
+      }
+    })
     sb.toString
   }
 

@@ -1,10 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.LongAdder
+import scala.jdk.CollectionConverters._
 
 /** M2/M3 — per-query stats counters and health, the Spark-native form
   * of the reference's atomic counters + /health + /status endpoints
@@ -17,8 +18,12 @@ import java.util.concurrent.atomic.LongAdder
   * `Status() error` contract: a query is unhealthy once terminated
   * with an exception (and the Kafka-source rule "N consecutive fetch
   * errors → unhealthy" maps to consecutive failed batches).
+  *
+  * `lastProgress` reads a running query's latest progress by id; the
+  * listener needs it for idle triggers (see `onQueryIdle`).
   */
-final class Monitoring extends StreamingQueryListener {
+final class Monitoring(lastProgress: java.util.UUID => Option[StreamingQueryProgress] = _ => None)
+    extends StreamingQueryListener {
 
   final case class QueryStats(rows: LongAdder = new LongAdder,
       batches: LongAdder = new LongAdder,
@@ -48,10 +53,16 @@ final class Monitoring extends StreamingQueryListener {
   // per-event atomic counters.
   private val observedByQuery =
     new ConcurrentHashMap[String, Map[String, Map[String, String]]]()
+  // latest numeric source metrics per query (`ReportsSourceMetrics`,
+  // e.g. the CDC source's backlog): query → metric → value; a query's
+  // sources share one map
+  private val sourceByQuery = new ConcurrentHashMap[String, Map[String, Double]]()
+
+  private def nameOf(p: StreamingQueryProgress): String =
+    Option(p.name).getOrElse(p.id.toString)
 
   override def onQueryProgress(e: QueryProgressEvent): Unit = {
-    val name = e.progress.name match {
-      case null => e.progress.id.toString; case n => n }
+    val name = nameOf(e.progress)
     idToName.put(e.progress.id.toString, name)
     val s = statsFor(name)
     s.rows.add(e.progress.numInputRows)
@@ -67,11 +78,31 @@ final class Monitoring extends StreamingQueryListener {
       }
       observedByQuery.put(name, snap.result())
     }
+    recordSources(name, e.progress)
+  }
+
+  /** An idle trigger's progress carries fresh source metrics, such as a
+    * gap that holds the CDC source, but Spark hands listeners only a
+    * `QueryIdleEvent` without it: read it from the query. */
+  override def onQueryIdle(e: QueryIdleEvent): Unit =
+    lastProgress(e.id).foreach(p => recordSources(nameOf(p), p))
+
+  private def recordSources(name: String, p: StreamingQueryProgress): Unit = {
+    val sm = for {
+      src <- p.sources.toSeq if src.metrics != null
+      (k, v) <- src.metrics.asScala
+      d <- v.toDoubleOption
+    } yield k -> d
+    if (sm.nonEmpty) sourceByQuery.put(name, sm.toMap)
   }
 
   /** Latest observed-metrics snapshot for a query (empty if none). */
   def observedMetrics(name: String): Map[String, Map[String, String]] =
     observedByQuery.getOrDefault(name, Map.empty)
+
+  /** Latest numeric source-metrics snapshot for a query (empty if none). */
+  def sourceMetrics(name: String): Map[String, Double] =
+    sourceByQuery.getOrDefault(name, Map.empty)
 
   override def onQueryTerminated(e: QueryTerminatedEvent): Unit = {
     val key = idToName.getOrDefault(e.id.toString, e.id.toString)
@@ -112,7 +143,7 @@ final class Monitoring extends StreamingQueryListener {
 object Monitoring {
   /** Attach a fresh Monitoring listener to the session. */
   def attach(spark: SparkSession): Monitoring = {
-    val m = new Monitoring
+    val m = new Monitoring(id => Option(spark.streams.get(id)).flatMap(q => Option(q.lastProgress)))
     spark.streams.addListener(m)
     m
   }

@@ -19,7 +19,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object Topology {
 
-  /** One change-event source (S1/S2 stand-in: a file-stream directory). */
+  /** One change-event source (S1/S2 stand-in: a directory of numbered
+    * segment files, read by [[CdcPipeline.fileSource]]). */
   final case class SourceConf(
       name: String,
       dir: String,

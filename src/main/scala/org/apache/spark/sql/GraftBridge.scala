@@ -7,8 +7,9 @@ import org.apache.spark.storage.StorageLevel
 
 /** Minimal bridge into `private[sql]` API: the Column↔Expression
   * conversion for graft's native Catalyst expressions (Spark 4 made
-  * `new Column(expr)` internal behind ColumnNode) and the Dataset
-  * constructor [[materialize]] needs. Lives in the spark.sql package
+  * `new Column(expr)` internal behind ColumnNode), the Dataset
+  * constructor [[materialize]] needs and the cache lookup of
+  * [[cacheEntry]]. Lives in the spark.sql package
   * solely to re-export them; no Spark internals are modified. */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -36,5 +37,13 @@ object GraftBridge {
       }
     (classic.Dataset.ofRows(ds.sparkSession,
       LogicalRDD.fromDataset(kept, ds, isStreaming = false)), kept)
+  }
+
+  /** The cached relation of the cache entry that serves `df`'s plan, if
+    * one does. Equal plans share an entry, so its identity names the
+    * entry. */
+  def cacheEntry(df: DataFrame): Option[AnyRef] = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds).map(_.cachedRepresentation)
   }
 }

@@ -2,27 +2,21 @@ package graft
 
 import graft.model.ChangeEvent
 import graft.sources.CdcFileSource
+import graft.streaming.CdcPipeline
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
-/** Specs for the native DSv2 micro-batch CDC source: offset tracking,
-  * admission control (count trigger), commit-after-sink, restart. */
+/** Specs for the change-event source: offset tracking, admission
+  * control (count trigger), commit-after-sink, restart, the gap hold,
+  * re-shipped segments and the parse rule. */
 class CdcSourceSpec extends SparkSpec {
 
-  private def writeSegment(dir: String, name: String, events: Seq[ChangeEvent]): Unit = {
-    val lines = events.map { e =>
-      val cols = e.columns.map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
-      s"""{"host":"${e.host}","database":"${e.database}","table":"${e.table}",""" +
-        s""""action":"${e.action}","walPosition":${e.walPosition},""" +
-        s""""timestamp":"${java.time.Instant.ofEpochMilli(e.timestamp.getTime)}",""" +
-        s""""uuid":"${e.uuid}","columns":$cols}"""
-    }
-    Files.write(Paths.get(s"$dir/$name"), lines.mkString("\n").getBytes("UTF-8"))
-  }
-
-  private def ev(wal: Long, table: String = "users"): ChangeEvent =
+  private def ev(wal: Long, table: String = "users", tsStepMs: Long = 1000L): ChangeEvent =
     ChangeEvent("h", "db", table, "insert", wal,
-      new java.sql.Timestamp(1700000000000L + wal * 1000), s"u-$wal", Map("id" -> wal.toString))
+      new java.sql.Timestamp(1700000000000L + wal * tsStepMs), s"u-$wal", Map("id" -> wal.toString))
 
   test("DSv2 source: parses segments, caps files per trigger, commits after sink") {
     val root = Files.createTempDirectory("graft-dsv2").toString
@@ -62,7 +56,7 @@ class CdcSourceSpec extends SparkSpec {
     // the tail epoch stays unconfirmed until the stream advances — the
     // same replayable-tail contract as the reference's delayed WAL
     // confirmation (walPos − walRetain, postgres.go:451-466).
-    assert(CdcFileSource.committed.get(in) === 2L)
+    assert(CdcFileSource.committed.get(in) === 1L) // seg-001
 
     // restart from the checkpoint: nothing is reprocessed, new
     // segments flow (C1/C3 offset semantics on a native source)
@@ -76,34 +70,114 @@ class CdcSourceSpec extends SparkSpec {
     try q2.processAllAvailable() finally q2.stop()
     val out2 = spark.read.parquet(s"$root/out")
     assert(out2.count() === 5) // only seg-003 was new
-    assert(CdcFileSource.committed.get(in) >= 3L) // restart confirmed the recovered epochs
+    assert(CdcFileSource.committed.get(in) >= 2L) // restart confirmed the recovered epochs
   }
 
-  test("DSv2 source: fails fast when the consumed listing prefix mutates") {
-    val root = Files.createTempDirectory("graft-dsv2-mut").toString
+  /** Polls `cond` for up to 30 s. */
+  private def await(what: String)(cond: => Boolean): Unit = {
+    val deadline = System.currentTimeMillis() + 30000
+    while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(50)
+    assert(cond, what)
+  }
+
+  /** Starts the envelope pipeline (observe, validate, dedup) over `in`
+    * at one segment per trigger into a sink that records each batch's
+    * WAL positions. Idle triggers report progress every 100 ms, so the
+    * source metrics of a held gap show without a new batch. */
+  private def startDeduped(root: String, in: String, watermark: String,
+      batches: java.util.concurrent.ConcurrentLinkedQueue[Seq[Long]]) = {
+    val key = "spark.sql.streaming.noDataProgressEventInterval"
+    spark.conf.set(key, "100ms")
+    try CdcPipeline.deduped(CdcPipeline.validated(CdcPipeline.observed(
+        CdcPipeline.fileSource(spark, in))), watermark)
+      .writeStream.option("checkpointLocation", s"$root/ckpt")
+      .trigger(Trigger.ProcessingTime(0L))
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        batches.add(b.select("walPosition").collect().map(_.getLong(0)).toSeq.sorted); (): Unit
+      }.start()
+    finally spark.conf.unset(key)
+  }
+
+  private def sourceMetrics(q: StreamingQuery): Map[String, String] =
+    Option(q.lastProgress).map(_.sources(0).metrics.asScala.toMap).getOrElse(Map.empty)
+
+  test("DSv2 source: a missing segment holds back later ones until it lands, in WAL order") {
+    val root = Files.createTempDirectory("graft-dsv2-gap").toString
     val in = s"$root/wal"; Files.createDirectories(Paths.get(in))
-    writeSegment(in, "seg-100.json", Seq(ev(1)))
-    writeSegment(in, "seg-101.json", Seq(ev(2)))
-    val run = () => {
-      val q = spark.readStream.format(CdcFileSource.Name)
-        .option("path", in).load()
-        .writeStream.option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          b.write.mode("append").parquet(s"$root/out"); (): Unit
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    run() // consume both segments, checkpoint records boundary name
-    // a late writer drops a name that sorts BEFORE the consumed range —
-    // positional offsets would silently remap; we must refuse instead
-    writeSegment(in, "seg-000.json", Seq(ev(9)))
-    writeSegment(in, "seg-102.json", Seq(ev(3)))
-    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](run())
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Seq.empty else String.valueOf(t.getMessage) +: messages(t.getCause)
-    assert(messages(e).exists(_.contains("refusing to remap")))
-    // nothing was duplicated or skipped before the failure
-    assert(spark.read.parquet(s"$root/out").count() === 2)
+    // ten minutes of events a segment against a one-second watermark:
+    // a segment read after a later one would be dropped as late
+    def seg(k: Int) = (1 to 2).map(i => ev(10L * k + i, tsStepMs = 60000L))
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Long]]()
+    val q = startDeduped(root, in, "1 second", batches)
+    try {
+      writeSegment(in, "seg-000.json", seg(0))
+      q.processAllAvailable()
+      writeSegment(in, "seg-002.json", seg(2))
+      writeSegment(in, "seg-003.json", seg(3))
+      await(s"gap reported: ${sourceMetrics(q)}")(sourceMetrics(q).get("waitingForSegment").contains("1"))
+      assert(batches.asScala.toSeq.filter(_.nonEmpty) === Seq(Seq(1L, 2L)))
+      val held = sourceMetrics(q)
+      assert(held("committedSegment") === "0")
+      assert(held("highestLandedSegment") === "3")
+      assert(held("unreadSegments") === "2")
+      writeSegment(in, "seg-001.json", seg(1))
+      q.processAllAvailable()
+      // one segment a trigger, in WAL order, nothing dropped as late
+      assert(batches.asScala.toSeq.filter(_.nonEmpty) ===
+        (0 to 3).map(k => Seq(10L * k + 1, 10L * k + 2)))
+      assert(q.recentProgress.flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum === 0L)
+      assert(!sourceMetrics(q).contains("waitingForSegment"))
+    } finally q.stop()
+  }
+
+  test("DSv2 source: a consumed segment landed again is not read twice") {
+    val root = Files.createTempDirectory("graft-dsv2-dup").toString
+    val in = s"$root/wal"; Files.createDirectories(Paths.get(in))
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Long]]()
+    // a watermark no replay here reaches: only the source may hold back
+    val q = startDeduped(root, in, "1 day", batches)
+    try {
+      writeSegment(in, "seg-000.json", Seq(ev(1)))
+      writeSegment(in, "seg-001.json", Seq(ev(2)))
+      q.processAllAvailable()
+      assert(batches.asScala.toSeq.flatten === Seq(1L, 2L))
+      // re-shipped: once under its own name, once under another name
+      // with the same number, then a new segment behind them
+      writeSegment(in, "seg-000.json", Seq(ev(1)))
+      writeSegment(in, "resent-seg-0001.json", Seq(ev(2)))
+      writeSegment(in, "seg-002.json", Seq(ev(3)))
+      q.processAllAvailable()
+      assert(batches.asScala.toSeq.flatten === Seq(1L, 2L, 3L))
+      assert(q.isActive && q.exception.isEmpty)
+    } finally q.stop()
+  }
+
+  test("DSv2 source: unparseable values read as null, counted by observe and dropped by validate") {
+    val root = Files.createTempDirectory("graft-dsv2-parse").toString
+    val in = s"$root/wal"; Files.createDirectories(Paths.get(in))
+    def line(e: ChangeEvent) = TestSpark.envelope(e)
+    TestSpark.landSegment(in, "seg-000.json", Seq(
+      line(ev(1).copy(action = null)),                    // no action
+      line(ev(2).copy(uuid = null)),                      // no uuid
+      """{"host":"h","database":"db","table":"users","act"""))  // not JSON
+    writeSegment(in, "seg-001.json", Seq(ev(4)))
+    val q = CdcPipeline.validated(CdcPipeline.observed(CdcPipeline.fileSource(spark, in)))
+      .writeStream.option("checkpointLocation", s"$root/ckpt")
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        b.write.mode("append").parquet(s"$root/out"); (): Unit
+      }.start()
+    try {
+      q.processAllAvailable()
+      val first = q.recentProgress.flatMap(p => Option(p.observedMetrics.get("cdc")))
+        .find(_.getAs[Long]("events") == 3L)
+      assert(first.isDefined, s"no batch observed the three lines: ${q.recentProgress.toSeq}")
+      assert(first.get.getAs[Long]("invalid_action") >= 1L)
+      assert(first.get.getAs[Long]("missing_uuid") >= 1L)
+      // all three lines dropped, the stream kept going to segment 1
+      assert(spark.read.parquet(s"$root/out").select("walPosition").collect()
+        .map(_.getLong(0)).toSeq === Seq(4L))
+      assert(q.isActive && q.exception.isEmpty)
+    } finally q.stop()
   }
 
   test("DSv2 source: composes with the envelope pipeline transforms") {

@@ -55,6 +55,22 @@ class LifecycleSourceSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
 
+  test("change events enter the program only through CdcPipeline.fileSource") {
+    // every `readStream` in main code, by file and enclosing definition
+    val hits = for {
+      f <- mainSources
+      lines = Files.readAllLines(f).asScala.toList
+      (line, i) <- lines.zipWithIndex
+      t = line.trim if !(t.startsWith("//") || t.startsWith("*") || t.startsWith("/*"))
+      if line.contains("readStream")
+      enclosing = lines.take(i + 1).reverse.collectFirst { case d if d.trim.startsWith("def ") => d.trim }
+    } yield (f.getFileName.toString, enclosing.getOrElse(""), s"$f:${i + 1}: ${t}")
+    assert(hits.nonEmpty, "CdcPipeline.fileSource no longer reads a stream")
+    val stray = hits.filterNot { case (file, enclosing, _) =>
+      file == "CdcPipeline.scala" && enclosing.startsWith("def fileSource(") }
+    assert(stray.isEmpty, stray.map(_._3).mkString("\n", "\n", ""))
+  }
+
   test("main sources bind the name `scope` only to a QueryScope") {
     val hits = for {
       (f, n, code) <- codeLines

@@ -146,12 +146,11 @@ class LocalFsSpec extends SparkSpec {
   }
 
   test("a checkpointed trigger into a topic sink and the snapshot sink starts no process") {
-    import spark.implicits._
     val root = Files.createTempDirectory("graft-fs-forks").toString
     val in = s"$root/in"
-    Seq(1L, 2L, 3L).map(w => ChangeEvent("h", "db", "users", "insert", w,
-        new Timestamp(1700000000000L + w * 1000), s"f-$w", Map("user_id" -> s"k$w")))
-      .toDF().coalesce(1).write.json(in)
+    Files.createDirectories(java.nio.file.Paths.get(in))
+    writeSegment(in, "seg-000.json", Seq(1L, 2L, 3L).map(w => ChangeEvent("h", "db", "users", "insert", w,
+        new Timestamp(1700000000000L + w * 1000), s"f-$w", Map("user_id" -> s"k$w"))))
     // POSIX only; touching Shell also runs its once-per-JVM `setsid`
     // probe now, outside the recording
     assume(!org.apache.hadoop.util.Shell.WINDOWS)

@@ -134,6 +134,33 @@ class QueryScopeSpec extends SparkSpec with Eventually {
     assert(persistentRdds -- before === Set.empty[Int])
   }
 
+  test("forcing out one of two scopes over an equal plan leaves the entry to the other") {
+    val run = runs.incrementAndGet()
+    // each scope builds its own Dataset over one equal plan
+    def scopeOver() = {
+      var kept: DataFrame = null
+      val result = QueryScope(spark) { s =>
+        kept = s.persist(spark.range(100).toDF("id").withColumn("run", lit(run)))
+        kept.select("id")
+      }
+      (kept, result)
+    }
+    val olderId = QueryScope.nextId
+    val (older, _) = scopeOver()
+    val (newer, newerResult) = scopeOver()
+    assert(!(older eq newer))
+    assert(newer.storageLevel === StorageLevel.MEMORY_AND_DISK)
+    // unexecuted scopes push the older one past the pending cap
+    val fillers = (1 until QueryScope.MaxPending).map(_ => QueryScope(spark)(_ => spark.range(1).toDF()))
+    assert(!QueryScope.pendingIds.contains(olderId))
+    assert(older.storageLevel === StorageLevel.MEMORY_AND_DISK, "the entry went with the older scope")
+    assert(newer.storageLevel === StorageLevel.MEMORY_AND_DISK)
+    // the newer scope's action releases the entry's last holder
+    assert(newerResult.count() === 100)
+    eventually(timeout(Span(30, Seconds)))(assert(newer.storageLevel === StorageLevel.NONE))
+    fillers.foreach(_.count())
+  }
+
   test("unexecuted scopes are force-released past the pending cap") {
     val built = (0 to QueryScope.MaxPending).map { _ =>
       var kept: DataFrame = null

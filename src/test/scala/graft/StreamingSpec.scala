@@ -212,7 +212,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("scd2Pipeline end-to-end: JSON segment files -> validated -> versioned history") {
-    import spark.implicits._
     val root = Files.createTempDirectory("graft-scd2e2e").toString
     val inDir = s"$root/in"
     Files.createDirectories(java.nio.file.Paths.get(inDir))
@@ -221,9 +220,8 @@ class StreamingSpec extends SparkSpec {
         new Timestamp(1700000000000L + wal * 1000), s"u-$wal",
         Map("user_id" -> key, "v" -> v))
     // includes a transaction marker the validation stage must drop
-    Seq(evj(1, "insert", "a", "a1"), evj(2, "update", "a", "a2"),
-      evj(3, "begin", "x", "-"))
-      .toDF().coalesce(1).write.mode("overwrite").json(inDir)
+    writeSegment(inDir, "seg-000.json", Seq(evj(1, "insert", "a", "a1"),
+      evj(2, "update", "a", "a2"), evj(3, "begin", "x", "-")))
     val q = CdcPipeline.scd2Pipeline(spark, inDir,
       s"$root/state", s"$root/ckpt", "user_id")
     try q.processAllAvailable() finally q.stop()
@@ -236,14 +234,13 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("flagship pipeline end-to-end: segments -> validate -> dedup -> route -> topic parquet") {
-    import spark.implicits._
     val root = Files.createTempDirectory("graft-flagship").toString
     val inDir = s"$root/in"
     Files.createDirectories(java.nio.file.Paths.get(inDir))
     // a valid event, a replayed duplicate (same uuid), an invalid
     // marker, and an unmapped table for the fallback topic
-    Seq(ev(1), ev(1), ev(2, action = "begin"), ev(3, table = "misc"))
-      .toDF().coalesce(1).write.mode("overwrite").json(inDir)
+    writeSegment(inDir, "seg-000.json",
+      Seq(ev(1), ev(1), ev(2, action = "begin"), ev(3, table = "misc")))
     val q = CdcPipeline.pipeline(spark, inDir, s"$root/out", s"$root/ckpt",
       mapping = Map("events" -> "topic.events"))
     try q.processAllAvailable() finally q.stop()
@@ -255,7 +252,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("snapshotPipeline end-to-end: JSON segment files -> validated -> live snapshot") {
-    import spark.implicits._
     val root = Files.createTempDirectory("graft-snape2e").toString
     val inDir = s"$root/in"
     Files.createDirectories(java.nio.file.Paths.get(inDir))
@@ -263,9 +259,8 @@ class StreamingSpec extends SparkSpec {
       ChangeEvent("h", "db", "users", action, wal,
         new Timestamp(1700000000000L + wal * 1000), s"u-$wal",
         Map("user_id" -> key, "v" -> v))
-    Seq(evj(1, "insert", "a", "a1"), evj(2, "insert", "b", "b1"),
-      evj(3, "update", "a", "a2"), evj(4, "delete", "b", "-"))
-      .toDF().coalesce(1).write.mode("overwrite").json(inDir)
+    writeSegment(inDir, "seg-000.json", Seq(evj(1, "insert", "a", "a1"),
+      evj(2, "insert", "b", "b1"), evj(3, "update", "a", "a2"), evj(4, "delete", "b", "-")))
     val q = CdcPipeline.snapshotPipeline(spark, inDir,
       s"$root/state", s"$root/ckpt", "user_id")
     try q.processAllAvailable() finally q.stop()

@@ -1,7 +1,7 @@
 package graft
 
 import graft.model.ChangeEvent
-import graft.streaming.{ControlPlane, Monitoring, Retry, Sinks, Topology}
+import graft.streaming.{CdcPipeline, ControlPlane, Monitoring, Retry, Sinks, Topology}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 import java.sql.Timestamp
@@ -79,14 +79,12 @@ class TopologySpec extends SparkSpec {
   }
 
   test("config file: round-trips the reference TOML shape into a running topology") {
-    import spark.implicits._
     import graft.streaming.TopologyConfig
     val root = Files.createTempDirectory("graft-cfg").toString
     val inDir = s"$root/in"; Files.createDirectories(java.nio.file.Paths.get(inDir))
-    Seq(
+    writeSegment(inDir, "seg-000.json", Seq(
       ChangeEvent("h", "db", "users", "insert", 1L, new Timestamp(1700000001000L), "c-1", Map("id" -> "1")),
-      ChangeEvent("h", "db", "misc", "delete", 2L, new Timestamp(1700000002000L), "c-2", Map("id" -> "2")))
-      .toDF().coalesce(1).write.mode("overwrite").json(inDir)
+      ChangeEvent("h", "db", "misc", "delete", 2L, new Timestamp(1700000002000L), "c-2", Map("id" -> "2"))))
     val toml =
       s"""# reference-shaped topology (psql-streamer.toml)
          |checkpointRoot = "$root/ckpt"
@@ -186,6 +184,33 @@ class TopologySpec extends SparkSpec {
       assert(metricsBody.contains(
         """graft_observed{query="cp-ok",observation="probe",metric="n"} 3"""),
         s"observed gauge missing:\n$metricsBody")
+
+      // a change-event source held at a gap exports its backlog: the
+      // gap opens after the last batch, so only idle triggers (every
+      // 100 ms here) report it
+      val wal = Files.createTempDirectory("graft-cp-wal").toString
+      def ev(w: Long) = ChangeEvent("h", "db", "users", "insert", w,
+        new Timestamp(1700000000000L + w * 1000), s"g-$w", Map("id" -> w.toString))
+      writeSegment(wal, "seg-000.json", Seq(ev(1)))
+      val idleKey = "spark.sql.streaming.noDataProgressEventInterval"
+      spark.conf.set(idleKey, "100ms")
+      val held = try CdcPipeline.fileSource(spark, wal).writeStream.queryName("cp-cdc")
+        .outputMode("append").format("noop").start()
+      finally spark.conf.unset(idleKey)
+      try {
+        held.processAllAvailable()
+        writeSegment(wal, "seg-002.json", Seq(ev(3)))
+        val d1 = System.currentTimeMillis() + 15000
+        while (!mon.sourceMetrics("cp-cdc").contains("waitingForSegment") &&
+          System.currentTimeMillis() < d1) Thread.sleep(50)
+      } finally held.stop()
+      val (_, backlogBody) = get("/metrics")
+      assert(backlogBody.contains("# TYPE graft_source gauge"))
+      assert(backlogBody.contains("""graft_source{query="cp-cdc",metric="waitingForSegment"} 1.0"""),
+        s"source gauge missing:\n$backlogBody")
+      val unread = """graft_source\{query="cp-cdc",metric="unreadSegments"\} (\S+)""".r
+        .findFirstMatchIn(backlogBody).map(_.group(1).toDouble)
+      assert(unread.exists(_ > 0), s"unreadSegments missing or 0:\n$backlogBody")
       assert(get("/debug/on") === ((200, "Debug is now true\n")) && debugSeen && cp.isDebug)
       assert(get("/debug/off") === ((200, "Debug is now false\n")) && !debugSeen && !cp.isDebug)
       assert(get("/debug/maybe")._1 === 400)
@@ -210,7 +235,6 @@ class TopologySpec extends SparkSpec {
   }
 
   test("topology: file source → two subscribed sinks, monitored") {
-    import spark.implicits._
     val root = Files.createTempDirectory("graft-topo").toString
     val inDir = s"$root/in"; Files.createDirectories(java.nio.file.Paths.get(inDir))
     // write one "WAL segment" file of envelope JSON
@@ -218,7 +242,7 @@ class TopologySpec extends SparkSpec {
       ChangeEvent("h", "db", "users", "insert", 1L, new Timestamp(1700000001000L), "u-1", Map("id" -> "1")),
       ChangeEvent("h", "db", "orders", "update", 2L, new Timestamp(1700000002000L), "u-2", Map("id" -> "2")),
       ChangeEvent("h", "db", "misc", "delete", 3L, new Timestamp(1700000003000L), "u-3", Map("id" -> "3")))
-    events.toDF().coalesce(1).write.mode("overwrite").json(inDir)
+    writeSegment(inDir, "seg-000.json", events)
 
     val mon = Monitoring.attach(spark)
     val cfg = Topology.Config(
