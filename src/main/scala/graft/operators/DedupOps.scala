@@ -1203,22 +1203,18 @@ object DedupOps {
     * actually executes. Each round is one shuffle: propagate every
     * node's current label across its edges, take the min per node, and
     * stop at the fixpoint. Each round also pointer-jumps
-    * (label ← label(label)), so rounds needed are O(log diameter), the
-    * same asymptotics as the alternating large-star/small-star scheme
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) built from the same join/agg primitives.
+    * (label ← label(label)), so rounds needed are O(log diameter).
+    *
+    * This is the one component loop, and the 100 TB path: every round
+    * is shuffle-hash joins and a group-min over the edge and label
+    * relations, with no broadcast and no assumption that either fits
+    * on one machine.
     *
     * Input: undirected edges as (a_id, b_id). Output: (node, label)
     * with label = min node id reachable, the component's canonical id.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame = QueryScope(pairs.sparkSession) { scope =>
-    // undirect the pair graph with ONE scan: explode each pair into its
-    // two directions. A union of two selects over `pairs` would execute
-    // the (expensive) mining plan twice inside this materialization.
-    val edgesRaw = scope.persist(pairs.select(explode(array(
-        struct(col("a_id").as("src"), col("b_id").as("dst")),
-        struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst")))
+    val edgesRaw = scope.persist(undirected(pairs, "src", "dst"))
     // Right-size the loop's shuffle width from the measured edge count:
     // the near-dup pair graph is orders of magnitude smaller than the
     // corpus it was mined from, and a label relation of a few thousand
@@ -1331,150 +1327,17 @@ object DedupOps {
     }
   }
 
-  /** Connected components via alternating LARGE-STAR / SMALL-STAR
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) — the provably O(log n)-round scheme built ONLY from
-    * symmetric groupBy-min + join over the edge list: no label-map
-    * lookup join, no broadcast, no assumption that the label relation
-    * is small. This is the 100 TB path when the pair graph itself is
-    * huge; [[connectedComponents]] (hash-min + path doubling) has a
-    * smaller constant on the sparse near-dup graphs the dedup queries
-    * mine. Both return the same (node, label) contract — equivalence
-    * is property-tested on random graphs.
-    *
-    * large-star: every node connects its LARGER neighbors to the min
-    * of its closed neighborhood; small-star: connects its smaller-or-
-    * equal neighbors (and itself) to that min. Edges only ever move
-    * "downhill", and the fixpoint is a depth-1 star forest rooted at
-    * each component's minimum. */
-  def connectedComponentsStars(pairs: DataFrame, maxIter: Int = 30): DataFrame = QueryScope(pairs.sparkSession) { scope =>
-    // ONE pass over `pairs` (often an expensive mining plan whose
-    // caches are released after the first action): materialize the edge
-    // set eagerly, then derive the node set from the materialized
-    // edges — a_id < b_id in every miner, so no node exists only as a
-    // self-loop and the edge list covers the node universe. Eager on
-    // purpose: the materialization is the one action over `pairs`'
-    // plan, so it is what releases the scopes nested in it.
-    val edges0 = scope.materialize(pairs
-      .select(col("a_id").as("src"), col("b_id").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct())
-    // lazy on purpose: nodes reads the MATERIALIZED edge set, so there
-    // is no lineage hazard and no reason to pay a materialization job —
-    // it is consumed exactly once, by the final labeling join (which is
-    // why edges0 stays materialized through the loop)
-    val nodes = edges0
-      .select(explode(array(col("src"), col("dst"))).as("node"))
-      .distinct()
-    // same width discipline as the hash-min loop: per-round shuffles
-    // over a pair graph orders of magnitude smaller than the corpus
-    // should not run at the corpus' partition count (restored below)
-    val spark = pairs.sparkSession
-    val prevWidth = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.max(2L, math.min(prevWidth.toLong, edges0.count() / 500000L + 1L)).toString)
-    try {
-    // Each star op keeps ONE compaction point: sym()'s distinct. The
-    // star OUTPUTS deliberately carry duplicates — every downstream
-    // consumer is duplicate-insensitive (sym re-distincts, group-min
-    // aggregates, the final label agg is a min) — so the two output
-    // distincts the textbook formulation implies would be pure extra
-    // shuffles (~2 of 7 per round, measured ~25% of the loop).
-    // r17: symmetrize with ONE explode pass — the union of two selects
-    // embedded the (join-heavy) star-output plan twice per sym()
-    def sym(d: DataFrame): DataFrame =
-      d.select(explode(array(
-          struct(col("src"), col("dst")),
-          struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-        .distinct()
-    def star(d: DataFrame, large: Boolean): DataFrame = {
-      val sd = sym(d)
-      val m = sd.groupBy("src").agg(min(col("dst")).as("mn"))
-        .select(col("src"), least(col("mn"), col("src")).as("m"))
-      val j = sd.join(m, "src")
-      val out =
-        if (large) j.filter(col("dst") > col("src"))
-          .select(col("dst").as("src"), col("m").as("dst"))
-        else j.filter(col("dst") < col("src"))
-          .select(col("dst").as("src"), col("m").as("dst"))
-          .union(m.select(col("src"), col("m").as("dst")))
-      out.filter(col("src") =!= col("dst"))
-    }
-    var e = edges0
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      // materialized: same reasoning as the hash-min loop — each round
-      // must not nest the previous round's whole plan tree, and runs one
-      // job (the forest test below computes and keeps the rows)
-      val next = scope.materialize(star(star(e, large = true), large = false), eager = false)
-      // STRUCTURAL convergence (r17, replacing r16's set-equality
-      // compare of consecutive rounds): the fixpoint of alternating
-      // large-star/small-star is exactly a depth-1 star forest rooted
-      // at each component's minimum (Kiveris et al. SoCC'14 — their
-      // convergence theorem states the terminal output shape), so
-      // test `next` ITSELF for forest-ness instead of waiting for the
-      // following round to reproduce it:
-      //   (i)  every edge points downhill (dst < src) — guaranteed by
-      //        construction: both small-star output branches emit
-      //        (x, m) with m < x after the src =!= dst filter, so
-      //        [[isStarForest]] asserts it instead of testing it;
-      //   (ii) every src has a single distinct dst;
-      //   (iii) no dst appears as a src (depth 1).
-      // (i)+(ii)+(iii) ⟺ star forest ⟺ star(star(next)) ≡ next as a
-      // set (stars map a star forest to itself — each member's closed
-      // neighborhood already contains its root, the component min).
-      // The old criterion fired one full round LATER: it had to pay a
-      // third star round just to reproduce the forest before the
-      // equality compare could see it. Output is unchanged — the old
-      // loop's final `e` was set-equal to the forest this check stops
-      // at, and every downstream consumer (the final group-min
-      // labeling) is duplicate-insensitive. One job over `next` alone
-      // (the old compare also scanned `e`).
-      converged = isStarForest(next)
-      if (e ne edges0) scope.unpersist(e)
-      e = next
-      iter += 1
-    }
-    require(converged, s"connectedComponentsStars did not converge in $maxIter rounds")
-    // fixpoint edges are (node, root) stars; roots have no outgoing edge
-    nodes.join(
-        e.select(col("src").as("node"), col("dst").as("root"))
-          .groupBy("node").agg(min(col("root")).as("root")),
-        Seq("node"), "left_outer")
-      .select(col("node"), coalesce(col("root"), col("node")).as("label"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevWidth)
-  }
-
-  /** Whether a (src, dst) edge set that points downhill is a depth-1
-    * star forest — the fixpoint test of [[connectedComponentsStars]]:
-    * every src has one distinct dst, and no dst is itself a src. The
-    * downhill invariant (dst < src on every edge) is checked in the
-    * same aggregation, one job: an uphill edge means the star rounds
-    * are broken, so it throws instead of reporting "not converged". */
-  private[graft] def isStarForest(edges: DataFrame): Boolean = {
-    val dt = edges.schema("dst").dataType
-    val r = edges.select(col("src").as("n"), col("dst"), lit(1).as("tg"))
-      .union(edges.select(col("dst").as("n"),
-        lit(null).cast(dt).as("dst"), lit(2).as("tg")))
-      .groupBy("n")
-      .agg(min(col("tg")).as("lotg"), max(col("tg")).as("hitg"),
-        min(col("dst")).as("lo"), max(col("dst")).as("hi"))
-      .agg(
-        // uphill: a node whose largest target is not below it
-        // (max ignores the tag-2 nulls)
-        count(when(col("lotg") === 1 && col("hi") >= col("n"), 1)).as("uphill"),
-        // open: the node emits edges (lotg = 1) AND is either pointed
-        // at itself (hitg = 2, depth > 1) or points at two distinct
-        // targets (lo ≠ hi)
-        count(when(col("lotg") === 1 &&
-          (col("hitg") === 2 || col("lo") =!= col("hi")), 1)).as("open"))
-      .head()
-    val uphill = r.getLong(0)
-    if (uphill > 0) throw new IllegalStateException(
-      s"star forest invariant broken: $uphill nodes have an edge with dst >= src")
-    r.getLong(1) == 0
+  /** Both directions of every pair in `pairs` (a_id, b_id, carry...)
+    * as (`src`, `dst`, carry...); the `carry` columns pass through
+    * unchanged. Each pair row explodes into its two directions, so
+    * `pairs` is scanned once: a union of two selects would run the
+    * (often expensive) mining plan behind it twice. */
+  private[graft] def undirected(pairs: DataFrame, src: String, dst: String,
+      carry: String*): DataFrame = {
+    def direction(from: String, to: String): Column =
+      struct(col(from).as(src) +: col(to).as(dst) +: carry.map(col): _*)
+    pairs.select(explode(array(direction("a_id", "b_id"), direction("b_id", "a_id"))).as("e"))
+      .select((src +: dst +: carry).map(c => col(s"e.$c").as(c)): _*)
   }
 
   /** Dedup clustering over the CAPPED jaccard pair graph (the scale-safe
@@ -1482,22 +1345,22 @@ object DedupOps {
     * the component size, and a keep/drop flag (`is_canonical` = the one
     * survivor per cluster — min doc_id, deterministic). */
   def qDedupClusters(spark: SparkSession, sfDir: String): DataFrame =
-    clustersOn(cappedJaccardPairs(spark, sfDir).select("a_id", "b_id"))
+    clustersOn(cappedJaccardPairs(spark, sfDir).select("a_id", "b_id"), "doc_id")
 
-  /** Cluster-report body over an already-mined pair relation — shared
-    * by the self-contained miner above and the stored-edges variant
-    * ([[qDedupClustersStored]]). */
-  private def clustersOn(pairs: DataFrame): DataFrame = {
-    val comp = connectedComponents(pairs)
+  /** Cluster report over an already-mined pair relation, one row per
+    * matched node: (`idCol`, cluster_id, csize, is_canonical). Shared by
+    * every text and semantic cluster query, live and stored. */
+  private[graft] def clustersOn(pairs: DataFrame, idCol: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("cluster_id"))
-    comp.select(col("node").as("doc_id"), col("label").as("cluster_id"))
+    connectedComponents(pairs)
+      .select(col("node").as(idCol), col("label").as("cluster_id"))
       .withColumn("csize", count(lit(1)).over(w))
-      .withColumn("is_canonical", col("doc_id") === col("cluster_id"))
+      .withColumn("is_canonical", col(idCol) === col("cluster_id"))
   }
 
   /** Stored TEXT near-dup edge parquet locations, per dataset — the
-    * text mirror of `SimilarityOps.annEdgesStored`. Three queries
-    * (clusters, star-clusters, representatives) consume the SAME
+    * text mirror of `SimilarityOps.annEdgesStored`. The cluster,
+    * representative and cluster-split queries consume the SAME
     * capped-Jaccard pair graph and each re-mined it per invocation
     * (shingle explode + inverted-index join + verification, ~half of
     * each query's cost at sf0.1; at 100 TB, three full mining passes).
@@ -1521,7 +1384,7 @@ object DedupOps {
     * document (plan-pinned). Marginal cost is the component
     * iterations only. */
   def qDedupClustersStored(spark: SparkSession, sfDir: String): DataFrame =
-    clustersOn(textEdgesStored(spark, sfDir).select("a_id", "b_id"))
+    clustersOn(textEdgesStored(spark, sfDir).select("a_id", "b_id"), "doc_id")
 
   val qDedupClustersOracle: String =
     s"""WITH RECURSIVE $shinglesSql,
@@ -1708,25 +1571,6 @@ object DedupOps {
        |  SELECT a_id, b_id, 'neg' AS label FROM negs)
        |ORDER BY label, a_id, b_id""".stripMargin
 
-  /** [[qDedupClusters]] computed by the large-star/small-star scheme —
-    * same contract, same oracle; registered separately so the driver
-    * gate covers BOTH component algorithms end-to-end. */
-  def qDedupClustersStars(spark: SparkSession, sfDir: String): DataFrame =
-    starsOn(cappedJaccardPairs(spark, sfDir).select("a_id", "b_id"))
-
-  /** [[qDedupClustersStars]] served from the STORED edge artifact —
-    * both component algorithms get the mining-free path. */
-  def qDedupClustersStarsStored(spark: SparkSession, sfDir: String): DataFrame =
-    starsOn(textEdgesStored(spark, sfDir).select("a_id", "b_id"))
-
-  private def starsOn(pairs: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("cluster_id"))
-    connectedComponentsStars(pairs)
-      .select(col("node").as("doc_id"), col("label").as("cluster_id"))
-      .withColumn("csize", count(lit(1)).over(w))
-      .withColumn("is_canonical", col("doc_id") === col("cluster_id"))
-  }
-
   /** Quality-aware representative selection + corpus keep-list — the
     * DELIVERABLE of a dedup run. [[qDedupClusters]]'s `is_canonical`
     * keeps the min doc_id (deterministic but arbitrary); production
@@ -1814,15 +1658,9 @@ object DedupOps {
     * the DuckDB oracle can reproduce it); at 100 TB swap in the
     * LSH/IVF candidate pairs as edges — [[connectedComponents]] is
     * agnostic to how the pair graph was mined. */
-  def qDedupSemanticClusters(spark: SparkSession, sfDir: String): DataFrame = {
-    val pairs = exactCosinePairs(normedVectors(Tables.embeddings(spark, sfDir)))
-      .select("a_id", "b_id")
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("cluster_id"))
-    connectedComponents(pairs)
-      .select(col("node").as("vec_id"), col("label").as("cluster_id"))
-      .withColumn("csize", count(lit(1)).over(w))
-      .withColumn("is_canonical", col("vec_id") === col("cluster_id"))
-  }
+  def qDedupSemanticClusters(spark: SparkSession, sfDir: String): DataFrame =
+    clustersOn(exactCosinePairs(normedVectors(Tables.embeddings(spark, sfDir)))
+      .select("a_id", "b_id"), "vec_id")
 
   val qDedupSemanticClustersOracle: String =
     """WITH RECURSIVE
@@ -1975,18 +1813,7 @@ object DedupOps {
   def qDedupSemanticClustersAnn(spark: SparkSession, sfDir: String): DataFrame = {
     val e = normedVectors(Tables.embeddings(spark, sfDir))
     val n = annSizingCount(sfDir, e.count())
-    semanticClustersOn(annCosinePairs(e, knownN = n))
-  }
-
-  /** Components body over an already-mined pair relation — shared by
-    * the self-contained ANN miner above and the stored-edges variant
-    * (`SimilarityOps.qDedupSemanticClustersAnnStored`). */
-  private[graft] def semanticClustersOn(pairs: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("cluster_id"))
-    connectedComponents(pairs)
-      .select(col("node").as("vec_id"), col("label").as("cluster_id"))
-      .withColumn("csize", count(lit(1)).over(w))
-      .withColumn("is_canonical", col("vec_id") === col("cluster_id"))
+    clustersOn(annCosinePairs(e, knownN = n), "vec_id")
   }
 
   val qDedupSemanticClustersAnnOracle: String =
@@ -2891,8 +2718,9 @@ object DedupOps {
     "dedup_embedding_cosine" -> (qDedupEmbedding _),
     "dedup_clusters" -> (qDedupClusters _),
     "dedup_clusters_stored" -> (qDedupClustersStored _),
-    "dedup_clusters_stars" -> (qDedupClustersStars _),
-    "dedup_clusters_stars_stored" -> (qDedupClustersStarsStored _),
+    // kept names of the query contract: the clusters builders and oracle
+    "dedup_clusters_stars" -> (qDedupClusters _),
+    "dedup_clusters_stars_stored" -> (qDedupClustersStored _),
     "dedup_representatives" -> (qDedupRepresentatives _),
     "dedup_representatives_stored" -> (qDedupRepresentativesStored _),
     "dedup_lsh_audit" -> (qDedupLshAudit _),

@@ -1101,16 +1101,7 @@ object SimilarityOps {
     * and the stored-edges variant ([[qSimKnnGraphStored]]). */
   private def knnGraphOn(scored: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // r17: symmetrize with ONE explode pass — the union of two selects
-    // executed the upstream plan twice (for the live miner that is the
-    // whole LSH bucket join + cosine verification; at scale, two
-    // corpus passes for one candidate list)
-    val sym = scored.select(explode(array(
-        struct(col("a_id").as("vec_id"), col("b_id").as("n_id"), col("cosine")),
-        struct(col("b_id").as("vec_id"), col("a_id").as("n_id"), col("cosine"))))
-        .as("p"))
-      .select(col("p.vec_id").as("vec_id"), col("p.n_id").as("n_id"),
-        col("p.cosine").as("cosine"))
+    val sym = DedupOps.undirected(scored, "vec_id", "n_id", "cosine")
     val w = Window.partitionBy(col("vec_id"))
       .orderBy(col("cosine").desc, col("n_id"))
     sym.withColumn("rank", row_number().over(w))
@@ -1466,16 +1457,7 @@ object SimilarityOps {
     val matched = scored
       .filter(col("cosine") >= 0.4)
       .select(col("a_id"), col("b_id"))
-    // r17: symmetrize with ONE explode pass (the connectedComponents
-    // idiom) — the union of two selects executed the upstream MINING
-    // plan twice inside the edge materialization (the plan held two
-    // full bucket-join + verification subtrees; at scale, two corpus
-    // passes for one edge list)
-    val edges = matched.select(explode(array(
-        struct(col("a_id").as("src"), col("b_id").as("dst")),
-        struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .transform(scope.persist)
+    val edges = DedupOps.undirected(matched, "src", "dst").transform(scope.persist)
     val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val verts = e.select(col("vec_id"))
     def idiv(a: Column, b: Column): Column = (a / b).cast("long")
@@ -1700,10 +1682,10 @@ object SimilarityOps {
     * downstream analytic of the mined semantic graph (components,
     * kNN, PageRank, triangles) has a mining-free production path. */
   def qDedupSemanticClustersAnnStored(spark: SparkSession, sfDir: String): DataFrame =
-    DedupOps.semanticClustersOn(
+    DedupOps.clustersOn(
       annEdgesStored(spark, sfDir)
         .filter(col("cosine") >= 0.4)
-        .select(col("a_id"), col("b_id")))
+        .select(col("a_id"), col("b_id")), "vec_id")
 
   // ---- Product quantization (PQ encode + IVF-ADC search) ----
 
@@ -2204,14 +2186,7 @@ object SimilarityOps {
     val n = DedupOps.annSizingCount(sfDir, e.count())
     val scored = DedupOps.annScoredPairs(e, knownN = n)
     val labels = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("label"))
-    // r17: symmetrize with ONE explode pass — the union of two selects
-    // embedded the whole mining plan twice (the knnGraphOn fix)
-    val sym = scored.select(explode(array(
-        struct(col("a_id").as("vec_id"), col("b_id").as("n_id"), col("cosine")),
-        struct(col("b_id").as("vec_id"), col("a_id").as("n_id"), col("cosine"))))
-        .as("p"))
-      .select(col("p.vec_id").as("vec_id"), col("p.n_id").as("n_id"),
-        col("p.cosine").as("cosine"))
+    val sym = DedupOps.undirected(scored, "vec_id", "n_id", "cosine")
     val w = Window.partitionBy(col("vec_id"))
       .orderBy(col("cosine").desc, col("n_id"))
     sym

@@ -37,8 +37,11 @@ import scala.util.control.NonFatal
   *                    or `_` are skipped, so a writer lands a segment
   *                    atomically by renaming a hidden file into place.
   *   - offset       = the number of the last segment consumed ≡ the WAL
-  *                    position; none before the first trigger, which
-  *                    starts at the lowest number listed
+  *                    position, and the query's start: the lowest
+  *                    number listed at the first trigger that found a
+  *                    segment. The start is kept in the offset, so it
+  *                    survives a restart; a segment that lands below it
+  *                    is never read, and is counted (metrics below).
   *   - latestOffset = the gap-free run of numbers past the offset,
   *                    capped by `maxFilesPerTrigger` via admission
   *                    control — the mux batchSize count-trigger
@@ -46,7 +49,8 @@ import scala.util.control.NonFatal
   *                    later segment until it lands; the hold is never
   *                    silent, see the source metrics below.
   *   - commit(end)  = the post-ACK WAL persist hook: Spark calls it only
-  *                    after the epoch's sinks committed; it is recorded
+  *                    after the epoch's sinks committed (for batch N,
+  *                    when it plans batch N+1); it is recorded
   *                    (observable in tests; the checkpoint is the
   *                    durable store)
   *
@@ -56,7 +60,10 @@ import scala.util.control.NonFatal
   * share one, and when a replayed batch needs a segment that is gone.
   *
   * Source metrics (`StreamingQueryProgress.sources(i).metrics`):
-  * `committedSegment`, `highestLandedSegment`, `unreadSegments`, and
+  * `committedSegment` (the last segment of the batch whose progress is
+  * reported; Spark reports it after the batch's commit-log write),
+  * `highestLandedSegment`, `unreadSegments`, `landedBelowStart` (listed
+  * segments numbered below the start, never read), and
   * `waitingForSegment` — the first missing number, present only while it
   * holds back later segments. -1 stands for "none".
   *
@@ -106,16 +113,16 @@ private[sources] final class CdcFileTable(options: CaseInsensitiveStringMap)
     }
 }
 
-/** Offset = number of the last segment consumed, -1 before the first. */
-private[sources] final case class SegmentOffset(segment: Long) extends Offset {
-  override def json(): String = s"""{"segment":$segment}"""
+/** Offset = number of the last segment consumed and the query's start
+  * segment, each -1 before the first. */
+private[sources] final case class SegmentOffset(segment: Long, start: Long) extends Offset {
+  override def json(): String = s"""{"segment":$segment,"start":$start}"""
 }
 
 private[sources] final class CdcFileMicroBatchStream(dir: String,
     maxFilesPerTrigger: Option[Int], timeZone: String)
     extends MicroBatchStream with SupportsAdmissionControl with ReportsSourceMetrics {
 
-  @volatile private var lastCommitted = -1L
   @volatile private var backlog = Map.empty[String, Long]
 
   private def fail(what: String): Nothing =
@@ -144,14 +151,21 @@ private[sources] final class CdcFileMicroBatchStream(dir: String,
     SortedMap.from(byNumber.view.mapValues(_.head))
   }
 
-  private def number(o: Offset): Long = o.asInstanceOf[SegmentOffset].segment
+  /** Spark hands back offsets it read from the checkpoint in serialized
+    * form, e.g. to `metrics` while a recovered batch re-runs. */
+  private def segmentOffset(o: Offset): SegmentOffset = o match {
+    case s: SegmentOffset => s
+    case other => deserializeOffset(other.json()).asInstanceOf[SegmentOffset]
+  }
 
-  override def initialOffset(): Offset = SegmentOffset(-1L)
+  override def initialOffset(): Offset = SegmentOffset(-1L, -1L)
+  /** A checkpoint written before offsets kept the start reads it as -1. */
   override def deserializeOffset(json: String): Offset = {
-    val n = new ObjectMapper().readTree(json).path("segment")
+    val o = new ObjectMapper().readTree(json)
+    val n = o.path("segment")
     if (!n.isIntegralNumber)
       fail(s"offset $json is no segment number; a checkpoint of another source cannot be resumed")
-    SegmentOffset(n.asLong())
+    SegmentOffset(n.asLong(), o.path("start").asLong(-1L))
   }
 
   override def getDefaultReadLimit: ReadLimit =
@@ -163,7 +177,7 @@ private[sources] final class CdcFileMicroBatchStream(dir: String,
       "latestOffset(Offset, ReadLimit) is used (SupportsAdmissionControl)")
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val from = number(start)
+    val SegmentOffset(from, started) = segmentOffset(start)
     val listed = listing()
     val segs = unread(listed, from)
     val cap = limit match { case m: ReadMaxFiles => m.maxFiles().toLong; case _ => Long.MaxValue }
@@ -171,17 +185,21 @@ private[sources] final class CdcFileMicroBatchStream(dir: String,
     val run = Iterator.iterate(first)(_ + 1)
       .takeWhile(k => segs.contains(k) && k - first < cap).size
     val end = if (run == 0) from else first + run - 1
+    val startSeg = if (from < 0 && run > 0) first else started
     backlog = Map(
       "highestLandedSegment" -> listed.map(_._1).maxOption.getOrElse(-1L),
-      "unreadSegments" -> segs.keysIterator.count(_ > end).toLong) ++
+      "unreadSegments" -> segs.keysIterator.count(_ > end).toLong,
+      "landedBelowStart" -> listed.count(_._1 < startSeg).toLong) ++
       Option.when(!segs.contains(end + 1) && segs.keysIterator.exists(_ > end + 1))(
         "waitingForSegment" -> (end + 1))
-    SegmentOffset(end)
+    SegmentOffset(end, startSeg)
   }
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val (from, to) = (number(start), number(end))
-    val segs = unread(listing(), from).rangeTo(to)
+    val (from, SegmentOffset(to, started)) = (segmentOffset(start).segment, segmentOffset(end))
+    // a replayed first batch reads from the start its end offset kept,
+    // not from a segment that landed below it since
+    val segs = unread(listing(), if (from >= 0) from else started - 1).rangeTo(to)
     val first = if (from >= 0) from + 1 else segs.headOption.fold(to)(_._1)
     (first to to).find(k => !segs.contains(k)).foreach(k =>
       fail(s"segment $k, admitted by an earlier trigger, is no longer listed"))
@@ -193,14 +211,16 @@ private[sources] final class CdcFileMicroBatchStream(dir: String,
 
   /** Called only after the epoch's sinks committed — the DSv2 analog of
     * persistWAL-after-ACK. */
-  override def commit(end: Offset): Unit = {
-    lastCommitted = number(end)
-    CdcFileSource.committed.put(dir, lastCommitted)
-  }
+  override def commit(end: Offset): Unit =
+    CdcFileSource.committed.put(dir, segmentOffset(end).segment)
 
-  /** The backlog as of the latest listing. */
-  override def metrics(latestConsumedOffset: java.util.Optional[Offset]): java.util.Map[String, String] =
-    (backlog + ("committedSegment" -> lastCommitted)).map { case (k, v) => k -> v.toString }.asJava
+  /** The backlog as of the latest listing, and the end of the batch
+    * whose progress Spark reports, which it reports after that batch's
+    * commit-log write. */
+  override def metrics(latestConsumedOffset: java.util.Optional[Offset]): java.util.Map[String, String] = {
+    val consumed = latestConsumedOffset.map[Long](o => segmentOffset(o).segment).orElse(-1L)
+    (backlog + ("committedSegment" -> consumed)).map { case (k, v) => k -> v.toString }.asJava
+  }
 
   override def stop(): Unit = ()
 }

@@ -130,6 +130,121 @@ class CdcSourceSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  /** Starts the bare source over `in` into a sink that records each
+    * batch's WAL positions; idle triggers report progress every 100 ms. */
+  private def startRecording(root: String, in: String,
+      batches: java.util.concurrent.ConcurrentLinkedQueue[Seq[Long]]) = {
+    val key = "spark.sql.streaming.noDataProgressEventInterval"
+    spark.conf.set(key, "100ms")
+    try spark.readStream.format(CdcFileSource.Name).option("path", in).load()
+      .writeStream.option("checkpointLocation", s"$root/ckpt")
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        batches.add(b.select("walPosition").collect().map(_.getLong(0)).toSeq.sorted); (): Unit
+      }.start()
+    finally spark.conf.unset(key)
+  }
+
+  test("DSv2 source: committedSegment reads the last batch once its sinks finished") {
+    val root = Files.createTempDirectory("graft-dsv2-committed").toString
+    val in = s"$root/wal"; Files.createDirectories(Paths.get(in))
+    writeSegment(in, "seg-007.json", Seq(ev(1)))
+    val q = spark.readStream.format(CdcFileSource.Name).option("path", in).load()
+      .writeStream.option("checkpointLocation", s"$root/ckpt")
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        b.write.mode("append").parquet(s"$root/out"); (): Unit
+      }.start()
+    try {
+      q.processAllAvailable()
+      // the only batch: Spark has not called commit for it (it does so
+      // when it plans the next batch), but its progress is reported
+      // after its commit-log write
+      assert(spark.read.parquet(s"$root/out").count() === 1L)
+      assert(q.lastProgress.sources(0).metrics.get("committedSegment") === "7")
+    } finally q.stop()
+  }
+
+  test("DSv2 source: a batch re-run from the checkpoint reports its segment") {
+    val root = Files.createTempDirectory("graft-dsv2-rerun").toString
+    val in = s"$root/wal"; Files.createDirectories(Paths.get(in))
+    writeSegment(in, "seg-003.json", Seq(ev(1)))
+    def start(sinkUp: Boolean) = spark.readStream.format(CdcFileSource.Name).option("path", in).load()
+      .writeStream.option("checkpointLocation", s"$root/ckpt")
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        if (!sinkUp) throw new IllegalStateException("sink down")
+        b.write.mode("append").parquet(s"$root/out"); (): Unit
+      }.start()
+    val down = start(sinkUp = false)
+    try intercept[org.apache.spark.sql.streaming.StreamingQueryException](down.processAllAvailable())
+    finally down.stop()
+    // batch 0 is in the offset log but not the commit log: the restart
+    // re-runs it from the checkpoint's serialized offsets
+    val q = start(sinkUp = true)
+    try {
+      q.processAllAvailable()
+      assert(spark.read.parquet(s"$root/out").count() === 1L)
+      assert(q.lastProgress.sources(0).metrics.get("committedSegment") === "3")
+    } finally q.stop()
+  }
+
+  test("DSv2 source: a segment landed below the query's start is counted, and the start survives a restart") {
+    val root = Files.createTempDirectory("graft-dsv2-below").toString
+    val in = s"$root/wal"; Files.createDirectories(Paths.get(in))
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Long]]()
+    writeSegment(in, "seg-005.json", Seq(ev(5)))
+    val q = startRecording(root, in, batches)
+    try {
+      q.processAllAvailable()
+      writeSegment(in, "seg-004.json", Seq(ev(4)))
+      writeSegment(in, "seg-006.json", Seq(ev(6)))
+      q.processAllAvailable()
+      // the start (5) is the lowest number the first trigger listed;
+      // segment 4 landed below it and is never read
+      assert(batches.asScala.toSeq.flatten === Seq(5L, 6L))
+      val m = sourceMetrics(q)
+      assert(m("landedBelowStart") === "1")
+      assert(m("unreadSegments") === "0")
+      assert(!m.contains("waitingForSegment"))
+    } finally q.stop()
+    // the start comes back from the checkpoint's offsets, not from a
+    // new listing, which would now start at segment 3
+    writeSegment(in, "seg-003.json", Seq(ev(3)))
+    writeSegment(in, "seg-007.json", Seq(ev(7)))
+    val q2 = startRecording(root, in, batches)
+    try {
+      q2.processAllAvailable()
+      await(s"below-start count after restart: ${sourceMetrics(q2)}")(
+        sourceMetrics(q2).get("landedBelowStart").contains("2"))
+      assert(batches.asScala.toSeq.flatten === Seq(5L, 6L, 7L))
+    } finally q2.stop()
+  }
+
+  test("DSv2 source: a checkpoint whose offsets carry no start still resumes") {
+    val root = Files.createTempDirectory("graft-dsv2-nostart").toString
+    val in = s"$root/wal"; Files.createDirectories(Paths.get(in))
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Long]]()
+    writeSegment(in, "seg-000.json", Seq(ev(1)))
+    val q = startRecording(root, in, batches)
+    try q.processAllAvailable() finally q.stop()
+    // rewrite the offsets as a source without the start wrote them
+    val offsets = Files.list(Paths.get(s"$root/ckpt/offsets")).iterator().asScala
+      .filterNot(_.getFileName.toString.startsWith(".")).toList
+    assert(offsets.nonEmpty)
+    offsets.foreach { f =>
+      val text = new String(Files.readAllBytes(f), "UTF-8")
+      assert(text.contains("\"start\":0"), text)
+      Files.write(f, text.replaceAll(""","start":-?\d+""", "").getBytes("UTF-8"))
+      Files.deleteIfExists(f.resolveSibling(s".${f.getFileName}.crc"))
+    }
+    writeSegment(in, "seg-001.json", Seq(ev(2)))
+    val q2 = startRecording(root, in, batches)
+    try {
+      q2.processAllAvailable()
+      assert(batches.asScala.toSeq.flatten === Seq(1L, 2L))
+      await(s"metrics after resume: ${sourceMetrics(q2)}")(
+        sourceMetrics(q2).get("landedBelowStart").contains("0"))
+    } finally q2.stop()
+  }
+
   test("DSv2 source: a consumed segment landed again is not read twice") {
     val root = Files.createTempDirectory("graft-dsv2-dup").toString
     val in = s"$root/wal"; Files.createDirectories(Paths.get(in))

@@ -4,12 +4,11 @@ import graft.operators.DedupOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Equivalence + correctness of the two connected-components
-  * implementations: hash-min + path doubling ([[DedupOps.connectedComponents]])
-  * and large-star/small-star ([[DedupOps.connectedComponentsStars]]).
-  * Both must label every node with the minimum node id of its
-  * component — checked against a driver-side union-find oracle on
-  * adversarial shapes and seeded random graphs. */
+/** Correctness of the connected-components loop, hash-min + path
+  * doubling ([[DedupOps.connectedComponents]]): it must label every node
+  * with the minimum node id of its component — checked against a
+  * driver-side union-find oracle on adversarial shapes and seeded
+  * random graphs. */
 class ComponentsSpec extends SparkSpec {
 
   private def oracle(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
@@ -34,29 +33,25 @@ class ComponentsSpec extends SparkSpec {
   private def labelsOf(df: DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-  private def checkBoth(pairs: Seq[(Long, Long)]): Unit = {
-    val want = oracle(pairs)
-    val hashMin = labelsOf(DedupOps.connectedComponents(toDf(pairs)))
-    val stars = labelsOf(DedupOps.connectedComponentsStars(toDf(pairs)))
-    assert(hashMin === want, "hash-min + doubling disagrees with union-find")
-    assert(stars === want, "large-star/small-star disagrees with union-find")
-  }
+  private def check(pairs: Seq[(Long, Long)]): Unit =
+    assert(labelsOf(DedupOps.connectedComponents(toDf(pairs))) === oracle(pairs),
+      "hash-min + doubling disagrees with union-find")
 
   test("adversarial shapes: path, descending path, star, ring, forest, dumbbell") {
     // long path, ids ascending then descending (order affects min flow)
-    checkBoth((1L to 40L).sliding(2).map(s => (s(0), s(1))).toSeq)
-    checkBoth((1L to 40L).sliding(2).map(s => (s(1), s(0))).toSeq)
+    check((1L to 40L).sliding(2).map(s => (s(0), s(1))).toSeq)
+    check((1L to 40L).sliding(2).map(s => (s(1), s(0))).toSeq)
     // star centered high and low
-    checkBoth((1L to 20L).map(i => (100L, i)))
-    checkBoth((2L to 20L).map(i => (1L, i)))
+    check((1L to 20L).map(i => (100L, i)))
+    check((2L to 20L).map(i => (1L, i)))
     // ring
-    checkBoth((1L to 30L).sliding(2).map(s => (s(0), s(1))).toSeq :+ (30L, 1L))
+    check((1L to 30L).sliding(2).map(s => (s(0), s(1))).toSeq :+ (30L, 1L))
     // forest of separate components
-    checkBoth(Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (21L, 22L), (22L, 20L)))
+    check(Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (21L, 22L), (22L, 20L)))
     // two cliques bridged by one edge
     val cliqueA = for (i <- 1L to 6L; j <- (i + 1) to 6L) yield (i, j)
     val cliqueB = for (i <- 11L to 16L; j <- (i + 1) to 16L) yield (i, j)
-    checkBoth(cliqueA ++ cliqueB :+ ((6L, 11L)))
+    check(cliqueA ++ cliqueB :+ ((6L, 11L)))
   }
 
   test("signature convergence: empty and single-pair inputs terminate cleanly") {
@@ -76,31 +71,8 @@ class ComponentsSpec extends SparkSpec {
       val n = 60
       val pairs = Seq.fill(45)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter { case (a, b) => a != b }
-      checkBoth(pairs)
+      check(pairs)
     }
-  }
-
-  test("stars fixpoint is a depth-1 forest rooted at component minima") {
-    val pairs = (1L to 25L).sliding(2).map(s => (s(0), s(1))).toSeq
-    val labels = labelsOf(DedupOps.connectedComponentsStars(toDf(pairs)))
-    // single path component → every node labeled 1
-    assert(labels.values.toSet === Set(1L))
-    assert(labels.keySet === (1L to 25L).toSet)
-  }
-
-  test("stars convergence check: forest, open shapes, and a loud uphill-edge failure") {
-    import spark.implicits._
-    def edges(es: (Long, Long)*): DataFrame = es.toDF("src", "dst")
-    // two stars rooted at their minima; and no edges at all
-    assert(DedupOps.isStarForest(edges((2L, 1L), (3L, 1L), (9L, 7L))))
-    assert(DedupOps.isStarForest(edges()))
-    // depth 2 (3 → 2 → 1), and a node pointing at two roots
-    assert(!DedupOps.isStarForest(edges((3L, 2L), (2L, 1L))))
-    assert(!DedupOps.isStarForest(edges((5L, 1L), (5L, 2L))))
-    // an uphill edge is a broken loop, not an unconverged one
-    val e = intercept[IllegalStateException](
-      DedupOps.isStarForest(edges((2L, 1L), (3L, 4L))))
-    assert(e.getMessage.contains("1 nodes have an edge with dst >= src"))
   }
 
   test("ANN-mined clusters refine the exact clustering with bounded edge recall") {

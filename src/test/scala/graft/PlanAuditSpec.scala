@@ -947,10 +947,36 @@ class PlanAuditSpec extends SparkSpec {
       "stored clusters diverged from self-contained")
     assert(rows(storedR) === rows(graft.operators.DedupOps.qDedupRepresentatives(spark, sf)),
       "stored representatives diverged from self-contained")
-    assert(rows(graft.operators.DedupOps.qDedupClustersStarsStored(spark, sf)) ===
-      rows(graft.operators.DedupOps.qDedupClustersStars(spark, sf)),
-      "stored star-clusters diverged from self-contained")
     spark.catalog.clearCache()
+  }
+
+  test("undirected edges scan the pair relation once; a union of two selects scans it twice") {
+    // Every graph query undirects its mined pairs through
+    // DedupOps.undirected because the explode keeps the upstream plan
+    // to one copy. Pinned on a parquet-backed pair relation, with the
+    // union the helper replaces as the control.
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    import org.apache.spark.sql.functions.col
+    val tmp = java.nio.file.Files.createTempDirectory("graft_undirected_plan")
+    try {
+      val dir = tmp.resolve("pairs").toString
+      spark.range(50).select(col("id").as("a_id"), (col("id") + 1).as("b_id"),
+        (col("id") * 0.01).as("cosine")).write.parquet(dir)
+      val pairs = spark.read.parquet(dir)
+      def scans(df: DataFrame): Int =
+        df.queryExecution.optimizedPlan.collect { case r: LogicalRelation => r }.size
+      val sym = graft.operators.DedupOps.undirected(pairs, "vec_id", "n_id", "cosine")
+      assert(scans(sym) === 1, s"undirected scans the pairs more than once:\n" +
+        sym.queryExecution.optimizedPlan)
+      assert(sym.columns.toSeq === Seq("vec_id", "n_id", "cosine"))
+      assert(sym.count() === 100L)
+      val union = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
+        .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
+      assert(scans(union) === 2, "the union control no longer scans twice — update this pin")
+    } finally {
+      import scala.reflect.io.Directory
+      new Directory(tmp.toFile).deleteRecursively()
+    }
   }
 
   test("stored tf-idf serves the idf artifact and equals the live ranking row-for-row") {

@@ -36,15 +36,12 @@ class QueryScopeSpec extends SparkSpec with Eventually {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (6L, 5L)).toDF("a_id", "b_id")
     val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 5L, 6L -> 5L)
     def labels(df: DataFrame) = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    for (cc <- Seq[DataFrame => DataFrame](DedupOps.connectedComponents(_),
-        DedupOps.connectedComponentsStars(_))) {
-      val before = persistentRdds
-      val result = cc(pairs)
-      assert(labels(result) === want)
-      eventually(timeout(Span(30, Seconds)))(assert(persistentRdds -- before === Set.empty[Int]))
-      // the rounds' rows are gone; their lineage recomputes them
-      assert(labels(result) === want)
-    }
+    val before = persistentRdds
+    val result = DedupOps.connectedComponents(pairs)
+    assert(labels(result) === want)
+    eventually(timeout(Span(30, Seconds)))(assert(persistentRdds -- before === Set.empty[Int]))
+    // the rounds' rows are gone; their lineage recomputes them
+    assert(labels(result) === want)
   }
 
   test("a lazy materialization is computed and kept by its first action") {

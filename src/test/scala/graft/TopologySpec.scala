@@ -211,6 +211,9 @@ class TopologySpec extends SparkSpec {
       val unread = """graft_source\{query="cp-cdc",metric="unreadSegments"\} (\S+)""".r
         .findFirstMatchIn(backlogBody).map(_.group(1).toDouble)
       assert(unread.exists(_ > 0), s"unreadSegments missing or 0:\n$backlogBody")
+      for (m <- Seq("committedSegment", "landedBelowStart"))
+        assert(backlogBody.contains(s"""graft_source{query="cp-cdc",metric="$m"} 0.0"""),
+          s"$m gauge missing:\n$backlogBody")
       assert(get("/debug/on") === ((200, "Debug is now true\n")) && debugSeen && cp.isDebug)
       assert(get("/debug/off") === ((200, "Debug is now false\n")) && !debugSeen && !cp.isDebug)
       assert(get("/debug/maybe")._1 === 400)
