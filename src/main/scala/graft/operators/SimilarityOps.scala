@@ -1457,7 +1457,9 @@ object SimilarityOps {
     val matched = scored
       .filter(col("cosine") >= 0.4)
       .select(col("a_id"), col("b_id"))
-    val edges = DedupOps.undirected(matched, "src", "dst").transform(scope.persist)
+    // computed before the loop is planned: every read of the edges then
+    // plans with their statistics, so the joins are the same every run
+    val edges = scope.materialize(DedupOps.undirected(matched, "src", "dst"))
     val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val verts = e.select(col("vec_id"))
     def idiv(a: Column, b: Column): Column = (a / b).cast("long")

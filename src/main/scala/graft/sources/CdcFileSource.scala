@@ -200,7 +200,9 @@ private[sources] final class CdcFileMicroBatchStream(dir: String,
     // a replayed first batch reads from the start its end offset kept,
     // not from a segment that landed below it since
     val segs = unread(listing(), if (from >= 0) from else started - 1).rangeTo(to)
-    val first = if (from >= 0) from + 1 else segs.headOption.fold(to)(_._1)
+    // an end of -1 admits nothing: a trigger that ran before the first
+    // segment landed
+    val first = if (from >= 0) from + 1 else if (to < 0) 0L else segs.headOption.fold(to)(_._1)
     (first to to).find(k => !segs.contains(k)).foreach(k =>
       fail(s"segment $k, admitted by an earlier trigger, is no longer listed"))
     segs.valuesIterator.map(n => SegmentPartition(s"$dir/$n", timeZone): InputPartition).toArray

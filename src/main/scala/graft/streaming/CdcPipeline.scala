@@ -3,6 +3,7 @@ package graft.streaming
 import graft.model.ChangeEvent
 import graft.operators.CdcOps
 import graft.sources.CdcFileSource
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
@@ -166,15 +167,30 @@ object CdcPipeline {
     * sink is waited for, also after one fails; the first failure is
     * rethrown with the others suppressed on it, which fails the batch
     * before its offsets commit. Sinks must therefore not share an
-    * output directory. */
+    * output directory.
+    *
+    * The batch is persisted and handed to the sinks as
+    * [[sizedToSource]] shapes it: with as many partitions as its source
+    * read, never more than it has. A streaming query plans without
+    * adaptive execution, so a batch behind a stateful operator (the
+    * dedup) otherwise has `spark.sql.shuffle.partitions` partitions,
+    * and every sink would write with that many tasks and files however
+    * few events the trigger holds. Sized, a trigger that admits one
+    * segment writes each sink with one task and one file per topic;
+    * one that admits k segments keeps min(k, state partitions)
+    * writers — the source's one-reader-per-segment scale shape. The
+    * coalesce is narrow: the dedup's state-store partitions are
+    * computed inside the sink task, each under its own partition
+    * index. */
   private def fanOut(batch: DataFrame, batchId: Long,
       sinks: Seq[(String, (DataFrame, Long) => Unit)]): Unit = {
+    val sized = sizedToSource(batch)
     val failed = new Array[Throwable](sinks.size)
     val threads = sinks.zipWithIndex.map { case ((name, write), i) =>
-      new Thread(() => try write(batch, batchId) catch { case t: Throwable => failed(i) = t },
+      new Thread(() => try write(sized, batchId) catch { case t: Throwable => failed(i) = t },
         s"$FanOutThreadPrefix$name-$batchId")
     }
-    batch.persist(StorageLevel.MEMORY_AND_DISK)
+    sized.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       threads.foreach(_.start())
       threads.foreach(_.join())
@@ -183,12 +199,33 @@ object CdcPipeline {
     } finally {
       // no sink may outlive the batch it reads, not even on stop
       threads.foreach(t => while (t.isAlive) try t.join() catch { case _: InterruptedException => })
-      batch.unpersist()
+      sized.unpersist()
     }
     failed.filter(_ != null) match {
       case Array(first, rest @ _*) => rest.foreach(first.addSuppressed); throw first
       case _ =>
     }
+  }
+
+  /** `batch` coalesced to the number of partitions its source read: the
+    * partitions of the leaves of its RDD lineage, one per admitted
+    * segment for [[CdcFileSource]]. A batch with no more partitions
+    * than that is returned as it is; an empty read keeps one. */
+  private def sizedToSource(batch: DataFrame): DataFrame = {
+    val rdd = batch.queryExecution.toRdd
+    val read = math.max(1, leafPartitions(rdd))
+    if (read >= rdd.getNumPartitions) batch else batch.coalesce(read)
+  }
+
+  /** Total partitions of the RDDs with no dependencies in `rdd`'s
+    * lineage, each RDD counted once. */
+  private def leafPartitions(rdd: RDD[_]): Int = {
+    val seen = scala.collection.mutable.Set.empty[Int]
+    def walk(r: RDD[_]): Int =
+      if (!seen.add(r.id)) 0
+      else if (r.dependencies.isEmpty) r.getNumPartitions
+      else r.dependencies.map(d => walk(d.rdd)).sum
+    walk(rdd)
   }
 
   /** Name prefix of the [[fanOut]] sink threads. */
@@ -238,16 +275,28 @@ object CdcPipeline {
     * replayed older update resurrect a deleted key — with tombstones,
     * the merge is a pure per-key max, so replaying any batch (the
     * at-least-once contract) is a no-op. */
-  def mergeSnapshot(state: DataFrame, batch: DataFrame, keyField: String): DataFrame = {
-    val changes = batch.select(
-      element_at(col("columns"), keyField).as("key"),
-      col("walPosition"), col("action"), col("columns"))
-    state.unionByName(changes)
+  def mergeSnapshot(state: DataFrame, batch: DataFrame, keyField: String): DataFrame =
+    stateUnion(state, batch.select(
+        element_at(col("columns"), keyField).as("key"),
+        col("walPosition"), col("action"), col("columns")))
       .groupBy(col("key"))
       .agg(
         max(col("walPosition")).as("walPosition"),
         max_by(col("action"), col("walPosition")).as("action"),
         max_by(col("columns"), col("walPosition")).as("columns"))
+
+  /** `state ∪ changes`, the input of a per-key merge
+    * ([[mergeSnapshot]], [[mergeScd2]]), in one partition when Spark
+    * plans the state scan as a single partition under its own
+    * file-split rule (`spark.sql.files.maxPartitionBytes`); an empty
+    * state counts as one. One partition already clusters every key,
+    * so the merge plans no exchange: it runs in one stage and writes
+    * the next generation as one file. A state that splits is left as
+    * it is, and the merge shuffles on the key. The first trigger over
+    * an empty state therefore merges its whole batch in one task. */
+  private def stateUnion(state: DataFrame, changes: DataFrame): DataFrame = {
+    val both = state.unionByName(changes)
+    if (state.queryExecution.toRdd.getNumPartitions <= 1) both.coalesce(1) else both
   }
 
   /** foreachBatch sink maintaining a parquet-backed snapshot of the
@@ -256,11 +305,15 @@ object CdcPipeline {
     * the next generation, swap directories. The swap (cur→prev,
     * tmp→cur) is two renames; [[snapshotState]] recovers from `.prev`
     * if a crash lands between them. On a real deployment this swap is
-    * what a transactional table format (Delta/Iceberg/Hudi) provides;
-    * the merge plan itself — one shuffle on the key, state size
-    * O(live keys + tombstones) — is unchanged there. At 100 TB,
-    * partition the state by key-hash bucket and rewrite only buckets
-    * the batch touches (bounded write amplification). */
+    * what a transactional table format (Delta/Iceberg/Hudi) provides.
+    * The merge is sized to the state ([[stateUnion]]): while the state
+    * scan plans as one partition the merge runs in one stage, with no
+    * shuffle, and writes one file per generation; once the state
+    * splits, it shuffles on the key into
+    * `spark.sql.shuffle.partitions` tasks. State size is O(live keys +
+    * tombstones). At 100 TB, partition the state by key-hash bucket
+    * and rewrite only buckets the batch touches (bounded write
+    * amplification). */
   def snapshotSink(stateDir: String, keyField: String)(batch: DataFrame, batchId: Long): Unit =
     swapGenerations(stateDir,
       mergeSnapshot(snapshotState(batch.sparkSession, stateDir), batch, keyField))
@@ -321,11 +374,10 @@ object CdcPipeline {
     * are bit-identical (same source change), so the dedup pick is
     * immaterial. */
   def mergeScd2(state: DataFrame, batch: DataFrame, keyField: String): DataFrame =
-    state.unionByName(
-        batch.select(
-          element_at(col("columns"), keyField).as("key"),
-          col("walPosition"), col("action"), col("columns"),
-          unix_micros(col("timestamp")).as("tus")))
+    stateUnion(state, batch.select(
+        element_at(col("columns"), keyField).as("key"),
+        col("walPosition"), col("action"), col("columns"),
+        unix_micros(col("timestamp")).as("tus")))
       .dropDuplicates("key", "walPosition")
 
   /** Atomic two-rename generation swap shared by the snapshot and SCD2
@@ -346,8 +398,10 @@ object CdcPipeline {
     * APPEND-VERSION output mode of the snapshot pipeline: instead of
     * overwriting each key with its latest image, every accepted change
     * persists and [[scd2History]] serves the full version history.
-    * Same swap/recovery mechanics as [[snapshotSink]]; same 100 TB
-    * note (a transactional table format makes the swap a MERGE, and
+    * Same swap/recovery mechanics and merge sizing as
+    * [[snapshotSink]]: one stage and one file per generation while the
+    * state scan plans as one partition, a shuffle on the key after;
+    * same 100 TB note (a transactional table format makes the swap a MERGE, and
     * key-hash bucketing bounds the rewrite to touched buckets — the
     * derived-history design additionally means a replay rewrites
     * nothing at all). */

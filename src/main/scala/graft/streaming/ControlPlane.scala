@@ -17,7 +17,8 @@ import java.util.concurrent.atomic.AtomicBoolean
   *   - `/debug/on|off` — toggles a debug flag via callback, 400 on any
   *                  other form (http.go:50-75 SetDebug fan-out)
   *   - `/metrics` — Prometheus text exposition of the per-query
-  *                  counters, observed metrics and source metrics
+  *                  counters, observed metrics, source metrics, and the
+  *                  latest trigger's phases and rows per second
   *                  (http.go:77 promhttp; metric shape follows
   *                  sink/prom/prometheus.go:10-43's labeled counters,
   *                  with the query name as the label)
@@ -87,6 +88,20 @@ final class ControlPlane(monitoring: Monitoring,
         s"""graft_source{query="${esc(q)}",metric="${esc(metric)}"} $d"""
       }
     })
+    // the latest trigger's phases and rates: where a trigger's time goes
+    gauges("graft_trigger_phase_ms", "Latest trigger's durationMs phases per query", queries.flatMap { q =>
+      monitoring.triggerPhases(q).toSeq.sortBy(_._1).map { case (phase, ms) =>
+        s"""graft_trigger_phase_ms{query="${esc(q)}",phase="${esc(phase)}"} $ms"""
+      }
+    })
+    gauges("graft_rows_per_second", "Latest trigger's input and processed rows per second per query",
+      queries.flatMap { q =>
+        monitoring.rowsPerSecond(q).toSeq.flatMap { case (in, done) =>
+          Seq("input" -> in, "processed" -> done).map { case (kind, d) =>
+            s"""graft_rows_per_second{query="${esc(q)}",kind="$kind"} $d"""
+          }
+        }
+      })
     sb.toString
   }
 

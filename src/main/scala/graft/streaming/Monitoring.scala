@@ -57,6 +57,9 @@ final class Monitoring(lastProgress: java.util.UUID => Option[StreamingQueryProg
   // e.g. the CDC source's backlog): query → metric → value; a query's
   // sources share one map
   private val sourceByQuery = new ConcurrentHashMap[String, Map[String, Double]]()
+  // latest progress per query, kept whole so a trigger costs one map
+  // update; its phases and rates are read out on demand
+  private val lastTriggerByQuery = new ConcurrentHashMap[String, StreamingQueryProgress]()
 
   private def nameOf(p: StreamingQueryProgress): String =
     Option(p.name).getOrElse(p.id.toString)
@@ -67,6 +70,7 @@ final class Monitoring(lastProgress: java.util.UUID => Option[StreamingQueryProg
     val s = statsFor(name)
     s.rows.add(e.progress.numInputRows)
     s.batches.increment()
+    lastTriggerByQuery.put(name, e.progress)
     val om = e.progress.observedMetrics
     if (om != null && !om.isEmpty) {
       val snap = Map.newBuilder[String, Map[String, String]]
@@ -103,6 +107,17 @@ final class Monitoring(lastProgress: java.util.UUID => Option[StreamingQueryProg
   /** Latest numeric source-metrics snapshot for a query (empty if none). */
   def sourceMetrics(name: String): Map[String, Double] =
     sourceByQuery.getOrDefault(name, Map.empty)
+
+  /** The latest trigger's `durationMs` phases for a query (empty if
+    * none): latestOffset, queryPlanning, addBatch, walCommit, ... */
+  def triggerPhases(name: String): Map[String, Long] =
+    Option(lastTriggerByQuery.get(name)).fold(Map.empty[String, Long])(
+      _.durationMs.asScala.map { case (k, v) => k -> v.longValue }.toMap)
+
+  /** The latest trigger's (input, processed) rows per second for a
+    * query; NaN where Spark had no interval to divide by. */
+  def rowsPerSecond(name: String): Option[(Double, Double)] =
+    Option(lastTriggerByQuery.get(name)).map(p => (p.inputRowsPerSecond, p.processedRowsPerSecond))
 
   override def onQueryTerminated(e: QueryTerminatedEvent): Unit = {
     val key = idToName.getOrDefault(e.id.toString, e.id.toString)

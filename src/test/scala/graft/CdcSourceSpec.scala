@@ -144,6 +144,20 @@ class CdcSourceSpec extends SparkSpec {
     finally spark.conf.unset(key)
   }
 
+  test("DSv2 source: a query started on an empty directory waits for its first segment") {
+    val root = Files.createTempDirectory("graft-dsv2-empty").toString
+    val in = s"$root/wal"; Files.createDirectories(Paths.get(in))
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Long]]()
+    val q = startDeduped(root, in, "1 second", batches)
+    try {
+      // triggers run against the empty directory before anything lands
+      await("an idle trigger")(q.lastProgress != null)
+      writeSegment(in, "seg-000.json", (1 to 2).map(i => ev(i)))
+      q.processAllAvailable()
+      assert(batches.asScala.toSeq.filter(_.nonEmpty) === Seq(Seq(1L, 2L)))
+    } finally q.stop()
+  }
+
   test("DSv2 source: committedSegment reads the last batch once its sinks finished") {
     val root = Files.createTempDirectory("graft-dsv2-committed").toString
     val in = s"$root/wal"; Files.createDirectories(Paths.get(in))

@@ -750,25 +750,51 @@ class PlanAuditSpec extends SparkSpec {
       case Explode(CreateArray(Seq(_: CreateNamedStruct, _: CreateNamedStruct), _)) => true
       case _ => false
     }
+    // PageRank computes its (src, dst) edge relation while it is built,
+    // so its final plan reads computed rows: the plan that computed
+    // them is the one pinned, caught as the builder's materialization
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Seconds, Span}
+    def withEdgePlan(build: => DataFrame): (DataFrame, QueryExecution) = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+      val probe = new QueryExecutionListener {
+        override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+          if (funcName == "materialize" && qe.analyzed.output.map(_.name) == Seq("src", "dst"))
+            seen.add(qe)
+        override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+      }
+      spark.listenerManager.register(probe)
+      try {
+        val df = build
+        eventually(timeout(Span(30, Seconds)))(assert(seen.size === 1))
+        (df, seen.peek())
+      } finally spark.listenerManager.unregister(probe)
+    }
+    val (pagerank, pagerankEdges) = withEdgePlan(SimilarityOps.qSimPagerankStored(spark, sf))
+    val triangles = SimilarityOps.qSimTrianglesStored(spark, sf)
+    val knn = SimilarityOps.qSimKnnGraphStored(spark, sf)
     val stored = Seq(
-      ("sim_pagerank_stored", SimilarityOps.qSimPagerankStored(spark, sf), 1),
-      ("sim_triangles_stored", SimilarityOps.qSimTrianglesStored(spark, sf), 0),
-      ("sim_knn_graph_stored", SimilarityOps.qSimKnnGraphStored(spark, sf), 1))
-    stored.foreach { case (name, df, symmetrizes) =>
-      val p = planString(df)
-      assert(p.contains("graft_artifacts") && p.contains("ann_edges"),
+      ("sim_pagerank_stored", pagerank, pagerankEdges, 1),
+      ("sim_triangles_stored", triangles, triangles.queryExecution, 0),
+      ("sim_knn_graph_stored", knn, knn.queryExecution, 1))
+    stored.foreach { case (name, df, edges, symmetrizes) =>
+      val e = edges.explainString(org.apache.spark.sql.execution.FormattedMode)
+      assert(e.contains("graft_artifacts") && e.contains("ann_edges"),
         s"$name must scan the stored edge artifact")
-      val gens = df.queryExecution.analyzed.collect { case g: Generate => g.canonicalized }
+      val gens = edges.analyzed.collect { case g: Generate => g.canonicalized }
         .distinct.collect { case g: Generate => g }
       assert(gens.size === symmetrizes && gens.forall(isSymmetrize),
         s"$name plans a Generate other than the one symmetrize explode:\n${gens.mkString("\n")}")
+      val p = planString(df)
       assert(!p.contains("CartesianProduct") &&
           !p.contains("BroadcastNestedLoopJoin"),
         s"$name plans a nested-loop join")
     }
     // negative control: the live miner's bucketing explode fails it
-    val livePagerank = SimilarityOps.qSimPagerank(spark, sf)
-    assert(livePagerank.queryExecution.analyzed
+    val (livePagerank, liveEdges) = withEdgePlan(SimilarityOps.qSimPagerank(spark, sf))
+    assert(liveEdges.analyzed
         .collect { case g: Generate => g }.exists(g => !isSymmetrize(g)),
       "the live miner no longer buckets through a Generate — update this pin")
     // the components variant materializes every round of its loop, so
@@ -1276,5 +1302,52 @@ class PlanAuditSpec extends SparkSpec {
     assert(df.queryExecution.sparkPlan.collect {
       case w: org.apache.spark.sql.execution.window.WindowExec => w }.nonEmpty,
       "median should still use (tiny) windows — shape changed, update pin")
+  }
+
+  /** A merge over a small parquet state and a batch of changes, planned
+    * with adaptive execution off as in a streaming query's session. A
+    * state that Spark plans as one split merges in one stage, with no
+    * exchange; once `spark.sql.files.maxPartitionBytes` splits the same
+    * state, the merge shuffles once on `key`, and the rows are equal. */
+  private def auditMerge(schema: org.apache.spark.sql.types.StructType,
+      merge: (DataFrame, DataFrame, String) => DataFrame): Unit = {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def changes(from: Long): DataFrame = (from until from + 200L).map(w =>
+      graft.model.ChangeEvent("h", "db", "users", if (w % 9 == 0) "delete" else "update", w,
+        new java.sql.Timestamp(1700000000000L + w * 1000), s"m-$w",
+        Map("user_id" -> s"k${w % 60}", "v" -> w.toString))).toDF()
+    val dir = java.nio.file.Files.createTempDirectory("graft-merge-plan").resolve("state").toString
+    val confs = Seq("spark.sql.adaptive.enabled", "spark.sql.files.maxPartitionBytes")
+    val saved = confs.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      merge(spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
+        changes(0), "user_id").write.parquet(dir)
+      def run(): (Seq[ShuffleExchangeExec], Set[org.apache.spark.sql.Row]) = {
+        val df = merge(spark.read.schema(schema).parquet(dir), changes(150), "user_id")
+        (df.queryExecution.executedPlan.collect { case e: ShuffleExchangeExec => e }, df.collect().toSet)
+      }
+      val (oneStage, rows) = run()
+      assert(oneStage.isEmpty, s"a one-split state should merge without an exchange: $oneStage")
+      assert(rows.nonEmpty)
+      spark.conf.set("spark.sql.files.maxPartitionBytes", "256")
+      assert(spark.read.schema(schema).parquet(dir).rdd.getNumPartitions > 1, "the state did not split")
+      val (split, splitRows) = run()
+      assert(split.size === 1, s"a split state should shuffle once: $split")
+      assert(split.head.outputPartitioning.asInstanceOf[HashPartitioning].expressions
+        .head.references.map(_.name).toSeq === Seq("key"))
+      assert(splitRows === rows)
+    } finally saved.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  test("snapshot merge: one stage over a one-split state, one exchange on key once it splits") {
+    auditMerge(graft.streaming.CdcPipeline.snapshotSchema, graft.streaming.CdcPipeline.mergeSnapshot)
+  }
+
+  test("SCD2 merge: one stage over a one-split state, one exchange on key once it splits") {
+    auditMerge(graft.streaming.CdcPipeline.scd2StateSchema, graft.streaming.CdcPipeline.mergeScd2)
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.model.ChangeEvent
-import graft.streaming.CdcPipeline
+import graft.streaming.{CdcPipeline, Sinks}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -494,5 +494,78 @@ class StreamingSpec extends SparkSpec {
     assert(alive.isEmpty, s"fan-out threads outlived stop(): $alive")
     assert(added.isEmpty, s"persisted RDDs outlived stop(): $added")
     assert(!new java.io.File(s"$tmp/ckpt/commits/0").exists)
+  }
+
+  /** Parquet part files under `dir`, counted per directory relative to
+    * it ("" for `dir` itself). */
+  private def partFiles(dir: String): Map[String, Int] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    val s = Files.walk(root)
+    try s.iterator().asScala.filter(_.getFileName.toString.startsWith("part-")).toSeq
+      .groupBy(p => root.relativize(p.getParent).toString).map { case (d, fs) => d -> fs.size }
+    finally s.close()
+  }
+
+  /** `n` insert events from WAL position `from` on, alternating between
+    * the `events` and `orders` tables over seven `user_id` keys. */
+  private def tableEvents(from: Long, n: Int): Seq[ChangeEvent] =
+    (from until from + n).map(w => ChangeEvent("h", "db", if (w % 2 == 0) "events" else "orders",
+      "insert", w, new Timestamp(1700000000000L + w * 1000), s"s-$w", Map("user_id" -> s"k${w % 7}")))
+
+  /** The dedup → two `Sinks.parquet` sinks and the snapshot sink, under
+    * `root`; `a` routes both tables, `b` one and falls back for the other. */
+  private def sizedFanOut(spark: org.apache.spark.sql.SparkSession, root: String,
+      maxFiles: Int) =
+    CdcPipeline.muxFanoutIdempotent(
+      CdcPipeline.deduped(CdcPipeline.validated(CdcPipeline.fileSource(spark, s"$root/in", maxFiles))),
+      Seq(
+        "a" -> { (b: DataFrame, _: Long) => Sinks.parquet(s"$root/a")(
+          CdcPipeline.toWire(b, Map("events" -> "t.events", "orders" -> "t.orders"), None)) },
+        "b" -> { (b: DataFrame, _: Long) => Sinks.parquet(s"$root/b")(
+          CdcPipeline.toWire(b, Map("events" -> "t.events"), Some("t.cdc"))) },
+        "snapshot" -> CdcPipeline.snapshotSink(s"$root/state", "user_id") _),
+      s"$root/ckpt", Trigger.ProcessingTime(0L))
+
+  test("fan-out: a one-segment trigger writes one file per topic per sink, one per snapshot generation") {
+    val root = Files.createTempDirectory("graft-fanout-one").toString
+    Files.createDirectories(java.nio.file.Paths.get(s"$root/in"))
+    writeSegment(s"$root/in", "seg-000.json", tableEvents(0, 40))
+    // the second segment re-ships the first one's last 10 events: the
+    // dedup must read back what the first trigger stored
+    writeSegment(s"$root/in", "seg-001.json", tableEvents(30, 40))
+    val q = sizedFanOut(spark, root, maxFiles = 1).start()
+    try q.processAllAvailable() finally q.stop()
+    assert(new java.io.File(s"$root/ckpt/commits/1").exists, "both triggers should commit")
+    // two one-segment triggers: one writer, so one file per topic, each
+    assert(partFiles(s"$root/a") === Map("topic=t.events" -> 2, "topic=t.orders" -> 2))
+    assert(partFiles(s"$root/b") === Map("topic=t.events" -> 2, "topic=t.cdc" -> 2))
+    assert(partFiles(s"$root/state") === Map("" -> 1))
+    // all four state-store partitions of the dedup loaded and committed
+    // under their own index in both triggers, inside the one sink task
+    for (p <- 0 until 4; v <- 1 to 2)
+      assert(new java.io.File(s"$root/ckpt/state/0/$p/$v.delta").exists, s"partition $p version $v")
+    val a = spark.read.parquet(s"$root/a")
+    assert(a.count() === 70 && a.select(get_json_object(col("value"), "$.uuid")).distinct().count() === 70)
+    assert(CdcPipeline.snapshotView(spark, s"$root/state").count() === 7)
+  }
+
+  test("fan-out: a trigger that admits 2 segments over 2 state partitions keeps 2 writers") {
+    val root = Files.createTempDirectory("graft-fanout-two").toString
+    Files.createDirectories(java.nio.file.Paths.get(s"$root/in"))
+    writeSegment(s"$root/in", "seg-000.json", tableEvents(0, 40))
+    writeSegment(s"$root/in", "seg-001.json", tableEvents(40, 40))
+    val two = spark.newSession()
+    two.conf.set("spark.sql.shuffle.partitions", "2")
+    val q = sizedFanOut(two, root, maxFiles = 2).start()
+    try q.processAllAvailable() finally q.stop()
+    assert(new java.io.File(s"$root/ckpt/commits/0").exists)
+    assert(Files.readString(java.nio.file.Paths.get(s"$root/ckpt/offsets/0")).contains("\"segment\":1"),
+      "the first trigger should admit both segments")
+    assert(partFiles(s"$root/a") === Map("topic=t.events" -> 2, "topic=t.orders" -> 2))
+    assert(partFiles(s"$root/b") === Map("topic=t.events" -> 2, "topic=t.cdc" -> 2))
+    for (p <- 0 until 2)
+      assert(new java.io.File(s"$root/ckpt/state/0/$p/1.delta").exists, s"partition $p")
+    assert(spark.read.parquet(s"$root/a").count() === 80)
   }
 }

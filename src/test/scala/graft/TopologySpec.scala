@@ -184,6 +184,16 @@ class TopologySpec extends SparkSpec {
       assert(metricsBody.contains(
         """graft_observed{query="cp-ok",observation="probe",metric="n"} 3"""),
         s"observed gauge missing:\n$metricsBody")
+      // the latest trigger's phases and rates, read off the live query
+      def gauge(name: String, labels: String): Option[Double] =
+        (java.util.regex.Pattern.quote(s"""$name{query="cp-ok",$labels}""") + """ (\S+)""").r
+          .findFirstMatchIn(metricsBody).map(_.group(1).toDouble)
+      assert(gauge("graft_trigger_phase_ms", """phase="addBatch"""").exists(_ >= 0),
+        s"addBatch phase missing:\n$metricsBody")
+      assert(gauge("graft_rows_per_second", """kind="input"""").exists(_ >= 0),
+        s"input rate missing:\n$metricsBody")
+      assert(gauge("graft_rows_per_second", """kind="processed"""").exists(_ > 0),
+        s"processed rate missing:\n$metricsBody")
 
       // a change-event source held at a gap exports its backlog: the
       // gap opens after the last batch, so only idle triggers (every
