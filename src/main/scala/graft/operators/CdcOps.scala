@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryScope, Tables}
 import graft.model.ChangeEvent
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
@@ -34,10 +35,11 @@ object CdcOps {
       substring(h, 17, 4), substring(h, 21, 12))
   }
 
-  /** events row → ChangeEvent envelope. Action mapping: signup→insert,
-    * purchase→update, error→delete; click/view carry no row change and
-    * map to NULL (dropped by the action filter, mirroring Begin/Commit
-    * markers being dropped, postgres.go:327-330). */
+  /** events row → change envelope in [[ChangeEvent.schema]], the one
+    * envelope shape the streaming pipeline reads too. Action mapping:
+    * signup→insert, purchase→update, error→delete; click/view carry no
+    * row change and map to NULL (dropped by the action filter, mirroring
+    * Begin/Commit markers being dropped, postgres.go:327-330). */
   def toEnvelope(events: DataFrame): DataFrame = {
     val action = when(col("event_type") === "signup", ChangeEvent.Insert)
       .when(col("event_type") === "purchase", ChangeEvent.Update)
@@ -46,9 +48,9 @@ object CdcOps {
     events.select(
       lit("db1").as("host"),
       lit("graft").as("database"),
-      lit("events").as("tbl"),
+      lit("events").as("table"),
       action.as("action"),
-      col("event_id").as("wal_position"),
+      col("event_id").as("walPosition"),
       col("ts").as("timestamp"),
       deterministicUuid(col("event_id")).as("uuid"),
       map(
@@ -58,11 +60,66 @@ object CdcOps {
         lit("props"), col("props")).as("columns"))
   }
 
-  // ---- filters (F1 validity kafka.go:180-192; F2 action postgres.go:327) ----
+  // ---- the CDC rules: one definition each, shared by the batch queries
+  // below and the streaming pipeline (streaming.CdcPipeline) ----
+
+  /** The valid-action predicate (F2); null for a null action. */
+  private[graft] def validAction: Column = col("action").isin(ChangeEvent.ValidActions: _*)
 
   /** F2: keep only valid change actions; Begin/Commit-like rows drop. */
-  def filterActions(envelopes: DataFrame): DataFrame =
-    envelopes.filter(col("action").isin(ChangeEvent.ValidActions: _*))
+  def filterActions(envelopes: DataFrame): DataFrame = envelopes.filter(validAction)
+
+  /** R2: default Kafka message key `host:database:table:action` — drives
+    * the sink's hash partitioning, same as the reference's balancer. */
+  def withKey(envelopes: DataFrame): DataFrame =
+    envelopes.withColumn("key",
+      concat_ws(":", col("host"), col("database"), col("table"), col("action")))
+
+  /** The change rows of an envelope frame: the row key `keyField` of the
+    * row image as `key`, the WAL position and the action, then the
+    * caller's `payload` columns. The input of [[latestPerKey]] and
+    * [[scd2Versions]]. */
+  def changes(envelopes: DataFrame, keyField: String, payload: Column*): DataFrame =
+    envelopes.select(Seq(element_at(col("columns"), keyField).as("key"),
+      col("walPosition"), col("action")) ++ payload: _*)
+
+  /** Last write wins: per key of `changes`, the highest WAL position and
+    * the action and `payload` columns of the change at it, plus the
+    * caller's `extra` aggregates. A delete stays as the key's latest
+    * change; callers filter it.
+    *
+    * Scale shape: `groupBy(key).agg(max_by(_, wal))` — ONE shuffle with
+    * map-side partial aggregation (each map task pre-reduces to one
+    * candidate row per key), which is strictly better at 100 TB than
+    * the window row_number() formulation (full sort of every version
+    * within each key, no partial agg). */
+  def latestPerKey(changes: DataFrame, payload: Seq[String], extra: Column*): DataFrame =
+    changes.groupBy(col("key")).agg(max(col("walPosition")).as("walPosition"),
+      ("action" +: payload).map(c => max_by(col(c), col("walPosition")).as(c)) ++ extra: _*)
+
+  /** SCD2 versions of `changes` (which carry `tus`, the change time in
+    * µs): per key in WAL order, `version` numbers every change and its
+    * validity window runs from its own time to the next change's
+    * (`valid_from_s`, `valid_to_s`, epoch seconds; while current,
+    * `valid_to_s` is NULL and `is_current` 1). Deletes close their
+    * predecessor's window but are not versions themselves; a key whose
+    * last change is a delete has no current row.
+    *
+    * Scale shape: one shuffle on the row key, one ordered window walk
+    * per key (version numbering + lead share the same window frame),
+    * no joins. */
+  def scd2Versions(changes: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("key")).orderBy(col("walPosition"))
+    changes
+      .withColumn("next_tus", lead(col("tus"), 1).over(w))
+      .withColumn("version", row_number().over(w))
+      .filter(col("action") =!= ChangeEvent.Delete)
+      .withColumn("valid_from_s", expr("tus DIV 1000000"))
+      .withColumn("valid_to_s", expr("next_tus DIV 1000000"))
+      .withColumn("is_current", col("next_tus").isNull.cast("int"))
+  }
+
+  // ---- F1 validity on the raw feed (kafka.go:180-192) ----
 
   /** Evaluate an expensive expression exactly ONCE per row when both a
     * pushed-down filter and the output projection reference it. The
@@ -98,7 +155,7 @@ object CdcOps {
       .drop("k_raw")
   }
 
-  // ---- routing (R1 kafka.go:169-215) + keys (R2 kafka.go:246-248) ----
+  // ---- routing (R1 kafka.go:169-215) ----
 
   /** Table→topic routing with optional fallback. Unmapped tables route to
     * the fallback topic; with no fallback they are dropped (the reference
@@ -113,12 +170,6 @@ object CdcOps {
     df.withColumn("topic", topic).filter(col("topic").isNotNull)
   }
 
-  /** R2: default Kafka message key `host:database:table:action` — drives
-    * the sink's hash partitioning, same as the reference's balancer. */
-  def withKey(envelopes: DataFrame): DataFrame =
-    envelopes.withColumn("key",
-      concat_ws(":", col("host"), col("database"), col("tbl"), col("action")))
-
   /** H1 passthrough handler: envelope → JSON wire bytes (value column),
     * ready for a Kafka sink (`format("kafka")` consumes key/value/topic). */
   def serialize(df: DataFrame, cols: Seq[String]): DataFrame =
@@ -128,16 +179,22 @@ object CdcOps {
 
   private val routing = Map("signup" -> "topic.users", "purchase" -> "topic.txn")
 
+  /** The change envelopes of the events table: valid actions only. */
+  private def envelopes(spark: SparkSession, sfDir: String): DataFrame =
+    filterActions(toEnvelope(Tables.events(spark, sfDir)))
+
+  /** Change rows of [[envelopes]] keyed by `user_id`. */
+  private def userChanges(spark: SparkSession, sfDir: String, payload: Column*): DataFrame =
+    changes(envelopes(spark, sfDir), "user_id", payload: _*)
+
   /** Envelope projection (P1+M1+R2): scalar view of the envelope for the
     * oracle (map column stays engine-side; maps don't hash-compare). */
-  def qEnvelope(spark: SparkSession, sfDir: String): DataFrame = {
-    val env = filterActions(toEnvelope(Tables.events(spark, sfDir)))
-    withKey(env).select(
-      col("wal_position"), col("host"), col("database"), col("tbl"),
-      col("action"), col("uuid"), col("key"),
+  def qEnvelope(spark: SparkSession, sfDir: String): DataFrame =
+    withKey(envelopes(spark, sfDir)).select(
+      col("walPosition").as("wal_position"), col("host"), col("database"),
+      col("table").as("tbl"), col("action"), col("uuid"), col("key"),
       element_at(col("columns"), "event_type").as("col_event_type"),
       element_at(col("columns"), "user_id").as("col_user_id"))
-  }
 
   val qEnvelopeOracle: String =
     """WITH env AS (
@@ -195,9 +252,9 @@ object CdcOps {
 
   /** H1 serialization: envelope → compact JSON wire value. */
   def qSerialize(spark: SparkSession, sfDir: String): DataFrame = {
-    val env = filterActions(toEnvelope(Tables.events(spark, sfDir)))
-    serialize(env, Seq("host", "database", "tbl", "action", "wal_position", "uuid"))
-      .select(col("wal_position"), col("value"))
+    val env = envelopes(spark, sfDir).select(col("host"), col("database"),
+      col("table").as("tbl"), col("action"), col("walPosition").as("wal_position"), col("uuid"))
+    serialize(env, env.columns.toIndexedSeq).select(col("wal_position"), col("value"))
   }
 
   val qSerializeOracle: String =
@@ -322,27 +379,14 @@ object CdcOps {
     * stream the reference produces: apply insert/update/delete per key
     * in WAL order and emit the current-state table (what a downstream
     * warehouse does with the reference's Kafka topics). Last-write-wins
-    * by wal_position; a key whose latest change is a delete has no row.
-    *
-    * Scale shape: `groupBy(key).agg(max_by(_, wal))` — ONE shuffle with
-    * map-side partial aggregation (each map task pre-reduces to one
-    * candidate row per key), which is strictly better at 100 TB than
-    * the window row_number() formulation (full sort of every version
-    * within each key, no partial agg). */
-  def qSnapshot(spark: SparkSession, sfDir: String): DataFrame = {
-    val env = filterActions(toEnvelope(Tables.events(spark, sfDir)))
-    env.select(
-        element_at(col("columns"), "user_id").as("user_id"),
-        col("wal_position"), col("action"),
-        element_at(col("columns"), "props").as("props"))
-      .groupBy(col("user_id"))
-      .agg(
-        max(col("wal_position")).as("last_wal"),
-        max_by(col("action"), col("wal_position")).as("last_action"),
-        max_by(col("props"), col("wal_position")).as("props"),
-        count(lit(1)).as("n_changes"))
+    * by WAL position ([[latestPerKey]]); a key whose latest change is a
+    * delete has no row. */
+  def qSnapshot(spark: SparkSession, sfDir: String): DataFrame =
+    latestPerKey(userChanges(spark, sfDir, element_at(col("columns"), "props").as("props")),
+        Seq("props"), count(lit(1)).as("n_changes"))
+      .select(col("key").as("user_id"), col("walPosition").as("last_wal"),
+        col("action").as("last_action"), col("props"), col("n_changes"))
       .filter(col("last_action") =!= ChangeEvent.Delete)
-  }
 
   val qSnapshotOracle: String =
     """WITH env AS (
@@ -367,30 +411,14 @@ object CdcOps {
     * NULL while current. Deletes close the prior version's interval
     * but are not themselves versions; a key whose last change is a
     * delete has no current row. This is how a warehouse keeps
-    * point-in-time history from the reference's topics.
-    *
-    * Scale shape: one shuffle on the row key, one ordered window walk
-    * per key (version numbering + lead share the same window frame),
-    * no joins. Timestamps surface as epoch seconds (the ns-parquet /
-    * µs-Spark parity rule). */
-  def qScd2(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("user_id")).orderBy(col("wal_position"))
-    val env = filterActions(toEnvelope(Tables.events(spark, sfDir)))
-      .select(
-        element_at(col("columns"), "user_id").as("user_id"),
-        col("wal_position"), col("action"),
-        unix_micros(col("timestamp")).as("tus"))
-    env
-      .withColumn("next_tus", lead(col("tus"), 1).over(w))
-      .withColumn("version", row_number().over(w))
-      .filter(col("action") =!= ChangeEvent.Delete)
-      .select(col("user_id"), col("version"), col("action"),
-        col("wal_position"),
-        expr("tus DIV 1000000").as("valid_from_s"),
-        expr("next_tus DIV 1000000").as("valid_to_s"),
-        col("next_tus").isNull.cast("int").as("is_current"))
-  }
+    * point-in-time history from the reference's topics
+    * ([[scd2Versions]]). Timestamps surface as epoch seconds (the
+    * ns-parquet / µs-Spark parity rule). */
+  def qScd2(spark: SparkSession, sfDir: String): DataFrame =
+    scd2Versions(userChanges(spark, sfDir, unix_micros(col("timestamp")).as("tus")))
+      .select(col("key").as("user_id"), col("version"), col("action"),
+        col("walPosition").as("wal_position"), col("valid_from_s"), col("valid_to_s"),
+        col("is_current"))
 
   val qScd2Oracle: String =
     """WITH env AS (
@@ -413,7 +441,6 @@ object CdcOps {
       |FROM v WHERE action <> 'delete'
       |ORDER BY user_id, version""".stripMargin
 
-  /** All CDC queries + oracles, for SparkEntry registration. */
   /** SNAPSHOT RECONCILIATION → CDC derivation: diff two table
     * snapshots into the insert/update/delete stream that connects
     * them — what a pipeline runs to BACKFILL a change stream when no
@@ -509,26 +536,16 @@ object CdcOps {
     * partitions the batch touches rewrite — the plan here is that
     * shape minus the storage layout. */
   def qApplyMerge(spark: SparkSession, sfDir: String): DataFrame = {
-    val env = filterActions(toEnvelope(Tables.events(spark, sfDir)))
-      .select(
-        element_at(col("columns"), "user_id").as("user_id"),
-        col("wal_position"), col("action"),
-        element_at(col("columns"), "props").as("props"))
+    val rows = userChanges(spark, sfDir, element_at(col("columns"), "props").as("props"))
     val maxWal = Tables.events(spark, sfDir)
       .agg(max(col("event_id"))).head.getLong(0)
     val w = maxWal / 2
-    def collapsed(df: DataFrame) = df.groupBy(col("user_id")).agg(
-      max(col("wal_position")).as("wal"),
-      max_by(col("action"), col("wal_position")).as("act"),
-      max_by(col("props"), col("wal_position")).as("props"))
-    val base = collapsed(env.filter(col("wal_position") <= w))
-      .filter(col("act") =!= ChangeEvent.Delete)
-      .select(col("user_id"), col("wal").as("b_wal"),
-        col("act").as("b_act"), col("props").as("b_props"))
-    val batch = collapsed(env.filter(col("wal_position") > w))
-      .select(col("user_id"), col("wal").as("c_wal"),
-        col("act").as("c_act"), col("props").as("c_props"))
-    mergeStates(base, batch)
+    def collapsed(df: DataFrame, side: String) = latestPerKey(df, Seq("props"))
+      .select(col("key").as("user_id"), col("walPosition").as(s"${side}_wal"),
+        col("action").as(s"${side}_act"), col("props").as(s"${side}_props"))
+    val base = collapsed(rows.filter(col("walPosition") <= w), "b")
+      .filter(col("b_act") =!= ChangeEvent.Delete)
+    mergeStates(base, collapsed(rows.filter(col("walPosition") > w), "c"))
   }
 
   /** The merge arm proper: base (b_wal/b_act/b_props, no tombstones)
@@ -604,35 +621,34 @@ object CdcOps {
     * global walk); every remaining unpartitioned window reads a
     * ≤shard-count relation. */
   def qWalGaps(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
-    import org.apache.spark.sql.expressions.Window
     val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val local = filterActions(toEnvelope(Tables.events(spark, sfDir)))
-      .select(col("wal_position"))
-      .repartitionByRange(parts, col("wal_position"))
+    val local = envelopes(spark, sfDir)
+      .select(col("walPosition"))
+      .repartitionByRange(parts, col("walPosition"))
       .withColumn("__shard", spark_partition_id())
       .transform(scope.persist)
-    val wS = Window.partitionBy(col("__shard")).orderBy(col("wal_position"))
+    val wS = Window.partitionBy(col("__shard")).orderBy(col("walPosition"))
     val intra = local
-      .withColumn("prev_wal", lag(col("wal_position"), 1).over(wS))
+      .withColumn("prev_wal", lag(col("walPosition"), 1).over(wS))
       .filter(col("prev_wal").isNotNull)
-      .select(col("__shard"), col("wal_position"), col("prev_wal"))
+      .select(col("__shard"), col("walPosition"), col("prev_wal"))
     val bounds = local.groupBy(col("__shard"))
-      .agg(min(col("wal_position")).as("mn"), max(col("wal_position")).as("mx"))
+      .agg(min(col("walPosition")).as("mn"), max(col("walPosition")).as("mx"))
     // consecutive non-empty shards pair up by shard order (empty range
     // shards simply have no bounds row)
     val cross = bounds
       .withColumn("prev_mx", lag(col("mx"), 1).over(
         Window.orderBy(col("__shard"))))
       .filter(col("prev_mx").isNotNull)
-      .select(col("__shard"), col("mn").as("wal_position"),
+      .select(col("__shard"), col("mn").as("walPosition"),
         col("prev_mx").as("prev_wal"))
     // shard-major ordering holds: a boundary gap's gap_from exceeds
     // every gap_from of the previous shard and precedes this shard's
     val gaps = intra.unionByName(cross)
-      .filter(col("wal_position") - col("prev_wal") > 1)
+      .filter(col("walPosition") - col("prev_wal") > 1)
       .select(col("__shard"), (col("prev_wal") + 1).as("gap_from"),
-        (col("wal_position") - 1).as("gap_to"),
-        (col("wal_position") - col("prev_wal") - 1).as("missing"))
+        (col("walPosition") - 1).as("gap_to"),
+        (col("walPosition") - col("prev_wal") - 1).as("missing"))
       .transform(scope.persist)
     val offsets = gaps.groupBy(col("__shard")).agg(sum(col("missing")).as("__m"))
       .withColumn("__off", coalesce(sum(col("__m")).over(
@@ -664,6 +680,7 @@ object CdcOps {
       |    AS cum_missing
       |FROM gaps ORDER BY gap_from""".stripMargin
 
+  /** All CDC queries + oracles, for SparkEntry registration. */
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "cdc_wal_gaps" -> (qWalGaps _),
     "cdc_apply_merge" -> (qApplyMerge _),

@@ -5,6 +5,7 @@ import graft.operators.CdcOps
 import graft.sources.CdcFileSource
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, MapType, StringType, StructField, StructType}
@@ -56,12 +57,11 @@ object CdcPipeline {
     spark.readStream.format(CdcFileSource.Name).option("path", dir)
       .option("maxFilesPerTrigger", maxFilesPerTrigger).load()
 
-  /** Envelope validation (F1+F2) on a streaming frame — same column
-    * algebra as batch; Catalyst doesn't care that the source streams. */
+  /** Envelope validation (F1+F2) on a streaming frame: the batch
+    * queries' valid-action filter ([[CdcOps.filterActions]]) plus the
+    * uuid check; Catalyst doesn't care that the source streams. */
   def validated(envelopes: DataFrame): DataFrame =
-    envelopes
-      .filter(col("action").isin(ChangeEvent.ValidActions: _*))
-      .filter(col("uuid").isNotNull && (col("uuid") =!= ""))
+    CdcOps.filterActions(envelopes).filter(col("uuid").isNotNull && (col("uuid") =!= ""))
 
   /** Per-batch data-quality counters via `Dataset.observe` — the M2
     * counters (reference: per-event atomic increments,
@@ -73,12 +73,9 @@ object CdcPipeline {
   def observed(envelopes: DataFrame, name: String = "cdc"): DataFrame =
     envelopes.observe(name,
       count(lit(1)).as("events"),
-      // NULL actions must be counted explicitly: `!isin(...)` is NULL
-      // (not true) for a null action, so without the isNull arm the
-      // counter would claim fewer drops than validated() performs
-      sum(when(col("action").isNull ||
-          !col("action").isin(ChangeEvent.ValidActions: _*), 1L)
-        .otherwise(0L)).as("invalid_action"),
+      // a null action makes the predicate null, which takes the
+      // `otherwise` arm: counted, as validated() drops it
+      sum(when(CdcOps.validAction, 0L).otherwise(1L)).as("invalid_action"),
       sum(when(col("uuid").isNull || col("uuid") === "", 1L)
         .otherwise(0L)).as("missing_uuid"))
 
@@ -117,16 +114,10 @@ object CdcPipeline {
     * (R1→R2→H1) as one streaming transform, producing the
     * (topic, key, value) triple Spark's Kafka sink consumes natively. */
   def toWire(envelopes: DataFrame, mapping: Map[String, String],
-             fallback: Option[String]): DataFrame = {
-    val routed = CdcOps.route(envelopes, col("table"), mapping, fallback)
-    routed
-      .withColumn("key",
-        concat_ws(":", col("host"), col("database"), col("table"), col("action")))
-      .withColumn("value", to_json(struct(
-        col("host"), col("database"), col("table"), col("action"),
-        col("walPosition"), col("timestamp"), col("uuid"), col("columns"))))
+             fallback: Option[String]): DataFrame =
+    CdcOps.serialize(CdcOps.withKey(CdcOps.route(envelopes, col("table"), mapping, fallback)),
+        ChangeEvent.schema.fieldNames.toIndexedSeq)
       .select("topic", "key", "value")
-  }
 
   /** Multi-sink fan-out with the reference's commit ordering
     * (mux/mux.go:169-198): one micro-batch is read once, persisted, and
@@ -232,11 +223,12 @@ object CdcPipeline {
   private[graft] val FanOutThreadPrefix = "graft-fanout-"
 
   /** Per-topic partitioned parquet sink: the file-sink stand-in for the
-    * Kafka sink's per-topic batches (sink/kafka/kafka.go:257-287).
-    * `partitionBy(topic)` is the per-topic grouping — one directory per
-    * topic, written in a single pass with no extra shuffle. */
+    * Kafka sink's per-topic batches (sink/kafka/kafka.go:257-287), the
+    * pipeline's name for [[Sinks.parquet]]: `partitionBy(topic)` is the
+    * per-topic grouping — one directory per topic, written in a single
+    * pass with no extra shuffle. */
   def parquetTopicSink(outDir: String)(batch: DataFrame): Unit =
-    batch.write.mode("append").partitionBy("topic").parquet(outDir)
+    Sinks.parquet(outDir)(batch)
 
   // ---- streaming snapshot maintenance (the "apply the CDC stream" op) ----
 
@@ -276,14 +268,8 @@ object CdcPipeline {
     * the merge is a pure per-key max, so replaying any batch (the
     * at-least-once contract) is a no-op. */
   def mergeSnapshot(state: DataFrame, batch: DataFrame, keyField: String): DataFrame =
-    stateUnion(state, batch.select(
-        element_at(col("columns"), keyField).as("key"),
-        col("walPosition"), col("action"), col("columns")))
-      .groupBy(col("key"))
-      .agg(
-        max(col("walPosition")).as("walPosition"),
-        max_by(col("action"), col("walPosition")).as("action"),
-        max_by(col("columns"), col("walPosition")).as("columns"))
+    CdcOps.latestPerKey(
+      stateUnion(state, CdcOps.changes(batch, keyField, col("columns"))), Seq("columns"))
 
   /** `state ∪ changes`, the input of a per-key merge
     * ([[mergeSnapshot]], [[mergeScd2]]), in one partition when Spark
@@ -326,11 +312,9 @@ object CdcPipeline {
   /** Files of change events → validate → maintained snapshot. */
   def snapshotPipeline(spark: SparkSession, inDir: String, stateDir: String,
                        checkpoint: String, keyField: String): StreamingQuery =
-    validated(fileSource(spark, inDir)).writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, id: Long) => snapshotSink(stateDir, keyField)(b, id) }
-      .start()
+    muxFanoutIdempotent(validated(fileSource(spark, inDir)),
+      Seq("snapshot" -> snapshotSink(stateDir, keyField) _), checkpoint,
+      Trigger.ProcessingTime(0)).start()
 
   /** Top-k rows per window from a windowed-counts relation — the
     * "trending tables" view. Ranking ACROSS keys is not expressible in
@@ -343,7 +327,6 @@ object CdcPipeline {
     * shape to switch to if the per-window key space ever rivals the
     * event volume. */
   def topPerWindow(counts: DataFrame, k: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("window_start"))
       .orderBy(col("n").desc, col("table"), col("action"))
     counts.withColumn("rank", row_number().over(w))
@@ -374,9 +357,7 @@ object CdcPipeline {
     * are bit-identical (same source change), so the dedup pick is
     * immaterial. */
   def mergeScd2(state: DataFrame, batch: DataFrame, keyField: String): DataFrame =
-    stateUnion(state, batch.select(
-        element_at(col("columns"), keyField).as("key"),
-        col("walPosition"), col("action"), col("columns"),
+    stateUnion(state, CdcOps.changes(batch, keyField, col("columns"),
         unix_micros(col("timestamp")).as("tus")))
       .dropDuplicates("key", "walPosition")
 
@@ -410,32 +391,22 @@ object CdcPipeline {
       mergeScd2(scd2State(batch.sparkSession, stateDir), batch, keyField))
 
   /** The queryable SCD2 dimension: per-key version chain with validity
-    * windows — the streaming counterpart of the batch `cdc_scd2` query
-    * (CdcOps.qScd2), column-for-column: versions numbered in WAL order,
-    * `valid_to_s` = next version's start, deletes close their
-    * predecessor's window but emit no row themselves. */
-  def scd2History(spark: SparkSession, stateDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("key")).orderBy(col("walPosition"))
-    scd2State(spark, stateDir)
-      .withColumn("version", row_number().over(w))
-      .withColumn("next_tus", lead(col("tus"), 1).over(w))
-      .filter(col("action") =!= ChangeEvent.Delete)
+    * windows — the streaming counterpart of the batch `cdc_scd2` query,
+    * derived by the same rule ([[CdcOps.scd2Versions]]): versions
+    * numbered in WAL order, `valid_to_s` = next version's start,
+    * deletes close their predecessor's window but emit no row
+    * themselves. */
+  def scd2History(spark: SparkSession, stateDir: String): DataFrame =
+    CdcOps.scd2Versions(scd2State(spark, stateDir))
       .select(col("key"), col("version"), col("action"), col("walPosition"),
-        expr("tus DIV 1000000").as("valid_from_s"),
-        expr("next_tus DIV 1000000").as("valid_to_s"),
-        col("next_tus").isNull.cast("int").as("is_current"),
-        col("columns"))
-  }
+        col("valid_from_s"), col("valid_to_s"), col("is_current"), col("columns"))
 
   /** Files of change events → validate → maintained SCD2 history. */
   def scd2Pipeline(spark: SparkSession, inDir: String, stateDir: String,
                    checkpoint: String, keyField: String): StreamingQuery =
-    validated(fileSource(spark, inDir)).writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, id: Long) => scd2Sink(stateDir, keyField)(b, id) }
-      .start()
+    muxFanoutIdempotent(validated(fileSource(spark, inDir)),
+      Seq("scd2" -> scd2Sink(stateDir, keyField) _), checkpoint,
+      Trigger.ProcessingTime(0)).start()
 
   /** End-to-end flagship stream: files of change events → validate →
     * dedup → route/serialize → fan-out to N sinks, checkpointed.
@@ -443,10 +414,8 @@ object CdcPipeline {
   def pipeline(spark: SparkSession, inDir: String, outDir: String,
                checkpoint: String,
                mapping: Map[String, String],
-               fallback: Option[String] = Some("topic.default")): StreamingQuery = {
-    val env = deduped(validated(fileSource(spark, inDir)))
-    val wire = toWire(env, mapping, fallback)
-    muxFanout(wire, Seq("parquet" -> parquetTopicSink(outDir) _), checkpoint)
+               fallback: Option[String] = Some("topic.default")): StreamingQuery =
+    muxFanoutIdempotent(toWire(deduped(validated(fileSource(spark, inDir))), mapping, fallback),
+      Seq("parquet" -> ((b: DataFrame, _: Long) => parquetTopicSink(outDir)(b))), checkpoint)
       .start()
-  }
 }

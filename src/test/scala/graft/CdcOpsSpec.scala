@@ -13,6 +13,11 @@ class CdcOpsSpec extends SparkSpec {
   private lazy val events = Tables.events(spark, sf)
   private lazy val env = CdcOps.filterActions(CdcOps.toEnvelope(events))
 
+  test("the batch envelope has the stream's schema: ChangeEvent.schema") {
+    val got = CdcOps.toEnvelope(events).schema.map(f => f.name -> f.dataType)
+    assert(got === ChangeEvent.schema.map(f => f.name -> f.dataType))
+  }
+
   test("envelope carries only valid actions") {
     val actions = env.select("action").distinct().collect().map(_.getString(0)).toSet
     assert(actions.subsetOf(ChangeEvent.ValidActions.toSet))
@@ -47,7 +52,7 @@ class CdcOpsSpec extends SparkSpec {
   }
 
   test("serialize produces parseable JSON mirroring the envelope") {
-    val wire = CdcOps.serialize(env, Seq("tbl", "action", "uuid"))
+    val wire = CdcOps.serialize(env, Seq("table", "action", "uuid"))
     val back = wire.select(
       col("uuid"),
       get_json_object(col("value"), "$.uuid").as("round_trip"))
@@ -65,10 +70,10 @@ class CdcOpsSpec extends SparkSpec {
     // change stream, and keys whose LATEST change is a delete are absent
     val lastByKey = env
       .select(element_at(col("columns"), "user_id").as("user_id"),
-        col("wal_position"), col("action"))
+        col("walPosition"), col("action"))
       .groupBy("user_id")
-      .agg(max("wal_position").as("max_wal"),
-        max_by(col("action"), col("wal_position")).as("last_action"))
+      .agg(max("walPosition").as("max_wal"),
+        max_by(col("action"), col("walPosition")).as("last_action"))
     val joined = snap.join(lastByKey, "user_id")
     assert(joined.filter(col("last_wal") =!= col("max_wal")).count() === 0)
     val deletedKeys = lastByKey.filter(col("last_action") === ChangeEvent.Delete)

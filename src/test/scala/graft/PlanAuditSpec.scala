@@ -841,6 +841,46 @@ class PlanAuditSpec extends SparkSpec {
     assert(parses(unguarded) > 1, "the unguarded parse is no longer duplicated — update this pin")
   }
 
+  /** Runs `df` and returns its executed plan; [[Executed.collect]]
+    * walks into the query stages of an adaptive plan. */
+  private object Executed extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+    def apply(df: DataFrame): SparkPlan = { df.collect(); df.queryExecution.executedPlan }
+  }
+
+  test("cdc_envelope's executed plan evaluates md5 once per row") {
+    import org.apache.spark.sql.catalyst.expressions.Md5
+    // the uuid's five substrings share one md5, which a node's
+    // subexpression elimination evaluates once: count distinct ones
+    def md5s(df: DataFrame): Int = Executed.collect(Executed(df)) { case node =>
+      node.expressions.flatMap(_.collect { case m: Md5 => m.canonicalized }).distinct.size
+    }.sum
+    assert(md5s(SparkEntry.queries("cdc_envelope")(spark, sf)) === 1)
+    // negative control: the stream's uuid check on the batch envelope
+    // is pushed below the projection, so the uuid's md5 runs twice
+    val checked = graft.streaming.CdcPipeline.validated(
+      graft.operators.CdcOps.toEnvelope(Tables.events(spark, sf)))
+    assert(md5s(checked) > 1, "the uuid check no longer duplicates md5 — update this pin")
+  }
+
+  test("cdc_snapshot: partial and final aggregate around one exchange on the key, shuffling props") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Partial}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.types.MapType
+    val plan = Executed(SparkEntry.queries("cdc_snapshot")(spark, sf))
+    val aggs = Executed.collect(plan) { case a: BaseAggregateExec => a }
+    assert(aggs.map(_.aggregateExpressions.map(_.mode).distinct) === Seq(Seq(Final), Seq(Partial)))
+    val exchanges = Executed.collect(plan) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size === 1)
+    assert(exchanges.head.outputPartitioning.asInstanceOf[
+      org.apache.spark.sql.catalyst.plans.physical.HashPartitioning].expressions
+      .flatMap(_.references.map(_.name)) === Seq("key"))
+    val partialIn = aggs.last.child.output
+    assert(partialIn.map(_.name).contains("props"))
+    assert(!(partialIn ++ exchanges.head.child.output).exists(_.dataType.isInstanceOf[MapType]),
+      s"the row-image map is shuffled: $partialIn")
+  }
+
   test("LSH audit stratum: shingling confined to the stratum, estimate agrees with the full audit") {
     import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan}
     def textGenerates(lp: LogicalPlan): Seq[Generate] =
