@@ -274,6 +274,41 @@ object DedupOps {
       |  doc_id = MIN(doc_id) OVER (PARTITION BY canonical) AS is_keeper
       |FROM c ORDER BY doc_id""".stripMargin
 
+  /** The PREVIOUS snapshot's text projection: docs `% 7 == 3` lose
+    * their last token (the simulated content drift), the rest are
+    * verbatim. Shared by the fingerprint projection ([[crawlPrev]])
+    * and the previous-snapshot signature index
+    * ([[qDedupDeltaClassify]]). */
+  private[graft] def prevTextExpr: Column =
+    when(col("doc_id") % 7 === 3,
+        array_join(slice(split(col("text"), " "), lit(1),
+          size(split(col("text"), " ")) - 1), " "))
+      .otherwise(col("text"))
+
+  /** The previous snapshot as a (doc_id, text) doc slice. */
+  private[graft] def prevSnapshotDocs(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.documents(spark, sfDir)
+      .filter(col("doc_id") % 10 =!= 9)
+      .select(col("doc_id"), prevTextExpr.as("text"))
+
+  /** The simulated PREVIOUS-crawl snapshot projection
+    * (doc_id, source, fp) — shared by [[qCrawlDelta]] and the
+    * streaming crawl-delta twin's replay spec so the two can never
+    * drift on the text derivation. */
+  private[graft] def crawlPrev(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.documents(spark, sfDir)
+      .filter(col("doc_id") % 10 =!= 9)
+      .select(col("doc_id"), col("source"),
+        md5(prevTextExpr.cast("binary")).as("fp"))
+
+  /** The simulated CURRENT-crawl snapshot projection — see
+    * [[crawlPrev]]. */
+  private[graft] def crawlCur(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.documents(spark, sfDir)
+      .filter(col("doc_id") % 10 =!= 0)
+      .select(col("doc_id"), col("source"),
+        md5(col("text").cast("binary")).as("fp"))
+
   /** CRAWL DELTA — the corpus-versioning report every recrawl
     * pipeline publishes (and the input to incremental reprocessing
     * decisions: only `added`+`changed` docs re-enter the dedup/
@@ -294,41 +329,6 @@ object DedupOps {
     * cross-engine md5 parity is even required — only the text
     * derivations must agree (token-slice formula, identical both
     * sides). */
-  /** The simulated PREVIOUS-crawl snapshot projection
-    * (doc_id, source, fp) — shared by [[qCrawlDelta]] and the
-    * streaming crawl-delta twin's replay spec so the two can never
-    * drift on the text derivation. */
-  /** The PREVIOUS snapshot's text projection: docs `% 7 == 3` lose
-    * their last token (the simulated content drift), the rest are
-    * verbatim. Shared by the fingerprint projection ([[crawlPrev]])
-    * and the previous-snapshot signature index
-    * ([[qDedupDeltaClassify]]). */
-  private[graft] def prevTextExpr: Column =
-    when(col("doc_id") % 7 === 3,
-        array_join(slice(split(col("text"), " "), lit(1),
-          size(split(col("text"), " ")) - 1), " "))
-      .otherwise(col("text"))
-
-  /** The previous snapshot as a (doc_id, text) doc slice. */
-  private[graft] def prevSnapshotDocs(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.documents(spark, sfDir)
-      .filter(col("doc_id") % 10 =!= 9)
-      .select(col("doc_id"), prevTextExpr.as("text"))
-
-  private[graft] def crawlPrev(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.documents(spark, sfDir)
-      .filter(col("doc_id") % 10 =!= 9)
-      .select(col("doc_id"), col("source"),
-        md5(prevTextExpr.cast("binary")).as("fp"))
-
-  /** The simulated CURRENT-crawl snapshot projection — see
-    * [[crawlPrev]]. */
-  private[graft] def crawlCur(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.documents(spark, sfDir)
-      .filter(col("doc_id") % 10 =!= 0)
-      .select(col("doc_id"), col("source"),
-        md5(col("text").cast("binary")).as("fp"))
-
   def qCrawlDelta(spark: SparkSession, sfDir: String): DataFrame = {
     val prev = crawlPrev(spark, sfDir)
       .select(col("doc_id"), col("source").as("p_source"),
@@ -550,33 +550,40 @@ object DedupOps {
     * from the aggregated signature (4 rows/doc is nothing; 12 rows per
     * SHINGLE was the expensive version). */
   def minhashBands(sh: DataFrame): DataFrame = {
-    val mins = (0 until NumHashes).map { j =>
-      min(md5(concat(lit(j.toString), lit(":"), col("shingle")).cast("binary"))).as(s"m$j")
-    }
-    val sig = sh.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
-    val bands = (0 until NumHashes / BandSize).map { b =>
+    val mins = (0 until NumHashes).map(j =>
+      min(seedHash(j, col("shingle"))).as(s"m$j"))
+    bandsAt(sh.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*), BandSize)
+  }
+
+  /** Seed j's hash of a shingle: md5(j:shingle). */
+  private def seedHash(j: Int, shingle: Column): Column =
+    md5(concat(lit(j.toString), lit(":"), shingle).cast("binary"))
+
+  /** The (band, bkey) structs of a signature whose j-th minimum is
+    * `m(j)`, r rows per band. */
+  private def bandStructs(r: Int, m: Int => Column): Seq[Column] =
+    (0 until NumHashes / r).map { b =>
       struct(lit(b).as("band"),
-        md5(concat_ws(",",
-          (0 until BandSize).map(i => col(s"m${b * BandSize + i}")): _*)
+        md5(concat_ws(",", (0 until r).map(i => m(b * r + i)): _*)
           .cast("binary")).as("bkey"))
     }
-    sig.select(col("doc_id"), explode(array(bands: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band"), col("bb.bkey"))
-  }
+
+  /** [[minhashBands]]' band structs for a distinct-shingle ARRAY
+    * column, the signature computed map-side as `array_min` over the
+    * array (a per-doc min is order-free, so the md5 strings are
+    * identical): the shape a stream needs, with no stateful shuffle
+    * before the band join. */
+  private[graft] def minhashBandArray(sh: Column): Column =
+    array(bandStructs(BandSize,
+      j => array_min(transform(sh, s => seedHash(j, s)))): _*)
 
   /** Band keys for an arbitrary rows-per-band r over the SAME
     * 12-permutation signature — the generalization [[minhashBands]]
     * (r = [[BandSize]]) instantiates; shared by the tuning sweep. */
-  private def bandsAt(sig: DataFrame, r: Int): DataFrame = {
-    val bands = (0 until NumHashes / r).map { b =>
-      struct(lit(b).as("band"),
-        md5(concat_ws(",",
-          (0 until r).map(i => col(s"m${b * r + i}")): _*)
-          .cast("binary")).as("bkey"))
-    }
-    sig.select(col("doc_id"), explode(array(bands: _*)).as("bb"))
+  private def bandsAt(sig: DataFrame, r: Int): DataFrame =
+    sig.select(col("doc_id"),
+        explode(array(bandStructs(r, j => col(s"m$j")): _*)).as("bb"))
       .select(col("doc_id"), col("bb.band"), col("bb.bkey"))
-  }
 
   /** LSH BAND-TUNING SWEEP — the cost/selectivity table an index
     * operator reads before fixing (bands × rows): for each rows-per-
@@ -597,9 +604,8 @@ object DedupOps {
   def qDedupLshBandTuning(spark: SparkSession, sfDir: String): DataFrame = QueryScope.eager(spark) { scope =>
     import spark.implicits._
     val sh = scope.persist(shingles(Tables.documents(spark, sfDir)))
-    val mins = (0 until NumHashes).map { j =>
-      min(md5(concat(lit(j.toString), lit(":"), col("shingle")).cast("binary"))).as(s"m$j")
-    }
+    val mins = (0 until NumHashes).map(j =>
+      min(seedHash(j, col("shingle"))).as(s"m$j"))
     val sig = sh.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
       .transform(scope.persist)
     val sets = sh.groupBy(col("doc_id"))
@@ -829,10 +835,8 @@ object DedupOps {
   def qDedupLshCalibration(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val sh = shingles(Tables.documents(spark, sfDir))
       .transform(scope.persist)
-    val mins = (0 until NumHashes).map { j =>
-      min(md5(concat(lit(j.toString), lit(":"), col("shingle"))
-        .cast("binary"))).as(s"m$j")
-    }
+    val mins = (0 until NumHashes).map(j =>
+      min(seedHash(j, col("shingle"))).as(s"m$j"))
     // r17: sig feeds THREE consumers (the r=1 bands and both sides of
     // the agreement join); unpersisted, each re-ran the 12-min
     // signature aggregation over the whole shingle relation. One
@@ -1000,12 +1004,6 @@ object DedupOps {
 
   // ---- 4. SimHash ----
 
-  /** 16-bit SimHash per document over distinct tokens: bit b of the
-    * fingerprint is the sign of Σ_tokens (±1 by bit b of md5(token)).
-    * Documents sharing a fingerprint are near-dup candidates (cluster
-    * key = simhash → canonical = min doc_id). At 100 TB: 64-bit
-    * fingerprints + hamming-ball probing over rotated tables; the plan
-    * shape (explode → two tiny-key groupBys) is identical. */
   /** 16-bit SimHash per document (doc_id, simhash) — shared by the
     * exact-cluster and hamming-near-match queries.
     *
@@ -1062,6 +1060,12 @@ object DedupOps {
       lit(0L), _ + _)
   }
 
+  /** 16-bit SimHash per document over distinct tokens: bit b of the
+    * fingerprint is the sign of Σ_tokens (±1 by bit b of md5(token)).
+    * Documents sharing a fingerprint are near-dup candidates (cluster
+    * key = simhash → canonical = min doc_id). At 100 TB: 64-bit
+    * fingerprints + hamming-ball probing over rotated tables; the plan
+    * shape (explode → two tiny-key groupBys) is identical. */
   def qDedupSimhash(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     simhashes(Tables.documents(spark, sfDir))
@@ -1788,13 +1792,6 @@ object DedupOps {
       posexplode(array((0 until nTables).map(tblKey): _*)).as(Seq("tbl", "bucket")): _*)
   }
 
-  /** [[qDedupSemanticClusters]] with the edge set mined by the
-    * LSH-bucketed ANN path instead of the guarded O(n²) exact twin —
-    * the variant a 100 TB corpus actually runs. Components refine the
-    * exact clustering (the ANN edge set is a subset of the exact one:
-    * asserted in ComponentsSpec together with an edge-recall floor);
-    * the oracle reproduces the bucket + cosine mining bit-for-bit, so
-    * this is a full hash-match query, not a rows-only one. */
   /** Memoized ANN sizing counts, keyed by dataset dir: one footer-only
     * COUNT(*) job per dataset per JVM, then reused — so repeated
     * constructions of the ANN query (bench warmup + timed runs, verify)
@@ -1810,6 +1807,13 @@ object DedupOps {
   private[graft] def annSizingCount(key: String, n: => Long): Long =
     annSizingCounts.computeIfAbsent(key, _ => Long.box(n)).longValue()
 
+  /** [[qDedupSemanticClusters]] with the edge set mined by the
+    * LSH-bucketed ANN path instead of the guarded O(n²) exact twin —
+    * the variant a 100 TB corpus actually runs. Components refine the
+    * exact clustering (the ANN edge set is a subset of the exact one:
+    * asserted in ComponentsSpec together with an edge-recall floor);
+    * the oracle reproduces the bucket + cosine mining bit-for-bit, so
+    * this is a full hash-match query, not a rows-only one. */
   def qDedupSemanticClustersAnn(spark: SparkSession, sfDir: String): DataFrame = {
     val e = normedVectors(Tables.embeddings(spark, sfDir))
     val n = annSizingCount(sfDir, e.count())
@@ -2100,18 +2104,29 @@ object DedupOps {
     val near = cand
       .join(sets.select(col("doc_id"), col("ss").as("sa"), col("n").as("na")), "doc_id")
       .join(sets.select(col("doc_id").as("base_id"), col("ss").as("sb"), col("n").as("nb")), "base_id")
-      .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
-      .filter(col("inter").cast(DoubleType) / (col("na") + col("nb") - col("inter")) >= 0.1)
+      .transform(verifiedNear)
       .groupBy(col("doc_id")).agg(min(col("base_id")).as("near_match_id"))
     docs.filter(col("bucket") >= 90).select("doc_id")
       .join(exact, Seq("doc_id"), "left_outer")
       .join(near, Seq("doc_id"), "left_outer")
-      .select(col("doc_id"),
-        when(col("exact_match_id").isNotNull, "exact")
-          .when(col("near_match_id").isNotNull, "near")
-          .otherwise("new").as("status"),
-        coalesce(col("exact_match_id"), col("near_match_id")).as("match_id"))
+      .select(col("doc_id") +: dupVerdict: _*)
   }
+
+  /** The near-duplicate verification over candidate pairs carrying
+    * distinct-shingle arrays `sa`, `sb` of sizes `na`, `nb`: keeps the
+    * pairs with exact jaccard ≥ 0.1. */
+  private[graft] def verifiedNear(pairs: DataFrame): DataFrame = pairs
+    .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
+    .filter(col("inter").cast(DoubleType) / (col("na") + col("nb") - col("inter")) >= 0.1)
+
+  /** The incremental dedup verdict over `exact_match_id` and
+    * `near_match_id`: 'exact' | 'near' | 'new', with the matching base
+    * id as evidence. */
+  private[graft] def dupVerdict: Seq[Column] = Seq(
+    when(col("exact_match_id").isNotNull, "exact")
+      .when(col("near_match_id").isNotNull, "near")
+      .otherwise("new").as("status"),
+    coalesce(col("exact_match_id"), col("near_match_id")).as("match_id"))
 
   /** The BASE-side dedup index a production deployment materializes
     * ONCE per corpus and reuses every nightly increment: per doc, the
@@ -2184,17 +2199,12 @@ object DedupOps {
         .agg(collect_list(col("shingle")).as("sa"), count(lit(1)).as("na")), "doc_id")
       .join(base.select(col("doc_id").as("base_id"), col("ss").as("sb"),
         col("n_shingles").as("nb")), "base_id")
-      .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
-      .filter(col("inter").cast(DoubleType) / (col("na") + col("nb") - col("inter")) >= 0.1)
+      .transform(verifiedNear)
       .groupBy(col("doc_id")).agg(min(col("base_id")).as("near_match_id"))
     incoming.select("doc_id")
       .join(exact, Seq("doc_id"), "left_outer")
       .join(near, Seq("doc_id"), "left_outer")
-      .select(col("doc_id"),
-        when(col("exact_match_id").isNotNull, "exact")
-          .when(col("near_match_id").isNotNull, "near")
-          .otherwise("new").as("status"),
-        coalesce(col("exact_match_id"), col("near_match_id")).as("match_id"))
+      .select(col("doc_id") +: dupVerdict: _*)
   }
 
   /** [[qDedupIncrementalStored]] as a registered query: materializes

@@ -1466,21 +1466,6 @@ object EventOps {
       |  win[(len(win) + 1) // 2] AS rolling_med
       |FROM w ORDER BY event_type, day""".stripMargin
 
-  /** TOP SESSION PATHS — the "what do users actually do" report that
-    * complements the funnel (a HYPOTHESIZED order checked against
-    * data) and the transition matrix (memoryless single steps): the
-    * most frequent 3-event sequences within a session, with
-    * integer-ppm support. Sessions are the same 30-minute-gap
-    * construction as `q_sessionize` (identical expressions, so the
-    * two can never drift); paths are windowed leads within each
-    * session — no self-joins, no explode.
-    *
-    * Scale shape: every window is partitioned by the high-cardinality
-    * (user, session) key; the trigram relation is corpus-sized but
-    * map-only after the session shuffle, and the report is a
-    * TakeOrdered top-20 + a 20-row rank window. One count() action
-    * folds the trigram total in as a literal (ANN-sizing-count
-    * discipline). */
   /** The (user_id, session_id, path) trigram relation shared by the
     * batch report and the STREAMING twin's cut-equality spec
     * (`StatefulOps.streamingEventPaths` emits exactly these rows). */
@@ -1506,6 +1491,21 @@ object EventOps {
         concat_ws(">", col("event_type"), col("e2"), col("e3")).as("path"))
   }
 
+  /** TOP SESSION PATHS — the "what do users actually do" report that
+    * complements the funnel (a HYPOTHESIZED order checked against
+    * data) and the transition matrix (memoryless single steps): the
+    * most frequent 3-event sequences within a session, with
+    * integer-ppm support. Sessions are the same 30-minute-gap
+    * construction as `q_sessionize` (identical expressions, so the
+    * two can never drift); paths are windowed leads within each
+    * session — no self-joins, no explode.
+    *
+    * Scale shape: every window is partitioned by the high-cardinality
+    * (user, session) key; the trigram relation is corpus-sized but
+    * map-only after the session shuffle, and the report is a
+    * TakeOrdered top-20 + a 20-row rank window. One count() action
+    * folds the trigram total in as a literal (ANN-sizing-count
+    * discipline). */
   def qEventPaths(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val tri = sessionTrigrams(spark, sfDir)
       .select(col("path"))

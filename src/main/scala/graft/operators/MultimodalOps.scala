@@ -925,6 +925,25 @@ ORDER BY a_id, a_frame, b_id, b_frame""")
       |FROM cand WHERE bit_count(xor(ha, hb)) <= 1
       |ORDER BY a_id, b_id""".stripMargin
 
+  /** The gated text×image pair body over an already-prepared
+    * (doc_id, shingle) relation — shared by the miner and the recall
+    * eval so the candidate definition cannot drift between them.
+    * Returns (text_id, img_id, inter, nt, ni) rows passing the
+    * integer-cross-multiplied Jaccard gate. */
+  private def crossmodalGated(rel: DataFrame): DataFrame = {
+    val counts = rel.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    rel.filter(col("doc_id") % 3 =!= 0).as("t")
+      .join(rel.filter(col("doc_id") % 3 === 0).as("i"),
+        col("t.shingle") === col("i.shingle"))
+      .groupBy(col("t.doc_id").as("text_id"), col("i.doc_id").as("img_id"))
+      .agg(count(lit(1)).as("inter"))
+      .join(counts.withColumnRenamed("doc_id", "text_id")
+        .withColumnRenamed("n", "nt"), "text_id")
+      .join(counts.withColumnRenamed("doc_id", "img_id")
+        .withColumnRenamed("n", "ni"), "img_id")
+      .filter(col("inter") * 10 >= col("nt") + col("ni") - col("inter"))
+  }
+
   /** CROSS-MODAL (text ↔ image) PAIR MINING — the alt-text/page-text
     * matching that builds image–caption corpora for vision-language
     * contrastive training (the public CLIP/LAION data-prep shape): a
@@ -946,25 +965,6 @@ ORDER BY a_id, a_frame, b_id, b_frame""")
     * cross-multiplied Jaccard gate (10·inter ≥ union — no double
     * compare). Never all-pairs; a modality predicate on each join
     * side is the only delta from the unimodal miner. */
-  /** The gated text×image pair body over an already-prepared
-    * (doc_id, shingle) relation — shared by the miner and the recall
-    * eval so the candidate definition cannot drift between them.
-    * Returns (text_id, img_id, inter, nt, ni) rows passing the
-    * integer-cross-multiplied Jaccard gate. */
-  private def crossmodalGated(rel: DataFrame): DataFrame = {
-    val counts = rel.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    rel.filter(col("doc_id") % 3 =!= 0).as("t")
-      .join(rel.filter(col("doc_id") % 3 === 0).as("i"),
-        col("t.shingle") === col("i.shingle"))
-      .groupBy(col("t.doc_id").as("text_id"), col("i.doc_id").as("img_id"))
-      .agg(count(lit(1)).as("inter"))
-      .join(counts.withColumnRenamed("doc_id", "text_id")
-        .withColumnRenamed("n", "nt"), "text_id")
-      .join(counts.withColumnRenamed("doc_id", "img_id")
-        .withColumnRenamed("n", "ni"), "img_id")
-      .filter(col("inter") * 10 >= col("nt") + col("ni") - col("inter"))
-  }
-
   def qCrossmodalPairs(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val maxDf = 20
     val sh = DedupOps.shingles(graft.Tables.documents(spark, sfDir))

@@ -196,18 +196,6 @@ object SamplingOps {
       |SELECT doc_id, lang, rn FROM rk WHERE rn <= 60
       |ORDER BY lang, rn""".stripMargin
 
-  /** Test-set DECONTAMINATION: flag training docs sharing word-3-gram
-    * shingles with the held-out benchmark slice (here: the hash split's
-    * `test` bucket; in production the benchmark suite itself). The
-    * collision join is the same inverted-index shape as the jaccard
-    * dedup family — shingle equi-join, never a cross join — so the
-    * 100 TB cost is Σ_s |train(s)|·|bench(s)| over shared shingles
-    * only. A real benchmark set is tiny (thousands of docs), so its
-    * shingle relation broadcasts and the whole pass is map-side; here
-    * the bench slice is 10% of the corpus, so it stays a shuffle join.
-    * Docs with ≥5 distinct colliding shingles are `contaminated` (the
-    * n-gram-overlap rule used for eval decontamination in LLM data
-    * pipelines). */
   /** Contamination threshold: a train doc sharing at least this many
     * distinct shingles with the bench slice is flagged. ONE constant
     * for ALL decontamination variants (exact join, bloom pre-filter,
@@ -242,6 +230,18 @@ object SamplingOps {
         countDistinct(col("bench_id")).as("n_bench_docs"))
       .withColumn("contaminated", col("n_shingle_hits") >= DeconMinHits)
 
+  /** Test-set DECONTAMINATION: flag training docs sharing word-3-gram
+    * shingles with the held-out benchmark slice (here: the hash split's
+    * `test` bucket; in production the benchmark suite itself). The
+    * collision join is the same inverted-index shape as the jaccard
+    * dedup family — shingle equi-join, never a cross join — so the
+    * 100 TB cost is Σ_s |train(s)|·|bench(s)| over shared shingles
+    * only. A real benchmark set is tiny (thousands of docs), so its
+    * shingle relation broadcasts and the whole pass is map-side; here
+    * the bench slice is 10% of the corpus, so it stays a shuffle join.
+    * Docs with ≥5 distinct colliding shingles are `contaminated` (the
+    * n-gram-overlap rule used for eval decontamination in LLM data
+    * pipelines). */
   def qDecontaminate(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val (train, bench) = deconRelations(scope, spark, sfDir)
     contaminationReport(train, bench)
@@ -834,6 +834,24 @@ object SamplingOps {
       |    AS BIGINT) AS dup_ppm
       |FROM d GROUP BY 1 ORDER BY decile""".stripMargin
 
+  /** The per-doc (doc_id, host, q_level, h) projection — split out so
+    * the streaming twin's spec replays EXACTLY this relation (one
+    * definition, no drift). */
+  private[graft] def domainDocs(spark: SparkSession, sfDir: String): DataFrame = {
+    val toks = split(col("text"), " ")
+    val qlvl = floor((size(array_distinct(toks)).cast(DoubleType) / size(toks)) *
+      (lit(1.0) - size(filter(toks, x => x.isin("the", "a", "of", "and", "to")))
+        .cast(DoubleType) / size(toks)) * 100).cast("long")
+    Tables.documents(spark, sfDir)
+      .select(col("doc_id"),
+        concat(col("source"), lit(".example."),
+          when(length(col("source")) % 2 === 0, "com").otherwise("org"))
+          .as("host"),
+        qlvl.as("q_level"),
+        (conv(substring(md5(concat(lit("dom:"), col("doc_id").cast("string"))
+          .cast("binary")), 1, 6), 16, 10).cast("long") % 1000000L).as("h"))
+  }
+
   /** DOMAIN-LEVEL SOURCE FILTERING — the per-site curation pass every
     * web corpus runs before training (C4/RefinedWeb-style): a
     * document's fate depends on its HOST's aggregate statistics, not
@@ -857,24 +875,6 @@ object SamplingOps {
     * sized host never funnels through one task). All comparisons are
     * integer cross-multiplies on mille-scaled means — no double
     * compare to diverge across engines. */
-  /** The per-doc (doc_id, host, q_level, h) projection — split out so
-    * the streaming twin's spec replays EXACTLY this relation (one
-    * definition, no drift). */
-  private[graft] def domainDocs(spark: SparkSession, sfDir: String): DataFrame = {
-    val toks = split(col("text"), " ")
-    val qlvl = floor((size(array_distinct(toks)).cast(DoubleType) / size(toks)) *
-      (lit(1.0) - size(filter(toks, x => x.isin("the", "a", "of", "and", "to")))
-        .cast(DoubleType) / size(toks)) * 100).cast("long")
-    Tables.documents(spark, sfDir)
-      .select(col("doc_id"),
-        concat(col("source"), lit(".example."),
-          when(length(col("source")) % 2 === 0, "com").otherwise("org"))
-          .as("host"),
-        qlvl.as("q_level"),
-        (conv(substring(md5(concat(lit("dom:"), col("doc_id").cast("string"))
-          .cast("binary")), 1, 6), 16, 10).cast("long") % 1000000L).as("h"))
-  }
-
   def qDomainFilter(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
     val docs = domainDocs(spark, sfDir)
       .transform(scope.persist)
@@ -990,6 +990,21 @@ object SamplingOps {
     * proves the decomposition exact. Ties break on doc_id so bucket
     * boundaries are replay-stable. */
   def qPerplexityBuckets(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
+    perplexityTerciles(scope, spark, sfDir)
+      .groupBy(col("lang"), col("bucket"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(col("n_tokens")).as("n_tokens"),
+        round(avg(col("avg_logp_r")), 6).as("avg_logp"))
+      .withColumn("kept", perplexityKept(col("bucket")))
+  }
+
+  /** Every stored-LM-scored document with its per-language tercile
+    * `bucket` (1 = best scores): the [[withGlobalRank]] pass, the
+    * languages-sized rank-offset/count rollup broadcast back, and the
+    * closed-form [[ntileColExpr]] — the bucket steps shared by
+    * [[qPerplexityBuckets]] and [[perplexityCutoffs]]. */
+  private def perplexityTerciles(scope: QueryScope, spark: SparkSession,
+      sfDir: String): DataFrame = {
     val ranked = withGlobalRank(scope,
       TextOps.lmScoredDocs(spark, sfDir), "grk",
       col("lang"), col("avg_logp_r").desc, col("doc_id"))
@@ -1000,12 +1015,10 @@ object SamplingOps {
       .withColumn("r", col("grk") - col("__loff") + 1)
       .withColumn("bucket",
         expr(ntileColExpr("__nl", 3, "r")).cast("int"))
-      .groupBy(col("lang"), col("bucket"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_tokens")).as("n_tokens"),
-        round(avg(col("avg_logp_r")), 6).as("avg_logp"))
-      .withColumn("kept", col("bucket") <= 2)
   }
+
+  /** The perplexity sampler's keep rule: head and middle terciles. */
+  private[graft] def perplexityKept(bucket: Column): Column = bucket <= 2
 
   val qPerplexityBucketsOracle: String =
     """WITH tok AS (
@@ -1047,19 +1060,18 @@ object SamplingOps {
     * score to the better bucket, so agreement off the two boundary
     * values is exact and ON them is by convention. */
   private[graft] def perplexityCutoffs(spark: SparkSession, sfDir: String): DataFrame = QueryScope(spark) { scope =>
-    val ranked = withGlobalRank(scope,
-      TextOps.lmScoredDocs(spark, sfDir), "grk",
-      col("lang"), col("avg_logp_r").desc, col("doc_id"))
-    val langSizes = ranked.groupBy(col("lang"))
-      .agg(min(col("grk")).as("__loff"), count(lit(1)).as("__nl"))
-    ranked
-      .join(broadcast(langSizes), Seq("lang"))
-      .withColumn("r", col("grk") - col("__loff") + 1)
-      .withColumn("bucket", expr(ntileColExpr("__nl", 3, "r")).cast("int"))
+    perplexityTerciles(scope, spark, sfDir)
       .groupBy(col("lang"))
       .agg(min(when(col("bucket") === 1, col("avg_logp_r"))).as("b1_min"),
         min(when(col("bucket") === 2, col("avg_logp_r"))).as("b2_min"))
   }
+
+  /** The tercile of a `score` under its language's frozen
+    * [[perplexityCutoffs]] columns `b1_min` and `b2_min`. */
+  private[graft] def perplexityBucket(score: Column): Column =
+    when(score >= col("b1_min"), 1)
+      .when(score >= col("b2_min"), 2)
+      .otherwise(3)
 
   /** DSIR — Data Selection via Importance Resampling (Xie et al.
     * 2023): score every document by its unigram log importance ratio

@@ -268,17 +268,6 @@ object TextOps {
       |    AS min_window_hash
       |FROM v ORDER BY doc_id""".stripMargin
 
-  /** The composed training-data filter chain — the pipeline every LLM
-    * corpus build runs, as ONE declarative query: quality gate (score +
-    * length) → language gate (prediction agrees with label) → exact
-    * dedup (keep only each content-fingerprint's min doc_id).
-    *
-    * Plan shape: every per-document gate is a COLUMN in one projection
-    * over one scan (naively joining the individual queries would scan
-    * `documents` four times); the only extra pass is the canonical-set
-    * aggregation the dedup semantics require, and the only joins are
-    * against that tiny aggregate. At 100 TB: one wide scan, one small
-    * agg, one broadcastable join. */
   /** The per-document gate columns of the corpus filter chain —
     * n_tokens, quality_score, language-marker scores + prediction, and
     * the sorted-token-set content fingerprint — as ONE projection over
@@ -308,6 +297,17 @@ object TextOps {
           .otherwise("fr"))
   }
 
+  /** The composed training-data filter chain — the pipeline every LLM
+    * corpus build runs, as ONE declarative query: quality gate (score +
+    * length) → language gate (prediction agrees with label) → exact
+    * dedup (keep only each content-fingerprint's min doc_id).
+    *
+    * Plan shape: every per-document gate is a COLUMN in one projection
+    * over one scan (naively joining the individual queries would scan
+    * `documents` four times); the only extra pass is the canonical-set
+    * aggregation the dedup semantics require, and the only joins are
+    * against that tiny aggregate. At 100 TB: one wide scan, one small
+    * agg, one broadcastable join. */
   def qQualityPipeline(spark: SparkSession, sfDir: String): DataFrame = {
     val gated = gatedDocs(Tables.documents(spark, sfDir))
     val canonical = gated.groupBy(col("fp_content"))
@@ -506,6 +506,15 @@ object TextOps {
       |    '[0-9]{3}-[0-9]{3}-[0-9]{4}', '<PHONE>', 'g')) AS redacted_md5
       |FROM aug ORDER BY doc_id""".stripMargin
 
+  /** The k-anonymity / l-diversity operating point and the sensitive-
+    * attribute bucket width — ONE set of constants shared by the batch
+    * query, its oracle SQL, and the streaming monitor twin
+    * ([[graft.streaming.StatefulOps.streamingKAnonMonitor]]) so the
+    * thresholds can never drift between the three. */
+  private[graft] val KAnonK = 5
+  private[graft] val KAnonL = 3
+  private[graft] val KAnonBucketWidth = 100L
+
   /** K-ANONYMITY / L-DIVERSITY risk report — the OTHER half of the
     * privacy gate [[qPiiRedact]] starts: redaction strips DIRECT
     * identifiers, but a released training corpus still re-identifies
@@ -532,15 +541,6 @@ object TextOps {
     * Spark's standard 2-phase expand, keyed by the same QI tuple, so
     * no second corpus pass). Output is equivalence-class-sized —
     * (langs × sources), metadata scale at 100 TB — never row scale. */
-  /** The k-anonymity / l-diversity operating point and the sensitive-
-    * attribute bucket width — ONE set of constants shared by the batch
-    * query, its oracle SQL, and the streaming monitor twin
-    * ([[graft.streaming.StatefulOps.streamingKAnonMonitor]]) so the
-    * thresholds can never drift between the three. */
-  private[graft] val KAnonK = 5
-  private[graft] val KAnonL = 3
-  private[graft] val KAnonBucketWidth = 100L
-
   def qKAnonymity(spark: SparkSession, sfDir: String): DataFrame = {
     Tables.documents(spark, sfDir)
       .groupBy(col("lang"), col("source"))
@@ -746,23 +746,49 @@ object TextOps {
     bm25Ranked(tf.join(df, "tk").join(dl, "doc_id").crossJoin(stats))
   }
 
-  /** Per-doc BM25 rollup over a (doc_id, tk, tf, df, dl, n, avgdl)
-    * relation — the scoring half of [[bm25Ranked]]. The streaming
-    * twin ([[graft.streaming.StatefulOps.streamingBm25]]) shares the
-    * Bm25* CONSTANTS, not this relational op: it is a stateless
-    * projection with the model folded as literals, and its addend
-    * mirrors this expression term-for-term. */
+  /** A formula string the DuckDB oracle interpolates verbatim, as a
+    * Spark Column: each free column name of `sql` listed in `args` is
+    * bound to its Column. A batch query binds columns; a serving twin
+    * binds literals, which constant folding evaluates with the same
+    * Spark expressions. */
+  private def sqlKernel(sql: String, args: (String, Column)*): Column = {
+    import org.apache.spark.sql.GraftBridge
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+    val bound = args.toMap
+    GraftBridge.column(CatalystSqlParser.parseExpression(sql).transformUp {
+      case a: UnresolvedAttribute if bound.contains(a.name) =>
+        GraftBridge.expression(bound(a.name))
+    })
+  }
+
   /** The per-(term, doc) BM25 addend over columns (tf, df, dl, n,
     * avgdl) — ONE kernel string interpolated into both engines,
     * shared by the unweighted scorers and the RM3 rescorer (which
     * multiplies it by the term's mixture weight `fw`). */
-  private[graft] val Bm25Kernel: String =
+  private[graft] val Bm25KernelSql: String =
     s"ln(1 + (n - df + 0.5) / (df + 0.5)) * tf * $Bm25K1p1" +
       s" / (tf + $Bm25K1 * ($Bm25OneMinusB + $Bm25B * dl / avgdl))"
 
+  /** [[Bm25KernelSql]] as a Column: the batch scorers pass their
+    * columns, the streaming twin
+    * ([[graft.streaming.StatefulOps.streamingBm25]]) its per-term tf
+    * column and the frozen model's df, N and avgdl as literals. */
+  private[graft] def bm25Kernel(tf: Column, df: Column, dl: Column,
+      n: Column, avgdl: Column): Column =
+    sqlKernel(Bm25KernelSql,
+      "tf" -> tf, "df" -> df, "dl" -> dl, "n" -> n, "avgdl" -> avgdl)
+
+  /** [[bm25Kernel]] over the (tf, df, dl, n, avgdl) columns of a
+    * scoring relation. */
+  private def bm25Addend: Column =
+    bm25Kernel(col("tf"), col("df"), col("dl"), col("n"), col("avgdl"))
+
+  /** Per-doc BM25 rollup over a (doc_id, tk, tf, df, dl, n, avgdl)
+    * relation — the scoring half of [[bm25Ranked]]. */
   private[graft] def bm25Scored(withStats: DataFrame,
       weighted: Boolean = false): DataFrame = {
-    val addend = expr(if (weighted) s"fw * ($Bm25Kernel)" else Bm25Kernel)
+    val addend = if (weighted) col("fw") * bm25Addend else bm25Addend
     withStats
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_hit"), sum(addend).as("score"))
@@ -986,7 +1012,7 @@ object TextOps {
        |  SELECT t.doc_id, t.tf, dfv.df, d.dl, s.n, s.avgdl
        |  FROM dtf t JOIN dfv USING (tk) JOIN dl d ON t.doc_id = d.doc_id, s
        |  WHERE t.tk IN $inList),
-       |s1 AS (SELECT doc_id, round(SUM($Bm25Kernel), 6) AS score_r
+       |s1 AS (SELECT doc_id, round(SUM($Bm25KernelSql), 6) AS score_r
        |  FROM j1 GROUP BY 1),
        |fb AS (SELECT doc_id, CAST(round(score_r * 1000000) AS BIGINT) AS kd,
        |  row_number() OVER (ORDER BY score_r DESC, doc_id) AS r FROM s1),
@@ -1012,7 +1038,7 @@ object TextOps {
        |  FROM dtf t JOIN terms q USING (tk) JOIN dfv USING (tk)
        |  JOIN dl d ON t.doc_id = d.doc_id, s),
        |sc AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_hit,
-       |  round(SUM(fw * ($Bm25Kernel)), 6) AS score_r FROM j2 GROUP BY 1),
+       |  round(SUM(fw * ($Bm25KernelSql)), 6) AS score_r FROM j2 GROUP BY 1),
        |rk AS (SELECT doc_id, n_hit, score_r,
        |  row_number() OVER (ORDER BY score_r DESC, doc_id) AS rank FROM sc)
        |SELECT CAST(rank AS INT) AS rank, doc_id, n_hit, score_r
@@ -1033,6 +1059,11 @@ object TextOps {
   private[graft] def qlAddendExpr(c: String): String =
     s"ln(tf + $QlMu * ctf / $c) - ln($QlMu * ctf / $c)"
 
+  /** [[qlAddendExpr]] as a Column over a tf and a ctf Column, with the
+    * collection size C folded as its exact integer. */
+  private[graft] def qlAddend(tf: Column, ctf: Column, c: Long): Column =
+    sqlKernel(qlAddendExpr(c.toString), "tf" -> tf, "ctf" -> ctf)
+
   /** The full document score over columns (ms, dl): the matched sum
     * plus the all-absent constant K = Σ_t ln(μ·p(t|C)) minus the
     * per-doc length normalizer |Q|·ln(dl + μ). K's three addends are
@@ -1040,6 +1071,17 @@ object TextOps {
     * values in the same sequence. */
   private[graft] def qlScoreExpr(k: String): String =
     s"COALESCE(ms, 0.0) + ($k) - ${Bm25Terms.size} * ln(dl + $QlMu)"
+
+  /** K = Σ_t ln(μ·ctf_t / C) over the [[Bm25Terms]] in sorted order,
+    * each ctf and C folded as its exact integer. */
+  private[graft] def qlPriorSum(ctf: Map[String, Long], c: Long): String =
+    Bm25Terms.sorted.map(t => s"ln($QlMu * ${ctf(t)} / $c)").mkString(" + ")
+
+  /** The rounded document score [[qlScoreExpr]] over an `ms` and a
+    * `dl` Column, K from [[qlPriorSum]]. */
+  private[graft] def qlScore(ms: Column, dl: Column,
+      ctf: Map[String, Long], c: Long): Column =
+    round(sqlKernel(qlScoreExpr(qlPriorSum(ctf, c)), "ms" -> ms, "dl" -> dl), 6)
 
   /** QUERY LIKELIHOOD with DIRICHLET smoothing (Zhai & Lafferty 2001)
     * — the language-modeling first-stage ranker, the standard
@@ -1082,14 +1124,12 @@ object TextOps {
     import spark.implicits._
     val termDf = broadcast(ctf.toSeq.sorted.toDF("tk", "ctf"))
     val ms = tf.join(termDf, "tk")
-      .withColumn("a", expr(qlAddendExpr(sumdl.toString)))
+      .withColumn("a", qlAddend(col("tf"), col("ctf"), sumdl))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_hit"), sum(col("a")).as("ms"))
-    val k = Bm25Terms.sorted
-      .map(t => s"ln($QlMu * ${ctf(t)} / $sumdl)").mkString(" + ")
     dl.join(ms, Seq("doc_id"), "left")
       .withColumn("n_hit", coalesce(col("n_hit"), lit(0L)))
-      .withColumn("score_r", round(expr(qlScoreExpr(k)), 6))
+      .withColumn("score_r", qlScore(col("ms"), col("dl"), ctf, sumdl))
       .orderBy(col("score_r").desc, col("doc_id")).limit(20)
       .withColumn("rank", row_number().over(
         Window.orderBy(col("score_r").desc, col("doc_id"))))
@@ -1188,7 +1228,7 @@ object TextOps {
     *
     * Scorer shapes are the per-query relational re-expression of the
     * fixed-query originals, sharing their kernel strings verbatim
-    * ([[Bm25Kernel]], [[qlAddendExpr]], [[rm3ContribExpr]]) so the
+    * ([[Bm25KernelSql]], [[qlAddendExpr]], [[rm3ContribExpr]]) so the
     * formulas cannot drift: BM25 ranks the fingerprint postings; RM3
     * runs feedback → integer RM1 weights → per-query top-10 expansion
     * (window, not driver fold — the expansion is per-query data here)
@@ -1425,8 +1465,8 @@ object TextOps {
     val wS = Window.partitionBy(col("q_id"))
       .orderBy(col("score_r").desc, col("doc_id"))
     val s1 = withN(postx.join(ctfLit, Seq("q_id", "tk")))
-      .withColumn("a", expr(Bm25Kernel))
-      .withColumn("qa", expr(qlAddendExpr(sumdl.toString)))
+      .withColumn("a", bm25Addend)
+      .withColumn("qa", qlAddend(col("tf"), col("ctf"), sumdl))
       .groupBy(col("q_id"), col("doc_id"))
       .agg(sum(col("a")).as("score"), sum(col("qa")).as("ms"),
         max(col("dl")).as("dl"),
@@ -1488,7 +1528,7 @@ object TextOps {
     // expanded-query relation; no second corpus pass
     val servedRm3 = withN(dtf.join(terms, "tk")
         .filter(col("doc_id") =!= col("q_id")))
-      .withColumn("a", expr(s"fw * ($Bm25Kernel)"))
+      .withColumn("a", col("fw") * bm25Addend)
       .groupBy(col("q_id"), col("doc_id"))
       .agg(sum(col("a")).as("score"))
       .withColumn("score_r", round(col("score"), 6))
@@ -1606,7 +1646,7 @@ object TextOps {
        |  SELECT p.q_id, p.doc_id, p.tf, p.df, d.dl, s.n, s.avgdl
        |  FROM px p JOIN dl d ON p.doc_id = d.doc_id, s),
        |s1 AS (
-       |  SELECT q_id, doc_id, round(SUM($Bm25Kernel), 6) AS score_r
+       |  SELECT q_id, doc_id, round(SUM($Bm25KernelSql), 6) AS score_r
        |  FROM j1 GROUP BY 1, 2),
        |s1r AS (
        |  SELECT q_id, doc_id, score_r,
@@ -1645,7 +1685,7 @@ object TextOps {
        |  FROM dtf t JOIN terms r USING (tk) JOIN dl d ON t.doc_id = d.doc_id, s
        |  WHERE t.doc_id != r.q_id),
        |s4 AS (
-       |  SELECT q_id, doc_id, round(SUM(fw * ($Bm25Kernel)), 6) AS score_r
+       |  SELECT q_id, doc_id, round(SUM(fw * ($Bm25KernelSql)), 6) AS score_r
        |  FROM j4 GROUP BY 1, 2),
        |sr AS (SELECT 'rm3' AS scorer, q_id, doc_id, rk FROM (
        |  SELECT q_id, doc_id, row_number() OVER (PARTITION BY q_id
@@ -1895,8 +1935,16 @@ object TextOps {
       .agg(sum(col("cnt")).as("n_tokens"),
         (sum(col("cnt") * log(col("c"))) / sum(col("cnt"))).as("alc"))
       .select(col("doc_id"), col("lang"), col("n_tokens"),
-        round(col("alc") - log(lit(n.toDouble)), 6).as("avg_logp_r"))
+        lmDocScore(col("alc"), n).as("avg_logp_r"))
   }
+
+  /** A document's unigram score from `alc`, the mean ln c(t) over its
+    * in-vocabulary token occurrences, and the model's token total N:
+    * round(alc − ln N, 6). Shared by [[lmScoredDocs]] and the
+    * streaming perplexity filter
+    * ([[graft.streaming.StatefulOps.streamingPerplexityFilter]]). */
+  private[graft] def lmDocScore(alc: Column, n: Long): Column =
+    round(alc - log(lit(n.toDouble)), 6)
 
   val qLmScoreOracle: String =
     """WITH tok AS (
@@ -2121,6 +2169,12 @@ object TextOps {
        |    + $KnD * n1p * (CAST(COALESCE(cont, 1) AS DOUBLE) / $t)) / c1)
        |END""".stripMargin
 
+  /** [[knLogpExpr]] over the (c2, c1, n1p, cont) columns of a joined
+    * bigram relation, T folded as its exact integer. Shared by the
+    * batch scorer and the streaming twin
+    * ([[graft.streaming.StatefulOps.streamingKneserNey]]). */
+  private[graft] def knLogp(t: Long): Column = expr(knLogpExpr(t.toString))
+
   /** INTERPOLATED KNESER-NEY bigram scoring (Kneser & Ney 1995; the
     * interpolated form of Chen & Goodman 1999) — the published step
     * past [[qLmBackoff]]'s Stupid Backoff on the perplexity-filter
@@ -2165,7 +2219,7 @@ object TextOps {
       .join(c2, Seq("w1", "w2"), "left")
       .join(ctx, Seq("w1"), "left")
       .join(cont, Seq("w2"), "left")
-      .withColumn("logp", expr(knLogpExpr(t.toString)))
+      .withColumn("logp", knLogp(t))
       .groupBy(col("doc_id"))
       .agg(sum(col("cnt")).as("n_bigrams"),
         sum(when(col("c1").isNull, col("cnt")).otherwise(lit(0L)))

@@ -1032,15 +1032,6 @@ object StatefulOps {
 
   case class QuotaDoc(doc_id: Long, source: String, ts: java.sql.Timestamp)
 
-  /** Streaming per-source QUOTA sampler — the ingest-side counterpart
-    * of batch mixture sampling (`SamplingOps.qMixtureSample`): admit
-    * the first `quota(source)` documents per source and drop the rest.
-    * Batch mixture picks by hash order for append-stability; a stream
-    * cannot know the final hash order, so the streaming-native
-    * semantics is FIRST-N BY ARRIVAL — the standard budget cap on a
-    * live crawl. State is one long per source (O(domains)); admission
-    * is deterministic given the input order, so a checkpoint replay of
-    * the same batches re-admits the same documents. */
   /** The quota-admission transition: admit while the running count is
     * under quota. Split law (any batch cut + threaded count = one-pass
     * admissions) is ScalaCheck'd in QuotaLaws — with the (time, id)
@@ -1053,6 +1044,15 @@ object StatefulOps {
     (n, out.toSeq)
   }
 
+  /** Streaming per-source QUOTA sampler — the ingest-side counterpart
+    * of batch mixture sampling (`SamplingOps.qMixtureSample`): admit
+    * the first `quota(source)` documents per source and drop the rest.
+    * Batch mixture picks by hash order for append-stability; a stream
+    * cannot know the final hash order, so the streaming-native
+    * semantics is FIRST-N BY ARRIVAL — the standard budget cap on a
+    * live crawl. State is one long per source (O(domains)); admission
+    * is deterministic given the input order, so a checkpoint replay of
+    * the same batches re-admits the same documents. */
   final class QuotaProcessor(quotas: Map[String, Long], defaultQuota: Long,
       ttl: TTLConfig = TTLConfig.NONE)
       extends StatefulProcessor[String, QuotaDoc, QuotaDoc] {
@@ -1356,14 +1356,8 @@ object StatefulOps {
   /** STREAMING incremental similarity — the serving path of the stored
     * ANN index ([[graft.operators.SimilarityOps.simIndex]]) as a
     * stream-static classification, the streaming twin of the batch
-    * `sim_incremental` query. Each arriving vector (`vec_id`, `v`,
-    * `nrm`) buckets at the index's FROZEN geometry map-side, candidates
-    * come from the (tbl, bucket) LEFT-OUTER equi-join against the
-    * static exploded index (left-outer so collision-free arrivals
-    * still classify as `new`), and the per-arrival argmax is a
-    * `max(struct(cosine, -base_id))` aggregate — the same
-    * (cosine DESC, base_id ASC) tie-break as the batch twin without a
-    * window function (streams cannot rank). Run with
+    * `sim_incremental` query: both run
+    * [[graft.operators.SimilarityOps.simClassify]]. Run with
     * OutputMode.Update: each arrival's verdict emits in its batch.
     *
     * Scale: the index side is static and hash-partitioned by bucket;
@@ -1374,28 +1368,8 @@ object StatefulOps {
     * production deployment bounds it with the state-store TTL knob
     * exactly like the other twins. */
   def streamingSimIncremental(arrivals: DataFrame, index: DataFrame,
-      k: Int): DataFrame = {
-    import graft.operators.DedupOps
-    val idxb = index
-      .select(col("vec_id").as("base_id"), col("v").as("bv"),
-        col("nrm").as("bn"), explode(col("buckets")).as("bb"))
-      .select(col("base_id"), col("bv"), col("bn"),
-        col("bb.tbl").as("tbl"), col("bb.bucket").as("bucket"))
-    val arb = DedupOps.signLshBucketsWith(arrivals, k, 64 / k,
-      col("v").as("qv"), col("nrm").as("qn"))
-    arb.join(idxb, Seq("tbl", "bucket"), "left_outer")
-      .withColumn("cosine",
-        DedupOps.dot(col("qv"), col("bv")) / (col("qn") * col("bn")))
-      .withColumn("best0",
-        when(col("cosine").isNotNull && col("cosine") >= 0.4,
-          struct(col("cosine").as("c"), (-col("base_id")).as("nb"))))
-      .groupBy(col("vec_id"))
-      .agg(max(col("best0")).as("best"))
-      .select(col("vec_id"),
-        when(col("best").isNotNull, "match").otherwise("new").as("status"),
-        when(col("best").isNotNull, -col("best.nb")).as("match_id"),
-        when(col("best").isNotNull, round(col("best.c"), 6)).as("cosine_r"))
-  }
+      k: Int): DataFrame =
+    graft.operators.SimilarityOps.simClassify(arrivals, index, k)
 
   /** STREAMING text dedup classification — the serving path of the
     * stored SIGNATURE index ([[graft.operators.DedupOps.baseSignatures]])
@@ -1405,42 +1379,30 @@ object StatefulOps {
     * frozen index. The streaming half of the recrawl flow whose batch
     * half is `dedup_delta_classify`.
     *
-    * The batch twin derives the 12-permutation minhash signature by
-    * explode + groupBy-min; a stream computes the IDENTICAL md5
-    * strings MAP-SIDE as `array_min` over the doc's distinct shingle
-    * array (a per-doc min is order-free), so the arrival pays zero
-    * stateful shuffle before the two stream-static equi-joins
-    * (fingerprint equality for 'exact'; (band, bkey) collision +
-    * jaccard ≥ 0.1 verification against the stored shingle set for
-    * 'near'). The only aggregation is the per-doc verdict rollup —
+    * The batch twin derives the minhash signature by explode +
+    * groupBy-min; a stream takes the IDENTICAL band keys map-side from
+    * `DedupOps.minhashBandArray`, so the arrival pays zero stateful
+    * shuffle before the two stream-static equi-joins (fingerprint
+    * equality for 'exact'; (band, bkey) collision + the batch's
+    * `DedupOps.verifiedNear` against the stored shingle set for
+    * 'near'), and the verdict is the batch's `DedupOps.dupVerdict`.
+    * The only aggregation is the per-doc verdict rollup —
     * one state row per arrival key, so re-delivery is idempotent.
     * Run with OutputMode.Update. Scale: index side static,
     * hash-partitioned on the join keys; per-batch cost tracks arrival
     * rate × band occupancy, never corpus size. */
   def streamingTextClassify(docs: DataFrame, index: DataFrame): DataFrame = {
-    import graft.operators.DedupOps
+    import graft.operators.DedupOps.{dupVerdict, minhashBandArray, shingleArray, verifiedNear}
     val toks = split(col("text"), " ")
-    val withSig = docs
-      .withColumn("fp", md5(col("text").cast("binary")))
-      .withColumn("sh", when(size(toks) >= 3, DedupOps.shingleArray(toks))
-        .otherwise(expr("CAST(array() AS ARRAY<STRING>)")))
-    val ms = (0 until 12).map { j =>
-      array_min(transform(col("sh"),
-        s => md5(concat(lit(s"$j:"), s).cast("binary")))).as(s"m$j")
-    }
-    val sig = withSig.select(
-      Seq(col("doc_id"), col("fp"), col("sh")) ++ ms: _*)
-    val bandStructs = (0 until 4).map { b =>
-      struct(lit(b).as("band"),
-        md5(concat_ws(",",
-          (0 until 3).map(i => col(s"m${b * 3 + i}")): _*)
-          .cast("binary")).as("bkey"))
-    }
-    val streamBands = sig
-      .filter(size(col("sh")) > 0)
-      .select(col("doc_id"), col("sh"),
-        explode(array(bandStructs: _*)).as("bb"))
-      .select(col("doc_id"), col("sh"),
+    val withSh = docs.select(col("doc_id"),
+      md5(col("text").cast("binary")).as("fp"),
+      when(size(toks) >= 3, shingleArray(toks))
+        .otherwise(expr("CAST(array() AS ARRAY<STRING>)")).as("sa"))
+    val streamBands = withSh
+      .filter(size(col("sa")) > 0)
+      .select(col("doc_id"), col("sa"), size(col("sa")).as("na"),
+        explode(minhashBandArray(col("sa"))).as("bb"))
+      .select(col("doc_id"), col("sa"), col("na"),
         col("bb.band").as("band"), col("bb.bkey").as("bkey"))
     val idxFp = index.select(col("doc_id").as("base_id"), col("fp"))
     val idxBands = index
@@ -1448,28 +1410,22 @@ object StatefulOps {
       .select(col("base_id"),
         col("bb.band").as("band"), col("bb.bkey").as("bkey"))
     val idxSets = index.select(col("doc_id").as("base_id"),
-      col("ss"), col("n_shingles"))
+      col("ss").as("sb"), col("n_shingles").as("nb"))
     // left-outer so collision-free arrivals still reach the rollup
-    val exactArm = withSig.select(col("doc_id"), col("fp"))
+    val exactArm = withSh.select(col("doc_id"), col("fp"))
       .join(idxFp, Seq("fp"), "left_outer")
       .select(col("doc_id"), lit("exact").as("kind"), col("base_id"))
     val nearArm = streamBands
       .join(idxBands, Seq("band", "bkey"))
       .join(idxSets, "base_id")
-      .withColumn("inter", size(array_intersect(col("sh"), col("ss"))))
-      .filter(col("inter").cast("double") /
-        (size(col("sh")) + col("n_shingles") - col("inter")) >= 0.1)
+      .transform(verifiedNear)
       .select(col("doc_id"), lit("near").as("kind"), col("base_id"))
     exactArm.unionByName(nearArm)
       .groupBy(col("doc_id"))
       .agg(
         min(when(col("kind") === "exact", col("base_id"))).as("exact_match_id"),
         min(when(col("kind") === "near", col("base_id"))).as("near_match_id"))
-      .select(col("doc_id"),
-        when(col("exact_match_id").isNotNull, "exact")
-          .when(col("near_match_id").isNotNull, "near")
-          .otherwise("new").as("status"),
-        coalesce(col("exact_match_id"), col("near_match_id")).as("match_id"))
+      .select(col("doc_id") +: dupVerdict: _*)
   }
 
   /** STREAMING PERPLEXITY FILTER — the serving path of the CCNet
@@ -1485,11 +1441,13 @@ object StatefulOps {
     * pass; the stream is every incoming shard.
     *
     * Parity with the batch twin: tokens outside the frozen vocabulary
-    * contribute nothing (same inner join), the score is the same
-    * 6-decimal-rounded avg ln(c) − ln(N), and buckets agree exactly
-    * off the two boundary scores — ON a boundary the batch ntile
-    * splits score-ties by doc_id where a threshold must choose the
-    * better bucket (documented at [[SamplingOps.perplexityCutoffs]]).
+    * contribute nothing (same inner join), the score is the batch's
+    * own `TextOps.lmDocScore`, the tercile is
+    * `SamplingOps.perplexityBucket` over the frozen cutoffs and the
+    * keep rule `SamplingOps.perplexityKept`. Buckets agree exactly off
+    * the two boundary scores — ON a boundary the batch ntile splits
+    * score-ties by doc_id where a threshold must choose the better
+    * bucket (documented at `SamplingOps.perplexityCutoffs`).
     * State: ONE aggregation row per arriving doc (the per-doc score
     * rollup), so re-delivery is idempotent under OutputMode.Update;
     * bounded with the state-store TTL knob like the other twins.
@@ -1497,23 +1455,21 @@ object StatefulOps {
     * side is static and hash-partitioned on the token key; nothing
     * grows with corpus size. */
   def streamingPerplexityFilter(docs: DataFrame, lm: DataFrame,
-      nTotal: Long, cutoffs: DataFrame): DataFrame =
+      nTotal: Long, cutoffs: DataFrame): DataFrame = {
+    import graft.operators.SamplingOps.{perplexityBucket, perplexityKept}
     docs
       .select(col("doc_id"), col("lang"),
         explode(split(col("text"), " ")).as("tk"))
       .join(lm, "tk")
       .groupBy(col("doc_id"), col("lang"))
       .agg(count(lit(1)).as("n_tokens"), sum(log(col("c"))).as("slc"))
-      .withColumn("score_r", round(
-        col("slc") / col("n_tokens") - log(lit(nTotal.toDouble)), 6))
+      .withColumn("score_r", graft.operators.TextOps.lmDocScore(
+        col("slc") / col("n_tokens"), nTotal))
       .join(broadcast(cutoffs), Seq("lang"))
-      .withColumn("bucket",
-        when(col("score_r") >= col("b1_min"), 1)
-          .when(col("score_r") >= col("b2_min"), 2)
-          .otherwise(3))
+      .withColumn("bucket", perplexityBucket(col("score_r")))
       .select(col("doc_id"), col("lang"), col("n_tokens"),
-        col("score_r"), col("bucket"),
-        (col("bucket") <= 2).as("kept"))
+        col("score_r"), col("bucket"), perplexityKept(col("bucket")).as("kept"))
+  }
 
   // ================= streaming k-anonymity monitor =================
 
@@ -1606,30 +1562,28 @@ object StatefulOps {
   /** STREAMING BM25 scoring — the serving path of the stored model
     * (`TextOps.bm25Stored`) as a STATELESS map-only projection, the
     * strongest serving shape of the twins here: the model is
-    * terms-sized, so its (df → idf) values and the (N, avgdl)
-    * scalars FOLD INTO THE PLAN AS LITERALS (the broadcast-literal
-    * pattern every k-row model query uses) and each arriving
-    * document scores in one codegen'd expression — per-term tf from
-    * an array `filter` count (the same number the batch explode
-    * counts), no explode, no join, no aggregation, NO STATE.
-    * A streaming `groupBy` here would double-count re-delivered
-    * documents (tf saturation is not a ratio — doubling tf CHANGES
-    * the score, unlike the perplexity filter's average); a pure
-    * projection is idempotent by construction instead.
+    * terms-sized, so its df values and the (N, avgdl) scalars FOLD
+    * INTO THE PLAN AS LITERALS (the broadcast-literal pattern every
+    * k-row model query uses) and each arriving document scores in one
+    * codegen'd expression — per-term tf from an array `filter` count
+    * (the same number the batch explode counts), no explode, no join,
+    * no aggregation, NO STATE. A streaming `groupBy` here would
+    * double-count re-delivered documents (tf saturation is not a
+    * ratio — doubling tf CHANGES the score, unlike the perplexity
+    * filter's average); a pure projection is idempotent by
+    * construction instead.
     *
-    * Float parity: idf is computed with the same arithmetic order as
-    * the batch expression (JVM Math.log = the codegen'd ln), the
-    * addend mirrors the shared SQL string term-for-term, and the
-    * per-doc sum runs in fixed term order — within the documented
-    * round-6 ln-sum convention the batch ranker itself carries.
-    * Asserted against the batch top-20 in StatefulOpsSpec.
-    * Scale: per-batch cost tracks arrival volume × doc length;
-    * nothing grows with corpus size or time. */
+    * Each addend is the batch scorer's own `TextOps.bm25Kernel`, called
+    * with the literals; constant folding evaluates the idf with the
+    * same Spark expression the batch evaluates per row. The per-doc
+    * sum runs in fixed term order — within the round-6 ln-sum
+    * convention the batch ranker itself carries. Asserted against the
+    * batch top-20 in StatefulOpsSpec. Scale: per-batch cost tracks
+    * arrival volume × doc length; nothing grows with corpus size or
+    * time. */
   def streamingBm25(docs: DataFrame, df: DataFrame,
       n: Long, sumdl: Long): DataFrame = {
-    import graft.operators.TextOps.{Bm25B, Bm25K1, Bm25K1p1, Bm25OneMinusB, Bm25Terms}
-    val nD = n.toDouble
-    val avgdl = sumdl.toDouble / n
+    import graft.operators.TextOps.{Bm25Terms, bm25Kernel}
     // the model may be the FULL stored vocabulary — restrict to the
     // query's terms BEFORE folding into the plan (a vocabulary-sized
     // expression tree would stall codegen; the query is what bounds
@@ -1637,11 +1591,9 @@ object StatefulOps {
     val model: Seq[(String, Double)] = df
       .filter(col("tk").isin(Bm25Terms: _*)).collect()
       .map(r => (r.getString(0), r.getDouble(1))).toSeq.sortBy(_._1)
-    // the stored model guarantees unique tk rows, but the parameter
-    // accepts any df — a duplicate term would mint two identically
-    // named tf_N columns and only fail later as an opaque
-    // ambiguous-reference AnalysisException (r12 advice): state the
-    // contract here with a readable message instead
+    // a duplicate term would mint two identically named tf_N columns
+    // and only fail later as an opaque ambiguous-reference
+    // AnalysisException: state the contract with a readable message
     require(model.map(_._1).distinct.size == model.size,
       s"streamingBm25: model must have one row per term, got duplicates: " +
         model.groupBy(_._1).filter(_._2.size > 1).keys.mkString(", "))
@@ -1649,24 +1601,16 @@ object StatefulOps {
     // per-term tf computed ONCE into a column (an HOF subtree per
     // occurrence would re-tokenize the text several times per term —
     // codegen does not guarantee subexpression elimination for
-    // lambda-bearing HOFs)
-    def tfCol(t: String) = s"tf_${model.indexWhere(_._1 == t)}"
+    // lambda-bearing HOFs); a long, as the batch tf count is
     val withTf = docs.select(col("doc_id") +: size(toks).as("dl") +:
-      model.map { case (t, _) =>
-        size(filter(toks, x => x === t)).cast("double").as(tfCol(t)) }: _*)
-    // addend mirrors the shared batch SQL string term-for-term, from
-    // the SAME Bm25* constants (JVM Math.log = the codegen'd ln)
-    val addends = model.map { case (t, dfv) =>
-      val idf = math.log(1 + (nD - dfv + 0.5) / (dfv + 0.5))
-      val tf = col(tfCol(t))
-      when(tf > 0,
-        lit(idf) * tf * lit(Bm25K1p1.toDouble) /
-          (tf + lit(Bm25K1.toDouble) * (lit(Bm25OneMinusB.toDouble) +
-            lit(Bm25B.toDouble) * col("dl") / lit(avgdl))))
-        .otherwise(lit(0.0))
+      model.zipWithIndex.map { case ((t, _), i) =>
+        size(filter(toks, x => x === t)).cast("long").as(s"tf_$i") }: _*)
+    val addends = model.zipWithIndex.map { case ((_, dfv), i) =>
+      val tf = col(s"tf_$i")
+      when(tf > 0, bm25Kernel(tf, lit(dfv), col("dl"), lit(n.toDouble),
+        lit(sumdl.toDouble / n))).otherwise(lit(0.0))
     }
-    val hits = model.map { case (t, _) =>
-      when(col(tfCol(t)) > 0, 1L).otherwise(0L) }
+    val hits = model.indices.map(i => when(col(s"tf_$i") > 0, 1L).otherwise(0L))
     // foldLeft, not reduce: an all-OOV query (empty model) must score
     // every doc 0 and emit nothing, matching the batch ranker's empty
     // top-20 — not throw at plan construction
@@ -1681,62 +1625,45 @@ object StatefulOps {
   /** STREAMING Dirichlet query-likelihood scoring — the serving twin
     * of `TextOps.qQlDirichlet`, the same stateless map-only shape as
     * [[streamingBm25]]: the model is three collection frequencies
-    * plus the token total, so every scalar — the per-term smoothed
-    * priors μ·p(t|C), their log constant K, μ itself — folds into the
-    * plan, and each arriving document scores in one codegen'd
-    * expression (per-term tf via array `filter` count, dl via
-    * `size`): no explode, no join, no aggregation, NO STATE, hence
-    * idempotent under re-delivery by construction. Unlike the BM25
-    * twin it emits EVERY arrival — in QL every document ranks (the
-    * no-hit mass is the pure length prior), exactly as the batch
-    * ranker scores every doc before its top-20 cut.
+    * plus the token total, folded into the plan as literals, and each
+    * arriving document scores in one codegen'd expression (per-term tf
+    * via array `filter` count, dl via `size`): no explode, no join, no
+    * aggregation, NO STATE, hence idempotent under re-delivery by
+    * construction. Unlike the BM25 twin it emits EVERY arrival — in QL
+    * every document ranks (the no-hit mass is the pure length prior),
+    * exactly as the batch ranker scores every doc before its top-20
+    * cut.
     *
-    * Float parity with the batch plan: the per-term prior is the
-    * identical IEEE sequence (μ·ctf exact-integer-to-double, one
-    * divide by C), ln is the same JVM Math.log the codegen'd
-    * expression calls, K's addends fold in sorted term order (the
-    * batch writes K out in sorted order too), absent terms add the
-    * bitwise no-op 0.0, and the tail is the batch's own
-    * (ms + K) − |Q|·ln(dl + μ) association, rounded to 6. One gap
-    * is NOT structurally closed (r13 advice): the matched sum here
-    * folds in sorted term order, but the batch's `sum` accumulation
-    * order is engine-chosen — the same documented round-6 ln-sum
-    * risk every LM query carries (qLmKneserNey's doc states it the
-    * same way). With ≤3 addends of O(1) magnitude the order error
-    * is ~1e-16 against the 1e-6 grid; the StatefulOpsSpec row-exact
-    * assertion is the empirical pin, re-verified every round.
-    * Scale: per-batch cost tracks arrival volume × doc length;
-    * nothing grows with corpus size or time. */
+    * The matched addends and the document score are the batch's own
+    * `TextOps.qlAddend` and `TextOps.qlScore`, over this projection's
+    * columns and the folded ctf literals. The matched sum folds in
+    * sorted term order where the batch's `sum` order is engine-chosen:
+    * the round-6 ln-sum convention every LM query carries, pinned
+    * row-exact by StatefulOpsSpec. Scale: per-batch cost tracks
+    * arrival volume × doc length; nothing grows with corpus size or
+    * time. */
   def streamingQlDirichlet(docs: DataFrame, ctf: Map[String, Long],
       c: Long): DataFrame = {
-    import graft.operators.TextOps.{Bm25Terms, QlMu}
-    val mu = QlMu.toDouble
+    import graft.operators.TextOps.{Bm25Terms, qlAddend, qlScore}
     // the batch ranker's own contract: a query term the corpus never
     // saw has no log — fail readably, not with a NaN score
     require(Bm25Terms.forall(ctf.contains),
       "streamingQlDirichlet: query terms absent from the model: " +
         Bm25Terms.filterNot(ctf.contains).mkString(", "))
-    val model = Bm25Terms.sorted.map(t => t -> ctf(t))
+    val terms = Bm25Terms.sorted
     val toks = split(col("text"), " ")
-    def tfCol(i: Int) = s"tf_$i"
-    // per-term tf computed ONCE into a column (the streamingBm25
-    // rule: lambda-bearing HOFs get no subexpression elimination)
+    // per-term tf computed ONCE into a column (the streamingBm25 rule)
     val withTf = docs.select(col("doc_id") +: size(toks).as("dl") +:
-      model.zipWithIndex.map { case ((t, _), i) =>
-        size(filter(toks, x => x === t)).cast("double").as(tfCol(i)) }: _*)
-    val addends = model.zipWithIndex.map { case ((_, ctfT), i) =>
-      val pt = mu * ctfT / c
-      val tf = col(tfCol(i))
-      when(tf > 0, log(tf + lit(pt)) - lit(math.log(pt)))
-        .otherwise(lit(0.0))
+      terms.zipWithIndex.map { case (t, i) =>
+        size(filter(toks, x => x === t)).cast("long").as(s"tf_$i") }: _*)
+    val addends = terms.zipWithIndex.map { case (t, i) =>
+      val tf = col(s"tf_$i")
+      when(tf > 0, qlAddend(tf, lit(ctf(t)), c)).otherwise(lit(0.0))
     }
-    val kConst = model.map { case (_, ctfT) => math.log(mu * ctfT / c) }.sum
-    val hits = model.zipWithIndex.map { case (_, i) =>
-      when(col(tfCol(i)) > 0, 1L).otherwise(0L) }
+    val hits = terms.indices.map(i => when(col(s"tf_$i") > 0, 1L).otherwise(0L))
     withTf.select(col("doc_id"),
       hits.foldLeft(lit(0L))(_ + _).as("n_hit"),
-      round(addends.foldLeft(lit(0.0))(_ + _) + lit(kConst) -
-        lit(Bm25Terms.size) * log(col("dl") + lit(mu)), 6).as("score_r"))
+      qlScore(addends.foldLeft(lit(0.0))(_ + _), col("dl"), ctf, c).as("score_r"))
   }
 
   // ================= streaming weighted reservoir =================
@@ -1977,47 +1904,32 @@ object StatefulOps {
 
   // ================= streaming Kneser-Ney serving =================
 
-  /** One arriving bigram occurrence, model statistics attached by the
-    * stream-static joins (None where the reference model has no row —
-    * the batch's LEFT-join nulls). */
+  /** One arriving bigram occurrence with its model counts (None where
+    * the reference model has no row — the batch's LEFT-join nulls)
+    * and its `TextOps.knLogp` log-probability. */
   case class KnBigram(doc_id: Long, w1: String, w2: String,
-    c2: Option[Long], c1: Option[Long], n1p: Option[Long],
-    cont: Option[Long])
+    c2: Option[Long], c1: Option[Long], logp: Double)
   /** The scored row — identical columns to the batch
     * `text_lm_kn_stored` result. */
   case class KnScore(doc_id: Long, n_bigrams: Long, n_unseen_ctx: Long,
     n_interp: Long, avg_logp: Double, held_out: Boolean)
 
-  /** The per-document KN rollup over the doc's joined bigram rows —
-    * the batch `knScored` aggregation re-expressed as a fold: distinct
-    * bigrams with occurrence counts, the [[graft.operators.TextOps]]
-    * `knLogpExpr` formula term-for-term in the same IEEE order
-    * ((c2 − D) + (D·n1p)·(cont/T), one divide by c1; JVM Math.log =
-    * the codegen'd ln), cnt-weighted sum over bigrams in sorted
-    * (w1, w2) order, and the batch's own round-6 (BigDecimal HALF_UP
-    * — Spark `round`'s exact implementation). The batch sum's
+  /** The per-document KN rollup over the doc's scored bigram rows —
+    * the batch `knScored` aggregation as a fold: distinct bigrams with
+    * occurrence counts, the cnt-weighted logp sum over bigrams in
+    * sorted (w1, w2) order, and the batch's round-6 (BigDecimal
+    * HALF_UP — Spark `round`'s implementation). The batch sum's
     * accumulation order is engine-chosen, so row-exact parity is the
-    * documented round-6 ln-sum convention pinned empirically by the
-    * spec, not a structural guarantee (the streamingQlDirichlet
-    * caveat, stated rather than implied). */
-  private[graft] def knScoreRows(docId: Long, rows: Seq[KnBigram],
-      t: Long): KnScore = {
-    val d = graft.operators.TextOps.KnD.toDouble
+    * round-6 ln-sum convention pinned by the spec. */
+  private[graft] def knRollup(docId: Long, rows: Seq[KnBigram]): KnScore = {
     val grouped = rows.groupBy(r => (r.w1, r.w2)).toSeq.sortBy(_._1)
       .map { case (_, v) => (v.head, v.length.toLong) }
     var nb = 0L; var nuc = 0L; var ni = 0L; var s = 0.0
     grouped.foreach { case (r, cnt) =>
-      val pcont = r.cont.getOrElse(1L).toDouble / t
-      val logp = r.c1 match {
-        case None => math.log(pcont)
-        case Some(c1) =>
-          val disc = r.c2 match { case Some(c2) => c2 - d; case None => 0.0 }
-          math.log((disc + d * r.n1p.get * pcont) / c1)
-      }
       nb += cnt
       if (r.c1.isEmpty) nuc += cnt
       if (r.c1.isDefined && r.c2.isEmpty) ni += cnt
-      s += cnt * logp
+      s += cnt * r.logp
     }
     KnScore(docId, nb, nuc, ni,
       java.math.BigDecimal.valueOf(s / nb)
@@ -2033,7 +1945,7 @@ object StatefulOps {
     * a document arrives ATOMICALLY (one row → its bigram rows explode
     * within the same micro-batch); a source that splits one document's
     * text across batches would score the first fragment only. */
-  final class KnServeProcessor(t: Long, ttl: TTLConfig = TTLConfig.NONE)
+  final class KnServeProcessor(ttl: TTLConfig = TTLConfig.NONE)
       extends StatefulProcessor[Long, KnBigram, KnScore] {
     @transient private var st: ValueState[KnScore] = _
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
@@ -2043,7 +1955,7 @@ object StatefulOps {
         tv: TimerValues): Iterator[KnScore] =
       if (st.exists()) Iterator.single(st.get())
       else {
-        val sc = knScoreRows(docId, rows.toSeq, t)
+        val sc = knRollup(docId, rows.toSeq)
         st.update(sc)
         Iterator.single(sc)
       }
@@ -2060,8 +1972,9 @@ object StatefulOps {
     * arrival's map-side bigram explode (the batch's own `bigramsOf`
     * column pipeline) LEFT-joins the three vocabulary-keyed static
     * relations (hash-partitioned on w1/w2 — broadcast-able in
-    * production), and one [[KnServeProcessor]] keyed by doc_id folds
-    * the doc's rows into the batch formula. Zero model-side
+    * production), each row takes its logp from the batch's own
+    * `TextOps.knLogp`, and one [[KnServeProcessor]] keyed by doc_id
+    * folds the doc's rows. Zero model-side
     * aggregation, zero driver actions — the stored twin's serving
     * guarantee, kept under streaming.
     *
@@ -2080,10 +1993,10 @@ object StatefulOps {
       .join(ctx, Seq("w1"), "left")
       .join(cont, Seq("w2"), "left")
       .select(col("doc_id"), col("w1"), col("w2"),
-        col("c2"), col("c1"), col("n1p"), col("cont"))
+        col("c2"), col("c1"), graft.operators.TextOps.knLogp(t).as("logp"))
       .as[KnBigram]
       .groupByKey(_.doc_id)
-      .transformWithState(new KnServeProcessor(t, ttl), timeModeFor(ttl),
+      .transformWithState(new KnServeProcessor(ttl), timeModeFor(ttl),
         OutputMode.Append())
   }
 

@@ -994,12 +994,14 @@ object WalGapLaws extends Properties("advanceWalGaps") {
 }
 
 /** Laws for the streaming Kneser-Ney per-document fold
-  * ([[graft.streaming.StatefulOps.knScoreRows]]) — the
+  * ([[graft.streaming.StatefulOps.knRollup]]) — the
   * replay-determinism and aggregation-correctness argument for the
   * serving twin: arrival rows reach the processor in arbitrary
   * micro-batch order, so order invariance IS the two-cut-equality
   * precondition, and the grouped cnt-weighted fold must agree with a
-  * naive per-occurrence evaluation of the same published formula. */
+  * naive per-occurrence mean. The rows carry the published formula's
+  * logp, computed here; the Spark expression that computes it in the
+  * twin (`TextOps.knLogp`) is pinned by PipelineOpsSpec. */
 object KnScoreLaws extends Properties("knScoreRows") {
   import graft.streaming.StatefulOps.KnBigram
 
@@ -1023,10 +1025,11 @@ object KnScoreLaws extends Properties("knScoreRows") {
       contWords.toList.map(w => Gen.chooseNum(1L, 30L).map(w -> _)))
     t <- Gen.chooseNum(math.max(1L, big.size.toLong), 1000L)
   } yield Model(ctx.toMap, big.toMap, cont.toMap, t)
-  private def rowOf(m: Model, w1: String, w2: String): KnBigram =
-    KnBigram(7L, w1, w2,
-      m.big.get((w1, w2)), m.ctx.get(w1).map(_._1), m.ctx.get(w1).map(_._2),
-      m.cont.get(w2))
+  private def rowOf(m: Model, w1: String, w2: String): KnBigram = {
+    val (c2, c1) = (m.big.get((w1, w2)), m.ctx.get(w1))
+    KnBigram(7L, w1, w2, c2, c1.map(_._1),
+      logpOf(m.t, c2, c1.map(_._1), c1.map(_._2), m.cont.get(w2)))
+  }
   private val modelAndRows: Gen[(Model, List[KnBigram])] = for {
     m <- model
     ws = Seq("w0", "w1", "w2", "w3", "w4", "w5")
@@ -1034,26 +1037,27 @@ object KnScoreLaws extends Properties("knScoreRows") {
       w1 <- Gen.oneOf(ws); w2 <- Gen.oneOf(ws)
     } yield rowOf(m, w1, w2))
   } yield (m, rows)
-  private def logpOf(m: Model, r: KnBigram): Double = {
-    val pcont = r.cont.getOrElse(1L).toDouble / m.t
-    r.c1 match {
+  private def logpOf(t: Long, c2: Option[Long], c1: Option[Long],
+      n1p: Option[Long], cont: Option[Long]): Double = {
+    val pcont = cont.getOrElse(1L).toDouble / t
+    c1 match {
       case None => math.log(pcont)
       case Some(c1) =>
-        val disc = r.c2 match { case Some(c2) => c2 - 0.75; case None => 0.0 }
-        math.log((disc + 0.75 * r.n1p.get * pcont) / c1)
+        val disc = c2 match { case Some(c2) => c2 - 0.75; case None => 0.0 }
+        math.log((disc + 0.75 * n1p.get * pcont) / c1)
     }
   }
 
   property("row order never changes the emitted row (replay determinism)") =
     forAll(modelAndRows, Gen.long) { case ((m, rows), seed) =>
       val shuffled = new scala.util.Random(seed).shuffle(rows)
-      graft.streaming.StatefulOps.knScoreRows(7L, rows, m.t) ==
-        graft.streaming.StatefulOps.knScoreRows(7L, shuffled, m.t)
+      graft.streaming.StatefulOps.knRollup(7L, rows) ==
+        graft.streaming.StatefulOps.knRollup(7L, shuffled)
     }
 
   property("branch counters partition the occurrences exactly") =
     forAll(modelAndRows) { case (m, rows) =>
-      val got = graft.streaming.StatefulOps.knScoreRows(7L, rows, m.t)
+      val got = graft.streaming.StatefulOps.knRollup(7L, rows)
       got.n_bigrams == rows.size &&
         got.n_unseen_ctx == rows.count(_.c1.isEmpty) &&
         got.n_interp == rows.count(r => r.c1.isDefined && r.c2.isEmpty) &&
@@ -1062,15 +1066,16 @@ object KnScoreLaws extends Properties("knScoreRows") {
 
   property("grouped cnt-weighted fold agrees with the per-occurrence mean") =
     forAll(modelAndRows) { case (m, rows) =>
-      val got = graft.streaming.StatefulOps.knScoreRows(7L, rows, m.t)
-      val naive = rows.map(r => logpOf(m, r)).sum / rows.size
+      val got = graft.streaming.StatefulOps.knRollup(7L, rows)
+      val naive = rows.map(_.logp).sum / rows.size
       math.abs(got.avg_logp - naive) <= 2e-6
     }
 
   property("all-OOV arrivals score the closed-form continuation floor") =
     forAll(Gen.chooseNum(1L, 1000L), Gen.chooseNum(1, 20)) { (t, k) =>
-      val rows = List.fill(k)(KnBigram(10L, "zz1", "zz2", None, None, None, None))
-      val got = graft.streaming.StatefulOps.knScoreRows(10L, rows, t)
+      val rows = List.fill(k)(KnBigram(10L, "zz1", "zz2", None, None,
+        logpOf(t, None, None, None, None)))
+      val got = graft.streaming.StatefulOps.knRollup(10L, rows)
       val want = java.math.BigDecimal.valueOf(math.log(1.0 / t))
         .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
       got.avg_logp == want && got.n_unseen_ctx == k &&
@@ -1082,8 +1087,9 @@ object KnScoreLaws extends Properties("knScoreRows") {
       Gen.chooseNum(1L, 5L), Gen.chooseNum(1L, 30L),
       Gen.chooseNum(30L, 1000L)) { (c2, c1raw, n1p, cont, t) =>
       val c1 = math.max(c1raw, c2)
-      val r = KnBigram(3L, "a", "b", Some(c2), Some(c1), Some(n1p), Some(cont))
-      val got = graft.streaming.StatefulOps.knScoreRows(3L, List(r), t)
+      val r = KnBigram(3L, "a", "b", Some(c2), Some(c1),
+        logpOf(t, Some(c2), Some(c1), Some(n1p), Some(cont)))
+      val got = graft.streaming.StatefulOps.knRollup(3L, List(r))
       val want = java.math.BigDecimal.valueOf(math.log(
         ((c2 - 0.75) + 0.75 * n1p * (cont.toDouble / t)) / c1))
         .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
