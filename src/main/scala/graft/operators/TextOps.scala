@@ -1072,16 +1072,14 @@ object TextOps {
   private[graft] def qlScoreExpr(k: String): String =
     s"COALESCE(ms, 0.0) + ($k) - ${Bm25Terms.size} * ln(dl + $QlMu)"
 
-  /** K = Σ_t ln(μ·ctf_t / C) over the [[Bm25Terms]] in sorted order,
-    * each ctf and C folded as its exact integer. */
-  private[graft] def qlPriorSum(ctf: Map[String, Long], c: Long): String =
-    Bm25Terms.sorted.map(t => s"ln($QlMu * ${ctf(t)} / $c)").mkString(" + ")
-
   /** The rounded document score [[qlScoreExpr]] over an `ms` and a
-    * `dl` Column, K from [[qlPriorSum]]. */
+    * `dl` Column, with K's addends ln(μ·ctf_t / C) in sorted term
+    * order, each ctf and C folded as its exact integer. */
   private[graft] def qlScore(ms: Column, dl: Column,
-      ctf: Map[String, Long], c: Long): Column =
-    round(sqlKernel(qlScoreExpr(qlPriorSum(ctf, c)), "ms" -> ms, "dl" -> dl), 6)
+      ctf: Map[String, Long], c: Long): Column = {
+    val k = Bm25Terms.sorted.map(t => s"ln($QlMu * ${ctf(t)} / $c)").mkString(" + ")
+    round(sqlKernel(qlScoreExpr(k), "ms" -> ms, "dl" -> dl), 6)
+  }
 
   /** QUERY LIKELIHOOD with DIRICHLET smoothing (Zhai & Lafferty 2001)
     * — the language-modeling first-stage ranker, the standard
