@@ -963,55 +963,56 @@ object SimilarityOps {
 
   /** INCREMENTAL similarity classification against a STORED index:
     * each incoming vector (id-hash bucket ≥ 90, standing in for the
-    * day's arrivals) is classified by [[simClassify]]. The base corpus
-    * is never re-read or re-bucketed; daily cost tracks the incoming
-    * batch, exactly like the stored-signatures dedup path. */
+    * day's arrivals) is bucketed at the index's frozen geometry,
+    * candidates come from the (tbl, bucket) equi-join against the
+    * stored assignments, and the best base match ([[simMatch]]) wins
+    * (tie-break min base id) — `new` if no candidate clears the bar.
+    * The base corpus is never re-read or re-bucketed; daily cost
+    * tracks the incoming batch, exactly like the stored-signatures
+    * dedup path. */
   def qSimIncrementalStored(spark: SparkSession, sfDir: String,
       indexDir: String, k: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val incoming = DedupOps.normedVectors(Tables.embeddings(spark, sfDir))
       .withColumn("hb", SamplingOps.bucket100("vec_id"))
       .filter(col("hb") >= 90).drop("hb", "label")
-    simClassify(incoming, Tables.parquet(spark, indexDir), k)
-  }
-
-  /** Classify arrivals (vec_id, v, nrm) against a stored [[simIndex]]
-    * of plane count k — ONE body for the batch query
-    * [[qSimIncrementalStored]] and its streaming twin
-    * (`StatefulOps.streamingSimIncremental`), so it uses only shapes a
-    * stream allows. Each arrival is bucketed at the index's frozen
-    * geometry map-side; candidates come from the (tbl, bucket)
-    * LEFT-OUTER equi-join against the exploded index (left-outer so
-    * collision-free arrivals still classify as `new`) and a second
-    * equi-join fetches their vectors; the best base match at cosine
-    * ≥ 0.4 is a `max(struct(cosine, -base_id))` aggregate — the
-    * (cosine DESC, base_id ASC) tie-break without a window function
-    * (streams cannot rank). A pair colliding in several tables is
-    * scored once per table; the max is unchanged. In a stream the
-    * aggregate is one state row per arrival, so a re-delivered
-    * arrival re-emits its verdict under OutputMode.Update. */
-  private[graft] def simClassify(arrivals: DataFrame, index: DataFrame,
-      k: Int): DataFrame = {
+    val index = Tables.parquet(spark, indexDir)
     val idxb = index
       .select(col("vec_id").as("base_id"), explode(col("buckets")).as("bb"))
-      .select(col("base_id"), col("bb.tbl").as("tbl"), col("bb.bucket").as("bucket"))
-    val idxv = index.select(col("vec_id").as("base_id"), col("v").as("bv"),
-      col("nrm").as("bn"))
-    DedupOps.signLshBucketsWith(arrivals, k, 64 / k,
-        col("v").as("qv"), col("nrm").as("qn"))
-      .join(idxb, Seq("tbl", "bucket"), "left_outer")
-      .join(idxv, Seq("base_id"), "left_outer")
-      .withColumn("cosine",
-        DedupOps.dot(col("qv"), col("bv")) / (col("qn") * col("bn")))
-      .withColumn("best0",
-        when(col("cosine") >= 0.4,
-          struct(col("cosine").as("c"), (-col("base_id")).as("nb"))))
-      .groupBy(col("vec_id"))
-      .agg(max(col("best0")).as("best"))
-      .select(col("vec_id"),
-        when(col("best").isNotNull, "match").otherwise("new").as("status"),
-        (-col("best.nb")).as("match_id"),
-        round(col("best.c"), 6).as("cosine_r"))
+      .select(col("base_id"), col("bb.tbl").as("b_tbl"), col("bb.bucket").as("b_bucket"))
+    val cand = DedupOps.signLshBuckets(incoming, k, 64 / k)
+      .join(idxb, col("tbl") === col("b_tbl") && col("bucket") === col("b_bucket"))
+      .select(col("vec_id"), col("base_id"))
+      .distinct()
+    val w = Window.partitionBy(col("vec_id"))
+      .orderBy(col("cosine").desc, col("base_id"))
+    val best = cand
+      .join(incoming.select(col("vec_id"), col("v").as("qv"), col("nrm").as("qn")), "vec_id")
+      .join(index.select(col("vec_id").as("base_id"), col("v").as("bv"), col("nrm").as("bn")), "base_id")
+      .withColumn("cosine", simCosine)
+      .filter(simMatch(col("cosine")))
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") === 1)
+      .select(col("vec_id"), col("base_id").as("match_id"),
+        round(col("cosine"), 6).as("cosine_r"))
+    incoming.select("vec_id")
+      .join(best, Seq("vec_id"), "left_outer")
+      .select(col("vec_id"), simStatus(col("match_id")), col("match_id"), col("cosine_r"))
   }
+
+  /** The cosine of a query vector (`qv`, norm `qn`) and a base vector
+    * (`bv`, norm `bn`). Shared by [[qSimIncrementalStored]] and its
+    * streaming twin (`StatefulOps.streamingSimIncremental`). */
+  private[graft] def simCosine: Column =
+    DedupOps.dot(col("qv"), col("bv")) / (col("qn") * col("bn"))
+
+  /** A candidate whose cosine clears this bar is a match. */
+  private[graft] def simMatch(cosine: Column): Column = cosine >= 0.4
+
+  /** The incremental-similarity verdict: `match` when a best match
+    * exists, else `new`. */
+  private[graft] def simStatus(matchId: Column): Column =
+    when(matchId.isNotNull, "match").otherwise("new").as("status")
 
   /** [[qSimIncrementalStored]] as a registered query: builds the base
     * slice's [[simIndex]] once per DATASET — durable on disk via
