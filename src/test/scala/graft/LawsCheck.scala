@@ -999,9 +999,11 @@ object WalGapLaws extends Properties("advanceWalGaps") {
   * serving twin: arrival rows reach the processor in arbitrary
   * micro-batch order, so order invariance IS the two-cut-equality
   * precondition, and the grouped cnt-weighted fold must agree with a
-  * naive per-occurrence mean. The rows carry the published formula's
-  * logp, computed here; the Spark expression that computes it in the
-  * twin (`TextOps.knLogp`) is pinned by PipelineOpsSpec. */
+  * naive per-occurrence mean. The fold laws' rows carry the published
+  * formula's logp, computed here; the two single-row laws take logp
+  * from `TextOps.knLogp`, the Spark expression the batch scorer and
+  * the twin both evaluate, on generated counts. The label is the
+  * deleted Scala scorer's name, kept so the five property ids stay. */
 object KnScoreLaws extends Properties("knScoreRows") {
   import graft.streaming.StatefulOps.KnBigram
 
@@ -1048,6 +1050,15 @@ object KnScoreLaws extends Properties("knScoreRows") {
     }
   }
 
+  /** `TextOps.knLogp` over one (c2, c1, n1p, cont) row. */
+  private def sparkLogp(t: Long, c2: Option[Long], c1: Option[Long],
+      n1p: Option[Long], cont: Option[Long]): Double = {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    Seq((c2, c1, n1p, cont)).toDF("c2", "c1", "n1p", "cont")
+      .select(graft.operators.TextOps.knLogp(t)).head.getDouble(0)
+  }
+
   property("row order never changes the emitted row (replay determinism)") =
     forAll(modelAndRows, Gen.long) { case ((m, rows), seed) =>
       val shuffled = new scala.util.Random(seed).shuffle(rows)
@@ -1074,7 +1085,7 @@ object KnScoreLaws extends Properties("knScoreRows") {
   property("all-OOV arrivals score the closed-form continuation floor") =
     forAll(Gen.chooseNum(1L, 1000L), Gen.chooseNum(1, 20)) { (t, k) =>
       val rows = List.fill(k)(KnBigram(10L, "zz1", "zz2", None, None,
-        logpOf(t, None, None, None, None)))
+        sparkLogp(t, None, None, None, None)))
       val got = graft.streaming.StatefulOps.knRollup(10L, rows)
       val want = java.math.BigDecimal.valueOf(math.log(1.0 / t))
         .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
@@ -1088,7 +1099,7 @@ object KnScoreLaws extends Properties("knScoreRows") {
       Gen.chooseNum(30L, 1000L)) { (c2, c1raw, n1p, cont, t) =>
       val c1 = math.max(c1raw, c2)
       val r = KnBigram(3L, "a", "b", Some(c2), Some(c1),
-        logpOf(t, Some(c2), Some(c1), Some(n1p), Some(cont)))
+        sparkLogp(t, Some(c2), Some(c1), Some(n1p), Some(cont)))
       val got = graft.streaming.StatefulOps.knRollup(3L, List(r))
       val want = java.math.BigDecimal.valueOf(math.log(
         ((c2 - 0.75) + 0.75 * n1p * (cont.toDouble / t)) / c1))
