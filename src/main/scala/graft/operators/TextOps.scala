@@ -1066,19 +1066,25 @@ object TextOps {
 
   /** The full document score over columns (ms, dl): the matched sum
     * plus the all-absent constant K = Σ_t ln(μ·p(t|C)) minus the
-    * per-doc length normalizer |Q|·ln(dl + μ). K's three addends are
-    * written out IN ORDER (terms sorted) so both engines add the same
-    * values in the same sequence. */
-  private[graft] def qlScoreExpr(k: String): String =
-    s"COALESCE(ms, 0.0) + ($k) - ${Bm25Terms.size} * ln(dl + $QlMu)"
+    * per-doc length normalizer |Q|·ln(dl + μ), with |Q| = `nq`. K's
+    * addends are written out IN ORDER (terms sorted) so both engines
+    * add the same values in the same sequence. */
+  private[graft] def qlScoreExpr(k: String, nq: String): String =
+    s"COALESCE(ms, 0.0) + ($k) - $nq * ln(dl + $QlMu)"
+
+  /** One query's K for [[qlScoreExpr]]: the addends ln(μ·ctf_t / C)
+    * over the query's per-term collection frequencies `ctfs` (in
+    * sorted term order), each ctf and C folded as its exact integer —
+    * the prior of [[qlScore]] and of the rank eval's per-query QL arm. */
+  private[graft] def qlPriorExpr(ctfs: Seq[Long], c: Long): String =
+    ctfs.map(ctf => s"ln($QlMu * $ctf / $c)").mkString(" + ")
 
   /** The rounded document score [[qlScoreExpr]] over an `ms` and a
-    * `dl` Column, with K's addends ln(μ·ctf_t / C) in sorted term
-    * order, each ctf and C folded as its exact integer. */
+    * `dl` Column for the [[Bm25Terms]] query. */
   private[graft] def qlScore(ms: Column, dl: Column,
       ctf: Map[String, Long], c: Long): Column = {
-    val k = Bm25Terms.sorted.map(t => s"ln($QlMu * ${ctf(t)} / $c)").mkString(" + ")
-    round(sqlKernel(qlScoreExpr(k), "ms" -> ms, "dl" -> dl), 6)
+    val k = qlPriorExpr(Bm25Terms.sorted.map(ctf), c)
+    round(sqlKernel(qlScoreExpr(k, Bm25Terms.size.toString), "ms" -> ms, "dl" -> dl), 6)
   }
 
   /** QUERY LIKELIHOOD with DIRICHLET smoothing (Zhai & Lafferty 2001)
@@ -1173,7 +1179,7 @@ object TextOps {
        |  GROUP BY 1),
        |sc AS (
        |  SELECT d.doc_id, COALESCE(ms.n_hit, 0) AS n_hit,
-       |    round(${qlScoreExpr(kSql)}, 6) AS score_r
+       |    round(${qlScoreExpr(kSql, Bm25Terms.size.toString)}, 6) AS score_r
        |  FROM dl d LEFT JOIN ms USING (doc_id)),
        |rk AS (SELECT doc_id, n_hit, score_r,
        |  row_number() OVER (ORDER BY score_r DESC, doc_id) AS rank FROM sc)
@@ -1443,12 +1449,13 @@ object TextOps {
       qstats.map { case (q, tk, _, c) => (q, tk) -> c }.toMap
     val ctfLit = broadcast(ctf.toSeq.sortBy(_._1)
       .map { case ((q, tk), c) => (q, tk, c) }.toDF("q_id", "tk", "ctf"))
-    // K_q addends in sorted term order (the qQlDirichlet convention)
-    val krel = broadcast(qTerms.toSeq.sortBy(_._1).map { case (q, ts) =>
-      val k = ts.sorted.map(t =>
-        math.log(QlMu.toDouble * ctf((q, t)) / sumdl)).sum
-      (q, k, ts.size.toLong)
-    }.toDF("q_id", "k", "nq"))
+    // K_q per query: qlScore's prior over the query's own terms, in
+    // sorted term order, evaluated by Spark
+    val kCases = qTerms.toSeq.sortBy(_._1).map { case (q, ts) =>
+      s"WHEN $q THEN ${qlPriorExpr(ts.sorted.map(t => ctf((q, t))), sumdl)}" }
+    val krel = broadcast(qTerms.toSeq.sortBy(_._1)
+      .map { case (q, ts) => (q, ts.size.toLong) }.toDF("q_id", "nq")
+      .withColumn("k", expr(kCases.mkString("CASE q_id ", " ", " END"))))
     val postx = post.filter(col("doc_id") =!= col("q_id"))
     // BM25 + QL matched sums + the TRUTH aggregates in ONE pass over
     // the posting relation (r17 optimization round: truth previously
@@ -1551,8 +1558,7 @@ object TextOps {
     val servedQl = s1.select(col("q_id"), col("doc_id"), col("dl"), col("ms"))
       .unionByName(qlShort)
       .join(krel, "q_id")
-      .withColumn("score_r",
-        round(expr(s"ms + k - nq * ln(dl + $QlMu)"), 6))
+      .withColumn("score_r", round(expr(qlScoreExpr("k", "nq")), 6))
       .withColumn("rk", row_number().over(wS))
       .filter(col("rk") <= RankEvalK)
       .select(lit("ql").as("scorer"), col("q_id"), col("doc_id"), col("rk"))

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import graft.model.ChangeEvent
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Stateful streaming operators beyond the reference's surface
   * (SURVEY.md §2.2: session windows, stream-stream joins, custom
@@ -14,20 +14,172 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, MapState, 
   * Scale notes: all state here is keyed and lives in the state store
   * (RocksDB-backed on a real cluster), partitioned by the group key —
   * state size is bounded by watermark/timeout, never by stream length.
+  *
+  * THE KEYED FOLD. Every `transformWithState` twin here (`walAnomalies`,
+  * `quotaSampled` and the `streaming*` twins that keep per-key state)
+  * is one [[KeyedFold]] over a pure step:
+  * `step(key, state, rows) => (state', outputs)`. Per key and
+  * micro-batch the fold reads the key's one named value cell (`None`
+  * when the key has no state, or was just evicted), hands the step the
+  * batch's rows in post-shuffle order, writes the returned state back
+  * (`None` clears it) and emits the outputs in Append mode. Post-shuffle
+  * order is not contractual, so every step either sorts its rows by its
+  * twin's key ((event time, id), day or doc_id) or folds them with an
+  * order-invariant merge — that is what makes a replayed batch emit
+  * the same rows. The step is where each twin's pure
+  * transition (`advanceFunnel` … `mergeMinima`, `knRollup`) runs; its
+  * batch-split law in LawsCheck is the micro-batch-boundary argument.
+  *
+  * Eviction is the one other choice, made by each entry point from the
+  * parameters it already takes ([[Eviction]]): a state TTL
+  * (`ttl: TTLConfig`, processing-time clock; `TTLConfig.NONE` keeps
+  * state forever in TimeMode.None), or event-time inactivity
+  * (`horizonMs`, the `*EventTime` entry points). An evicted key
+  * re-entering is simply NEW (funnel restarts at stage 1, retention
+  * re-anchors the cohort, attribution forgets the last touch, quota
+  * counters reset) — the documented semantics of a bounded-memory
+  * incremental operator. Without event-time eviction
+  * `transformWithState` applies NO late-record filtering (the upstream
+  * watermark only governs downstream operators), so every step stays
+  * safe under arbitrarily late input. Every fold requires the RocksDB
+  * state store provider (`transformWithState`'s contract).
   */
 object StatefulOps {
 
-  /** State TTL requires processing-time mode (Spark's transformWithState
-    * contract: TTL expiry is evaluated against the batch's processing
-    * timestamp); without a TTL the processors run in TimeMode.None. The
-    * twins below all take a TTLConfig so a production deployment bounds
-    * state to the eviction horizon — an evicted key re-entering is
-    * simply treated as NEW (funnel restarts at stage 1, retention
-    * re-anchors the cohort, attribution forgets the last touch, quota
-    * counters reset), the documented semantics of a bounded-memory
-    * incremental operator. */
-  private def timeModeFor(ttl: TTLConfig): TimeMode =
-    if (ttl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime()
+  /** How a [[KeyedFold]] drops a key's state. */
+  private[graft] sealed trait Eviction[-I] {
+    def timeMode: TimeMode
+  }
+
+  /** State TTL on the value cell. TTL requires processing-time mode
+    * (Spark's transformWithState contract: TTL expiry is evaluated
+    * against the batch's processing timestamp); without a TTL the fold
+    * runs in TimeMode.None and keeps state forever. */
+  private[graft] final case class TtlEviction(ttl: TTLConfig) extends Eviction[Any] {
+    def timeMode: TimeMode =
+      if (ttl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime()
+  }
+
+  /** EVENT-TIME inactivity eviction: instead of a processing-time TTL,
+    * each key carries ONE armed event-time timer at (last activity +
+    * horizon); when the WATERMARK proves the key has been inactive that
+    * long, the timer fires and the state is cleared — eviction keyed to
+    * the data's own clock, deterministic under replay (a reprocessed
+    * stream evicts at the same points, which a wall-clock TTL cannot
+    * promise). State is O(keys active within the horizon) plus one
+    * timer each. Trade-off vs TTL: event-time mode applies Spark's
+    * late-record filtering, so events at or below the watermark never
+    * reach the step — the right contract for analytics state, stricter
+    * than the TTL twins' accept-anything behavior. `eventMs` is the
+    * row's event time in ms, which feeds the inactivity clock. */
+  private[graft] final case class InactivityEviction[I](horizonMs: Long,
+      eventMs: I => Long) extends Eviction[I] {
+    def timeMode: TimeMode = TimeMode.EventTime()
+  }
+
+  /** The one stateful processor: folds each key's micro-batch rows
+    * through `step` over the value cell `stateName` (the contract is in
+    * the object's scaladoc). Under [[InactivityEviction]] a second cell,
+    * `lastSeen`, holds the key's activity clock. */
+  private[graft] final class KeyedFold[K, I, S, O](stateName: String,
+      stateEncoder: Encoder[S], eviction: Eviction[I],
+      step: (K, Option[S], Seq[I]) => (Option[S], Iterator[O]))
+      extends StatefulProcessor[K, I, O] {
+    @transient private var cell: ValueState[S] = _
+    @transient private var lastSeenMs: ValueState[Long] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      eviction match {
+        case TtlEviction(ttl) =>
+          cell = getHandle.getValueState[S](stateName, stateEncoder, ttl)
+        case _ =>
+          lastSeenMs = getHandle.getValueState[Long]("lastSeen",
+            Encoders.scalaLong, TTLConfig.NONE)
+          cell = getHandle.getValueState[S](stateName, stateEncoder, TTLConfig.NONE)
+      }
+
+    private def stored(): Option[S] = if (cell.exists()) Some(cell.get()) else None
+
+    private def write(s: Option[S]): Unit = s match {
+      case Some(v) => cell.update(v)
+      case None => cell.clear()
+    }
+
+    override def handleInputRows(key: K, rows: Iterator[I],
+        tv: TimerValues): Iterator[O] = {
+      val batch = rows.toSeq
+      eviction match {
+        case TtlEviction(_) =>
+          val (next, out) = step(key, stored(), batch)
+          write(next)
+          out
+        case e: InactivityEviction[I @unchecked] =>
+          // Spark delivers a batch's INPUT ROWS before its expired timers,
+          // and the delete-then-register below would cancel a not-yet-fired
+          // expired timer — so the eviction check must ALSO run in-band: if
+          // the current watermark already proves the inactivity horizon
+          // passed, this key re-enters as new right here, independent of
+          // timer scheduling. Keeps eviction watermark-exact under
+          // back-to-back data batches and with no-data microbatches off.
+          val prevSeen =
+            if (lastSeenMs.exists()) lastSeenMs.get() else Long.MinValue
+          val evicted = prevSeen != Long.MinValue &&
+            tv.getCurrentWatermarkInMs() >= prevSeen + e.horizonMs
+          if (evicted) cell.clear()
+          // RUNNING max of activity time, never a plain overwrite: a late
+          // (above-watermark) event from the past must not pull the
+          // inactivity deadline backwards and evict an active key early.
+          // After an eviction the clock re-anchors to this batch alone.
+          val lastMs = math.max(
+            if (evicted) Long.MinValue else prevSeen,
+            batch.map(e.eventMs).max)
+          // an evicted key is treated as never seen, even if a cleared
+          // cell still claims to exist within this batch
+          val (next, out) = step(key, if (evicted) None else stored(), batch)
+          write(next)
+          lastSeenMs.update(lastMs)
+          // one armed timer per key: re-arm the inactivity deadline at
+          // each batch the key appears in (delete-then-register keeps it
+          // single); clamp above the current watermark — an already-passed
+          // deadline must still fire, on the very next batch
+          getHandle.listTimers().foreach(t => getHandle.deleteTimer(t))
+          getHandle.registerTimer(
+            math.max(lastMs + e.horizonMs, tv.getCurrentWatermarkInMs() + 1))
+          out
+      }
+    }
+
+    override def handleExpiredTimer(key: K, tv: TimerValues,
+        info: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[O] = {
+      eviction match {
+        case e: InactivityEviction[I @unchecked] =>
+          // STALE-TIMER GUARD: if this batch's input rows already
+          // re-anchored the key (data delivered before expired timers),
+          // the deadline implied by the CURRENT activity clock is newer
+          // than the timer that just fired — deleting an expired-but-
+          // unfired timer is not contractual across Spark versions, so a
+          // stale fire must not wipe the fresh incarnation. Evict only
+          // when the fired timer still proves the full horizon idle.
+          val seen = if (lastSeenMs.exists()) lastSeenMs.get() else Long.MinValue
+          if (seen == Long.MinValue || seen + e.horizonMs <= info.getExpiryTimeInMs()) {
+            cell.clear()
+            lastSeenMs.clear()
+          }
+        case _ =>
+      }
+      Iterator.empty
+    }
+  }
+
+  /** Groups `rows` by `key` and runs one [[KeyedFold]] over them in
+    * Append mode — the only `transformWithState` call here. */
+  private def foldByKey[K: Encoder, I, S, O: Encoder](rows: Dataset[I],
+      key: I => K, stateName: String, stateEncoder: Encoder[S],
+      eviction: Eviction[I])(
+      step: (K, Option[S], Seq[I]) => (Option[S], Iterator[O])): Dataset[O] =
+    rows.groupByKey(key).transformWithState(
+      new KeyedFold(stateName, stateEncoder, eviction, step),
+      eviction.timeMode, OutputMode.Append())
 
   /** Session windows per (table, action): events within `gap` of each
     * other merge into one session — the event-time generalization of
@@ -131,44 +283,26 @@ object StatefulOps {
 
   case class WalAnomaly(table: String, walPosition: Long, lastWal: Long)
 
-  /** Spark-4-native custom state (`transformWithState`): per-table WAL
-    * monotonicity monitor. The reference trusts its WAL positions to
-    * only move forward (postgres.go:350, 358-377); this operator turns
-    * that assumption into a checked invariant — any event whose
-    * walPosition is ≤ the table's high-water mark is emitted as an
-    * anomaly (a replay, a rewind, or an out-of-order source).
-    *
-    * `StatefulProcessor` + `ValueState` is the modern replacement for
-    * (flat)mapGroupsWithState: typed named state cells, TTL support,
-    * timers — and it REQUIRES the RocksDB state store provider, which
-    * is how it stays off-heap at scale. State here is one long per
-    * table — O(tables), nothing more. */
-  final class WalMonitorProcessor
-      extends StatefulProcessor[String, ChangeEvent, WalAnomaly] {
-    @transient private var lastWal: ValueState[Long] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      lastWal = getHandle.getValueState[Long]("lastWal", Encoders.scalaLong, TTLConfig.NONE)
-    override def handleInputRows(table: String, rows: Iterator[ChangeEvent],
-        tv: TimerValues): Iterator[WalAnomaly] = {
-      var last = if (lastWal.exists()) lastWal.get() else -1L
+  /** Per-table WAL monotonicity monitor. The reference trusts its WAL
+    * positions to only move forward (postgres.go:350, 358-377); this
+    * operator turns that assumption into a checked invariant — any
+    * event whose walPosition is ≤ the table's high-water mark is
+    * emitted as an anomaly (a replay, a rewind, or an out-of-order
+    * source). Within a batch events fold in (timestamp, walPosition)
+    * order, so a replayed batch reports the same anomalies. State is
+    * one long per table (`lastWal`) — O(tables), nothing more. */
+  def walAnomalies(envelopes: Dataset[ChangeEvent]): Dataset[WalAnomaly] = {
+    import envelopes.sparkSession.implicits._
+    foldByKey(envelopes, (_: ChangeEvent).table, "lastWal", Encoders.scalaLong,
+        TtlEviction(TTLConfig.NONE)) { (table, last0, rows) =>
+      var last = last0.getOrElse(-1L)
       val out = scala.collection.mutable.ArrayBuffer[WalAnomaly]()
-      rows.foreach { e =>
+      rows.sortBy(e => (micros(e.timestamp), e.walPosition)).foreach { e =>
         if (e.walPosition <= last) out += WalAnomaly(table, e.walPosition, last)
         else last = e.walPosition
       }
-      lastWal.update(last)
-      out.iterator
+      (Some(last), out.iterator)
     }
-  }
-
-  /** WAL-regression anomalies per table (see [[WalMonitorProcessor]]).
-    * Requires `spark.sql.streaming.stateStore.providerClass` =
-    * RocksDBStateStoreProvider (enforced by transformWithState). */
-  def walAnomalies(envelopes: Dataset[ChangeEvent]): Dataset[WalAnomaly] = {
-    import envelopes.sparkSession.implicits._
-    envelopes.groupByKey(_.table)
-      .transformWithState(new WalMonitorProcessor,
-        TimeMode.None(), OutputMode.Append())
   }
 
   case class TableSession(table: String, start_ms: Long, end_ms: Long, n: Long)
@@ -225,7 +359,7 @@ object StatefulOps {
 
   private[graft] case class FunnelState(t1: Long, t2: Long, t3: Long)
 
-  /** The ordered-funnel transition shared by BOTH funnel processors:
+  /** The ordered-funnel transition shared by BOTH funnel twins:
     * advance a stage only on an event STRICTLY AFTER the previous
     * stage's entry — the batch query's conditional min-aggregate
     * semantics. Folds `rows` (sorted by event time) into (state',
@@ -253,173 +387,40 @@ object StatefulOps {
   }
 
   /** The incremental twin of the batch ordered funnel
-    * (`EventOps.qFunnel`): per-user stage entry times as keyed
-    * `transformWithState` state (three longs — O(users), constant per
-    * key), advancing stages via [[advanceFunnel]] — the same semantics
-    * as the batch conditional min-aggregates. Events are sorted by
-    * event time WITHIN each batch, so a replay of a fixture in
-    * timestamp order produces stage counts identical to the batch
-    * query (asserted in StatefulOpsSpec); out-of-order arrivals ACROSS
-    * batches cannot retro-lower an already-claimed stage time — the
-    * inherent incremental-vs-batch gap. NOTE on lateness and state:
-    * without a TTL (`TimeMode.None`) transformWithState applies NO
-    * late-record filtering and NO eviction — the upstream watermark
-    * only governs downstream operators — so the stage guards must stay
-    * safe under arbitrarily late input, and state is O(all users ever
-    * seen). Pass a `ttl` to bound state to the eviction horizon
-    * (O(users active within TTL)): an evicted user re-entering
-    * restarts at stage 1 — see [[timeModeFor]]. */
-  final class FunnelProcessor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[Long, FunnelEvent, FunnelHit] {
-    @transient private var st: ValueState[FunnelState] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[FunnelState]("funnel",
-        Encoders.product[FunnelState], ttl)
-    override def handleInputRows(user: Long, rows: Iterator[FunnelEvent],
-        tv: TimerValues): Iterator[FunnelHit] = {
-      val s0 = if (st.exists()) st.get() else FunnelState(-1L, -1L, -1L)
-      val (s, out) = advanceFunnel(user, s0,
-        rows.toSeq.sortBy(e => micros(e.ts)))
-      st.update(s)
-      out.iterator
-    }
-  }
-
-  /** Watermarked streaming funnel over a `FunnelEvent` stream — see
-    * [[FunnelProcessor]]. Requires the RocksDB state store provider
-    * (transformWithState's contract). */
+    * (`EventOps.qFunnel`): per-user stage entry times as keyed state
+    * (`funnel`, three longs — O(users), constant per key), advancing
+    * stages via [[advanceFunnel]] — the same semantics as the batch
+    * conditional min-aggregates. Events are sorted by event time
+    * WITHIN each batch, so a replay of a fixture in timestamp order
+    * produces stage counts identical to the batch query (asserted in
+    * StatefulOpsSpec); out-of-order arrivals ACROSS batches cannot
+    * retro-lower an already-claimed stage time — the inherent
+    * incremental-vs-batch gap. Without a `ttl` state is O(all users
+    * ever seen); with one, O(users active within TTL), and an evicted
+    * user re-entering restarts at stage 1. */
   def streamingFunnel(events: Dataset[FunnelEvent],
       watermark: String = "1 hour",
-      ttl: TTLConfig = TTLConfig.NONE): Dataset[FunnelHit] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .transformWithState(new FunnelProcessor(ttl),
-        timeModeFor(ttl), OutputMode.Append())
-  }
+      ttl: TTLConfig = TTLConfig.NONE): Dataset[FunnelHit] =
+    funnel(events.withWatermark("ts", watermark), TtlEviction(ttl))
 
-  /** EVENT-TIME eviction shell shared by the funnel / attribution /
-    * retention twins: instead of a processing-time TTL, each key
-    * carries ONE armed event-time timer at (last activity + horizon);
-    * when the WATERMARK proves the key has been inactive that long,
-    * the timer fires and the state is cleared — eviction keyed to the
-    * data's own clock, deterministic under replay (a reprocessed
-    * stream evicts at the same points, which a wall-clock TTL cannot
-    * promise). State is O(keys active within the horizon) plus one
-    * timer each. Trade-off vs the TTL variants: event-time mode
-    * applies Spark's late-record filtering, so events at or below the
-    * watermark never reach the processor — the right contract for
-    * analytics state, stricter than the TTL twins' accept-anything
-    * behavior. Subclasses own the domain state cells and the
-    * per-batch fold; the shell owns the activity clock, the in-band
-    * eviction check, timer re-arming, and the stale-timer guard. */
-  private[graft] abstract class EventTimeEvictor[K, I, O](horizonMs: Long)
-      extends StatefulProcessor[K, I, O] {
-    @transient private var lastSeenMs: ValueState[Long] = _
-    /** Create the domain state cells (called from init). */
-    protected def initState(): Unit
-    /** Clear every domain state cell — eviction must drop the key's
-      * whole incarnation at once (one eviction clock for all cells). */
-    protected def clearState(): Unit
-    /** Fold this batch's rows (already sorted by [[sortKey]]) into the
-      * domain state. `fresh` means the in-band check just evicted the
-      * key — treat it as never seen even if a cleared cell still
-      * claims to exist within this batch. */
-    protected def advance(key: K, sorted: Seq[I], fresh: Boolean): Iterator[O]
-    /** Replay-deterministic within-batch order (post-shuffle order is
-      * not contractual). */
-    protected def sortKey(row: I): (Long, Long)
-    /** The row's event time in ms — feeds the inactivity clock. */
-    protected def eventMs(row: I): Long
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      lastSeenMs = getHandle.getValueState[Long]("lastSeen",
-        Encoders.scalaLong, TTLConfig.NONE)
-      initState()
-    }
-    override def handleInputRows(key: K, rows: Iterator[I],
-        tv: TimerValues): Iterator[O] = {
-      // Spark delivers a batch's INPUT ROWS before its expired timers,
-      // and the delete-then-register below would cancel a not-yet-fired
-      // expired timer — so the eviction check must ALSO run in-band: if
-      // the current watermark already proves the inactivity horizon
-      // passed, this key re-enters as new right here, independent of
-      // timer scheduling. Keeps eviction watermark-exact under
-      // back-to-back data batches and with no-data microbatches off.
-      val prevSeen =
-        if (lastSeenMs.exists()) lastSeenMs.get() else Long.MinValue
-      val evicted = prevSeen != Long.MinValue &&
-        tv.getCurrentWatermarkInMs() >= prevSeen + horizonMs
-      if (evicted) clearState()
-      val sorted = rows.toSeq.sortBy(sortKey)
-      // RUNNING max of activity time, never a plain overwrite: a late
-      // (above-watermark) event from the past must not pull the
-      // inactivity deadline backwards and evict an active key early.
-      // After an eviction the clock re-anchors to this batch alone.
-      val lastMs = math.max(
-        if (evicted) Long.MinValue else prevSeen,
-        sorted.map(eventMs).max)
-      val out = advance(key, sorted, evicted)
-      lastSeenMs.update(lastMs)
-      // one armed timer per key: re-arm the inactivity deadline at
-      // each batch the key appears in (delete-then-register keeps it
-      // single); clamp above the current watermark — an already-passed
-      // deadline must still fire, on the very next batch
-      getHandle.listTimers().foreach(t => getHandle.deleteTimer(t))
-      getHandle.registerTimer(
-        math.max(lastMs + horizonMs, tv.getCurrentWatermarkInMs() + 1))
-      out
-    }
-    override def handleExpiredTimer(key: K, tv: TimerValues,
-        info: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[O] = {
-      // STALE-TIMER GUARD: if this batch's input rows already
-      // re-anchored the key (data delivered before expired timers),
-      // the deadline implied by the CURRENT activity clock is newer
-      // than the timer that just fired — deleting an expired-but-
-      // unfired timer is not contractual across Spark versions, so a
-      // stale fire must not wipe the fresh incarnation. Evict only
-      // when the fired timer still proves the full horizon idle.
-      val seen = if (lastSeenMs.exists()) lastSeenMs.get() else Long.MinValue
-      if (seen == Long.MinValue || seen + horizonMs <= info.getExpiryTimeInMs()) {
-        clearState()
-        lastSeenMs.clear()
-      }
-      Iterator.empty
-    }
-  }
-
-  /** Event-time eviction for the funnel — see [[EventTimeEvictor]].
-    * An evicted user's next view restarts the funnel at stage 1. */
-  final class FunnelProcessorEventTime(horizonMs: Long)
-      extends EventTimeEvictor[Long, FunnelEvent, FunnelHit](horizonMs) {
-    @transient private var st: ValueState[FunnelState] = _
-    override protected def initState(): Unit =
-      st = getHandle.getValueState[FunnelState]("funnel",
-        Encoders.product[FunnelState], TTLConfig.NONE)
-    override protected def clearState(): Unit = st.clear()
-    override protected def sortKey(e: FunnelEvent): (Long, Long) = (micros(e.ts), 0L)
-    override protected def eventMs(e: FunnelEvent): Long = e.ts.getTime
-    override protected def advance(user: Long, sorted: Seq[FunnelEvent],
-        fresh: Boolean): Iterator[FunnelHit] = {
-      val s0 = if (st.exists() && !fresh) st.get() else FunnelState(-1L, -1L, -1L)
-      val (s, out) = advanceFunnel(user, s0, sorted)
-      st.update(s)
-      out.iterator
-    }
-  }
-
-  /** [[streamingFunnel]] with event-time inactivity eviction — see
-    * [[FunnelProcessorEventTime]]. RocksDB state store required. */
+  /** [[streamingFunnel]] with event-time inactivity eviction
+    * ([[InactivityEviction]]): an evicted user's next view restarts
+    * the funnel at stage 1. */
   def streamingFunnelEventTime(events: Dataset[FunnelEvent],
       watermark: String = "1 hour", horizonMs: Long = 86400000L)
-      : Dataset[FunnelHit] = {
+      : Dataset[FunnelHit] =
+    funnel(events.withWatermark("ts", watermark),
+      InactivityEviction(horizonMs, (e: FunnelEvent) => e.ts.getTime))
+
+  private def funnel(events: Dataset[FunnelEvent],
+      eviction: Eviction[FunnelEvent]): Dataset[FunnelHit] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .transformWithState(new FunnelProcessorEventTime(horizonMs),
-        TimeMode.EventTime(), OutputMode.Append())
+    foldByKey(events, (_: FunnelEvent).user_id, "funnel",
+        Encoders.product[FunnelState], eviction) { (user, s0, rows) =>
+      val (s, out) = advanceFunnel(user, s0.getOrElse(FunnelState(-1L, -1L, -1L)),
+        rows.sortBy(e => micros(e.ts)))
+      (Some(s), out.iterator)
+    }
   }
 
   case class PathEvent(user_id: Long, event_id: Long, event_type: String,
@@ -435,7 +436,7 @@ object StatefulOps {
   private[graft] case class PathState(sid: Long, lastTus: Long,
       e1: String, e2: String, nSeen: Int)
 
-  /** The session-trigram transition shared by the streaming processor
+  /** The session-trigram transition shared by the streaming twin
     * and PathLaws: fold `rows` (sorted by (tus, event_id)) into
     * (state', emitted (session_id, path) trigrams). A >30-minute gap
     * opens a new session (trigram windows never span it — the batch
@@ -463,40 +464,22 @@ object StatefulOps {
   /** The incremental twin of the batch session-path relation
     * (`EventOps.sessionTrigrams`, whose top-20 rollup is
     * `q_event_paths`): per-user (session counter, last-2 events) as
-    * keyed `transformWithState` state — O(users), constant bytes per
-    * key — emitting each completed trigram exactly once. Replayed
-    * over a fixture in (ts, event_id) order the emissions equal the
-    * batch relation row-for-row (StatefulOpsSpec); the downstream
-    * top-k is an ordinary streaming aggregation over the emitted
-    * paths. Same lateness/TTL contract as [[FunnelProcessor]]. */
-  final class PathsProcessor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[Long, PathEvent, PathHit] {
-    @transient private var st: ValueState[PathState] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[PathState]("paths",
-        Encoders.product[PathState], ttl)
-    override def handleInputRows(user: Long, rows: Iterator[PathEvent],
-        tv: TimerValues): Iterator[PathHit] = {
-      val s0 = if (st.exists()) Some(st.get()) else None
-      val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-        .map(e => (micros(e.ts), e.event_id, e.event_type))
-      val (s, out) = advancePaths(s0, sorted)
-      st.update(s)
-      out.iterator.map { case (sid, p) => PathHit(user, sid, p) }
-    }
-  }
-
-  /** Watermarked streaming session-path miner — see [[PathsProcessor]].
-    * Requires the RocksDB state store provider. */
+    * keyed state (`paths`) — O(users), constant bytes per key —
+    * emitting each completed trigram exactly once. Replayed over a
+    * fixture in (ts, event_id) order the emissions equal the batch
+    * relation row-for-row (StatefulOpsSpec); the downstream top-k is
+    * an ordinary streaming aggregation over the emitted paths. */
   def streamingEventPaths(events: Dataset[PathEvent],
       watermark: String = "1 hour",
       ttl: TTLConfig = TTLConfig.NONE): Dataset[PathHit] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .transformWithState(new PathsProcessor(ttl),
-        timeModeFor(ttl), OutputMode.Append())
+    foldByKey(events.withWatermark("ts", watermark), (_: PathEvent).user_id,
+        "paths", Encoders.product[PathState], TtlEviction(ttl)) { (user, s0, rows) =>
+      val sorted = rows.sortBy(e => (micros(e.ts), e.event_id))
+        .map(e => (micros(e.ts), e.event_id, e.event_type))
+      val (s, out) = advancePaths(s0, sorted)
+      (Some(s), out.iterator.map { case (sid, p) => PathHit(user, sid, p) })
+    }
   }
 
   case class TouchEvent(event_id: Long, user_id: Long, event_type: String,
@@ -513,23 +496,10 @@ object StatefulOps {
   private def micros(ts: java.sql.Timestamp): Long =
     Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000
 
-  /** The incremental twin of batch last-touch attribution
-    * (`EventOps.qAttribution`): per-user state is ONE (time, id) pair —
-    * the latest click/view seen — and each purchase emits its
-    * attribution immediately if the touch is AT OR BEFORE it and
-    * within the 1-hour window (the `tus >= s.tus` guard: a late
-    * purchase arriving after a newer touch must not be credited to
-    * that FUTURE touch with negative latency; the batch twin's
-    * trailing ROWS frame can only see earlier touches). Same
-    * semantics as the batch ignore-nulls `last()` over the trailing
-    * ROWS frame when events replay in (time, id) order (asserted
-    * row-identical in StatefulOpsSpec); state is O(users) × one
-    * struct, the smallest possible — same lateness caveat and TTL
-    * bound as [[FunnelProcessor]] (an evicted user's next purchase
-    * simply finds no touch to credit). */
+  /** Last-touch attribution window: one hour, in µs. */
   private[graft] val AttributionMaxLagUs = 3600L * 1000000L
 
-  /** The last-touch transition the attribution processor folds
+  /** The last-touch transition the attribution twin folds
     * through: clicks/views replace the remembered touch; a purchase
     * credits the touch if it is at-or-before the purchase and within
     * [[AttributionMaxLagUs]]. `s0` is null when no touch is known.
@@ -554,70 +524,42 @@ object StatefulOps {
     (s, out.toSeq)
   }
 
-  final class AttributionProcessor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[Long, TouchEvent, AttributionHit] {
-    @transient private var st: ValueState[TouchState] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[TouchState]("touch",
-        Encoders.product[TouchState], ttl)
-    override def handleInputRows(user: Long, rows: Iterator[TouchEvent],
-        tv: TimerValues): Iterator[AttributionHit] = {
-      val s0 = if (st.exists()) st.get() else null
-      val (s, out) = advanceAttribution(s0,
-        rows.toSeq.sortBy(e => (micros(e.ts), e.event_id)))
-      if (s != null) st.update(s)
-      out.iterator
-    }
-  }
-
-  /** Watermarked streaming last-touch attribution — see
-    * [[AttributionProcessor]]. RocksDB state store required. */
+  /** The incremental twin of batch last-touch attribution
+    * (`EventOps.qAttribution`): per-user state (`touch`) is ONE (time,
+    * id) pair — the latest click/view seen — and each purchase emits
+    * its attribution immediately if the touch is AT OR BEFORE it and
+    * within the 1-hour window (the `tus >= s.tus` guard: a late
+    * purchase arriving after a newer touch must not be credited to
+    * that FUTURE touch with negative latency; the batch twin's
+    * trailing ROWS frame can only see earlier touches). Same
+    * semantics as the batch ignore-nulls `last()` over the trailing
+    * ROWS frame when events replay in (time, id) order (asserted
+    * row-identical in StatefulOpsSpec); state is O(users) × one
+    * struct, the smallest possible. An evicted user's next purchase
+    * simply finds no touch to credit. */
   def streamingAttribution(events: Dataset[TouchEvent],
       watermark: String = "1 hour",
-      ttl: TTLConfig = TTLConfig.NONE): Dataset[AttributionHit] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .transformWithState(new AttributionProcessor(ttl),
-        timeModeFor(ttl), OutputMode.Append())
-  }
+      ttl: TTLConfig = TTLConfig.NONE): Dataset[AttributionHit] =
+    attribution(events.withWatermark("ts", watermark), TtlEviction(ttl))
 
-  /** Event-time eviction for last-touch attribution — see
-    * [[EventTimeEvictor]]. An evicted user's next purchase finds no
-    * touch to credit (the remembered touch is forgotten at the
-    * inactivity horizon, independent of [[AttributionMaxLagUs]]). */
-  final class AttributionProcessorEventTime(horizonMs: Long)
-      extends EventTimeEvictor[Long, TouchEvent, AttributionHit](horizonMs) {
-    @transient private var st: ValueState[TouchState] = _
-    override protected def initState(): Unit =
-      st = getHandle.getValueState[TouchState]("touch",
-        Encoders.product[TouchState], TTLConfig.NONE)
-    override protected def clearState(): Unit = st.clear()
-    override protected def sortKey(e: TouchEvent): (Long, Long) =
-      (micros(e.ts), e.event_id)
-    override protected def eventMs(e: TouchEvent): Long = e.ts.getTime
-    override protected def advance(user: Long, sorted: Seq[TouchEvent],
-        fresh: Boolean): Iterator[AttributionHit] = {
-      val s0 = if (st.exists() && !fresh) st.get() else null
-      val (s, out) = advanceAttribution(s0, sorted)
-      if (s != null) st.update(s)
-      out.iterator
-    }
-  }
-
-  /** [[streamingAttribution]] with event-time inactivity eviction —
-    * see [[AttributionProcessorEventTime]]. RocksDB state store
-    * required. */
+  /** [[streamingAttribution]] with event-time inactivity eviction
+    * ([[InactivityEviction]]): the remembered touch is forgotten at the
+    * inactivity horizon, independent of [[AttributionMaxLagUs]]. */
   def streamingAttributionEventTime(events: Dataset[TouchEvent],
       watermark: String = "1 hour", horizonMs: Long = 86400000L)
-      : Dataset[AttributionHit] = {
+      : Dataset[AttributionHit] =
+    attribution(events.withWatermark("ts", watermark),
+      InactivityEviction(horizonMs, (e: TouchEvent) => e.ts.getTime))
+
+  private def attribution(events: Dataset[TouchEvent],
+      eviction: Eviction[TouchEvent]): Dataset[AttributionHit] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .transformWithState(new AttributionProcessorEventTime(horizonMs),
-        TimeMode.EventTime(), OutputMode.Append())
+    foldByKey(events, (_: TouchEvent).user_id, "touch",
+        Encoders.product[TouchState], eviction) { (_, s0, rows) =>
+      val (s, out) = advanceAttribution(s0.orNull,
+        rows.sortBy(e => (micros(e.ts), e.event_id)))
+      (Option(s), out.iterator)
+    }
   }
 
   case class RetentionEvent(user_id: Long, ts: java.sql.Timestamp)
@@ -626,34 +568,22 @@ object StatefulOps {
   case class RetentionHit(user_id: Long, cohort_day: Long, week_offset: Long)
 
   private[graft] case class RetentionState(cohort: Long, weeksMask: Long)
+  /** Retention's one state cell: [[RetentionState]] plus the credited
+    * far weeks (≥ 64), ascending — one cell, so one eviction clock. */
+  private[graft] case class RetentionCell(cohort: Long, weeksMask: Long,
+      farWeeks: Seq[Long])
 
-  /** The incremental twin of batch cohort retention
-    * (`EventOps.qRetention`): per-user state is the cohort day (day of
-    * first event) plus a BITMASK of week offsets already credited —
-    * two longs per user for the common case. Weeks 0–63 live in the
-    * mask; weeks BEYOND the 64-week mask horizon (a years-long stream)
-    * spill into a `MapState` keyed by week offset, so no cell is ever
-    * dropped and no data-dependent assert can kill the query — the
-    * emit-once contract holds across the whole stream lifetime, with
-    * map entries only for the rare far-horizon weeks. Each
-    * (user, week) cell emits exactly once, so the streaming cell
-    * counts equal the batch COUNT(DISTINCT user) per
-    * (cohort_day, week_offset) under in-order replay (asserted in
-    * StatefulOpsSpec). Same lateness caveat and TTL bound as
-    * [[FunnelProcessor]] (an evicted user re-anchors their cohort at
-    * the next event); events earlier than the recorded cohort day are
-    * dropped (see below). */
   private val RetentionDayUs = 86400000000L
 
-  /** The cohort-retention transition the streaming processor folds
+  /** The cohort-retention transition the streaming twin folds
     * through: the first event anchors the cohort day; each event's
     * week offset emits once — weeks 0–63 tracked in the bitmask, far
-    * weeks in the `far` set (the MapState's pure image). Events before
+    * weeks in the `far` set. Events before
     * the cohort are dropped (the incremental cohort cannot be
     * retro-lowered, and a negative week must never reach the shift —
     * 1L << -1 wraps to bit 63). `s0` is null for a fresh user. Its
     * batch-split law — including splits that land ON the week-64
-    * bitmask/map boundary — is ScalaCheck'd in RetentionLaws. */
+    * bitmask/far-week boundary — is ScalaCheck'd in RetentionLaws. */
   private[graft] def advanceRetention(user: Long, s0: RetentionState,
       far0: Set[Long], rows: Seq[RetentionEvent])
       : (RetentionState, Set[Long], Seq[RetentionHit]) = {
@@ -679,99 +609,47 @@ object StatefulOps {
     (s, far, out.toSeq)
   }
 
-  final class RetentionProcessor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[Long, RetentionEvent, RetentionHit] {
-    @transient private var st: ValueState[RetentionState] = _
-    @transient private var farWeeks: MapState[Long, Boolean] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      st = getHandle.getValueState[RetentionState]("retention",
-        Encoders.product[RetentionState], ttl)
-      farWeeks = getHandle.getMapState[Long, Boolean]("farWeeks",
-        Encoders.scalaLong, Encoders.scalaBoolean, ttl)
-    }
-    override def handleInputRows(user: Long, rows: Iterator[RetentionEvent],
-        tv: TimerValues): Iterator[RetentionHit] = {
-      val s0 = if (st.exists()) st.get() else null
-      // a fresh OR TTL-evicted user must not inherit far-week cells
-      // from a previous incarnation: stale entries are keyed by offsets
-      // from the OLD cohort and would wrongly suppress new-cohort cells
-      if (s0 == null) farWeeks.clear()
-      val far0: Set[Long] =
-        if (s0 == null) Set.empty else farWeeks.keys().toSet
-      val (s, far, out) = advanceRetention(user, s0, far0,
-        rows.toSeq.sortBy(e => micros(e.ts)))
-      if (s != null) st.update(s)
-      // BOTH state cells must ride ONE eviction clock: st.update above
-      // refreshes the bitmask's TTL on any activity, but MapState TTL
-      // is per-entry-from-last-write — without a matching refresh, a
-      // continuously-active user's old far-week entry could expire and
-      // the cell re-emit (emit-once broken). Rewriting the (rare)
-      // far-week keys when a TTL is set keeps value and map expiring
-      // together: active user keeps both, fully-idle user loses both.
-      val toWrite = if (ttl != TTLConfig.NONE) far else far -- far0
-      toWrite.foreach(k => farWeeks.updateValue(k, true))
-      out.iterator
-    }
-  }
-
-  /** Watermarked streaming cohort retention — see
-    * [[RetentionProcessor]]. RocksDB state store required. */
+  /** The incremental twin of batch cohort retention
+    * (`EventOps.qRetention`): per-user state (`retention`,
+    * [[RetentionCell]]) is the cohort day (day of first event) plus a
+    * BITMASK of week offsets already credited — two longs per user for
+    * the common case. Weeks 0–63 live in the mask; weeks BEYOND the
+    * 64-week mask horizon (a years-long stream) are listed in the same
+    * cell, so no cell is ever dropped and no data-dependent assert can
+    * kill the query — the emit-once contract holds across the whole
+    * stream lifetime (and per incarnation: mask and far weeks are
+    * evicted together), with list entries only for the rare
+    * far-horizon weeks. Each (user, week) cell emits exactly once, so
+    * the streaming cell counts equal the batch COUNT(DISTINCT user) per
+    * (cohort_day, week_offset) under in-order replay (asserted in
+    * StatefulOpsSpec). An evicted user re-anchors their cohort at the
+    * next event; events earlier than the recorded cohort day are
+    * dropped (see [[advanceRetention]]). */
   def streamingRetention(events: Dataset[RetentionEvent],
       watermark: String = "1 hour",
-      ttl: TTLConfig = TTLConfig.NONE): Dataset[RetentionHit] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .transformWithState(new RetentionProcessor(ttl),
-        timeModeFor(ttl), OutputMode.Append())
-  }
+      ttl: TTLConfig = TTLConfig.NONE): Dataset[RetentionHit] =
+    retention(events.withWatermark("ts", watermark), TtlEviction(ttl))
 
-  /** Event-time eviction for cohort retention — see
-    * [[EventTimeEvictor]]. An evicted user re-anchors their cohort at
-    * the next event; the far-week map rides the same eviction clock
-    * as the bitmask (both cells clear together, so the emit-once
-    * contract holds per incarnation). */
-  final class RetentionProcessorEventTime(horizonMs: Long)
-      extends EventTimeEvictor[Long, RetentionEvent, RetentionHit](horizonMs) {
-    @transient private var st: ValueState[RetentionState] = _
-    @transient private var farWeeks: MapState[Long, Boolean] = _
-    override protected def initState(): Unit = {
-      st = getHandle.getValueState[RetentionState]("retention",
-        Encoders.product[RetentionState], TTLConfig.NONE)
-      farWeeks = getHandle.getMapState[Long, Boolean]("farWeeks",
-        Encoders.scalaLong, Encoders.scalaBoolean, TTLConfig.NONE)
-    }
-    override protected def clearState(): Unit = { st.clear(); farWeeks.clear() }
-    override protected def sortKey(e: RetentionEvent): (Long, Long) =
-      (micros(e.ts), 0L)
-    override protected def eventMs(e: RetentionEvent): Long = e.ts.getTime
-    override protected def advance(user: Long, sorted: Seq[RetentionEvent],
-        fresh: Boolean): Iterator[RetentionHit] = {
-      val s0 = if (st.exists() && !fresh) st.get() else null
-      // a fresh user must not inherit far-week cells from a previous
-      // incarnation (stale offsets keyed to the OLD cohort)
-      if (s0 == null) farWeeks.clear()
-      val far0: Set[Long] =
-        if (s0 == null) Set.empty else farWeeks.keys().toSet
-      val (s, far, out) = advanceRetention(user, s0, far0, sorted)
-      if (s != null) st.update(s)
-      (far -- far0).foreach(k => farWeeks.updateValue(k, true))
-      out.iterator
-    }
-  }
-
-  /** [[streamingRetention]] with event-time inactivity eviction — see
-    * [[RetentionProcessorEventTime]]. RocksDB state store required. */
+  /** [[streamingRetention]] with event-time inactivity eviction
+    * ([[InactivityEviction]]). */
   def streamingRetentionEventTime(events: Dataset[RetentionEvent],
       watermark: String = "1 hour", horizonMs: Long = 86400000L)
-      : Dataset[RetentionHit] = {
+      : Dataset[RetentionHit] =
+    retention(events.withWatermark("ts", watermark),
+      InactivityEviction(horizonMs, (e: RetentionEvent) => e.ts.getTime))
+
+  private def retention(events: Dataset[RetentionEvent],
+      eviction: Eviction[RetentionEvent]): Dataset[RetentionHit] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .transformWithState(new RetentionProcessorEventTime(horizonMs),
-        TimeMode.EventTime(), OutputMode.Append())
+    foldByKey(events, (_: RetentionEvent).user_id, "retention",
+        Encoders.product[RetentionCell], eviction) { (user, c0, rows) =>
+      val (s, far, out) = advanceRetention(user,
+        c0.map(c => RetentionState(c.cohort, c.weeksMask)).orNull,
+        c0.fold(Set.empty[Long])(_.farWeeks.toSet),
+        rows.sortBy(e => micros(e.ts)))
+      (Option(s).map(s => RetentionCell(s.cohort, s.weeksMask, far.toSeq.sorted)),
+        out.iterator)
+    }
   }
 
   case class MetricEvent(event_id: Long, event_type: String, value: Double,
@@ -803,20 +681,16 @@ object StatefulOps {
     * — the only decision a live detector can make; the batch twin sees
     * the whole distribution, so flagged sets differ by design near the
     * threshold), after a `minN` warm-up. State is one (n, mean, m2)
-    * triple per event type — O(types) scalars. Same TTL knob as the
-    * other twins. */
-  final class ZscoreProcessor(minN: Long, threshold: Double,
-      ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, MetricEvent, OutlierHit] {
-    @transient private var st: ValueState[WelfordState] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[WelfordState]("welford",
-        Encoders.product[WelfordState], ttl)
-    override def handleInputRows(eventType: String, rows: Iterator[MetricEvent],
-        tv: TimerValues): Iterator[OutlierHit] = {
-      var s = if (st.exists()) st.get() else WelfordState(0L, 0.0, 0.0)
+    * triple per event type (`welford`) — O(types) scalars. */
+  def streamingZscoreOutliers(events: Dataset[MetricEvent],
+      watermark: String = "1 hour", minN: Long = 30, threshold: Double = 3.0,
+      ttl: TTLConfig = TTLConfig.NONE): Dataset[OutlierHit] = {
+    import events.sparkSession.implicits._
+    foldByKey(events.withWatermark("ts", watermark), (_: MetricEvent).event_type,
+        "welford", Encoders.product[WelfordState], TtlEviction(ttl)) { (eventType, s0, rows) =>
+      var s = s0.getOrElse(WelfordState(0L, 0.0, 0.0))
       val out = scala.collection.mutable.ArrayBuffer[OutlierHit]()
-      rows.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
+      rows.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
         if (s.n >= minN) {
           val sd = math.sqrt(s.m2 / s.n)
           if (sd > 0) {
@@ -827,22 +701,8 @@ object StatefulOps {
         }
         s = welfordStep(s, e.value)
       }
-      st.update(s)
-      out.iterator
+      (Some(s), out.iterator)
     }
-  }
-
-  /** Streaming z-score outlier detection — see [[ZscoreProcessor]].
-    * RocksDB state store required. */
-  def streamingZscoreOutliers(events: Dataset[MetricEvent],
-      watermark: String = "1 hour", minN: Long = 30, threshold: Double = 3.0,
-      ttl: TTLConfig = TTLConfig.NONE): Dataset[OutlierHit] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.event_type)
-      .transformWithState(new ZscoreProcessor(minN, threshold, ttl),
-        timeModeFor(ttl), OutputMode.Append())
   }
 
   case class DailyCount(event_type: String, day: Long, cnt: Long)
@@ -885,36 +745,22 @@ object StatefulOps {
     (st, out.toSeq)
   }
 
-  final class EwmaProcessor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, DailyCount, EwmaPoint] {
-    @transient private var st: ValueState[EwmaState] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[EwmaState]("ewmaTail",
-        Encoders.product[EwmaState], ttl)
-    override def handleInputRows(eventType: String, rows: Iterator[DailyCount],
-        tv: TimerValues): Iterator[EwmaPoint] = {
-      val st0 = if (st.exists()) Some(st.get()) else None
-      val (st1, out) = advanceEwma(st0, rows.map(r => (r.day, r.cnt)).toSeq)
-      st1.foreach(st.update)
-      out.iterator.map { case (d, c, s) => EwmaPoint(eventType, d, c, s) }
-    }
-  }
-
   /** STREAMING EWMA twin of the batch `EventOps.qEwmaDaily`: the input
     * is the daily per-type count stream (what a windowed upstream agg
-    * emits — zero-count days never arrive, which is exactly why the
-    * processor's gap shift exists), state is one ≤20-long tail per
-    * event type (O(types × horizon) — TTL-boundable like every twin
-    * here), and each arriving day emits the same exact fixed-point
-    * smoothed value as the batch spine query at that (type, day) —
-    * asserted row-for-row in StatefulOpsSpec. RocksDB state store
-    * required. */
+    * emits — zero-count days never arrive, which is exactly why
+    * [[advanceEwma]]'s gap shift exists), state is one ≤20-long tail
+    * per event type (`ewmaTail`, O(types × horizon)), and each
+    * arriving day emits the same exact fixed-point smoothed value as
+    * the batch spine query at that (type, day) — asserted row-for-row
+    * in StatefulOpsSpec. */
   def streamingEwma(counts: Dataset[DailyCount],
       ttl: TTLConfig = TTLConfig.NONE): Dataset[EwmaPoint] = {
     import counts.sparkSession.implicits._
-    counts.groupByKey(_.event_type)
-      .transformWithState(new EwmaProcessor(ttl), timeModeFor(ttl),
-        OutputMode.Append())
+    foldByKey(counts, (_: DailyCount).event_type, "ewmaTail",
+        Encoders.product[EwmaState], TtlEviction(ttl)) { (eventType, st0, rows) =>
+      val (st1, out) = advanceEwma(st0, rows.map(r => (r.day, r.cnt)))
+      (st1, out.iterator.map { case (d, c, s) => EwmaPoint(eventType, d, c, s) })
+    }
   }
 
   /** Per-user daily purchase spend, integer cents — what a windowed
@@ -966,39 +812,26 @@ object StatefulOps {
     (st, out.toSeq)
   }
 
-  final class SeqMonitorProcessor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[Long, PurchaseDay, MomentDelta] {
-    @transient private var st: ValueState[SeqMonState] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[SeqMonState]("seqMonCum",
-        Encoders.product[SeqMonState], ttl)
-    override def handleInputRows(userId: Long, rows: Iterator[PurchaseDay],
-        tv: TimerValues): Iterator[MomentDelta] = {
-      val st0 = if (st.exists()) Some(st.get()) else None
-      val (st1, out) = advanceSeqMoments(st0, md5Arm(userId),
-        rows.map(r => (r.day, r.cents)).toSeq)
-      st1.foreach(st.update)
-      out.iterator
-    }
-  }
-
   /** STREAMING twin of the batch mSPRT monitor
     * (`EventOps.qAbSequential`) — sequential testing is the statistic
     * DESIGNED for streams, so the always-valid monitor should never
     * need a batch rescan: state is ONE (lastDay, cum) pair per user
-    * (O(users), TTL-boundable), each arriving user-day emits its
-    * moment DELTA, and the day-level readout is a days-sized rollup
-    * of deltas ([[sequentialReadout]]) that telescopes to the batch
-    * monitor's carry-forward moments EXACTLY (asserted row-for-row in
+    * (`seqMonCum`, O(users)), each arriving user-day emits its moment
+    * DELTA, and the day-level readout is a days-sized rollup of deltas
+    * ([[sequentialReadout]]) that telescopes to the batch monitor's
+    * carry-forward moments EXACTLY (asserted row-for-row in
     * StatefulOpsSpec). The heavy half (per-user accumulation) scales
     * with arrival volume; the scalar half reads a days × arms
-    * relation. RocksDB state store required. */
+    * relation. */
   def streamingSeqMonitor(purchases: Dataset[PurchaseDay],
       ttl: TTLConfig = TTLConfig.NONE): Dataset[MomentDelta] = {
     import purchases.sparkSession.implicits._
-    purchases.groupByKey(_.user_id)
-      .transformWithState(new SeqMonitorProcessor(ttl), timeModeFor(ttl),
-        OutputMode.Append())
+    foldByKey(purchases, (_: PurchaseDay).user_id, "seqMonCum",
+        Encoders.product[SeqMonState], TtlEviction(ttl)) { (userId, st0, rows) =>
+      val (st1, out) = advanceSeqMoments(st0, md5Arm(userId),
+        rows.map(r => (r.day, r.cents)))
+      (st1, out.iterator)
+    }
   }
 
   /** Day-level readout over the accumulated delta table: per-day
@@ -1035,7 +868,7 @@ object StatefulOps {
   /** The quota-admission transition: admit while the running count is
     * under quota. Split law (any batch cut + threaded count = one-pass
     * admissions) is ScalaCheck'd in QuotaLaws — with the (time, id)
-    * sort in the processor it is the replay-determinism argument. */
+    * sort in the twin's step it is the replay-determinism argument. */
   private[graft] def advanceQuota(n0: Long, quota: Long,
       rows: Seq[QuotaDoc]): (Long, Seq[QuotaDoc]) = {
     var n = n0
@@ -1050,39 +883,21 @@ object StatefulOps {
     * Batch mixture picks by hash order for append-stability; a stream
     * cannot know the final hash order, so the streaming-native
     * semantics is FIRST-N BY ARRIVAL — the standard budget cap on a
-    * live crawl. State is one long per source (O(domains)); admission
-    * is deterministic given the input order, so a checkpoint replay of
-    * the same batches re-admits the same documents. */
-  final class QuotaProcessor(quotas: Map[String, Long], defaultQuota: Long,
-      ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, QuotaDoc, QuotaDoc] {
-    @transient private var admitted: ValueState[Long] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      admitted = getHandle.getValueState[Long]("admitted",
-        Encoders.scalaLong, ttl)
-    override def handleInputRows(source: String, rows: Iterator[QuotaDoc],
-        tv: TimerValues): Iterator[QuotaDoc] = {
-      val quota = quotas.getOrElse(source, defaultQuota)
-      val n0 = if (admitted.exists()) admitted.get() else 0L
-      // within-batch order after the keyed shuffle is not contractual:
-      // sort by (event time, id) so admission is deterministic under
-      // replay, like the other processors here
-      val (n, out) = advanceQuota(n0, quota,
-        rows.toSeq.sortBy(d => (micros(d.ts), d.doc_id)))
-      admitted.update(n)
-      out.iterator
-    }
-  }
-
-  /** Quota-capped document stream — see [[QuotaProcessor]]. RocksDB
-    * state store required. */
+    * live crawl. State is one long per source (`admitted`,
+    * O(domains)); admission follows (event time, doc_id) order within
+    * a batch, so a checkpoint replay of the same batches re-admits the
+    * same documents. */
   def quotaSampled(docs: Dataset[QuotaDoc], quotas: Map[String, Long],
       defaultQuota: Long = Long.MaxValue,
       ttl: TTLConfig = TTLConfig.NONE): Dataset[QuotaDoc] = {
     import docs.sparkSession.implicits._
-    docs.groupByKey(_.source)
-      .transformWithState(new QuotaProcessor(quotas, defaultQuota, ttl),
-        timeModeFor(ttl), OutputMode.Append())
+    foldByKey(docs, (_: QuotaDoc).source, "admitted", Encoders.scalaLong,
+        TtlEviction(ttl)) { (source, n0, rows) =>
+      val (n, out) = advanceQuota(n0.getOrElse(0L),
+        quotas.getOrElse(source, defaultQuota),
+        rows.sortBy(d => (micros(d.ts), d.doc_id)))
+      (Some(n), out.iterator)
+    }
   }
 
   case class DomainDoc(doc_id: Long, host: String, q_level: Long, h: Long,
@@ -1130,43 +945,25 @@ object StatefulOps {
     (st, out.toSeq)
   }
 
-  final class DomainFilterProcessor(globalMilli: Long, cap: Long,
-      ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, DomainDoc, DomainVerdict] {
-    @transient private var st: ValueState[DomainState] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[DomainState]("domain",
-        Encoders.product[DomainState], ttl)
-    override def handleInputRows(host: String, rows: Iterator[DomainDoc],
-        tv: TimerValues): Iterator[DomainVerdict] = {
-      // ascending doc_id within the batch — replay-deterministic like
-      // every processor here
-      val sorted = rows.toSeq.sortBy(_.doc_id)
-        .map(d => (d.doc_id, d.q_level, d.h))
-      val s0 = if (st.exists()) Some(st.get()) else None
-      val (s1, out) = advanceDomainStats(s0, globalMilli, cap, sorted)
-      st.update(s1)
-      out.iterator.map { case (id, n, q, v) => DomainVerdict(id, host, n, q, v) }
-    }
-  }
-
   /** Ingest-side DOMAIN FILTER twin of the batch
     * `SamplingOps.qDomainFilter`: per-host state is exactly two longs
-    * (count, quality sum — O(hosts) total), each arriving document
-    * emits its host's running stats and the provisional keep/drop
-    * verdict against the frozen corpus references. The semantics
-    * difference from batch is the one every prefix twin here carries:
-    * batch judges with final host stats, the stream judges with
-    * stats-so-far — they agree at each host's last arrival, and the
-    * stream needs no second pass. RocksDB state store required. */
+    * (`domain`: count, quality sum — O(hosts) total), each arriving
+    * document (ascending doc_id within a batch) emits its host's
+    * running stats and the provisional keep/drop verdict against the
+    * frozen corpus references. The semantics difference from batch is
+    * the one every prefix twin here carries: batch judges with final
+    * host stats, the stream judges with stats-so-far — they agree at
+    * each host's last arrival, and the stream needs no second pass. */
   def streamingDomainFilter(docs: Dataset[DomainDoc], globalMilli: Long,
       cap: Long, watermark: String = "1 hour",
       ttl: TTLConfig = TTLConfig.NONE): Dataset[DomainVerdict] = {
     import docs.sparkSession.implicits._
-    docs.withWatermark("ts", watermark)
-      .groupByKey(_.host)
-      .transformWithState(new DomainFilterProcessor(globalMilli, cap, ttl),
-        timeModeFor(ttl), OutputMode.Append())
+    foldByKey(docs.withWatermark("ts", watermark), (_: DomainDoc).host,
+        "domain", Encoders.product[DomainState], TtlEviction(ttl)) { (host, s0, rows) =>
+      val (s1, out) = advanceDomainStats(s0, globalMilli, cap,
+        rows.sortBy(_.doc_id).map(d => (d.doc_id, d.q_level, d.h)))
+      (Some(s1), out.iterator.map { case (id, n, q, v) => DomainVerdict(id, host, n, q, v) })
+    }
   }
 
   case class DocShingle(doc_id: Long, shingle: String)
@@ -1178,30 +975,11 @@ object StatefulOps {
     * was never seen; the stored first-seen doc never changes once set.
     * Split law (any batch cut of the ascending stream + threaded state
     * = one-pass flags) is ScalaCheck'd in NoveltyLaws — the
-    * replay-determinism argument for the processor below. */
+    * replay-determinism argument for the twin below. */
   private[graft] def advanceNovelty(first0: Option[Long],
       docs: Seq[Long]): (Long, Seq[(Long, Boolean)]) = {
     val first = first0.getOrElse(docs.head)
     (first, docs.map(d => d -> (first0.isEmpty && d == docs.head)))
-  }
-
-  final class NoveltyProcessor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, DocShingle, NovelFlag] {
-    @transient private var firstDoc: ValueState[Long] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      firstDoc = getHandle.getValueState[Long]("firstDoc",
-        Encoders.scalaLong, ttl)
-    override def handleInputRows(shingle: String, rows: Iterator[DocShingle],
-        tv: TimerValues): Iterator[NovelFlag] = {
-      // within-batch order after the keyed shuffle is not contractual:
-      // ascending doc_id makes the flag assignment deterministic under
-      // replay, like the other processors here
-      val docs = rows.map(_.doc_id).toSeq.sorted
-      val st = if (firstDoc.exists()) Some(firstDoc.get()) else None
-      val (first, flags) = advanceNovelty(st, docs)
-      firstDoc.update(first)
-      flags.iterator.map { case (d, nv) => NovelFlag(d, shingle, nv) }
-    }
   }
 
   /** Ingest-side NOVELTY twin of the batch `TextOps.qNovelty`: each
@@ -1218,21 +996,21 @@ object StatefulOps {
     * a batch broken by ascending doc_id) — identical whenever ingestion
     * follows doc_id order, which is exactly the batch query's
     * definition of ingestion order (asserted in StatefulOpsSpec).
-    * State is one long per distinct shingle — the TTL knob bounds it
-    * to the novelty horizon in production (an evicted shingle
-    * re-entering counts as new, the documented bounded-memory
-    * semantics shared by every twin here). RocksDB state store
-    * required. */
+    * State is one long per distinct shingle (`firstDoc`) — the TTL
+    * knob bounds it to the novelty horizon in production (an evicted
+    * shingle re-entering counts as new). */
   def streamingNovelty(docs: DataFrame, watermark: String = "10 minutes",
       ttl: TTLConfig = TTLConfig.NONE): Dataset[NovelFlag] = {
     import docs.sparkSession.implicits._
-    graft.operators.DedupOps.shingled(
+    val shingles = graft.operators.DedupOps.shingled(
         docs.withWatermark("ts", watermark)
           .select(col("doc_id"), col("ts"), col("text")))
       .select(col("doc_id"), col("shingle")).as[DocShingle]
-      .groupByKey(_.shingle)
-      .transformWithState(new NoveltyProcessor(ttl), timeModeFor(ttl),
-        OutputMode.Append())
+    foldByKey(shingles, (_: DocShingle).shingle, "firstDoc", Encoders.scalaLong,
+        TtlEviction(ttl)) { (shingle, first0, rows) =>
+      val (first, flags) = advanceNovelty(first0, rows.map(_.doc_id).sorted)
+      (Some(first), flags.iterator.map { case (d, nv) => NovelFlag(d, shingle, nv) })
+    }
   }
 
   case class CrawlDoc(doc_id: Long, source: String, fp: String,
@@ -1260,26 +1038,6 @@ object StatefulOps {
     (prev, out)
   }
 
-  final class CrawlDeltaProcessor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[Long, CrawlDoc, CrawlStatus] {
-    @transient private var lastFp: ValueState[String] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      lastFp = getHandle.getValueState[String]("lastFp",
-        Encoders.STRING, ttl)
-    override def handleInputRows(docId: Long, rows: Iterator[CrawlDoc],
-        tv: TimerValues): Iterator[CrawlStatus] = {
-      // ascending (ts, fp) — replay-deterministic like every
-      // processor here (one observation per crawl per doc in
-      // practice; the tie-break matters only for same-instant dupes)
-      val sorted = rows.toSeq.sortBy(d => (d.ts.getTime, d.fp))
-      val st = if (lastFp.exists()) Some(lastFp.get()) else None
-      val (fp1, statuses) = advanceCrawl(st, sorted.map(_.fp))
-      fp1.foreach(lastFp.update)
-      sorted.zip(statuses).iterator
-        .map { case (d, s) => CrawlStatus(d.doc_id, d.source, s) }
-    }
-  }
-
   /** Ingest-side CRAWL-DELTA twin of the batch
     * `DedupOps.qCrawlDelta`: the recrawl stream carries (doc_id,
     * source, fingerprint) observations; per-doc state is the last-
@@ -1290,18 +1048,23 @@ object StatefulOps {
     * class an arrival stream cannot emit (absence is not an event):
     * that sweep stays the batch query's full-outer join, exactly the
     * division of labor real recrawl pipelines use. State is one
-    * fingerprint string per crawled doc — O(corpus), the honest cost
-    * of incremental change detection (same argument as the novelty
-    * twin's O(shingles)); the TTL knob bounds it to the recrawl
-    * horizon. RocksDB state store required. */
+    * fingerprint string per crawled doc (`lastFp`) — O(corpus), the
+    * honest cost of incremental change detection (same argument as
+    * the novelty twin's O(shingles)); the TTL knob bounds it to the
+    * recrawl horizon. Observations fold in (ts, fp) order: one per
+    * crawl per doc in practice, so the tie-break matters only for
+    * same-instant dupes. */
   def streamingCrawlDelta(docs: Dataset[CrawlDoc],
       watermark: String = "1 hour",
       ttl: TTLConfig = TTLConfig.NONE): Dataset[CrawlStatus] = {
     import docs.sparkSession.implicits._
-    docs.withWatermark("ts", watermark)
-      .groupByKey(_.doc_id)
-      .transformWithState(new CrawlDeltaProcessor(ttl), timeModeFor(ttl),
-        OutputMode.Append())
+    foldByKey(docs.withWatermark("ts", watermark), (_: CrawlDoc).doc_id,
+        "lastFp", Encoders.STRING, TtlEviction(ttl)) { (_, fp0, rows) =>
+      val sorted = rows.sortBy(d => (d.ts.getTime, d.fp))
+      val (fp1, statuses) = advanceCrawl(fp0, sorted.map(_.fp))
+      (fp1, sorted.zip(statuses).iterator
+        .map { case (d, s) => CrawlStatus(d.doc_id, d.source, s) })
+    }
   }
 
   /** Ingest-side DECONTAMINATION twin of the batch
@@ -1536,28 +1299,6 @@ object StatefulOps {
     KAnonState(n, bs)
   }
 
-  final class KAnonProcessor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[(String, String), KAnonDoc, KAnonClass] {
-    @transient private var st: ValueState[KAnonState] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[KAnonState]("kAnonClass",
-        Encoders.product[KAnonState], ttl)
-    override def handleInputRows(key: (String, String),
-        rows: Iterator[KAnonDoc], tv: TimerValues): Iterator[KAnonClass] = {
-      val st0 = if (st.exists()) Some(st.get()) else None
-      // Long `/` TRUNCATES toward zero — the shared bucket convention
-      // (Spark DIV and DuckDB integer `//` both truncate; floorDiv
-      // would drift on a corrupt negative length)
-      val st1 = advanceKAnon(st0, rows.map(
-        _.n_chars / graft.operators.TextOps.KAnonBucketWidth).toSeq)
-      st.update(st1)
-      Iterator.single(KAnonClass(key._1, key._2, st1.class_n,
-        st1.class_n < graft.operators.TextOps.KAnonK,
-        st1.buckets.length.toLong,
-        st1.buckets.length < graft.operators.TextOps.KAnonL))
-    }
-  }
-
   /** STREAMING PRIVACY MONITOR — the live twin of the batch
     * k-anonymity / l-diversity report
     * ([[graft.operators.TextOps.qKAnonymity]]): each arriving document
@@ -1570,20 +1311,28 @@ object StatefulOps {
     * Thresholds and the bucket width are the batch query's own
     * constants, so the twins cannot drift.
     *
-    * State is one (count, distinct-bucket seq) per equivalence class:
-    * O(classes × length-buckets) — (langs × sources × ~max-doc-len /
-    * bucket-width), METADATA scale at 100 TB, never row scale (the
-    * doc_ids themselves are not retained; see [[advanceKAnon]] for the
-    * duplicate-delivery contract that buys that bound). Fed the same
-    * corpus in any batch split and arrival order, the latest row per
-    * class equals the batch report row-for-row — asserted at two cuts
-    * in StatefulOpsSpec. RocksDB state store required. */
+    * State is one (count, distinct-bucket seq) per equivalence class
+    * (`kAnonClass`): O(classes × length-buckets) — (langs × sources ×
+    * ~max-doc-len / bucket-width), METADATA scale at 100 TB, never row
+    * scale (the doc_ids themselves are not retained; see
+    * [[advanceKAnon]] for the duplicate-delivery contract that buys
+    * that bound). Fed the same corpus in any batch split and arrival
+    * order, the latest row per class equals the batch report
+    * row-for-row — asserted at two cuts in StatefulOpsSpec. */
   def streamingKAnonMonitor(docs: Dataset[KAnonDoc],
       ttl: TTLConfig = TTLConfig.NONE): Dataset[KAnonClass] = {
     import docs.sparkSession.implicits._
-    docs.groupByKey(d => (d.lang, d.source))
-      .transformWithState(new KAnonProcessor(ttl), timeModeFor(ttl),
-        OutputMode.Append())
+    import graft.operators.TextOps.{KAnonBucketWidth, KAnonK, KAnonL}
+    foldByKey(docs, (d: KAnonDoc) => (d.lang, d.source), "kAnonClass",
+        Encoders.product[KAnonState], TtlEviction(ttl)) { (key, st0, rows) =>
+      // Long `/` TRUNCATES toward zero — the shared bucket convention
+      // (Spark DIV and DuckDB integer `//` both truncate; floorDiv
+      // would drift on a corrupt negative length)
+      val st1 = advanceKAnon(st0, rows.map(_.n_chars / KAnonBucketWidth))
+      (Some(st1), Iterator.single(KAnonClass(key._1, key._2, st1.class_n,
+        st1.class_n < KAnonK, st1.buckets.length.toLong,
+        st1.buckets.length < KAnonL)))
+    }
   }
 
   // ================= streaming BM25 serving =================
@@ -1718,44 +1467,30 @@ object StatefulOps {
       arrivals: Seq[ResDoc], k: Int): Seq[ResDoc] =
     (st ++ arrivals).distinct.sortBy(d => (d.e1000_r, d.doc_id)).take(k)
 
-  final class ReservoirProcessor(k: Int, ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[Long, ResDoc, ResEmit] {
-    @transient private var st: ValueState[ResState] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[ResState]("reservoir",
-        Encoders.product[ResState], ttl)
-    override def handleInputRows(shard: Long, rows: Iterator[ResDoc],
-        tv: TimerValues): Iterator[ResEmit] = {
-      val st0 = if (st.exists()) st.get() else ResState(0L, Nil)
-      val merged = mergeReservoir(st0.docs, rows.toSeq, k)
-      val st1 = ResState(st0.ver + 1, merged)
-      st.update(st1)
-      merged.iterator.map(d =>
-        ResEmit(shard, st1.ver, d.doc_id, d.w, d.e1000_r))
-    }
-  }
-
   /** STREAMING weighted reservoir — the A-ExpJ serving shape of the
     * batch `sample_weighted_reservoir`: because the race keys are
     * deterministic and a top-k set is a pure min-merge, the stream
     * needs no jump trickery — each shard keeps its k smallest keys
-    * (O(shards × k) state, constant), re-emitting its reservoir per
-    * batch, and [[reservoirReadout]] merges the latest shard
-    * reservoirs into the global top-k. At ANY cut the readout equals
-    * the batch draw over the docs seen so far, exactly (asserted
-    * two-cut in StatefulOpsSpec) — the property that lets a crawler
-    * maintain the training sample online instead of re-drawing per
-    * epoch. Sharding is by doc_id mod [[ReservoirShards]]: any
-    * partition works for a min-merge; mod keeps replay deterministic.
-    * RocksDB state store required. */
+    * (`reservoir`, O(shards × k) state, constant), re-emitting its
+    * reservoir per batch, and [[reservoirReadout]] merges the latest
+    * shard reservoirs into the global top-k. At ANY cut the readout
+    * equals the batch draw over the docs seen so far, exactly
+    * (asserted two-cut in StatefulOpsSpec) — the property that lets a
+    * crawler maintain the training sample online instead of re-drawing
+    * per epoch. Sharding is by doc_id mod [[ReservoirShards]]: any
+    * partition works for a min-merge; mod keeps replay deterministic. */
   val ReservoirShards = 8
   def streamingWeightedReservoir(docs: Dataset[ResDoc],
       k: Int = graft.operators.SamplingOps.ReservoirK,
       ttl: TTLConfig = TTLConfig.NONE): Dataset[ResEmit] = {
     import docs.sparkSession.implicits._
-    docs.groupByKey(_.doc_id % ReservoirShards)
-      .transformWithState(new ReservoirProcessor(k, ttl),
-        timeModeFor(ttl), OutputMode.Append())
+    foldByKey(docs, (_: ResDoc).doc_id % ReservoirShards, "reservoir",
+        Encoders.product[ResState], TtlEviction(ttl)) { (shard, st0, rows) =>
+      val prev = st0.getOrElse(ResState(0L, Nil))
+      val st1 = ResState(prev.ver + 1, mergeReservoir(prev.docs, rows, k))
+      (Some(st1), st1.docs.iterator.map(d =>
+        ResEmit(shard, st1.ver, d.doc_id, d.w, d.e1000_r)))
+    }
   }
 
   /** Merge the latest per-shard reservoirs into the global ranked
@@ -1806,23 +1541,6 @@ object StatefulOps {
       k: Int): Seq[AdcCand] =
     (st ++ arrivals).distinct.sortBy(c => (c.adc_dist, c.n_id)).take(k)
 
-  final class AdcProcessor(k: Int, ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[Long, AdcCand, AdcEmit] {
-    @transient private var st: ValueState[AdcState] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[AdcState]("adc_topk",
-        Encoders.product[AdcState], ttl)
-    override def handleInputRows(qId: Long, rows: Iterator[AdcCand],
-        tv: TimerValues): Iterator[AdcEmit] = {
-      val st0 = if (st.exists()) st.get() else AdcState(0L, Nil)
-      val merged = mergeAdc(st0.cands, rows.toSeq, k)
-      val st1 = AdcState(st0.ver + 1, merged)
-      st.update(st1)
-      merged.iterator.zipWithIndex.map { case (c, i) =>
-        AdcEmit(qId, st1.ver, i + 1, c.n_id, c.adc_dist) }
-    }
-  }
-
   /** STREAMING IVFPQ/ADC serving — the live twin of the stored-index
     * search (`sim_ivfpq_stored`), closing the one serving asymmetry
     * the ANN stack had left (the sign-LSH index already serves via
@@ -1838,8 +1556,8 @@ object StatefulOps {
     * the corpus floats never load. Exact integer distances ⇒ no
     * float-rank hazard anywhere.
     *
-    * The per-arrival top-k is a [[mergeAdc]] min-merge in
-    * transformWithState — O(arrivals × k) state, idempotent under
+    * The per-arrival top-k is a [[mergeAdc]] min-merge in a keyed fold
+    * (`adc_topk`) — O(arrivals × k) state, idempotent under
     * re-delivery by construction (a collect_list aggregate would
     * double-count replays; a min-merge absorbs them) — re-emitting
     * the query's current ranked top-k per batch; [[adcReadout]]
@@ -1850,7 +1568,7 @@ object StatefulOps {
     * Scale: the index side is the 32×-compressed static code table,
     * hash-partitioned by cell; per-batch cost tracks arrival rate ×
     * cell occupancy ÷ K; model state (K centroids + M×K codebook)
-    * rides in the plan as literals. RocksDB state store required. */
+    * rides in the plan as literals. */
   def streamingIvfPqServe(arrivals: DataFrame, codes: DataFrame,
       cents: Seq[(Long, Seq[Double], Double)], cb: Seq[Seq[Seq[Long]]],
       k: Int = 3, ttl: TTLConfig = TTLConfig.NONE): Dataset[AdcEmit] = {
@@ -1868,14 +1586,18 @@ object StatefulOps {
       .withColumn("qv", SimilarityOps.pqQuant(col("v")))
       .withColumn("lut", SimilarityOps.pqDists(typedlit(cb)))
       .select(col("vec_id"), col("cid"), col("lut"))
-    q.join(codes, Seq("cid"))
+    val cands = q.join(codes, Seq("cid"))
       .filter(col("n_id") =!= col("vec_id"))
       .select(col("vec_id").as("q_id"), col("n_id"),
         SimilarityOps.adcDist(col("lut"), col("codes")).as("adc_dist"))
       .as[AdcCand]
-      .groupByKey(_.q_id)
-      .transformWithState(new AdcProcessor(k, ttl), timeModeFor(ttl),
-        OutputMode.Append())
+    foldByKey(cands, (_: AdcCand).q_id, "adc_topk", Encoders.product[AdcState],
+        TtlEviction(ttl)) { (qId, st0, rows) =>
+      val prev = st0.getOrElse(AdcState(0L, Nil))
+      val st1 = AdcState(prev.ver + 1, mergeAdc(prev.cands, rows, k))
+      (Some(st1), st1.cands.iterator.zipWithIndex.map { case (c, i) =>
+        AdcEmit(qId, st1.ver, i + 1, c.n_id, c.adc_dist) })
+    }
   }
 
   /** Latest per-query top-k from the append sink — identical columns
@@ -1966,30 +1688,6 @@ object StatefulOps {
       docId % 10 != 0)
   }
 
-  /** First-delivery-wins per document: the scored row IS the state, so
-    * a re-delivered document re-emits its stored row bit-for-bit
-    * instead of re-counting — TRUE idempotence, stronger than the
-    * perplexity filter's ratio-invariance (whose counts double on
-    * re-delivery). DELIVERY CONTRACT (the [[advanceKAnon]] discipline):
-    * a document arrives ATOMICALLY (one row → its bigram rows explode
-    * within the same micro-batch); a source that splits one document's
-    * text across batches would score the first fragment only. */
-  final class KnServeProcessor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[Long, KnBigram, KnScore] {
-    @transient private var st: ValueState[KnScore] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[KnScore]("knScore",
-        Encoders.product[KnScore], ttl)
-    override def handleInputRows(docId: Long, rows: Iterator[KnBigram],
-        tv: TimerValues): Iterator[KnScore] =
-      if (st.exists()) Iterator.single(st.get())
-      else {
-        val sc = knRollup(docId, rows.toSeq)
-        st.update(sc)
-        Iterator.single(sc)
-      }
-  }
-
   /** STREAMING KNESER-NEY serving — the last stored LM gains its
     * serving twin (BM25 and Dirichlet QL already have theirs): score
     * arriving documents against the frozen `kn_ctx_ref` /
@@ -2002,31 +1700,43 @@ object StatefulOps {
     * column pipeline) LEFT-joins the three vocabulary-keyed static
     * relations (hash-partitioned on w1/w2 — broadcast-able in
     * production), each row takes its logp from the batch's own
-    * `TextOps.knLogp`, and one [[KnServeProcessor]] keyed by doc_id
-    * folds the doc's rows. Zero model-side
-    * aggregation, zero driver actions — the stored twin's serving
-    * guarantee, kept under streaming.
+    * `TextOps.knLogp`, and one keyed fold by doc_id rolls the doc's
+    * rows up with [[knRollup]]. Zero model-side aggregation, zero
+    * driver actions — the stored twin's serving guarantee, kept under
+    * streaming.
+    *
+    * First-delivery-wins per document: the scored row IS the state
+    * (`knScore`), so a re-delivered document re-emits its stored row
+    * bit-for-bit instead of re-counting — TRUE idempotence, stronger
+    * than the perplexity filter's ratio-invariance (whose counts double
+    * on re-delivery). DELIVERY CONTRACT (the [[advanceKAnon]]
+    * discipline): a document arrives ATOMICALLY (one row → its bigram
+    * rows explode within the same micro-batch); a source that splits
+    * one document's text across batches would score the first
+    * fragment only.
     *
     * At any cut the emitted rows equal `text_lm_kn_stored`'s rows for
     * exactly the delivered documents (two-cut replay + re-delivery
     * idempotence asserted in StatefulOpsSpec). State: one scored row
     * per arriving doc — O(arrivals), TTL-boundable; per-batch cost
     * tracks arrival volume × doc length, nothing grows with corpus
-    * size. RocksDB state store required. */
+    * size. */
   def streamingKneserNey(docs: DataFrame, c2: DataFrame, ctx: DataFrame,
       cont: DataFrame, t: Long,
       ttl: TTLConfig = TTLConfig.NONE): Dataset[KnScore] = {
     import docs.sparkSession.implicits._
-    graft.operators.TextOps.bigramsOf(docs)
+    val bigrams = graft.operators.TextOps.bigramsOf(docs)
       .join(c2, Seq("w1", "w2"), "left")
       .join(ctx, Seq("w1"), "left")
       .join(cont, Seq("w2"), "left")
       .select(col("doc_id"), col("w1"), col("w2"),
         col("c2"), col("c1"), graft.operators.TextOps.knLogp(t).as("logp"))
       .as[KnBigram]
-      .groupByKey(_.doc_id)
-      .transformWithState(new KnServeProcessor(ttl), timeModeFor(ttl),
-        OutputMode.Append())
+    foldByKey(bigrams, (_: KnBigram).doc_id, "knScore", Encoders.product[KnScore],
+        TtlEviction(ttl)) { (docId, stored, rows) =>
+      val sc = stored.getOrElse(knRollup(docId, rows))
+      (Some(sc), Iterator.single(sc))
+    }
   }
 
   // ================= composed streaming ingest pipeline =================
@@ -2110,34 +1820,22 @@ object StatefulOps {
     (Some((last, cum)), out.toSeq)
   }
 
-  final class WalGapProcessor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, WalPos, WalGap] {
-    @transient private var st: ValueState[(Long, Long)] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[(Long, Long)]("walGap",
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), ttl)
-    override def handleInputRows(stream: String, rows: Iterator[WalPos],
-        tv: TimerValues): Iterator[WalGap] = {
-      val st0 = if (st.exists()) Some(st.get()) else None
-      val (st1, out) = advanceWalGaps(st0, rows.map(_.wal).toSeq)
-      st1.foreach(st.update)
-      out.iterator.map { case (f, t, m, c) => WalGap(stream, f, t, m, c) }
-    }
-  }
-
   /** STREAMING WAL continuity audit — the live twin of the batch
     * `CdcOps.qWalGaps`: gaps surface the moment the position AFTER
     * the hole arrives, instead of at the nightly audit. State is two
-    * Longs per stream; replayed positions are no-ops, so checkpoint
-    * recovery emits identically. Fed the same change stream it equals
-    * the batch query row-for-row (StatefulOpsSpec, mid-stream cut).
-    * RocksDB state store required. */
+    * Longs per stream (`walGap`); replayed positions are no-ops, so
+    * checkpoint recovery emits identically. Fed the same change stream
+    * it equals the batch query row-for-row (StatefulOpsSpec,
+    * mid-stream cut). */
   def streamingWalGaps(positions: Dataset[WalPos],
       ttl: TTLConfig = TTLConfig.NONE): Dataset[WalGap] = {
     import positions.sparkSession.implicits._
-    positions.groupByKey(_.stream)
-      .transformWithState(new WalGapProcessor(ttl), timeModeFor(ttl),
-        OutputMode.Append())
+    foldByKey(positions, (_: WalPos).stream, "walGap",
+        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong),
+        TtlEviction(ttl)) { (stream, st0, rows) =>
+      val (st1, out) = advanceWalGaps(st0, rows.map(_.wal))
+      (st1, out.iterator.map { case (f, t, m, c) => WalGap(stream, f, t, m, c) })
+    }
   }
 
   // ================= streaming CUSUM drift detector =================
@@ -2167,42 +1865,27 @@ object StatefulOps {
     (Some(CusumState(s, last)), out.toSeq)
   }
 
-  final class CusumProcessor(targets: Map[String, Long],
-      ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, DailyCount, CusumPoint] {
-    @transient private var st: ValueState[CusumState] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[CusumState]("cusum",
-        Encoders.product[CusumState], ttl)
-    override def handleInputRows(eventType: String, rows: Iterator[DailyCount],
-        tv: TimerValues): Iterator[CusumPoint] = {
-      val target = targets.getOrElse(eventType, 0L)
-      val st0 = if (st.exists()) Some(st.get()) else None
-      val (st1, out) = advanceCusum(st0, target, target / 20,
-        rows.map(r => (r.day, r.cnt)).toSeq)
-      st1.foreach(st.update)
-      out.iterator.map { case (d, c, s) =>
-        CusumPoint(eventType, d, c, s, s > target) }
-    }
-  }
-
   /** STREAMING CUSUM twin of the batch `EventOps.qCusumDrift`: the
     * batch twin computes its target (the series median) from the full
     * history — a stream cannot, so the PRODUCTION split is exactly
     * this API: the nightly batch publishes per-type targets, the
     * stream threads the one-Long recurrence against them and raises
     * the alarm the moment a day's rollup arrives. State is (S, last
-    * day) per type; re-delivered days are no-ops, so checkpoint
-    * replay emits identically. Fed batch-median targets, the stream's
-    * (day, cusum, alarm) rows equal the batch query's — asserted in
-    * StatefulOpsSpec across a mid-stream cut. RocksDB state store
-    * required. */
+    * day) per type (`cusum`); re-delivered days are no-ops, so
+    * checkpoint replay emits identically. Fed batch-median targets,
+    * the stream's (day, cusum, alarm) rows equal the batch query's —
+    * asserted in StatefulOpsSpec across a mid-stream cut. */
   def streamingCusum(counts: Dataset[DailyCount], targets: Map[String, Long],
       ttl: TTLConfig = TTLConfig.NONE): Dataset[CusumPoint] = {
     import counts.sparkSession.implicits._
-    counts.groupByKey(_.event_type)
-      .transformWithState(new CusumProcessor(targets, ttl), timeModeFor(ttl),
-        OutputMode.Append())
+    foldByKey(counts, (_: DailyCount).event_type, "cusum",
+        Encoders.product[CusumState], TtlEviction(ttl)) { (eventType, st0, rows) =>
+      val target = targets.getOrElse(eventType, 0L)
+      val (st1, out) = advanceCusum(st0, target, target / 20,
+        rows.map(r => (r.day, r.cnt)))
+      (st1, out.iterator.map { case (d, c, s) =>
+        CusumPoint(eventType, d, c, s, s > target) })
+    }
   }
 
   // ================= streaming KMV cardinality sketch =================
@@ -2237,37 +1920,24 @@ object StatefulOps {
     if (minima.size < k) minima.size.toLong
     else (k - 1).toLong * (1L << 48) / minima.last
 
-  final class KmvProcessor(k: Int, ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, SegmentUser, KmvPoint] {
-    @transient private var st: ValueState[KmvState] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[KmvState]("kmvMinima",
-        Encoders.product[KmvState], ttl)
-    override def handleInputRows(segment: String, rows: Iterator[SegmentUser],
-        tv: TimerValues): Iterator[KmvPoint] = {
-      val cur = if (st.exists()) st.get().minima else Seq.empty[Long]
-      val m = mergeMinima(cur, rows.map(r => h48(r.user_id)).toSeq, k)
-      st.update(KmvState(m))
-      Iterator.single(KmvPoint(segment, m.size,
-        if (m.isEmpty) 0L else m.last, kmvEstimate(m, k)))
-    }
-  }
-
   /** STREAMING KMV twin of the batch `EventOps.qKmvOverlap`: maintain
     * each segment's k-minimum-values sketch incrementally as users
     * arrive — the live audience-size counter whose state is k longs
-    * per segment FOREVER, versus the batch twin's full distinct set.
-    * Each micro-batch emits the segment's current (n_minima, v_k,
-    * estimate); because KMV merge is a set union of minima, any two
-    * final segment sketches combine DOWNSTREAM into the same union
-    * sketch / overlap estimate the batch query computes — asserted
-    * against `qKmvOverlap`'s row in StatefulOpsSpec. RocksDB state
-    * store required. */
+    * per segment FOREVER (`kmvMinima`), versus the batch twin's full
+    * distinct set. Each micro-batch emits the segment's current
+    * (n_minima, v_k, estimate); because KMV merge is a set union of
+    * minima, any two final segment sketches combine DOWNSTREAM into
+    * the same union sketch / overlap estimate the batch query computes
+    * — asserted against `qKmvOverlap`'s row in StatefulOpsSpec. */
   def streamingKmv(users: Dataset[SegmentUser], k: Int = 64,
       ttl: TTLConfig = TTLConfig.NONE): Dataset[KmvPoint] = {
     import users.sparkSession.implicits._
-    users.groupByKey(_.segment)
-      .transformWithState(new KmvProcessor(k, ttl), timeModeFor(ttl),
-        OutputMode.Append())
+    foldByKey(users, (_: SegmentUser).segment, "kmvMinima",
+        Encoders.product[KmvState], TtlEviction(ttl)) { (segment, st0, rows) =>
+      val m = mergeMinima(st0.fold(Seq.empty[Long])(_.minima),
+        rows.map(r => h48(r.user_id)), k)
+      (Some(KmvState(m)), Iterator.single(KmvPoint(segment, m.size,
+        if (m.isEmpty) 0L else m.last, kmvEstimate(m, k))))
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,7 +15,9 @@ import scala.jdk.CollectionConverters._
   * as a parameter typed `QueryScope`, so a Dataset can never pass as a
   * scope call by its name. Exempt: the scope itself, the bridge that
   * builds its materialized relations, and the CDC pipeline's per-trigger
-  * fan-out persist, which is released in a `finally` every trigger. */
+  * fan-out persist, which is released in a `finally` every trigger.
+  * Keyed streaming state likewise has one mechanism: the one
+  * `StatefulProcessor` subclass, `StatefulOps.KeyedFold`. */
 class LifecycleSourceSpec extends AnyFunSuite {
 
   private val exempt = Set("QueryScope.scala", "GraftBridge.scala", "CdcPipeline.scala")
@@ -29,21 +31,17 @@ class LifecycleSourceSpec extends AnyFunSuite {
   private val allowedBinding =
     """(QueryScope(\.eager)?\([^()]*\)\s*\{\s*scope\s*=>|\bscope: QueryScope\b)""".r
 
-  private def mainSources: List[Path] = {
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"run from the project root; ${root.toAbsolutePath} is missing")
-    val walk = Files.walk(root)
-    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-    finally walk.close()
-  }
-
   /** The code of each line (comment lines and trailing `//` comments
-    * dropped), numbered from 1, for every non-exempt main source. */
-  private def codeLines: List[(Path, Int, String)] = for {
-    f <- mainSources if !exempt(f.getFileName.toString)
+    * dropped), numbered from 1, for each of `files`. */
+  private def codeLinesOf(files: List[Path]): List[(Path, Int, String)] = for {
+    f <- files
     (line, i) <- Files.readAllLines(f).asScala.toList.zipWithIndex
     t = line.trim if !(t.startsWith("//") || t.startsWith("*") || t.startsWith("/*"))
   } yield (f, i + 1, line.replaceAll("""\s//\s.*$""", ""))
+
+  /** [[codeLinesOf]] every non-exempt main source. */
+  private def codeLines: List[(Path, Int, String)] =
+    codeLinesOf(MainSources.files.filterNot(f => exempt(f.getFileName.toString)))
 
   test("no main source keeps an intermediate outside QueryScope") {
     val lines = codeLines
@@ -58,7 +56,7 @@ class LifecycleSourceSpec extends AnyFunSuite {
   test("change events enter the program only through CdcPipeline.fileSource") {
     // every `readStream` in main code, by file and enclosing definition
     val hits = for {
-      f <- mainSources
+      f <- MainSources.files
       lines = Files.readAllLines(f).asScala.toList
       (line, i) <- lines.zipWithIndex
       t = line.trim if !(t.startsWith("//") || t.startsWith("*") || t.startsWith("/*"))
@@ -69,6 +67,17 @@ class LifecycleSourceSpec extends AnyFunSuite {
     val stray = hits.filterNot { case (file, enclosing, _) =>
       file == "CdcPipeline.scala" && enclosing.startsWith("def fileSource(") }
     assert(stray.isEmpty, stray.map(_._3).mkString("\n", "\n", ""))
+  }
+
+  test("keyed streaming state has one mechanism: one StatefulProcessor, no MapState") {
+    val lines = codeLinesOf(MainSources.files)
+    assert(lines.nonEmpty)
+    val processors = lines.collect { case (f, n, code)
+      if """\bextends\s+StatefulProcessor\w*\b""".r.findFirstIn(code).nonEmpty => s"$f:$n" }
+    assert(processors.size == 1,
+      s"expected the one keyed fold, found ${processors.size}:" + processors.mkString("\n", "\n", ""))
+    val mapStates = lines.collect { case (f, n, code) if code.contains("getMapState") => s"$f:$n" }
+    assert(mapStates.isEmpty, mapStates.mkString("\n", "\n", ""))
   }
 
   test("main sources bind the name `scope` only to a QueryScope") {

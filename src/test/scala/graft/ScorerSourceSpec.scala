@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,16 +18,8 @@ class ScorerSourceSpec extends AnyFunSuite {
     Seq("Bm25K1", "Bm25K1p1", "Bm25B", "Bm25OneMinusB", "QlMu", "KnD")
   private val constant = constants.mkString("""\b(""", "|", """)\b""").r
 
-  private def mainSources: List[Path] = {
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"run from the project root; ${root.toAbsolutePath} is missing")
-    val walk = Files.walk(root)
-    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-    finally walk.close()
-  }
-
   test("scorer constants appear in no main source but TextOps") {
-    val sources = mainSources
+    val sources = MainSources.files
     assert(sources.exists(_.getFileName.toString == owner))
     val hits = for {
       f <- sources if f.getFileName.toString != owner

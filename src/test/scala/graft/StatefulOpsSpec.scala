@@ -217,6 +217,36 @@ class StatefulOpsSpec extends SparkSpec {
     }
   }
 
+  test("WAL monitor folds a batch in (timestamp, walPosition) order, not arrival order") {
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try {
+      val in = MemoryStream[ChangeEvent]
+      val q = StatefulOps.walAnomalies(in.toDS())
+        .writeStream.format("memory").queryName("wal_anomalies_order")
+        .outputMode("append").start()
+      try {
+        // wal 25 was committed a second AFTER wal 30: in event-time
+        // order it regresses, whatever order the shuffle delivers
+        in.addData(ev(25, offsetSec = 1), ev(30, offsetSec = 0))
+        q.processAllAvailable()
+        val rows = spark.table("wal_anomalies_order").collect()
+          .map(r => (r.getAs[String]("table"), r.getAs[Long]("walPosition"),
+            r.getAs[Long]("lastWal"))).toSeq
+        assert(rows === Seq(("users", 25L, 30L)))
+      } finally q.stop()
+    } finally {
+      prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    }
+  }
+
   test("streaming funnel replayed over the events fixture matches the batch stage counts") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
@@ -462,6 +492,51 @@ class StatefulOpsSpec extends SparkSpec {
         assert(got.toSeq === Seq((10L, 0L), (10L, 63L), (10L, 64L), (10L, 200L)),
           s"far-horizon cells wrong: ${got.toSeq}")
       } finally q.stop()
+    } finally {
+      prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    }
+  }
+
+  test("retention state survives a checkpoint restart: a credited far week never re-emits") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    implicit val sc = spark.sqlContext
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-retention").toString
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try {
+      def at(day: Long) = StatefulOps.RetentionEvent(7L,
+        new Timestamp(day * 86400000L))
+      val in = MemoryStream[StatefulOps.RetentionEvent]
+      // the memory sink cannot restart from a checkpoint; foreachBatch can
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
+      def start() = StatefulOps.streamingRetention(in.toDS())
+        .writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (b: org.apache.spark.sql.Dataset[StatefulOps.RetentionHit], _: Long) =>
+          b.collect().foreach(h => seen.add((h.cohort_day, h.week_offset)))
+          (): Unit
+        }.start()
+      val q1 = start()
+      in.addData(at(10), at(10 + 64 * 7))
+      q1.processAllAvailable()
+      q1.stop()
+      assert(seen.asScala.toSeq.sorted === Seq((10L, 0L), (10L, 64L)))
+      seen.clear()
+      // restart from the checkpoint, then re-deliver the far-week event
+      // beside a new far week: only the new week may emit
+      val q2 = start()
+      try {
+        in.addData(at(10 + 64 * 7), at(10 + 65 * 7))
+        q2.processAllAvailable()
+      } finally q2.stop()
+      assert(seen.asScala.toSeq === Seq((10L, 65L)),
+        s"expected only the new far week after restart: ${seen.asScala.toSeq}")
     } finally {
       prev match {
         case Some(v) => spark.conf.set(key, v)
