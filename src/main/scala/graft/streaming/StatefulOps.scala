@@ -578,8 +578,8 @@ object StatefulOps {
   /** The cohort-retention transition the streaming twin folds
     * through: the first event anchors the cohort day; each event's
     * week offset emits once — weeks 0–63 tracked in the bitmask, far
-    * weeks in the `far` set. Events before
-    * the cohort are dropped (the incremental cohort cannot be
+    * weeks in the `far` set. Events before the cohort are dropped
+    * (the incremental cohort cannot be
     * retro-lowered, and a negative week must never reach the shift —
     * 1L << -1 wraps to bit 63). `s0` is null for a fresh user. Its
     * batch-split law — including splits that land ON the week-64
