@@ -3,13 +3,17 @@ package graft.streaming
 import graft.model.ChangeEvent
 import graft.operators.CdcOps
 import graft.sources.CdcFileSource
+import org.apache.commons.io.FileUtils
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, MapType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.UUID
+import scala.jdk.CollectionConverters._
 
 /** The reference's streaming topology on Structured Streaming.
   *
@@ -230,7 +234,7 @@ object CdcPipeline {
   def parquetTopicSink(outDir: String)(batch: DataFrame): Unit =
     Sinks.parquet(outDir)(batch)
 
-  // ---- streaming snapshot maintenance (the "apply the CDC stream" op) ----
+  // ---- maintained CDC state: a base plus deltas, merged on read ----
 
   /** Schema of the maintained snapshot state: latest envelope per key,
     * INCLUDING delete tombstones (see [[mergeSnapshot]]). */
@@ -238,27 +242,21 @@ object CdcPipeline {
     StructField("key", StringType), StructField("walPosition", LongType),
     StructField("action", StringType), StructField("columns", MapType(StringType, StringType))))
 
-  /** Shared cur/.prev generation read: the current state relation
-    * (empty before the first batch), falling back to the `.prev`
-    * generation if a crash landed between the two renames of
-    * [[swapGenerations]] — ONE implementation for every maintained
-    * state (snapshot, SCD2) so the recovery contract cannot diverge.
-    * Not `Tables.parquet`: the schema is passed in, so the read infers
-    * nothing, and the state is rewritten every trigger, so a resolved
-    * relation would never be reused. */
-  private def stateRelation(spark: SparkSession, stateDir: String,
-      schema: StructType): DataFrame = {
-    val cur = new java.io.File(stateDir)
-    val prev = new java.io.File(stateDir + ".prev")
-    val dir = if (cur.exists) cur else prev
-    if (dir.exists) spark.read.schema(schema).parquet(dir.toString)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
+  /** How one maintained state is kept: its schema, the change rows a
+    * batch adds to it, and the rule that collapses any union of change
+    * rows to the state. Both collapses are idempotent and ignore the
+    * order of their input, so a row merged twice, or merged again
+    * after a later one, changes nothing. */
+  private final case class StateRule(schema: StructType,
+      changes: (DataFrame, String) => DataFrame, collapse: DataFrame => DataFrame)
+
+  private val SnapshotRule = StateRule(snapshotSchema,
+    (batch, keyField) => CdcOps.changes(batch, keyField, col("columns")),
+    CdcOps.latestPerKey(_, Seq("columns")))
 
   /** Current snapshot state — see [[stateRelation]]. */
   def snapshotState(spark: SparkSession, stateDir: String): DataFrame =
-    stateRelation(spark, stateDir, snapshotSchema)
+    stateRelation(spark, stateDir, SnapshotRule)
 
   /** Merge one micro-batch of envelopes into the snapshot state: per
     * key, keep the change with the highest WAL position. Delete
@@ -268,41 +266,47 @@ object CdcPipeline {
     * the merge is a pure per-key max, so replaying any batch (the
     * at-least-once contract) is a no-op. */
   def mergeSnapshot(state: DataFrame, batch: DataFrame, keyField: String): DataFrame =
-    CdcOps.latestPerKey(
-      stateUnion(state, CdcOps.changes(batch, keyField, col("columns"))), Seq("columns"))
-
-  /** `state ∪ changes`, the input of a per-key merge
-    * ([[mergeSnapshot]], [[mergeScd2]]), in one partition when Spark
-    * plans the state scan as a single partition under its own
-    * file-split rule (`spark.sql.files.maxPartitionBytes`); an empty
-    * state counts as one. One partition already clusters every key,
-    * so the merge plans no exchange: it runs in one stage and writes
-    * the next generation as one file. A state that splits is left as
-    * it is, and the merge shuffles on the key. The first trigger over
-    * an empty state therefore merges its whole batch in one task. */
-  private def stateUnion(state: DataFrame, changes: DataFrame): DataFrame = {
-    val both = state.unionByName(changes)
-    if (state.queryExecution.toRdd.getNumPartitions <= 1) both.coalesce(1) else both
-  }
+    merge(SnapshotRule, state, batch, keyField)
 
   /** foreachBatch sink maintaining a parquet-backed snapshot of the
     * replicated table — the streaming counterpart of the batch
-    * `cdc_snapshot` query: read current state, merge the batch, write
-    * the next generation, swap directories. The swap (cur→prev,
-    * tmp→cur) is two renames; [[snapshotState]] recovers from `.prev`
-    * if a crash lands between them. On a real deployment this swap is
-    * what a transactional table format (Delta/Iceberg/Hudi) provides.
-    * The merge is sized to the state ([[stateUnion]]): while the state
-    * scan plans as one partition the merge runs in one stage, with no
-    * shuffle, and writes one file per generation; once the state
-    * splits, it shuffles on the key into
-    * `spark.sql.shuffle.partitions` tasks. State size is O(live keys +
-    * tombstones). At 100 TB, partition the state by key-hash bucket
-    * and rewrite only buckets the batch touches (bounded write
-    * amplification). */
+    * `cdc_snapshot` query, kept merge-on-read in `stateDir`:
+    *   - `delta-<batchId>-<uuid>`: one trigger's change rows
+    *     ([[CdcOps.changes]]), unmerged;
+    *   - `base-<n>`: a fold, the state collapsed by [[mergeSnapshot]],
+    *     with `_absorbed` inside it naming every delta it supersedes;
+    *   - names starting with `_`: writes not yet committed.
+    *
+    * An ordinary trigger lists the directory and writes its batch as a
+    * new delta: no state read, no merge, one write job as narrow as a
+    * topic sink's. Every [[FoldEvery]]-th trigger folds instead: it
+    * merges the newest base, the deltas that base did not absorb and
+    * the batch in one write job, writes `_absorbed`, and commits the
+    * new base with one rename; the bases and deltas it supersedes are
+    * deleted only after that rename. Every write lands under a hidden
+    * `_` name first and becomes visible by one directory rename, so a
+    * reader sees a batch whole or not at all. [[snapshotState]] reads
+    * the newest base plus its unabsorbed deltas and collapses them by
+    * the same rule.
+    *
+    * Crash windows, each harmless because the collapse is idempotent:
+    * a delta committed before its batch commits is written again by
+    * the replay, under another name; a fold that dies before its
+    * rename leaves a hidden directory readers skip and the next fold
+    * deletes; a fold renamed before its cleanup leaves deltas its
+    * `_absorbed` names, which readers skip and the next fold deletes.
+    * Absorption is by name, never by batch id, because a fresh
+    * checkpoint over an existing state numbers its batches from 0
+    * again. One query writes a state directory at a time.
+    *
+    * The fold is sized to its input ([[stateUnion]]): while the base
+    * and deltas fit one file split it runs in one stage, with no
+    * shuffle, and writes one file; beyond that it shuffles on the key
+    * into `spark.sql.shuffle.partitions` tasks. State size is O(live
+    * keys + tombstones). At 100 TB, partition the state by key-hash
+    * bucket and fold only the buckets the deltas touch. */
   def snapshotSink(stateDir: String, keyField: String)(batch: DataFrame, batchId: Long): Unit =
-    swapGenerations(stateDir,
-      mergeSnapshot(snapshotState(batch.sparkSession, stateDir), batch, keyField))
+    stateSink(stateDir, keyField, SnapshotRule)(batch, batchId)
 
   /** The queryable snapshot: live rows only (tombstones hidden). */
   def snapshotView(spark: SparkSession, stateDir: String): DataFrame =
@@ -346,9 +350,14 @@ object CdcPipeline {
     * a batch twice adds no rows → derived history unchanged). */
   val scd2StateSchema: StructType = StructType(snapshotSchema.fields :+ StructField("tus", LongType))
 
+  private val Scd2Rule = StateRule(scd2StateSchema,
+    (batch, keyField) => CdcOps.changes(batch, keyField, col("columns"),
+      unix_micros(col("timestamp")).as("tus")),
+    _.dropDuplicates("key", "walPosition"))
+
   /** Current SCD2 change set — see [[stateRelation]]. */
   def scd2State(spark: SparkSession, stateDir: String): DataFrame =
-    stateRelation(spark, stateDir, scd2StateSchema)
+    stateRelation(spark, stateDir, Scd2Rule)
 
   /** Merge one micro-batch into the SCD2 change set: union + dedup on
     * (key, walPosition). A replayed batch contributes only rows that
@@ -357,38 +366,19 @@ object CdcPipeline {
     * are bit-identical (same source change), so the dedup pick is
     * immaterial. */
   def mergeScd2(state: DataFrame, batch: DataFrame, keyField: String): DataFrame =
-    stateUnion(state, CdcOps.changes(batch, keyField, col("columns"),
-        unix_micros(col("timestamp")).as("tus")))
-      .dropDuplicates("key", "walPosition")
-
-  /** Atomic two-rename generation swap shared by the snapshot and SCD2
-    * sinks (recovery contract documented at [[snapshotSink]]). */
-  private def swapGenerations(stateDir: String, merged: DataFrame): Unit = {
-    val tmp = stateDir + ".tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    import java.nio.file.{Files, Paths}
-    val curP = Paths.get(stateDir)
-    val prevP = Paths.get(stateDir + ".prev")
-    if (Files.exists(prevP))
-      org.apache.commons.io.FileUtils.deleteDirectory(prevP.toFile)
-    if (Files.exists(curP)) Files.move(curP, prevP)
-    Files.move(Paths.get(tmp), curP)
-  }
+    merge(Scd2Rule, state, batch, keyField)
 
   /** foreachBatch sink maintaining the SCD2 change set — the
     * APPEND-VERSION output mode of the snapshot pipeline: instead of
     * overwriting each key with its latest image, every accepted change
     * persists and [[scd2History]] serves the full version history.
-    * Same swap/recovery mechanics and merge sizing as
-    * [[snapshotSink]]: one stage and one file per generation while the
-    * state scan plans as one partition, a shuffle on the key after;
-    * same 100 TB note (a transactional table format makes the swap a MERGE, and
-    * key-hash bucketing bounds the rewrite to touched buckets — the
-    * derived-history design additionally means a replay rewrites
-    * nothing at all). */
+    * Same base/delta layout, fold and crash windows as
+    * [[snapshotSink]], merged by [[mergeScd2]]. An ordinary trigger
+    * writes only its batch's accepted changes, so its cost follows the
+    * batch, not the stream's history; the history is rewritten once
+    * per fold. */
   def scd2Sink(stateDir: String, keyField: String)(batch: DataFrame, batchId: Long): Unit =
-    swapGenerations(stateDir,
-      mergeScd2(scd2State(batch.sparkSession, stateDir), batch, keyField))
+    stateSink(stateDir, keyField, Scd2Rule)(batch, batchId)
 
   /** The queryable SCD2 dimension: per-key version chain with validity
     * windows — the streaming counterpart of the batch `cdc_scd2` query,
@@ -400,6 +390,118 @@ object CdcPipeline {
     CdcOps.scd2Versions(scd2State(spark, stateDir))
       .select(col("key"), col("version"), col("action"), col("walPosition"),
         col("valid_from_s"), col("valid_to_s"), col("is_current"), col("columns"))
+
+  // ---- the base/delta layout shared by both states ----
+
+  /** Every how many triggers a state sink folds: the fold trigger's
+    * one merge job is paid once per this many triggers, and a read
+    * between folds collapses at most this many deltas. */
+  private[graft] val FoldEvery = 8
+
+  /** The file inside a base that names the deltas it absorbed. */
+  private val AbsorbedFile = "_absorbed"
+
+  /** The committed entries of a state directory (`bases` by number,
+    * `deltas`) and the hidden ones (`pending`) that uncommitted writes
+    * left behind. */
+  private final case class StateDir(dir: Path, bases: Seq[(Long, Path)], deltas: Seq[Path],
+      pending: Seq[Path]) {
+    /** The newest committed base. */
+    def base: Option[Path] = bases.maxByOption(_._1).map(_._2)
+    /** The deltas [[base]] did not absorb. */
+    def live: Seq[Path] = {
+      val absorbed = base.fold(Set.empty[String])(
+        b => Files.readAllLines(b.resolve(AbsorbedFile)).asScala.toSet)
+      deltas.filterNot(d => absorbed(d.getFileName.toString))
+    }
+  }
+
+  private val BaseName = """base-(\d+)""".r
+
+  /** Lists `stateDir`. Any other entry fails the read, so a directory
+    * of another layout, such as one whole generation written straight
+    * into `stateDir`, is never taken for an empty state. */
+  private def listState(stateDir: String): StateDir = {
+    val dir = Paths.get(stateDir)
+    val named = Option(dir.toFile.listFiles).fold(Seq.empty[Path])(_.toSeq.map(_.toPath))
+      .map(p => p.getFileName.toString -> p)
+    val other = named.collect { case (n, _)
+      if !BaseName.matches(n) && !n.startsWith("delta-") && !n.startsWith("_") => n }
+    require(other.isEmpty, s"$stateDir is not a base/delta state directory: it holds ${other.mkString(", ")}")
+    StateDir(dir,
+      named.collect { case (BaseName(n), p) => n.toLong -> p },
+      named.collect { case (n, p) if n.startsWith("delta-") => p },
+      named.collect { case (n, p) if n.startsWith("_") => p })
+  }
+
+  /** The state in `stateDir`: the newest base, with its unabsorbed
+    * deltas collapsed into it when there are any (empty before the
+    * first trigger) — ONE implementation for every maintained state so
+    * the layout contract cannot diverge. Not `Tables.parquet`: the
+    * schema is passed in, so the read infers nothing, and the files
+    * change every trigger, so a resolved relation would never be
+    * reused. */
+  private def stateRelation(spark: SparkSession, stateDir: String, rule: StateRule): DataFrame = {
+    val state = listState(stateDir)
+    val live = state.live
+    val parts = read(spark, state.base.toSeq ++ live, rule.schema)
+    if (live.isEmpty) parts else rule.collapse(parts)
+  }
+
+  private def read(spark: SparkSession, parts: Seq[Path], schema: StructType): DataFrame =
+    if (parts.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else spark.read.schema(schema).parquet(parts.map(_.toString): _*)
+
+  /** The one sink body of [[snapshotSink]] and [[scd2Sink]]: a delta
+    * on an ordinary trigger, a fold on every [[FoldEvery]]-th. Deltas
+    * are counted, not their batch ids, so the rhythm survives a fresh
+    * checkpoint; deltas left by a crashed cleanup only bring the next
+    * fold forward. */
+  private def stateSink(stateDir: String, keyField: String, rule: StateRule)(
+      batch: DataFrame, batchId: Long): Unit = {
+    val state = listState(stateDir)
+    if (state.deltas.size + 1 < FoldEvery)
+      commit(rule.changes(batch, keyField), state.dir.resolve(s"delta-$batchId-${UUID.randomUUID}"))(_ => ())
+    else {
+      val input = read(batch.sparkSession, state.base.toSeq ++ state.live, rule.schema)
+      val next = state.bases.map(_._1).maxOption.fold(0L)(_ + 1)
+      commit(merge(rule, input, batch, keyField), state.dir.resolve(s"base-$next")) { tmp =>
+        // every listed delta: those read now and those the old base absorbed
+        Files.write(tmp.resolve(AbsorbedFile), state.deltas.map(_.getFileName.toString).asJava)
+      }
+      (state.bases.map(_._2) ++ state.deltas ++ state.pending)
+        .foreach(p => FileUtils.forceDelete(p.toFile))
+    }
+  }
+
+  /** Writes `rows` under a hidden name next to `to`, lets `seal` add to
+    * the written directory, and commits it as `to` with one rename. */
+  private def commit(rows: DataFrame, to: Path)(seal: Path => Unit): Unit = {
+    val tmp = to.resolveSibling(s"_${UUID.randomUUID}")
+    rows.write.parquet(tmp.toString)
+    seal(tmp)
+    Files.move(tmp, to, StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** `rule`'s merge of `batch` into `state`. */
+  private def merge(rule: StateRule, state: DataFrame, batch: DataFrame, keyField: String): DataFrame =
+    rule.collapse(stateUnion(state, rule.changes(batch, keyField)))
+
+  /** `state ∪ changes`, the input of a per-key merge, in one partition
+    * when the state fits one file split: its planned size is at most
+    * `spark.sql.files.maxPartitionBytes`, Spark's split size for a
+    * file; an empty state fits. One partition already clusters every
+    * key, so the merge plans no exchange: it runs in one stage and
+    * writes one file. The rule judges bytes, not the partitions Spark
+    * would plan, because Spark packs several small files (a base and
+    * its deltas) into more than one split. A larger state is left as
+    * it is, and the merge shuffles on the key. */
+  private def stateUnion(state: DataFrame, changes: DataFrame): DataFrame = {
+    val both = state.unionByName(changes)
+    if (state.queryExecution.optimizedPlan.stats.sizeInBytes <=
+        state.sparkSession.sessionState.conf.filesMaxPartitionBytes) both.coalesce(1)
+    else both
+  }
 
   /** Files of change events → validate → maintained SCD2 history. */
   def scd2Pipeline(spark: SparkSession, inDir: String, stateDir: String,

@@ -94,6 +94,18 @@ final class ControlPlane(monitoring: Monitoring,
         s"""graft_trigger_phase_ms{query="${esc(q)}",phase="${esc(phase)}"} $ms"""
       }
     })
+    // the latest trigger's state per stateful operator (e.g. the dedup)
+    gauges("graft_state_rows", "Latest trigger's state rows per stateful operator", queries.flatMap { q =>
+      monitoring.stateOperators(q).map { case (op, rows, _) =>
+        s"""graft_state_rows{query="${esc(q)}",operator="${esc(op)}"} $rows"""
+      }
+    })
+    gauges("graft_state_memory_bytes", "Latest trigger's state memory bytes per stateful operator",
+      queries.flatMap { q =>
+        monitoring.stateOperators(q).map { case (op, _, bytes) =>
+          s"""graft_state_memory_bytes{query="${esc(q)}",operator="${esc(op)}"} $bytes"""
+        }
+      })
     gauges("graft_rows_per_second", "Latest trigger's input and processed rows per second per query",
       queries.flatMap { q =>
         monitoring.rowsPerSecond(q).toSeq.flatMap { case (in, done) =>

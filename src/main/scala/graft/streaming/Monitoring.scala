@@ -119,6 +119,20 @@ final class Monitoring(lastProgress: java.util.UUID => Option[StreamingQueryProg
   def rowsPerSecond(name: String): Option[(Double, Double)] =
     Option(lastTriggerByQuery.get(name)).map(p => (p.inputRowsPerSecond, p.processedRowsPerSecond))
 
+  /** The latest trigger's stateful operators for a query (empty if
+    * none): (operator, state rows, state memory bytes), in plan order.
+    * An operator name that repeats in one query is numbered from its
+    * second occurrence on (`dedupe`, `dedupe_1`). */
+  def stateOperators(name: String): Seq[(String, Long, Long)] =
+    Option(lastTriggerByQuery.get(name)).fold(Seq.empty[(String, Long, Long)]) { p =>
+      val ops = p.stateOperators.toSeq
+      ops.zipWithIndex.map { case (op, i) =>
+        val seen = ops.take(i).count(_.operatorName == op.operatorName)
+        (if (seen == 0) op.operatorName else s"${op.operatorName}_$seen", op.numRowsTotal,
+          op.memoryUsedBytes)
+      }
+    }
+
   override def onQueryTerminated(e: QueryTerminatedEvent): Unit = {
     val key = idToName.getOrDefault(e.id.toString, e.id.toString)
     val s = statsFor(key)

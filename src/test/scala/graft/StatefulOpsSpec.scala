@@ -481,8 +481,8 @@ class StatefulOpsSpec extends SparkSpec {
       try {
         // cohort at day 10; mask edge (week 63), first far week (64),
         // a years-later week (200) — split across batches so the far
-        // weeks exercise MapState persistence, with duplicates that
-        // must NOT re-emit
+        // weeks persist in the fold's `retention` value cell between
+        // triggers, with duplicates that must NOT re-emit
         in.addData(at(10), at(10 + 63 * 7), at(10 + 64 * 7))
         q.processAllAvailable()
         in.addData(at(10 + 64 * 7 + 1), at(10 + 200 * 7), at(10 + 200 * 7 + 2))

@@ -171,13 +171,6 @@ class StreamingSpec extends SparkSpec {
       .select("key", "walPosition").collect()
       .map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
     assert(after.toSeq === Seq(("a", 3L), ("c", 5L)))
-
-    // crash window: cur moved to .prev, tmp move lost → state recovers
-    import java.nio.file.{Files => JF, Paths}
-    JF.move(Paths.get(state), Paths.get(state + ".prev-tmp"))
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(state + ".prev"))
-    JF.move(Paths.get(state + ".prev-tmp"), Paths.get(state + ".prev"))
-    assert(CdcPipeline.snapshotView(spark, state).count() === 2)
   }
 
   test("trending view: per-window top-k over streaming windowed counts via foreachBatch") {
@@ -319,12 +312,6 @@ class StreamingSpec extends SparkSpec {
       evk(3, "update", "a", "a2"), evk(4, "delete", "b", "-"),
       evk(5, "update", "a", "a3")).toDF()
     CdcPipeline.scd2Sink(state, "user_id")(replay, 99L)
-    assert(history() === expected)
-    // crash window between the two generation renames → `.prev` serves
-    import java.nio.file.{Files => JF, Paths}
-    JF.move(Paths.get(state), Paths.get(state + ".prev-tmp"))
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(state + ".prev"))
-    JF.move(Paths.get(state + ".prev-tmp"), Paths.get(state + ".prev"))
     assert(history() === expected)
   }
 
@@ -540,7 +527,12 @@ class StreamingSpec extends SparkSpec {
     // two one-segment triggers: one writer, so one file per topic, each
     assert(partFiles(s"$root/a") === Map("topic=t.events" -> 2, "topic=t.orders" -> 2))
     assert(partFiles(s"$root/b") === Map("topic=t.events" -> 2, "topic=t.cdc" -> 2))
-    assert(partFiles(s"$root/state") === Map("" -> 1))
+    // one delta per trigger (the dedup's no-data trigger included), each one file
+    val state = partFiles(s"$root/state")
+    val triggers = new java.io.File(s"$root/ckpt/commits").list().count(_.forall(_.isDigit))
+    assert(state.keySet.map(_.split('-').take(2).mkString("-")) ===
+      (0 until triggers).map(id => s"delta-$id").toSet)
+    assert(state.values.forall(_ == 1))
     // all four state-store partitions of the dedup loaded and committed
     // under their own index in both triggers, inside the one sink task
     for (p <- 0 until 4; v <- 1 to 2)

@@ -247,6 +247,40 @@ class TopologySpec extends SparkSpec {
     }
   }
 
+  test("control plane: /metrics exports a live dropDuplicates query's state rows and bytes") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sc = spark.sqlContext
+    val mon = Monitoring.attach(spark)
+    val cp = new ControlPlane(mon, _ => ()).start(0)
+    val in = MemoryStream[Int]
+    val q = in.toDF().dropDuplicates("value").writeStream.queryName("cp-state")
+      .outputMode("append").format("noop").start()
+    try {
+      in.addData(1, 2, 2, 3)
+      q.processAllAvailable()
+      in.addData(3, 4)
+      q.processAllAvailable()
+      val deadline = System.currentTimeMillis() + 15000
+      while (mon.batchesProcessed("cp-state") < 2 && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      val c = new java.net.URL(s"http://127.0.0.1:${cp.boundPort}/metrics")
+        .openConnection().asInstanceOf[java.net.HttpURLConnection]
+      val body = try scala.io.Source.fromInputStream(c.getInputStream).mkString finally c.disconnect()
+      def gauge(name: String): Option[Double] =
+        (java.util.regex.Pattern.quote(s"""$name{query="cp-state",operator="dedupe"}""") + """ (\S+)""").r
+          .findFirstMatchIn(body).map(_.group(1).toDouble)
+      assert(body.contains("# TYPE graft_state_rows gauge"))
+      // four distinct values held by the dedup after the second trigger
+      assert(gauge("graft_state_rows") === Some(4.0), s"state rows missing:\n$body")
+      assert(gauge("graft_state_memory_bytes").exists(_ > 0), s"state bytes missing:\n$body")
+    } finally {
+      q.stop()
+      cp.stop()
+      spark.streams.removeListener(mon)
+    }
+  }
+
   test("topology: file source → two subscribed sinks, monitored") {
     val root = Files.createTempDirectory("graft-topo").toString
     val inDir = s"$root/in"; Files.createDirectories(java.nio.file.Paths.get(inDir))

@@ -9,7 +9,9 @@ For every seed it runs `python3 perfbench/run.py --workload W --seed S
 --seconds N --trace 0` once in each checkout, one run at a time: odd
 seeds run A first, even seeds B first, so a drift of the machine's load
 falls on both sides alike. Each run prints its end-to-end metrics, its
-`failed` count and `correct`; at the end, per metric, each side's median
+`failed` count and `correct`, and, for `cdc_replay`, the mean and p95 of
+its steady triggers' execution ms (the triggers after the first, as
+`latency_p50_ms` counts them); at the end, per metric, each side's median
 and interquartile range, B's change against A, and the pairs B won. A
 gain holds when B wins nearly every pair and its median beats A's by
 more than A's interquartile range.
@@ -48,7 +50,20 @@ def run(checkout, workload, seed, seconds):
     if proc.returncode != 0 or not lines:
         sys.exit(f"perfpairs: {checkout} seed {seed} failed (exit {proc.returncode}):\n"
                  f"{proc.stderr[-2000:]}")
-    return json.loads(lines[-1])
+    result = json.loads(lines[-1])
+    marker = "note: cdc_replay: trigger ms "
+    result["trigger_ms"] = next((list(map(int, l[len(marker):].split()))
+                                 for l in proc.stdout.splitlines() if l.startswith(marker)), [])
+    return result
+
+
+def trigger_summary(ms):
+    """Mean and p95 of the steady triggers, or "" if the run printed none."""
+    steady = ms[1:]
+    if not steady:
+        return ""
+    p95 = statistics.quantiles(steady, n=20, method="inclusive")[-1] if len(steady) > 1 else steady[0]
+    return f"  trigger mean={statistics.mean(steady):.0f} p95={p95:.0f}"
 
 
 def quartiles(xs):
@@ -74,8 +89,8 @@ def main():
             r = run(sides[side], args.workload, seed, args.seconds)
             results[side][seed] = r
             values = " ".join(f"{k}={v['value']:.4g}" for k, v in sorted(r["metrics"].items()))
-            print(f"seed {seed:>3} {side}  {values}  failed={r['failed']} correct={r['correct']}",
-                  flush=True)
+            print(f"seed {seed:>3} {side}  {values}  failed={r['failed']} correct={r['correct']}"
+                  f"{trigger_summary(r['trigger_ms'])}", flush=True)
             if args.out:
                 with open(args.out, "a") as f:
                     f.write(json.dumps({"side": side, "checkout": sides[side], "seed": seed,

@@ -1,8 +1,9 @@
 #!/bin/bash
 # Dev runner: java -cp classes:/opt/spark/jars/* <main> <args...>
 # Mirrors build.sbt's javaOptions (JDK17 add-opens for Spark 4).
+# The classes are those of the checkout this script lives in.
 set -e
-CLASSES=/root/repo/target/scala-2.13/classes
+CLASSES="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)/target/scala-2.13/classes"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
